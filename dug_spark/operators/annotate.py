@@ -107,7 +107,10 @@ def _annotate_jvm(
     from ..functions.text import DEFAULT_DEBREVIATOR, DEFAULT_STOPWORDS
 
     def s(v: str) -> str:
-        return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
+        # the text also passes through spark.sql's ``{src}`` formatting,
+        # which reads single braces as fields: double them
+        v = str(v).replace("\\", "\\\\").replace("'", "\\'")
+        return "'" + v.replace("{", "{{").replace("}", "}}") + "'"
 
     # the expression is composed as ONE SQL string (a single F.expr /
     # py4j round-trip): building ~50 gated struct literals through the

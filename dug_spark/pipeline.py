@@ -281,7 +281,7 @@ def incremental_update(
     touches 10^10 docs, not the world.  The commit is
     ``table.delta(new_triples, keys=changed urls)``: the changed urls'
     STALE triples are equality-tombstoned and the re-extracted ones
-    appended, atomically (visible only at the log-record rename), so
+    appended, atomically (visible only once the log record is published), so
     readers never see a half-updated url.  ``tombstone_missing=True``
     additionally tombstones urls that disappeared from the crawl.
 

@@ -2,7 +2,7 @@
 
 The BASELINE north_rule requires "per-partition lineage + extraction-count
 metrics written to a checkpoint manifest".  Output-partition row counts
-come free from a groupBy(spark_partition_id) on the written DataFrame, but
+come free from the written files' parquet footers (plans/records.py), but
 *input* rows per source partition cannot be recovered after the shuffle —
 so the annotate ``mapInPandas`` emits them through a Spark accumulator
 keyed by ``TaskContext.partitionId()``: zero extra jobs, no second scan of

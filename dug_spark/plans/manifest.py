@@ -9,9 +9,11 @@ with the Spark-native shape:
 - each pipeline stage writes to ``<root>/<stage>/`` atomically (tmp dir +
   rename; parquet ``_SUCCESS`` marker is the commit point — on Iceberg this
   would be a snapshot commit);
-- a ``_manifest`` table records one row per (stage, source partition):
-  row counts + wall time + run id — the per-partition lineage the BASELINE
-  north_rule requires;
+- ``_manifest/`` holds one JSON commit record per stage write
+  (plans/records.py): rows per write task and per source partition, wall
+  time and run id — the per-partition lineage the BASELINE north_rule
+  requires.  Records are read in plain Python and row counts come from
+  parquet footers, so no Spark job runs on this metadata;
 - ``run_or_resume`` skips any stage whose commit marker exists, giving
   exact resume: a killed run re-executes only uncommitted stages, and
   re-execution is deterministic so committed outputs never change.
@@ -26,6 +28,14 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import records
+
+#: columns of ``manifest()`` / ``metrics()``
+MANIFEST_COLUMNS = (
+    "stage string, scope string, partition_id int, input_rows long, "
+    "output_rows long, wall_ms long, run_id string"
+)
 
 
 class CheckpointManager:
@@ -57,82 +67,40 @@ class CheckpointManager:
         return os.path.exists(os.path.join(self._stage_dir(stage), "_SUCCESS"))
 
     # -- lineage ----------------------------------------------------------
-    def _record(
-        self,
-        spark: SparkSession,
-        stage: str,
-        df_written: DataFrame,
-        wall_ms: int,
-        lineage: dict | None = None,
-    ):
-        """Manifest rows: one per output partition of the written data
-        (scope='output'), plus — when the caller passes the annotate scan's
+    def _record(self, stage: str, wall_ms: int, lineage: dict | None = None):
+        """One JSON record (plans/records.py) per committed stage write: a
+        row per write task (scope='output'; rows from the parquet footers,
+        no Spark job), plus — when the caller passes the annotate scan's
         lineage accumulator value — one per SOURCE partition with real
         input_rows and extraction counts (scope='source'), satisfying the
         per-partition lineage + extraction-count metric requirement."""
-        per_part = (
-            df_written.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("output_rows"))
-            .withColumn("stage", F.lit(stage))
-            .withColumn("scope", F.lit("output"))
-            .withColumn("input_rows", F.lit(None).cast("long"))
-            .withColumn("wall_ms", F.lit(wall_ms).cast("long"))
-            .withColumn("run_id", F.lit(self.run_id))
-            .select(
-                "stage", "scope", "partition_id", "input_rows",
-                "output_rows", "wall_ms", "run_id",
-            )
+        parts = [
+            ("output", pid, None, n)
+            for pid, n in sorted(records.task_rows(self._stage_dir(stage)).items())
+        ]
+        parts += [
+            ("source", int(pid), int(n_in), int(n_out))
+            for pid, (n_in, n_out) in sorted((lineage or {}).items())
+        ]
+        records.publish(
+            self._manifest_dir(),
+            f"{stage}-{self.run_id}-{uuid.uuid4().hex[:8]}.json",
+            {"stage": stage, "run_id": self.run_id, "wall_ms": wall_ms, "parts": parts},
         )
-        if lineage:
-            src_rows = [
-                (stage, "source", int(pid), int(n_in), int(n_out), wall_ms, self.run_id)
-                for pid, (n_in, n_out) in sorted(lineage.items())
-            ]
-            src = spark.createDataFrame(
-                src_rows,
-                "stage string, scope string, partition_id int, input_rows long, "
-                "output_rows long, wall_ms long, run_id string",
-            ).withColumn("partition_id", F.col("partition_id").cast("int"))
-            per_part = per_part.unionByName(src)
-        # ATOMIC manifest record: each _record lands in its own
-        # tmp-written-then-renamed subdir.  The record itself is a Spark
-        # job (a groupBy over the written data — seconds at 10M+ rows), so
-        # a kill mid-record must not leave PARTIAL lineage rows that would
-        # read as complete; with rename-commit, an interrupted record is
-        # simply absent and run_or_resume's backfill repairs it on resume.
-        # (On an object store this rename is the piece Iceberg's snapshot
-        # commit would provide — same deviation note as SCALE.md §Iceberg.)
-        base = self._manifest_dir()
-        # GC record tmp dirs left by killed runs (same age rule as stage
-        # tmps: younger ones may belong to a briefly-overlapping writer)
-        if os.path.isdir(base):
-            now = time.time()
-            for name in os.listdir(base):
-                if not name.endswith(".tmp"):
-                    continue
-                path = os.path.join(base, name)
-                try:
-                    if now - os.path.getmtime(path) > self.TMP_GC_AGE_S:
-                        shutil.rmtree(path, ignore_errors=True)
-                except OSError:
-                    pass
-        target = os.path.join(
-            base, f"{stage}-{self.run_id}-{uuid.uuid4().hex[:8]}"
-        )
-        tmp = target + ".tmp"
-        per_part.write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, target)
 
     def manifest(self, spark: SparkSession) -> DataFrame:
-        base = self._manifest_dir()
-        dirs = sorted(
-            os.path.join(base, d)
-            for d in os.listdir(base)
-            if not d.endswith(".tmp")
-        )
-        if not dirs:
-            raise FileNotFoundError(f"no manifest records under {base}")
-        return spark.read.parquet(*dirs)
+        recs = records.load(self._manifest_dir())
+        if not recs:
+            raise FileNotFoundError(f"no manifest records under {self._manifest_dir()}")
+        return records.frame(spark, MANIFEST_COLUMNS, [
+            {
+                "stage": r["stage"], "scope": scope, "partition_id": pid,
+                "input_rows": n_in, "output_rows": n_out,
+                "wall_ms": r["wall_ms"], "run_id": r["run_id"],
+            }
+            for r in recs
+            for scope, pid, n_in, n_out in r["parts"]
+        ])
 
     # -- stage I/O ----------------------------------------------------------
     def write_stage(
@@ -174,7 +142,6 @@ class CheckpointManager:
         if os.path.exists(final):
             shutil.rmtree(final)
         os.rename(tmp, final)
-        out = spark.read.parquet(final)
         lineage = None
         if lineage_acc is not None:
             after = dict(lineage_acc.value)
@@ -186,38 +153,23 @@ class CheckpointManager:
                 for pid, (a, b) in after.items()
                 if (a, b) != before.get(pid, (0, 0))
             }
-        self._record(spark, stage, out, wall_ms, lineage=lineage)
-        return out
+        self._record(stage, wall_ms, lineage=lineage)
+        return self.read_stage(spark, stage)
 
     def read_stage(self, spark: SparkSession, stage: str) -> DataFrame:
-        return spark.read.parquet(self._stage_dir(stage))
+        """The committed stage, read with the schema its parquet footers
+        carry (no schema-inference job)."""
+        path = self._stage_dir(stage)
+        return spark.read.schema(records.spark_schema(path)).parquet(path)
 
-    def backfill_manifest(self, spark: SparkSession, stage: str, df: DataFrame):
+    def backfill_manifest(self, stage: str):
         """Repair the crash window between a stage's rename-commit and its
-        manifest record: if the committed stage has no manifest rows,
-        record output-partition rows from the committed data (wall_ms=-1
+        manifest record: if the committed stage has no record, record its
+        output-partition rows from the committed files' footers (wall_ms=-1
         sentinel; source-scope lineage from the dead run is unrecoverable
         and stays absent).  Idempotent."""
-        if not self._has_manifest_rows(spark, stage):
-            self._record(spark, stage, df, wall_ms=-1, lineage=None)
-
-    def _has_manifest_rows(self, spark: SparkSession, stage: str) -> bool:
-        from pyspark.errors import AnalysisException
-
-        try:
-            return (
-                self.manifest(spark)
-                .where(F.col("stage") == stage)
-                .limit(1)
-                .count()
-                > 0
-            )
-        except (FileNotFoundError, AnalysisException):
-            # no _manifest dir yet / no readable record files — the
-            # legitimate "nothing recorded" states.  Anything else (e.g.
-            # corrupt parquet at read time) must SURFACE, not silently
-            # trigger a duplicate backfill over real rows.
-            return False
+        if not any(r["stage"] == stage for r in records.load(self._manifest_dir())):
+            self._record(stage, wall_ms=-1)
 
     def run_or_resume(
         self, spark: SparkSession, stage: str, build, lineage_acc=None
@@ -227,18 +179,17 @@ class CheckpointManager:
         stage granularity, with lineage recorded per partition).
 
         Crash-window backfill: the commit point is the rename, and the
-        manifest append happens AFTER it — a kill in between leaves a
+        manifest record is published AFTER it — a kill in between leaves a
         committed stage with no lineage rows (observed in the 1.6M-doc
         resume evidence run).  On resume, such a stage gets its
-        output-partition manifest rows backfilled from the committed data
+        output-partition manifest rows backfilled from the committed files
         under THIS run id with wall_ms=-1 (the sentinel for "recovered,
         wall time unknown").  Source-scope lineage from the dead run's
         accumulator is genuinely unrecoverable and stays absent — the
         backfill records that honestly rather than inventing it."""
         if self.is_done(stage):
-            out = self.read_stage(spark, stage)
-            self.backfill_manifest(spark, stage, out)
-            return out
+            self.backfill_manifest(stage)
+            return self.read_stage(spark, stage)
         return self.write_stage(stage, build(), lineage_acc=lineage_acc)
 
     def metrics(self, spark: SparkSession, stage: str | None = None) -> DataFrame:

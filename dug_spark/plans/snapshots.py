@@ -5,21 +5,23 @@ SCALE.md §Iceberg documents what the stage-level emulation
 (plans/manifest.py) deliberately does NOT give: snapshot history and
 time travel.  This module closes that gap for the single-writer case
 with the same two-phase commit Iceberg uses — immutable data dirs
-first, then an atomically-renamed LOG RECORD whose appearance is the
-commit point (Iceberg: manifest files, then the metadata-pointer swap).
+first, then a LOG RECORD published create-if-absent, whose appearance is
+the commit point (Iceberg: manifest files, then the metadata-pointer swap).
 
 Layout under ``root``::
 
     snap-<seq>-<uuid>/      immutable data dirs (parquet)
-    _log/<seq>-<uuid>/      commit records (parquet), one per snapshot:
-                            snapshot_id, seq, ts_ms, operation,
-                            data_dirs (the FULL dir list of the
-                            snapshot), rows_written, run_id
+    _log/<seq>.json         commit records (JSON, plans/records.py), one
+                            per snapshot: snapshot_id, seq, ts_ms,
+                            operation, data_dirs (the FULL dir list of
+                            the snapshot), delete_dirs, rows_written,
+                            run_id, and the data and tombstone schemas
 
 - a reader resolves the CURRENT snapshot by max seq over committed log
-  records — a crash after the data rename but before the log rename
-  leaves an orphan data dir that no reader ever sees (GC'd by
-  ``expire_snapshots``);
+  records (plain Python, no Spark job) and scans each dir with its stored
+  schema (no inference job) — a crash after the data rename but before
+  the log record leaves an orphan data dir that no reader ever sees
+  (GC'd by ``expire_snapshots``);
 - ``append`` commits a snapshot whose dir list = parent's dirs + the new
   dir (no rewrite of existing data — Iceberg's fast append);
 - ``overwrite`` commits a snapshot with only the new dir;
@@ -43,15 +45,17 @@ tombstone's columns with the max-tombstone-seq table broadcast
 (tombstones are churn-sized, never table-sized).  ``compact()``
 materializes the merged view into a fresh overwrite snapshot, clearing
 tombstones (Iceberg's rewrite_data_files).  All tombstones of a table
-must share one key-column set (checked at commit).
+must share one key schema (checked at commit against the stored one).
 
-SINGLE WRITER PER ROOT (the CheckpointManager contract): concurrent
-writers would race the seq counter — that last piece, optimistic
-commit-retry across writers, is exactly what real Iceberg metadata
-transactions add and is documented as the deployment boundary.
+SINGLE WRITER PER ROOT, enforced: a log record is named by its seq alone
+and published create-if-absent, so when two writers race for one seq
+exactly one commit wins; the other raises ``FileExistsError`` and its
+data dir stays an invisible orphan for ``expire_snapshots`` to collect.
+Optimistic commit-retry across writers is what real Iceberg metadata
+transactions add on top, and is documented as the deployment boundary.
 
 Scale note: log records and dir lists are snapshot-count-sized, never
-data-sized; ``read`` is ``spark.read.parquet(*dirs)`` so partition
+data-sized; ``read`` is a union of per-dir parquet scans, so partition
 pruning and predicate pushdown hit the scan exactly as for any parquet
 read.  Reference parity: the reference has no table versioning at all
 (its crawlspace spool overwrites in place, crawler.py:37-43); this is
@@ -64,15 +68,30 @@ import os
 import shutil
 import time
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from . import records
+
+#: columns of ``snapshots()`` (the stored read schemas stay in the records)
+LOG_COLUMNS = (
+    "snapshot_id string, seq int, ts_ms long, operation string, "
+    "data_dirs array<string>, delete_dirs array<string>, "
+    "rows_written long, run_id string"
+)
 
 
 def _dir_seq(name: str) -> int:
     """Commit seq encoded in a data/tombstone dir name
     (``snap-<seq>-<id>`` / ``del-<seq>-<id>``)."""
     return int(name.split("-")[1])
+
+
+def _key_columns(schema: dict) -> list[tuple[str, str]]:
+    return sorted((f["name"], str(f["type"])) for f in schema["fields"])
 
 
 class SnapshotTable:
@@ -85,45 +104,43 @@ class SnapshotTable:
     def _log_dir(self) -> str:
         return os.path.join(self.root, "_log")
 
-    def _committed(self) -> list[str]:
-        return sorted(
-            d for d in os.listdir(self._log_dir()) if not d.endswith(".tmp")
-        )
+    def _records(self) -> list[dict]:
+        """Committed log records, oldest first (their names are zero-padded
+        seqs); raises if there are none."""
+        recs = records.load(self._log_dir())
+        if not recs:
+            raise FileNotFoundError(f"no snapshots under {self.root}")
+        return recs
 
     def snapshots(self, spark: SparkSession) -> DataFrame:
         """The snapshot log as a DataFrame (Iceberg's ``table.snapshots``
         metadata table)."""
-        recs = self._committed()
-        if not recs:
-            raise FileNotFoundError(f"no snapshots under {self.root}")
-        # mergeSchema: records written before the merge-on-read upgrade
-        # lack the delete_dirs column (read back as NULL = no tombstones)
-        return spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(self._log_dir(), d) for d in recs]
-        )
-
-    def _records(self, spark: SparkSession) -> list:
-        return sorted(
-            self.snapshots(spark).collect(), key=lambda r: r["seq"]
-        )
+        return records.frame(spark, LOG_COLUMNS, self._records())
 
     # -- commit ------------------------------------------------------------
     def _commit(
         self,
         df: DataFrame | None,
         operation: str,
-        parent_dirs: list[str],
         partition_by: list[str] | None = None,
         delete_keys: DataFrame | None = None,
-        parent_deletes: list[str] | None = None,
     ) -> str:
-        spark = (df or delete_keys).sparkSession
-        recs = self._committed()
-        seq = (max(int(d.split("-")[0]) for d in recs) + 1) if recs else 1
+        """Write the new data/tombstone dirs, then publish the log record
+        (the commit point).  Every operation but ``overwrite`` starts from
+        the current snapshot's dir lists."""
+        recs = records.load(self._log_dir())
+        cur = recs[-1] if recs else None
+        seq = cur["seq"] + 1 if cur else 1
         snap_id = uuid.uuid4().hex[:16]
-        data_dirs = list(parent_dirs)
-        delete_dirs = list(parent_deletes or [])
-        rows = 0
+        rec = {
+            "snapshot_id": snap_id, "seq": seq,
+            "operation": operation, "data_dirs": [], "delete_dirs": [],
+            "rows_written": 0, "run_id": self.run_id,
+            "schema": None, "delete_schema": None,
+        }
+        if cur and operation != "overwrite":
+            for k in ("data_dirs", "delete_dirs", "schema", "delete_schema"):
+                rec[k] = cur[k]
         if df is not None:
             data_name = f"snap-{seq:08d}-{snap_id}"
             data_final = os.path.join(self.root, data_name)
@@ -136,21 +153,24 @@ class SnapshotTable:
                 # tables" surface)
                 w = w.partitionBy(*partition_by)
             w.parquet(data_tmp)
-            rows = spark.read.parquet(data_tmp).count()
+            rec["rows_written"] = sum(records.task_rows(data_tmp).values())
             os.rename(data_tmp, data_final)
-            data_dirs.append(data_name)
+            rec["data_dirs"] = rec["data_dirs"] + [data_name]
+            # the read schema lists partition columns last, as a scan
+            # of the hive-style dir returns them
+            part = partition_by or []
+            rec["schema"] = StructType(
+                [f for f in df.schema if f.name not in part]
+                + [df.schema[c] for c in part]
+            ).jsonValue()
         if delete_keys is not None:
-            if delete_dirs:
-                prev_cols = sorted(
-                    spark.read.parquet(
-                        os.path.join(self.root, delete_dirs[0])
-                    ).columns
+            key_schema = delete_keys.schema.jsonValue()
+            got, want = _key_columns(key_schema), rec["delete_schema"]
+            if rec["delete_dirs"] and got != _key_columns(want):
+                raise ValueError(
+                    f"tombstone key columns {got} differ from the table's "
+                    f"{_key_columns(want)}"
                 )
-                if sorted(delete_keys.columns) != prev_cols:
-                    raise ValueError(
-                        f"tombstone key columns {sorted(delete_keys.columns)} "
-                        f"differ from the table's {prev_cols}"
-                    )
             del_name = f"del-{seq:08d}-{snap_id}"
             del_final = os.path.join(self.root, del_name)
             del_tmp = del_final + ".tmp"
@@ -159,65 +179,34 @@ class SnapshotTable:
                 del_tmp
             )
             os.rename(del_tmp, del_final)
-            delete_dirs.append(del_name)
-        # the LOG record rename is the commit point: a kill between the
-        # renames leaves invisible orphan dirs, never a half-visible
-        # snapshot
-        rec = spark.createDataFrame(
-            [
-                (
-                    snap_id,
-                    seq,
-                    int(time.time() * 1000),
-                    operation,
-                    data_dirs,
-                    delete_dirs,
-                    rows,
-                    self.run_id,
-                )
-            ],
-            "snapshot_id string, seq int, ts_ms long, operation string, "
-            "data_dirs array<string>, delete_dirs array<string>, "
-            "rows_written long, run_id string",
-        )
-        rec_final = os.path.join(self._log_dir(), f"{seq:08d}-{snap_id}")
-        rec_tmp = rec_final + ".tmp"
-        rec.coalesce(1).write.mode("overwrite").parquet(rec_tmp)
-        os.rename(rec_tmp, rec_final)
+            rec["delete_dirs"] = rec["delete_dirs"] + [del_name]
+            rec["delete_schema"] = key_schema
+        # publishing the LOG record is the commit point: a kill before it
+        # leaves invisible orphan dirs, never a half-visible snapshot; a
+        # writer that lost this seq to another raises FileExistsError here
+        rec["ts_ms"] = int(time.time() * 1000)
+        records.publish(self._log_dir(), f"{seq:08d}.json", rec)
         return snap_id
-
-    def _parents(self, spark: SparkSession) -> tuple[list[str], list[str]]:
-        if not self._committed():
-            return [], []
-        cur = self._records(spark)[-1].asDict()
-        return list(cur["data_dirs"]), list(cur.get("delete_dirs") or [])
 
     def overwrite(
         self, df: DataFrame, partition_by: list[str] | None = None
     ) -> str:
         """Commit a snapshot replacing the table contents (clears any
         tombstones); returns its id."""
-        return self._commit(df, "overwrite", [], partition_by)
+        return self._commit(df, "overwrite", partition_by)
 
     def append(
         self, df: DataFrame, partition_by: list[str] | None = None
     ) -> str:
         """Commit a snapshot adding rows on top of the current one (fast
         append: existing data dirs are referenced, never rewritten)."""
-        parents, dels = self._parents(df.sparkSession)
-        return self._commit(
-            df, "append", parents, partition_by, parent_deletes=dels
-        )
+        return self._commit(df, "append", partition_by)
 
     def delete_where(self, delete_keys: DataFrame) -> str:
         """Commit an equality-delete tombstone: rows in EXISTING data dirs
         whose values on ``delete_keys.columns`` match any tombstone row
         disappear from subsequent reads (merge-on-read; no data rewrite)."""
-        parents, dels = self._parents(delete_keys.sparkSession)
-        return self._commit(
-            None, "delete", parents, delete_keys=delete_keys,
-            parent_deletes=dels,
-        )
+        return self._commit(None, "delete", delete_keys=delete_keys)
 
     def delta(
         self,
@@ -228,12 +217,8 @@ class SnapshotTable:
         """ONE commit that tombstones ``delete_keys`` matches in existing
         data AND appends ``df`` — the recrawl-increment primitive: stale
         triples of changed urls vanish, their re-extracted triples land,
-        atomically (both visible only at the log-record rename)."""
-        parents, dels = self._parents(df.sparkSession)
-        return self._commit(
-            df, "delta", parents, partition_by, delete_keys=delete_keys,
-            parent_deletes=dels,
-        )
+        atomically (both visible only when the log record is published)."""
+        return self._commit(df, "delta", partition_by, delete_keys=delete_keys)
 
     def compact(self, spark: SparkSession,
                 partition_by: list[str] | None = None) -> str:
@@ -244,49 +229,29 @@ class SnapshotTable:
         return self.overwrite(self.read(spark), partition_by)
 
     # -- read --------------------------------------------------------------
-    def _read_dirs(
-        self,
-        spark: SparkSession,
-        dirs: list[str],
-        delete_dirs: list[str] | None = None,
-    ) -> DataFrame:
+    def _read_dirs(self, spark: SparkSession, rec: dict) -> DataFrame:
         # each snapshot dir is its OWN parquet root (it may carry
         # hive-style partition subdirs): read per root and union, so
         # partition discovery — and partition PRUNING under filters —
         # applies inside every branch; a single multi-path read would
         # raise CONFLICTING_DIRECTORY_STRUCTURES across partitioned roots
-        delete_dirs = delete_dirs or []
-        if not delete_dirs:
-            parts = [
-                spark.read.parquet(os.path.join(self.root, d)) for d in dirs
-            ]
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
+        def scan(dirs: list[str], schema: dict, seq_col: str) -> DataFrame:
+            sch = StructType.fromJson(schema)
+            return reduce(DataFrame.unionByName, [
+                spark.read.schema(sch).parquet(os.path.join(self.root, d))
+                .withColumn(seq_col, F.lit(_dir_seq(d)))
+                for d in dirs
+            ])
+
+        data = scan(rec["data_dirs"], rec["schema"], "_dseq")
+        if not rec["delete_dirs"]:
+            return data.drop("_dseq")
         # merge-on-read: a row survives unless a tombstone from a
         # STRICTLY NEWER commit matches its key.  The per-row commit seq
         # is a literal per data dir (free in codegen, no storage); the
         # tombstone side reduces to (key -> newest tombstone seq), which
         # is churn-sized and broadcasts.
-        parts = [
-            spark.read.parquet(os.path.join(self.root, d)).withColumn(
-                "_dseq", F.lit(_dir_seq(d))
-            )
-            for d in dirs
-        ]
-        data = parts[0]
-        for p in parts[1:]:
-            data = data.unionByName(p)
-        dels = [
-            spark.read.parquet(os.path.join(self.root, d)).withColumn(
-                "_tseq", F.lit(_dir_seq(d))
-            )
-            for d in delete_dirs
-        ]
-        tomb = dels[0]
-        for t in dels[1:]:
-            tomb = tomb.unionByName(t)
+        tomb = scan(rec["delete_dirs"], rec["delete_schema"], "_tseq")
         keys = [c for c in tomb.columns if c != "_tseq"]
         tmax = tomb.groupBy(*keys).agg(F.max("_tseq").alias("_tseq"))
         return (
@@ -295,33 +260,28 @@ class SnapshotTable:
             .drop("_tseq", "_dseq")
         )
 
-    @staticmethod
-    def _rec_dirs(r) -> tuple[list[str], list[str]]:
-        d = r.asDict()
-        return list(d["data_dirs"]), list(d.get("delete_dirs") or [])
-
     def read(self, spark: SparkSession) -> DataFrame:
         """The current snapshot (tombstones merged on read)."""
-        return self._read_dirs(spark, *self._rec_dirs(self._records(spark)[-1]))
+        return self._read_dirs(spark, self._records()[-1])
 
     def read_as_of(self, spark: SparkSession, snapshot_id: str) -> DataFrame:
         """Time travel by snapshot id (``VERSION AS OF``); applies exactly
         that snapshot's tombstone set."""
-        for r in self._records(spark):
+        for r in self._records():
             if r["snapshot_id"] == snapshot_id:
-                return self._read_dirs(spark, *self._rec_dirs(r))
+                return self._read_dirs(spark, r)
         raise LookupError(f"snapshot {snapshot_id} not found (expired?)")
 
     def read_as_of_ts(self, spark: SparkSession, ts_ms: int) -> DataFrame:
         """Time travel by timestamp (``TIMESTAMP AS OF``): the latest
         snapshot committed at or before ``ts_ms``."""
         best = None
-        for r in self._records(spark):
+        for r in self._records():
             if r["ts_ms"] <= ts_ms:
                 best = r
         if best is None:
             raise LookupError(f"no snapshot at or before ts {ts_ms}")
-        return self._read_dirs(spark, *self._rec_dirs(best))
+        return self._read_dirs(spark, best)
 
     # -- retention ----------------------------------------------------------
     def expire_snapshots(self, spark: SparkSession, keep_last: int = 1) -> int:
@@ -330,21 +290,11 @@ class SnapshotTable:
         references.  Returns the number of snapshots expired."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
-        recs = self._records(spark)
+        recs = self._records()
         keep, drop = recs[-keep_last:], recs[:-keep_last]
-        kept_dirs = {
-            d
-            for r in keep
-            for lst in self._rec_dirs(r)
-            for d in lst
-        }
+        kept_dirs = {d for r in keep for d in r["data_dirs"] + r["delete_dirs"]}
         for r in drop:
-            shutil.rmtree(
-                os.path.join(
-                    self._log_dir(), f"{r['seq']:08d}-{r['snapshot_id']}"
-                ),
-                ignore_errors=True,
-            )
+            os.remove(os.path.join(self._log_dir(), f"{r['seq']:08d}.json"))
         for name in os.listdir(self.root):
             if (
                 name.startswith("snap-") or name.startswith("del-")

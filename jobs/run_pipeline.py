@@ -86,7 +86,7 @@ def main(argv: list[str] | None = None) -> None:
         # the manifest record is its own atomic commit AFTER the stage
         # rename; a kill in between leaves the committed stage without
         # lineage — repair with output-partition rows (wall_ms=-1)
-        ckpt.backfill_manifest(spark, "mentions", mentions)
+        ckpt.backfill_manifest("mentions")
     else:
         r = pipe.run(corpus)
         mentions = ckpt.write_stage("mentions", r.mentions, lineage_acc=r.lineage_acc)

@@ -4,7 +4,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from dug_spark import fixtures
+from dug_spark import fixtures, schemas
 from dug_spark.functions.text import (
     extract_text_udf,
     ngram_jaccard,
@@ -175,3 +175,24 @@ def test_extract_text_col_matches_udf(spark):
     ).collect()
     for r in got:
         assert r["a"] == r["b"], (r["doc_id"], r["a"], r["b"])
+
+
+def test_special_character_labels_round_trip(spark):
+    """Labels and CURIEs with braces, quotes and backslashes come back
+    verbatim from the small-dictionary (JVM) scan, whose SQL text goes
+    through ``spark.sql`` brace formatting."""
+    entries = [
+        ("alpha", "CHEBI:9000001", "N-{2S}-amine", ["chemical"], 0.95),
+        ("beta", "MONDO:9000002", "o'brien syndrome", ["disease"], 0.95),
+        ("gamma", "HP:{9000003}", "reflex \\ type {b}", ["phenotype"], 0.95),
+    ]
+    d = spark.createDataFrame(entries, schema=schemas.TERM_DICTIONARY)
+    corpus = spark.createDataFrame(
+        [(f"u{i}", f"lorem {e[0]} ipsum") for i, e in enumerate(entries)],
+        "url string, text string",
+    )
+    got = {
+        (r["url"], r["curie"], r["label"])
+        for r in annotate.annotate_mentions(corpus, d).collect()
+    }
+    assert got == {(f"u{i}", e[1], e[2]) for i, e in enumerate(entries)}

@@ -1,5 +1,6 @@
 """Sink MERGE semantics (S14-S16) + search surface (§3.2-3.3) tests."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from dug_spark.operators import search, sink

@@ -274,3 +274,32 @@ def test_incremental_update_equals_full_recompute(spark):
         assert got == want
         rec = sorted(t.snapshots(spark).collect(), key=lambda r: r["seq"])[-1]
         assert rec["operation"] == "delta" and rec["snapshot_id"] == snap_id
+
+
+def test_racing_writers_one_commit_wins(spark, tmp_path, monkeypatch):
+    """Two handles on one root pick the same next seq; the log record is
+    claimed create-if-absent, so the second publish raises, the winner's
+    snapshot is the one readers see, and the loser's data dir is an
+    orphan that expiry collects."""
+    from dug_spark.plans import records
+
+    root = str(tmp_path / "tbl")
+    loser, winner = SnapshotTable(root), SnapshotTable(root)
+    real_publish = records.publish
+
+    def publish_after_winner(*args):
+        # the winner commits between the loser's seq pick and its publish
+        monkeypatch.setattr(records, "publish", real_publish)
+        winner.overwrite(_df(spark, [2]))
+        real_publish(*args)
+
+    monkeypatch.setattr(records, "publish", publish_after_winner)
+    with pytest.raises(FileExistsError):
+        loser.overwrite(_df(spark, [1]))
+    assert _xs(loser.read(spark)) == [2]
+    assert [r["run_id"] for r in loser.snapshots(spark).collect()] == [winner.run_id]
+    assert os.listdir(os.path.join(root, "_log")) == ["00000001.json"]
+    assert len([d for d in os.listdir(root) if d.startswith("snap-")]) == 2
+    loser.expire_snapshots(spark, keep_last=1)
+    assert len([d for d in os.listdir(root) if d.startswith("snap-")]) == 1
+    assert _xs(loser.read(spark)) == [2]
