@@ -19,21 +19,44 @@ the reference's per-field clause boosts and tokenized by the shared
 ``std_with_stopwords`` analyzer (functions/analyzer.py).  ES
 ``fuzziness`` — the reference's default (fuzziness=1, prefix_length=3 on
 every match clause, async_search.py:113) — is implemented by
-``fuzzy_expand_terms`` + SynonymQuery blending in both BM25 entry points
-and is deterministic (JVM levenshtein over a vocabulary aggregation), so
-it carries a full cross-engine oracle (the ``search_bm25_fuzzy`` contract
-row derives the same expansion in DuckDB SQL).  The legacy
+SynonymQuery blending over a deterministic expansion in both BM25 entry
+points: ``bm25_topk`` runs ``fuzzy_expand_terms`` (JVM levenshtein over a
+vocabulary aggregation), the boosted entry points apply the same prefix,
+distance and cap rules to the vocabulary their index state already holds
+(``_expand_in_vocab``, no Spark job).  It carries a full cross-engine
+oracle (the ``search_bm25_fuzzy`` contract row derives the same expansion
+in DuckDB SQL).  The legacy
 ``concept_score``/``variable_score`` structure-only predicates are kept
 for the deterministic fallback paths.  Remaining documented deviation:
 phrase matching is contiguous on stopword-stripped tokens (ES keeps
 position gaps where stopwords were removed).
+
+Serving plan shape: as in ES, where tokens, field lengths and term
+statistics are index-time state, the boosted BM25 entry points
+(``bm25_boosted_topk``, ``search_concepts_bm25``,
+``search_variables_bm25``) build that state once per index DataFrame —
+the tokenized base, persisted, plus per-field docCount, Σdl and the
+term → docFreq vocabulary, which the driver holds (vocabulary-sized, as
+Lucene's resident term dictionary).  Every later query against the same
+DataFrame object folds idf on the driver and runs one map-side scoring
+scan ending in TakeOrderedAndProject: one Spark job, fuzzy or not.
+Query text reaches Spark SQL only as analyzer output (``[a-z0-9 ]``), so
+the spliced literals parse the same under every parser setting.
 """
 
 from __future__ import annotations
 
+import bisect
+import itertools
+import logging
+import queue
 import re
+import threading
+import weakref
 from functools import reduce
+from typing import NamedTuple
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -225,21 +248,57 @@ def fuzzy_expand_terms(
     rows = vocab.select("t", *flags).where(
         reduce(lambda a, b_: a | b_, [F.col(f"m_{i}") for i in range(len(qtoks))])
     ).collect()
-    groups: dict[str, list[str]] = {q: {q} for q in qtoks}
+    groups: dict[str, set[str]] = {q: {q} for q in qtoks}
     for r in rows:
         for i, q in enumerate(qtoks):
             if r[f"m_{i}"]:
                 groups[q].add(r["t"])
-    def _cap(q: str, terms: set[str]) -> list[str]:
-        # the original token ALWAYS stays in its group (ES keeps the
-        # distance-0 term); only the expansions compete for the cap
-        rest = sorted(t for t in terms if t != q)[: max_expansions - 1]
-        return sorted([q] + rest)
-
-    return {q: _cap(q, terms) for q, terms in groups.items()}
+    return {q: _cap_group(q, terms, max_expansions) for q, terms in groups.items()}
 
 
-#: above this many distinct (field, term) df columns, per-term conditional
+def _cap_group(q: str, terms, max_expansions: int) -> list[str]:
+    """The sorted expansion group of ``q`` under the max_expansions cap:
+    the original token ALWAYS stays in its group (ES keeps the distance-0
+    term); only the expansions compete for the cap."""
+    rest = sorted(t for t in terms if t != q)[: max_expansions - 1]
+    return sorted([q] + rest)
+
+
+def _levenshtein(a: str, b: str) -> int:
+    """Plain Levenshtein distance, as the JVM ``levenshtein`` computes it."""
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
+def _expand_in_vocab(
+    terms: list[str], qtoks: list[str], fuzziness: int, prefix_length: int,
+    max_expansions: int = 50,
+) -> dict[str, list[str]]:
+    """``fuzzy_expand_terms`` against a field vocabulary the driver already
+    holds (a BM25 index state's sorted term list): same prefix and
+    distance predicates, same cap, no Spark job.  The prefix rule is a
+    bisect into ``terms``; only terms inside the prefix range are
+    measured."""
+    groups = {}
+    for q in qtoks:
+        prefix = q[:prefix_length]
+        i = bisect.bisect_left(terms, prefix)
+        near = []
+        while i < len(terms) and terms[i].startswith(prefix):
+            t = terms[i]
+            if abs(len(t) - len(q)) <= fuzziness and _levenshtein(t, q) <= fuzziness:
+                near.append(t)
+            i += 1
+        groups[q] = _cap_group(q, near, max_expansions)
+    return groups
+
+
+#: bm25_topk: above this many distinct term df columns, per-term conditional
 #: sums in ONE agg would build thousands of Catalyst expression nodes
 #: (fuzziness=1 × max_expansions=50 × multi-token query) — switch to the
 #: explode-based df aggregation instead (VERDICT r4 "agg-width" guard)
@@ -263,9 +322,19 @@ def _group_tf(tk_col: str, group: list[str]) -> F.Column:
     ).cast("double")
 
 
+_ANALYZED = re.compile(r"[a-z0-9 ]*")
+
+
 def _sql_str(v: str) -> str:
-    """Spark-SQL single-quoted string literal."""
-    return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
+    """Spark-SQL single-quoted literal of analyzer output: a token, a
+    fuzzy-expanded vocabulary term or the space-joined phrase.  Those hold
+    only ``[a-z0-9 ]`` (the analyzer splits on ``[^a-z0-9]+``), which
+    parse the same under every parser setting — no escaping can, since
+    ``spark.sql.parser.escapedStringLiterals`` changes how quotes and
+    backslashes read.  Anything else raises."""
+    if not _ANALYZED.fullmatch(v):
+        raise ValueError(f"not analyzer output: {v!r}")
+    return f"'{v}'"
 
 
 def _sql_dbl(v: float) -> str:
@@ -374,7 +443,7 @@ def bm25_topk(
     # scan and the scoring scan all read the materialized token arrays —
     # without the cut each pays the full analyze_col regex pass again.
     # Stats aggregate + score expression composed as SQL text (same
-    # expression trees, one py4j round-trip each — see bm25_boosted_topk)
+    # expression trees, one py4j round-trip each — see _score_topk)
     base = df.selectExpr(
         f"`{id_col}` AS id",
         f"{analyzer.analyze_spark_col_sql(f'`{text_col}`', stopwords)} AS toks",
@@ -590,11 +659,21 @@ def bm25_boosted_topk(
 
     Lucene statistics semantics: per-field docCount (docs with ≥1 token
     in THAT field) drives both idf and avgdl; a field empty across the
-    corpus contributes nothing.  Plan shape is identical to bm25_topk and
-    scale-safe at 10^12 docs: ONE corpus aggregation (|fields|·|query|
-    conditional sums → one collected row), idf folded into literals,
-    map-side scoring, global top-k via TakeOrderedAndProject — the scored
-    corpus is never shuffled.
+    corpus contributes nothing.
+
+    Plan shape: like Elasticsearch, the statistics are index-time state.
+    The first query against ``df`` builds it once — the tokenized base,
+    persisted MEMORY_AND_DISK, plus per-field docCount, Σdl and the
+    term → docFreq vocabulary from ONE explode-aggregate (a vocabulary-
+    sized shuffle and collect; the driver holds the vocabulary, as Lucene
+    keeps its term dictionary resident).  Every later query with the same
+    ``df`` object and field specs reuses it: idf is folded on the driver
+    and the query runs ONE map-side scoring scan of the base ending in
+    TakeOrderedAndProject — one Spark job, and the scored corpus is never
+    shuffled.  The state is keyed on the DataFrame object (a re-read of a
+    rewritten path is a new object, so it never sees stale statistics)
+    and is unpersisted by the first search after that object is
+    garbage-collected.
 
     ``fields``: (key, string column expression, [(gate, boost), ...]) —
     or a 4-tuple with the raw ``array<string>`` column appended: for
@@ -605,24 +684,124 @@ def bm25_boosted_topk(
     still use the joined text (ES field length counts real tokens only —
     gap positions don't add to dl).
     ``fuzziness`` > 0 expands each query token against each FIELD's own
-    vocabulary (fuzzy_expand_terms — ES expands per field) and scores
-    groups with SynonymQuery blending (tf = Σ member tfs, docFreq = max);
+    vocabulary (the state's terms, expanded on the driver with
+    fuzzy_expand_terms' prefix, distance and cap rules, so no Spark job —
+    ES expands per field) and scores groups with SynonymQuery blending
+    (tf = Σ member tfs, docFreq = max);
     match_phrase clauses stay exact (ES match_phrase has no fuzziness),
     and the "and" gate requires every group to have ≥1 member present.
     Remaining deviation, documented: phrase matching is contiguous on
     stopword-stripped tokens (ES keeps position gaps where stopwords were
     removed).
     """
-    import math
-
-    qtoks_ordered = analyzer.analyze(query, stopwords)
-    toks = sorted(set(qtoks_ordered))
-    phrase = " ".join(qtoks_ordered)
     extra_cols = extra_cols or []
     fields = [
         (spec[0], spec[1], spec[2], spec[3] if len(spec) > 3 else None)
         for spec in fields
     ]
+    state = _index_state(df, fields, id_col, extra_cols, stopwords)
+    return _score_topk(
+        state, query, fields, k, k1, b, stopwords, extra_cols, fuzziness,
+        prefix_length,
+    )
+
+
+class _IndexState(NamedTuple):
+    """The index-time statistics Lucene keeps per field, built once per
+    index DataFrame: the tokenized base (``id``, extra columns, ``tk_*``,
+    ``el_*``, ``dl_*``), persisted; per-field docCount and Σdl; and the
+    per-field term → docFreq vocabulary, held on the driver, with its
+    terms sorted for fuzzy expansion."""
+
+    base: DataFrame
+    doc_count: dict[str, int]
+    sum_dl: dict[str, int]
+    doc_freq: dict[str, dict[str, int]]
+    terms: dict[str, list[str]]
+
+
+#: {index DataFrame: {base-shaping arguments: _IndexState}}.  Keyed on the
+#: DataFrame object, never on its path or semanticHash(): two reads of one
+#: path before and after a rewrite compare equal under both.
+_STATES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_STATES_LOCK = threading.Lock()
+#: state maps of collected index DataFrames, awaiting unpersist
+_RELEASED: queue.SimpleQueue = queue.SimpleQueue()
+_STATE_SEQ = itertools.count()
+
+
+def _release_collected() -> None:
+    """Unpersists the bases of collected index DataFrames.  A weakref
+    callback can fire inside a py4j call on the same thread (the cyclic
+    GC runs at any allocation), and a nested py4j call there would
+    interleave on that thread's socket.  So the callback only enqueues
+    (py4j releases its own objects the same way) and the next search
+    unpersists, on its caller's thread, before it calls Spark.  A one-shot
+    index's base thus outlives the call that built it until the next
+    search, and serves the caller's collect of the returned top-k."""
+    while True:
+        try:
+            per_df = _RELEASED.get_nowait()
+        except queue.Empty:
+            return
+        for state in per_df.values():
+            try:
+                state.base.unpersist()
+            except Exception:  # e.g. its session was stopped; keep serving
+                logging.getLogger(__name__).exception("unpersisting a BM25 base")
+
+
+def _spec_key(spec) -> str | None:
+    # callers rebuild Column specs on every call: key on the expression text
+    return spec if spec is None or isinstance(spec, str) else str(spec)
+
+
+def _index_state(
+    df: DataFrame,
+    fields: list[tuple],
+    id_col: str,
+    extra_cols: list[str],
+    stopwords: bool,
+    where: str | None = None,
+) -> _IndexState:
+    """The BM25 state of ``df`` (rows passing ``where``, a SQL predicate)
+    for these field specs: the first call builds it, every later call with
+    the same arguments reuses it.  The first search after ``df`` is
+    garbage-collected unpersists it.  The build runs outside the lock, so searches on
+    built indexes never wait for it; of two racing builds one is kept and
+    the other unpersisted."""
+    _release_collected()
+    key = (
+        id_col, tuple(extra_cols), stopwords, where,
+        tuple((f, _spec_key(c), _spec_key(a)) for f, c, _cl, a in fields),
+    )
+    with _STATES_LOCK:
+        state = _STATES.get(df, {}).get(key)
+    if state is not None:
+        return state
+    built = _build_state(df, fields, id_col, extra_cols, stopwords, where)
+    with _STATES_LOCK:
+        per_df = _STATES.get(df)
+        if per_df is None:
+            per_df = _STATES[df] = {}
+            weakref.finalize(df, _RELEASED.put, per_df)
+        state = per_df.setdefault(key, built)
+    if state is not built:
+        built.base.unpersist()
+    return state
+
+
+def _build_state(
+    df: DataFrame,
+    fields: list[tuple],
+    id_col: str,
+    extra_cols: list[str],
+    stopwords: bool,
+    where: str | None,
+) -> _IndexState:
+    """ONE tokenization pass over every field, persisted MEMORY_AND_DISK
+    (lineage kept: a lost block is recomputed), and ONE explode-aggregate
+    that materializes it and yields the whole vocabulary."""
     sel = [F.col(id_col).alias("id")] + [F.col(c) for c in extra_cols]
     for fname, col, _clauses, arr in fields:
         # field specs may be SQL fragments (str) instead of Columns:
@@ -662,78 +841,96 @@ def bm25_boosted_topk(
                         ),
                     ).alias(f"el_{fname}")
                 )
+    if where is not None:
+        df = df.where(where)
     base = df.select(*sel)
     for fname, _col, _clauses, _arr in fields:
         base = base.withColumn(f"dl_{fname}", F.size(f"tk_{fname}"))
-    # ONE tokenization pass over all fields: the per-field stats agg and
-    # the scoring scan both read the materialized token arrays instead
-    # of re-running 4 analyze_col regex passes each (lazy: materializes
-    # inside the stats-agg action, not as a separate job)
-    base = base.localCheckpoint(eager=False)
-    if not toks:
-        return base.select(
-            "id", *extra_cols, F.lit(0.0).alias("score")
-        ).where(F.lit(False))
-    fgroups: dict[str, dict[str, list[str]]] = {}
-    fterms: dict[str, list[str]] = {}
-    for fname, _col, _clauses, _arr in fields:
-        if fuzziness > 0:
-            fgroups[fname] = fuzzy_expand_terms(
-                base, F.col(f"tk_{fname}"), toks, fuzziness, prefix_length
-            )
+    # Spark's cache matches plans by semantics, so without this state's
+    # own always-true predicate a re-read of a rewritten path would be
+    # served this base's cached (old) rows
+    tag = F.lit(f"bm25-state-{next(_STATE_SEQ)}")
+    base = base.where(tag.isNotNull()).persist(StorageLevel.MEMORY_AND_DISK)
+    # per field: a (field, term) entry per distinct term gives docFreq;
+    # one NULL-term entry per doc with a non-empty field, carrying its
+    # length, gives docCount and Σdl.  The partial aggregate collapses the
+    # entries map-side, so the shuffle and the collected result are
+    # vocabulary-sized.
+    entries = ", ".join(
+        f"transform(array_distinct(tk_{fname}),"
+        f" t -> named_struct('f', {i}, 't', t, 'dl', 0L)),"
+        f" filter(array(named_struct('f', {i}, 't', CAST(NULL AS STRING),"
+        f" 'dl', CAST(dl_{fname} AS BIGINT))), e -> e.dl > 0)"
+        for i, (fname, _col, _clauses, _arr) in enumerate(fields)
+    )
+    # (not spark.sql(..., b=base): dropping its temp view uncaches base)
+    rows = (
+        base.selectExpr(f"explode(concat({entries})) AS e")
+        .groupBy("e.f", "e.t")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("e.dl").alias("dl"))
+        .collect()
+    )
+    names = [f for f, _c, _cl, _a in fields]
+    doc_count = dict.fromkeys(names, 0)
+    sum_dl = dict.fromkeys(names, 0)
+    doc_freq: dict[str, dict[str, int]] = {f: {} for f in names}
+    for r in rows:
+        fname = names[r["f"]]
+        if r["t"] is None:
+            doc_count[fname], sum_dl[fname] = r["n"], r["dl"]
         else:
-            fgroups[fname] = {t: [t] for t in toks}
-        fterms[fname] = sorted({t for g in fgroups[fname].values() for t in g})
-    # corpus stats: docCount + Σdl per field always ride one small agg;
-    # per-term df joins them inline only while the total (field, term)
-    # width stays bounded — a fuzzy multi-token query over 4 fields can
-    # reach |query|·max_expansions·|fields| terms, where the inline
-    # conditional sums would blow up Catalyst codegen (VERDICT r4
-    # "agg-width" guard) — the explode aggregation takes over there.
-    # The aggregate AND the score expression below are composed as SQL
-    # text (one parameterized spark.sql / selectExpr round-trip each):
-    # the old Column-by-Column build cost ~5k py4j calls ≈ 1 s of
-    # driver-side construction per query — 4× the query's execution at
-    # bench scale.  Every fragment mirrors its old Column tree node for
-    # node (same operators, same association order, float literals
-    # spliced via repr → parseDouble exact round-trip), so scores are
-    # bit-identical.
-    aggs = []
-    for fname, _col, _clauses, _arr in fields:
-        aggs.append(f"sum(CAST((dl_{fname} > 0) AS BIGINT)) AS n_{fname}")
-        aggs.append(f"sum(CAST(dl_{fname} AS BIGINT)) AS sumdl_{fname}")
-    wide = sum(len(fterms[f]) for f, _c, _cl, _a in fields) > _DF_AGG_WIDTH
-    if not wide:
-        for fname, _col, _clauses, _arr in fields:
-            for i, t in enumerate(fterms[fname]):
-                aggs.append(
-                    f"sum(IF(array_contains(tk_{fname}, {_sql_str(t)}), 1, 0))"
-                    f" AS df_{fname}_{i}"
-                )
-    stats = base.sparkSession.sql(
-        "SELECT " + ", ".join(aggs) + " FROM {b}", b=base
-    ).collect()[0]
-    fdf: dict[str, dict[str, int]] = {}
-    for fname, _col, _clauses, _arr in fields:
-        if wide:
-            fdf[fname] = _term_doc_freqs(base, f"tk_{fname}", fterms[fname])
-        else:
-            fdf[fname] = {
-                t: stats[f"df_{fname}_{i}"]
-                for i, t in enumerate(fterms[fname])
-            }
+            doc_freq[fname][r["t"]] = r["n"]
+    terms = {f: sorted(v) for f, v in doc_freq.items()}
+    return _IndexState(base, doc_count, sum_dl, doc_freq, terms)
 
+
+def _score_topk(
+    state: _IndexState,
+    query: str,
+    fields: list[tuple],
+    k: int,
+    k1: float,
+    b: float,
+    stopwords: bool,
+    extra_cols: list[str],
+    fuzziness: int,
+    prefix_length: int,
+    where: F.Column | None = None,
+) -> DataFrame:
+    """One query against a built state: idf folded on the driver, then ONE
+    map-side scoring scan of the persisted base ending in
+    TakeOrderedAndProject.  ``where`` restricts the scored rows, not the
+    statistics (an ES filter clause leaves collection statistics alone)."""
+    import math
+
+    qtoks_ordered = analyzer.analyze(query, stopwords)
+    toks = sorted(set(qtoks_ordered))
+    phrase = " ".join(qtoks_ordered)
+    base = state.base
+    # The score expression is composed as SQL text (one selectExpr
+    # round-trip): the old Column-by-Column build cost ~5k py4j calls ≈
+    # 1 s of driver-side construction per query.  Every fragment mirrors
+    # its old Column tree node for node (same operators, same association
+    # order, float literals spliced via repr → parseDouble exact
+    # round-trip), so scores are bit-identical.
     contribs = []
     for fname, _col, clauses, arr in fields:
-        n_f = stats[f"n_{fname}"]
-        if not n_f:
-            continue  # field absent corpus-wide: no stats, no contribution
-        avgdl = stats[f"sumdl_{fname}"] / float(n_f)
-        df_by_term = fdf[fname]
+        n_f = state.doc_count[fname]
+        if not n_f or not toks:
+            continue  # empty query, or field absent corpus-wide: no contribution
+        df_by_term = state.doc_freq[fname]
+        if fuzziness > 0:
+            groups = _expand_in_vocab(
+                state.terms[fname], toks, fuzziness, prefix_length
+            )
+        else:
+            groups = {t: [t] for t in toks}
+        avgdl = state.sum_dl[fname] / float(n_f)
         terms = []
         for q in toks:
-            group = fgroups[fname][q]
-            df_t = max(df_by_term[t] for t in group)  # SynonymQuery docFreq
+            group = groups[q]
+            # SynonymQuery docFreq
+            df_t = max(df_by_term.get(t, 0) for t in group)
             idf = math.log(1.0 + (n_f - df_t + 0.5) / (df_t + 0.5))
             tf = _group_tf_sql(f"tk_{fname}", group)  # Σ member tfs, one scan
             terms.append(
@@ -745,7 +942,7 @@ def bm25_boosted_topk(
         bm25 = " + ".join(terms)
         padded = f"concat(' ', array_join(tk_{fname}, ' '), ' ')"
         all_present = " AND ".join(
-            _group_present_sql(f"tk_{fname}", fgroups[fname][q]) for q in toks
+            _group_present_sql(f"tk_{fname}", groups[q]) for q in toks
         )
         mult = _sql_dbl(0.0)
         for gate, boost in clauses:
@@ -771,6 +968,8 @@ def bm25_boosted_topk(
             "id", *extra_cols, F.lit(0.0).alias("score")
         ).where(F.lit(False))
     total = " + ".join(contribs)
+    if where is not None:
+        base = base.where(where)
     return (
         base.selectExpr(
             "id", *[f"`{c}`" for c in extra_cols], f"{total} AS _raw"
@@ -780,6 +979,21 @@ def bm25_boosted_topk(
         .orderBy(F.desc("score"), F.asc("id"))
         .limit(k)
     )
+
+
+def _bm25_fields(clauses: list[tuple[str, list[tuple[str, float]]]]) -> list[tuple]:
+    """4-tuple field specs for an index's clause table: array fields are
+    scored over their space-joined text and carry the raw array for
+    per-element phrase gates (position_increment_gap)."""
+    arrays = ("search_terms", "optional_terms")
+    return [
+        (key,
+         f"array_join(coalesce(`{key}`, CAST(array() AS ARRAY<STRING>)), ' ')"
+         if key in arrays else f"`{key}`",
+         field_clauses,
+         f"`{key}`" if key in arrays else None)
+        for key, field_clauses in clauses
+    ]
 
 
 def search_concepts_bm25(
@@ -796,22 +1010,22 @@ def search_concepts_bm25(
     query pins fuzziness=0 (the expansion depends on the field vocabulary,
     which a closed-form SQL oracle can't fold) — fuzzy behavior is
     pytest-verified against a pure-Python recompute instead.
+
+    The index state (see bm25_boosted_topk) is keyed on ``concepts``
+    itself — the non-empty filter is part of the state — so a server that
+    passes one index DataFrame builds the state on its first query and
+    runs one Spark job per later query.
     Output: (concept_id, name, type, score) top-k."""
-    fields = [
-        (key, f"`{key}`" if key not in ("search_terms", "optional_terms")
-         else f"array_join(coalesce(`{key}`, CAST(array() AS ARRAY<STRING>)), ' ')",
-         clauses,
-         # raw array for per-element phrase gates (position_increment_gap)
-         f"`{key}`" if key in ("search_terms", "optional_terms") else None)
-        for key, clauses in CONCEPT_BM25_CLAUSES
-    ]
-    base = concepts.where(
-        (F.length(F.coalesce("name", F.lit(""))) > 0)
-        & (F.length(F.coalesce("description", F.lit(""))) > 0)
+    fields = _bm25_fields(CONCEPT_BM25_CLAUSES)
+    extra_cols = ["name", "type"]
+    state = _index_state(
+        concepts, fields, "concept_id", extra_cols, stopwords,
+        where="length(coalesce(name, '')) > 0"
+        " AND length(coalesce(description, '')) > 0",
     )
-    out = bm25_boosted_topk(
-        base, query, fields, id_col="concept_id", k=k, stopwords=stopwords,
-        extra_cols=["name", "type"], fuzziness=fuzziness,
+    out = _score_topk(
+        state, query, fields, k, k1=1.2, b=0.75, stopwords=stopwords,
+        extra_cols=extra_cols, fuzziness=fuzziness, prefix_length=3,
     )
     return out.select(F.col("id").alias("concept_id"), "name", "type", "score")
 
@@ -826,21 +1040,25 @@ def search_variables_bm25(
 ) -> DataFrame:
     """search_variables with true per-field BM25 × clause boosts
     (_get_var_query, async_search.py:624-736), plus the must-match
-    concept-membership filter (:730-736)."""
-    fields = [
-        (key, f"`{key}`" if key not in ("search_terms", "optional_terms")
-         else f"array_join(coalesce(`{key}`, CAST(array() AS ARRAY<STRING>)), ' ')",
-         clauses,
-         # raw array for per-element phrase gates (position_increment_gap)
-         f"`{key}`" if key in ("search_terms", "optional_terms") else None)
-        for key, clauses in VARIABLE_BM25_CLAUSES
-    ]
-    base = variables
-    if concept:
-        base = base.where(F.array_contains("identifiers", concept))
-    out = bm25_boosted_topk(
-        base, query, fields, id_col="element_id", k=k, stopwords=stopwords,
-        extra_cols=["element_name", "data_type"], fuzziness=fuzziness,
+    concept-membership filter (:730-736).
+
+    The index state (see bm25_boosted_topk) is keyed on ``variables``
+    itself and built once; it carries ``identifiers`` when the index has
+    it.  ``concept`` filters the scoring scan only, so a concept search is
+    one Spark job too, and a long-lived index holds one persisted base
+    however many concepts it serves.  BM25 statistics stay the whole
+    index's, as in ES, where a filter does not change collection
+    statistics."""
+    fields = _bm25_fields(VARIABLE_BM25_CLAUSES)
+    extra_cols = ["element_name", "data_type"]
+    members = ["identifiers"] if "identifiers" in variables.columns else []
+    state = _index_state(
+        variables, fields, "element_id", extra_cols + members, stopwords
+    )
+    out = _score_topk(
+        state, query, fields, k, k1=1.2, b=0.75, stopwords=stopwords,
+        extra_cols=extra_cols, fuzziness=fuzziness, prefix_length=3,
+        where=F.array_contains("identifiers", concept) if concept else None,
     )
     return out.select(
         F.col("id").alias("element_id"), "element_name", "data_type", "score"
