@@ -37,6 +37,8 @@ Scale shape (100 TB triple table):
   partitioning across consecutive joins, so Catalyst elides the repeat
   exchange; AQE's skew-join splitter handles hot entities (the same
   skew class plans/skew.py salts for writes).
+- k-hop paths (`bounded_reachability`) are ONE lazy plan too, linear in
+  k, each hop joining the reached set: no per-hop job before the action.
 """
 
 from __future__ import annotations
@@ -216,38 +218,34 @@ def bounded_reachability(
     the minimal hop count: (seed, node, hops).
 
     The path-query companion to :func:`match_bgp` — fixed-length chains
-    are BGPs, variable-length ones need iteration.  Semi-naive BFS: each
-    round joins only the FRONTIER (nodes first reached last round)
-    against the edge list, anti-joined against the visited set, so work
-    per round is frontier-sized, not visited-sized — the same discipline
-    as graph.transitive_closure but rooted at seeds and hop-bounded,
-    which is what an interactive "what is within k hops of this concept"
-    query wants at corpus scale (closure over the whole graph is
-    quadratic output; k-hop from seeds is neighborhood-sized).
+    are BGPs, variable-length ones need iteration — rooted at seeds and
+    hop-bounded, which is what an interactive "what is within k hops of
+    this concept" query wants at corpus scale (closure over the whole
+    graph is quadratic output; k-hop from seeds is neighborhood-sized).
+    Each hop keeps every reached row plus its successors at hops + 1 and
+    takes min(hops) per (seed, node): the minimum over walks of length
+    <= k is the BFS distance, so the seed (hops 0) stays out of the
+    result even when a cycle leads back to it.
 
-    Scale shape: the frontier and visited sets are (seed x node)-sized,
-    edges corpus-sized; each round is one shuffle join edges src = node
-    plus one aggregate; frontiers are localCheckpointed per round to cut
-    the growing lineage (the canonicalize.connected_components pattern).
-    ``seeds`` needs one column ``seed`` (a node id).
+    Scale shape: ONE lazy plan — no job before the caller's action, no
+    per-hop checkpoint or emptiness probe.  Each hop reads the previous
+    one once (plan linear in max_hops, ``seeds`` scanned once) and is one
+    join of the REACHED set, not just the newest frontier, against the
+    corpus-sized edges plus one (seed, node) aggregate, so work per hop is
+    reached-set-sized.  ``seeds`` needs one column ``seed`` (a node id).
     """
     if max_hops < 1:
         raise ValueError("max_hops must be >= 1")
-    e = edges.select(F.col(src_col).alias("_s"), F.col(dst_col).alias("_d"))
-    frontier = seeds.select(F.col("seed"), F.col("seed").alias("node")).distinct()
-    visited = frontier.withColumn("hops", F.lit(0)).localCheckpoint(eager=True)
-    frontier = visited.select("seed", "node")
-    for hop in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(e, on=frontier.node == e._s, how="inner")
-            .select("seed", F.col("_d").alias("node"))
-            .distinct()
-            .join(visited.select("seed", "node"), on=["seed", "node"], how="left_anti")
-            .withColumn("hops", F.lit(hop))
-            .localCheckpoint(eager=True)
+    e = edges.select(F.col(src_col).alias("node"), F.col(dst_col).alias("_d"))
+    reached = seeds.select("seed", F.col("seed").alias("node"), F.lit(0).alias("hops"))
+    for _ in range(max_hops):
+        reached = (
+            reached.join(e, on="node", how="left")
+            .select("seed", F.inline(F.array(
+                F.struct("node", "hops"),
+                F.struct(F.col("_d").alias("node"), (F.col("hops") + 1).alias("hops")),
+            )))
+            .where(F.col("node").isNotNull())
+            .groupBy("seed", "node").agg(F.min("hops").alias("hops"))
         )
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt.select("seed", "node")
-    return visited.where(F.col("hops") > 0)
+    return reached.where(F.col("hops") > 0)

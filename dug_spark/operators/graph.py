@@ -1314,7 +1314,9 @@ def shortest_paths(
     each seed reachable within ``iterations`` edge relaxations
     (non-negative weights; exact SSSP once iterations ≥ longest shortest
     path's hop count).  Complements bgp.bounded_reachability, which is
-    the UNWEIGHTED hop-count special case — weighted distance is what
+    the UNWEIGHTED hop-count special case (there one lazy plan whose
+    hops rejoin the whole reached set, where this one checkpoints a
+    frontier per round) — weighted distance is what
     ranks ontology paths (edge weight = 1/association strength) and
     host-graph latches.
 
@@ -1515,8 +1517,9 @@ def betweenness(
     - forward: multi-seed BFS accumulating σ(v) = number of shortest
       s→v paths; each round is ONE frontier⋈edges join (frontier-sized
       left side) + a (seed, node) sum + an anti-join against the
-      visited set — same shape as bgp.bounded_reachability plus the
-      path-count aggregate.
+      visited set — the frontier-driven BFS that bgp.bounded_reachability
+      trades for one lazy plan over the reached set, plus the path-count
+      aggregate.
     - backward: dependencies flow one level at a time from the deepest
       level up: δ(v) += Σ_{w∈succ(v), d(w)=d(v)+1} σ(v)/σ(w)·(1+δ(w)),
       one level-slice⋈edges join per level (level-sized inputs — the

@@ -39,10 +39,10 @@ a tombstone dir (``del-<seq>-<id>``, a parquet of key values) plus an
 appended data dir; ``delete_where(keys)`` commits a tombstone alone.
 Readers merge on read: a row is dropped iff some tombstone with a
 STRICTLY NEWER commit seq matches its key — so a delta commit's own new
-rows survive its own tombstone, and re-deleting later works.  The
-per-dir seq is encoded in the dir name; the anti-join is keyed on the
-tombstone's columns with the max-tombstone-seq table broadcast
-(tombstones are churn-sized, never table-sized).  ``compact()``
+rows survive its own tombstone, and re-deleting later works.  Seqs, in
+the dir names, are compared at planning as Iceberg plans equality
+deletes: data dirs sharing one suffix of newer tombstone dirs anti-join
+a broadcast of it (churn-sized, never table-sized).  ``compact()``
 materializes the merged view into a fresh overwrite snapshot, clearing
 tombstones (Iceberg's rewrite_data_files).  All tombstones of a table
 must share one key schema (checked at commit against the stored one).
@@ -68,7 +68,9 @@ import os
 import shutil
 import time
 import uuid
+from bisect import bisect_right
 from functools import reduce
+from itertools import groupby
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -235,30 +237,30 @@ class SnapshotTable:
         # partition discovery — and partition PRUNING under filters —
         # applies inside every branch; a single multi-path read would
         # raise CONFLICTING_DIRECTORY_STRUCTURES across partitioned roots
-        def scan(dirs: list[str], schema: dict, seq_col: str) -> DataFrame:
+        def scan(dirs: list[str], schema: dict) -> DataFrame:
             sch = StructType.fromJson(schema)
             return reduce(DataFrame.unionByName, [
                 spark.read.schema(sch).parquet(os.path.join(self.root, d))
-                .withColumn(seq_col, F.lit(_dir_seq(d)))
                 for d in dirs
             ])
 
-        data = scan(rec["data_dirs"], rec["schema"], "_dseq")
-        if not rec["delete_dirs"]:
-            return data.drop("_dseq")
-        # merge-on-read: a row survives unless a tombstone from a
-        # STRICTLY NEWER commit matches its key.  The per-row commit seq
-        # is a literal per data dir (free in codegen, no storage); the
-        # tombstone side reduces to (key -> newest tombstone seq), which
-        # is churn-sized and broadcasts.
-        tomb = scan(rec["delete_dirs"], rec["delete_schema"], "_tseq")
-        keys = [c for c in tomb.columns if c != "_tseq"]
-        tmax = tomb.groupBy(*keys).agg(F.max("_tseq").alias("_tseq"))
-        return (
-            data.join(F.broadcast(tmax), on=keys, how="left")
-            .where(F.col("_tseq").isNull() | (F.col("_tseq") <= F.col("_dseq")))
-            .drop("_tseq", "_dseq")
-        )
+        # a row survives unless a STRICTLY NEWER tombstone matches its
+        # key: group the data dirs by their first strictly newer tombstone
+        tombs = sorted(rec["delete_dirs"], key=_dir_seq)
+        parts = []
+        for first, dirs in groupby(
+            sorted(rec["data_dirs"], key=_dir_seq),
+            key=lambda d: bisect_right(tombs, _dir_seq(d), key=_dir_seq),
+        ):
+            data = scan(list(dirs), rec["schema"])
+            if first < len(tombs):
+                tomb = scan(tombs[first:], rec["delete_schema"])
+                # a USING join puts the keys first: keep the stored order
+                data = data.join(
+                    F.broadcast(tomb), on=tomb.columns, how="left_anti"
+                ).select(*data.columns)
+            parts.append(data)
+        return reduce(DataFrame.unionByName, parts)
 
     def read(self, spark: SparkSession) -> DataFrame:
         """The current snapshot (tombstones merged on read)."""

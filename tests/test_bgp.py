@@ -1,11 +1,15 @@
 """BGP matcher (bgp.match_bgp) vs a brute-force pure-Python binder, and
-bounded_reachability vs a hop-limited BFS mirror."""
+bounded_reachability vs a hop-limited BFS mirror, its laziness and its
+job count."""
 
 import itertools
+from contextlib import contextmanager
 
 import pytest
+from pyspark.sql import functions as F
 
 from dug_spark.operators import bgp
+from dug_spark.plans.snapshots import SnapshotTable
 
 TRIPLES = [
     ("d1", "HAS_CONCEPT", "c1"),
@@ -162,6 +166,74 @@ def test_bounded_reachability_bad_hops(spark):
     seeds = spark.createDataFrame([("a",)], "seed string")
     with pytest.raises(ValueError):
         bgp.bounded_reachability(e, seeds, 0)
+
+
+@contextmanager
+def _jobs(spark, group):
+    """Yields a list that holds, after the block, the block's job count
+    (read from Spark's status store once the listener bus is drained)."""
+    sc = spark.sparkContext
+    out = []
+    sc.setJobGroup(group, group)
+    try:
+        yield out
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        out.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+
+def _plan_nodes(df):
+    return len(df._jdf.queryExecution().optimizedPlan().treeString().splitlines())
+
+
+def test_bounded_reachability_is_one_lazy_linear_plan(spark):
+    """Building the query runs no job (the per-hop localCheckpoint and
+    isEmpty probe ran several before any action), and the plan grows
+    linearly in max_hops: an anti-join loop that reads the previous hop
+    twice would grow as 2^k."""
+    e = spark.createDataFrame(EDGES, "src string, dst string")
+    seeds = spark.createDataFrame([("a",), ("z",)], "seed string")
+    with _jobs(spark, "reach_build") as n:
+        five = bgp.bounded_reachability(e, seeds, 5)
+        ten = bgp.bounded_reachability(e, seeds, 10)
+    assert n == [0]
+    assert _plan_nodes(ten) <= 2.5 * _plan_nodes(five)
+
+
+def test_bounded_reachability_over_snapshot_delta_job_count(spark, tmp_path):
+    """A 2-hop reach over a merge-on-read snapshot with one pending
+    delta, as a served KG answers it: 5 jobs on the local test session
+    (broadcast of the tombstone suffix, broadcast of the edges, one
+    aggregate shuffle per hop, the result).  The per-hop checkpoint loop
+    ran 21."""
+    docs = {f"d{i}": {f"c{(i * j) % 7}" for j in (1, 2, 3)} for i in range(12)}
+    t = SnapshotTable(str(tmp_path / "kg"))
+
+    def triples(ds):
+        return spark.createDataFrame(
+            [(d, "HAS_CONCEPT", c) for d in ds for c in sorted(docs[d])],
+            "subj string, pred string, obj string")
+
+    t.overwrite(triples(sorted(docs)), partition_by=["pred"])
+    docs["d3"] = {"c6", "c9"}
+    docs["d5"] = set()
+    t.delta(triples(["d3"]),
+            spark.createDataFrame([("d3",), ("d5",)], "subj string"),
+            partition_by=["pred"])
+
+    snap = t.read(spark).select("subj", "obj")
+    edges = snap.select(F.col("obj").alias("src"), F.col("subj").alias("dst")).unionByName(
+        snap.select(F.col("subj").alias("src"), F.col("obj").alias("dst")))
+    seeds = spark.createDataFrame([("c3",)], "seed string")
+    with _jobs(spark, "reach_2hop") as n:
+        got = {r["node"]: r["hops"]
+               for r in bgp.bounded_reachability(edges, seeds, 2).collect()}
+    want = {d: 1 for d, cs in docs.items() if "c3" in cs}
+    want.update({c: 2 for d in list(want) for c in docs[d] if c != "c3"})
+    assert got == want
+    assert "d3" not in got and "d5" not in got  # their c3 rows are tombstoned
+    assert n[0] <= 5, n
 
 
 # ------------------------------------------------- cost-based ordering

@@ -731,17 +731,21 @@ def test_bm25_wide_df_path_matches_inline(spark, monkeypatch):
         (r["id"], r["score"]) for r in wide
     ]
 
-    cdf = spark.createDataFrame(
-        [(str(i), t) for i, t in rows], "concept_id string, name string"
-    )
+    def cdf():
+        return spark.createDataFrame(
+            [(str(i), t) for i, t in rows], "concept_id string, name string"
+        )
+
     fields = [("name", F.col("name"), [("phrase", 10.0), ("or", 1.0)])]
     monkeypatch.undo()
     inline_b = search.bm25_boosted_topk(
-        cdf, "spark stream", fields, k=10, fuzziness=1
+        cdf(), "spark stream", fields, k=10, fuzziness=1
     ).collect()
     monkeypatch.setattr(search, "_DF_AGG_WIDTH", 0)
+    # a fresh DataFrame over the same rows: the index state is built per
+    # DataFrame object, so this compares a rebuilt state, not a reused one
     wide_b = search.bm25_boosted_topk(
-        cdf, "spark stream", fields, k=10, fuzziness=1
+        cdf(), "spark stream", fields, k=10, fuzziness=1
     ).collect()
     assert [(r["id"], r["score"]) for r in inline_b] == [
         (r["id"], r["score"]) for r in wide_b

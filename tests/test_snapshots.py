@@ -2,6 +2,7 @@
 travel, crash-window invisibility, retention."""
 
 import os
+import random
 
 import pytest
 
@@ -192,6 +193,57 @@ def test_delta_atomic_replace_and_reinsert(spark, tmp_path):
     # and a later append resurrects the key (dir seq > tombstone seq)
     t.append(_kv(spark, [("a", 99)]))
     assert _kvs(t.read(spark)) == [("a", 99), ("b", 2)]
+
+
+def test_merge_on_read_matches_model_over_commit_stream(spark, tmp_path):
+    """A seeded stream of 20 commits (overwrite, append, delta,
+    delete_where) over five reused keys, every snapshot read back by
+    ``read_as_of`` and compared with a pure-Python model of merge-on-read:
+    a row is dropped iff a tombstone with a STRICTLY newer seq matches
+    its key.  The stream reaches three or more live tombstone dirs and
+    re-adds tombstoned keys; the key is not the table's first column, so
+    every read must also keep the stored column order."""
+    rng = random.Random(5)
+    keys = ["a", "b", "c", "d", "e"]
+    t = SnapshotTable(str(tmp_path / "tbl"))
+    data, tombs = [], []  # the model: (seq, rows) and (seq, keys) lists
+    expected, max_tombs, readded, v = {}, 0, False, 0
+    for seq in range(1, 21):
+        op = "overwrite" if seq == 1 else rng.choices(
+            ["overwrite", "append", "delta", "delete"], [1, 3, 4, 3])[0]
+        rows, dead = [], []
+        if op != "delete":
+            for k in rng.sample(keys, rng.randint(1, 3)):
+                v += 1
+                rows.append((v, k))
+        if op in ("delta", "delete"):
+            dead = rng.sample(keys, rng.randint(1, 2))
+        df = spark.createDataFrame(rows, "v int, k string")
+        ks = _keys(spark, dead)
+        if op == "overwrite":
+            snap = t.overwrite(df)
+            data, tombs = [], []
+        elif op == "append":
+            snap = t.append(df)
+        elif op == "delta":
+            snap = t.delta(df, ks)
+        else:
+            snap = t.delete_where(ks)
+        readded |= any(k in tks for _s, tks in tombs for _v, k in rows)
+        if rows:
+            data.append((seq, rows))
+        if dead:
+            tombs.append((seq, dead))
+        max_tombs = max(max_tombs, len(tombs))
+        expected[snap] = sorted(
+            (k, val) for ds, rs in data for val, k in rs
+            if not any(ts > ds and k in tks for ts, tks in tombs)
+        )
+    assert max_tombs >= 3 and readded
+    for snap, want in expected.items():
+        got = t.read_as_of(spark, snap)
+        assert got.columns == ["v", "k"]
+        assert _kvs(got) == want, snap
 
 
 def test_tombstone_key_columns_must_match(spark, tmp_path):
