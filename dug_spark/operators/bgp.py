@@ -38,7 +38,8 @@ Scale shape (100 TB triple table):
   exchange; AQE's skew-join splitter handles hot entities (the same
   skew class plans/skew.py salts for writes).
 - k-hop paths (`bounded_reachability`) are ONE lazy plan too, linear in
-  k, each hop joining the reached set: no per-hop job before the action.
+  k, each hop joining the reached set: no per-hop job before the action,
+  and corpus-sized edges are shuffled once per query, not once per hop.
 """
 
 from __future__ import annotations
@@ -232,7 +233,14 @@ def bounded_reachability(
     one once (plan linear in max_hops, ``seeds`` scanned once) and is one
     join of the REACHED set, not just the newest frontier, against the
     corpus-sized edges plus one (seed, node) aggregate, so work per hop is
-    reached-set-sized.  ``seeds`` needs one column ``seed`` (a node id).
+    reached-set-sized.  The join is a LEFT join that keeps every reached
+    row, so the edges are its build side, never the reached set: edges
+    under the broadcast threshold are broadcast once, and corpus-sized
+    edges are shuffled by src once per query, every hop reusing that one
+    exchange (the reached set's size is unknown at planning, so AQE
+    starts that shuffle before any hop's size is known, inner join or
+    not; the per-hop checkpoint loop shuffled the edges once per hop).
+    ``seeds`` needs one column ``seed`` (a node id).
     """
     if max_hops < 1:
         raise ValueError("max_hops must be >= 1")

@@ -39,10 +39,13 @@ a tombstone dir (``del-<seq>-<id>``, a parquet of key values) plus an
 appended data dir; ``delete_where(keys)`` commits a tombstone alone.
 Readers merge on read: a row is dropped iff some tombstone with a
 STRICTLY NEWER commit seq matches its key — so a delta commit's own new
-rows survive its own tombstone, and re-deleting later works.  Seqs, in
-the dir names, are compared at planning as Iceberg plans equality
-deletes: data dirs sharing one suffix of newer tombstone dirs anti-join
-a broadcast of it (churn-sized, never table-sized).  ``compact()``
+rows survive its own tombstone, and re-deleting later works.  Seqs live
+in the dir names (no storage) and are parsed from each row's file path,
+so a read is ONE anti-join of the data against a broadcast of every
+tombstone (churn-sized, never table-sized) on the key columns plus
+"tombstone seq > data seq", whatever the version or the number of
+pending tombstone dirs; the data side parses its seq only for rows
+whose key a tombstone matches.  ``compact()``
 materializes the merged view into a fresh overwrite snapshot, clearing
 tombstones (Iceberg's rewrite_data_files).  All tombstones of a table
 must share one key schema (checked at commit against the stored one).
@@ -68,9 +71,7 @@ import os
 import shutil
 import time
 import uuid
-from bisect import bisect_right
 from functools import reduce
-from itertools import groupby
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -86,10 +87,11 @@ LOG_COLUMNS = (
 )
 
 
-def _dir_seq(name: str) -> int:
-    """Commit seq encoded in a data/tombstone dir name
-    (``snap-<seq>-<id>`` / ``del-<seq>-<id>``)."""
-    return int(name.split("-")[1])
+def _path_seq(path):
+    """Commit seq of the data/tombstone dir holding the file at ``path``
+    (a Column): the ``<seq>`` of its last ``snap-<seq>-<id>`` /
+    ``del-<seq>-<id>`` path segment."""
+    return F.regexp_extract(path, r".*/(?:snap|del)-(\d+)-[^/]*/", 1).cast("long")
 
 
 def _key_columns(schema: dict) -> list[tuple[str, str]]:
@@ -237,30 +239,34 @@ class SnapshotTable:
         # partition discovery — and partition PRUNING under filters —
         # applies inside every branch; a single multi-path read would
         # raise CONFLICTING_DIRECTORY_STRUCTURES across partitioned roots
-        def scan(dirs: list[str], schema: dict) -> DataFrame:
+        def scan(dirs: list[str], schema: dict, path_col: str = "") -> DataFrame:
             sch = StructType.fromJson(schema)
-            return reduce(DataFrame.unionByName, [
-                spark.read.schema(sch).parquet(os.path.join(self.root, d))
-                for d in dirs
-            ])
+            frames = [spark.read.schema(sch).parquet(os.path.join(self.root, d))
+                      for d in dirs]
+            if path_col:
+                frames = [f.select("*", F.col("_metadata.file_path").alias(path_col))
+                          for f in frames]
+            return reduce(DataFrame.unionByName, frames)
 
-        # a row survives unless a STRICTLY NEWER tombstone matches its
-        # key: group the data dirs by their first strictly newer tombstone
-        tombs = sorted(rec["delete_dirs"], key=_dir_seq)
-        parts = []
-        for first, dirs in groupby(
-            sorted(rec["data_dirs"], key=_dir_seq),
-            key=lambda d: bisect_right(tombs, _dir_seq(d), key=_dir_seq),
-        ):
-            data = scan(list(dirs), rec["schema"])
-            if first < len(tombs):
-                tomb = scan(tombs[first:], rec["delete_schema"])
-                # a USING join puts the keys first: keep the stored order
-                data = data.join(
-                    F.broadcast(tomb), on=tomb.columns, how="left_anti"
-                ).select(*data.columns)
-            parts.append(data)
-        return reduce(DataFrame.unionByName, parts)
+        if not rec["delete_dirs"]:
+            return scan(rec["data_dirs"], rec["schema"])
+        data = scan(rec["data_dirs"], rec["schema"], "_dpath")
+        cols = [c for c in data.columns if c != "_dpath"]
+        # merge-on-read: a row survives unless a tombstone from a
+        # STRICTLY NEWER commit matches its key.  Each side's commit seq
+        # is parsed from its file's dir name, so the plan has one shape
+        # whatever the version (no per-version literal, and one broadcast
+        # anti-join however many tombstone dirs are pending); the data
+        # side parses it only for rows whose key a tombstone matches.
+        tomb = scan(rec["delete_dirs"], rec["delete_schema"], "_tpath")
+        keys = [c for c in tomb.columns if c != "_tpath"]
+        tomb = tomb.select(*keys, _path_seq(F.col("_tpath")).alias("_tseq"))
+        cond = reduce(
+            lambda a, b: a & b,
+            [data[k] == tomb[k] for k in keys],
+            tomb["_tseq"] > _path_seq(data["_dpath"]),
+        )
+        return data.join(F.broadcast(tomb), on=cond, how="left_anti").select(*cols)
 
     def read(self, spark: SparkSession) -> DataFrame:
         """The current snapshot (tombstones merged on read)."""

@@ -64,3 +64,20 @@ def test_table_metadata_runs_no_spark_jobs(spark, tmp_path):
     assert out.columns == ["id"]
     assert sum(r["output_rows"] for r in m) == 100
     assert sorted(r["partition_id"] for r in m) == [0, 1, 2, 3]
+
+
+def test_merged_read_jobs_do_not_grow_with_pending_tombstones(spark, tmp_path):
+    """A merged read is one broadcast anti-join whatever the number of
+    tombstone dirs since the last compact(): counting it runs the same
+    jobs at one and at four pending deltas (an anti-join per suffix of
+    newer tombstone dirs ran one more job per delta)."""
+    t = SnapshotTable(str(tmp_path / "tbl"))
+    t.overwrite(_kv(spark, 60), partition_by=["p"])
+    counts = []
+    for i in range(4):
+        keys = spark.createDataFrame([(f"k{i}",), (f"k{i + 10}",)], "k string")
+        t.delta(_kv(spark, 1, k0=i + 10), keys, partition_by=["p"])
+        with _jobs(spark, f"merged{i}") as n:
+            assert t.read(spark).count() == 60 - (i + 1)
+        counts.append(n[0])
+    assert counts == [counts[0]] * 4, counts

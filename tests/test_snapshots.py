@@ -246,6 +246,38 @@ def test_merge_on_read_matches_model_over_commit_stream(spark, tmp_path):
         assert _kvs(got) == want, snap
 
 
+def test_new_version_reuses_generated_code(spark, tmp_path):
+    """Commit seqs are parsed from file paths at run time, not inlined as
+    per-version literals, so reading a new snapshot version of the same
+    shape compiles no new Java classes (Spark's CodegenMetrics counts
+    every Janino compile).  This holds for the merge's join as written
+    in ``SnapshotTable._read_dirs``; a seq literal in the plan recompiled
+    6-35 classes per version and query."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    t = SnapshotTable(str(tmp_path / "tbl"))
+    t.overwrite(spark.createDataFrame(
+        [(f"d{i}", f"c{i % 7}", "HAS_CONCEPT") for i in range(40)],
+        "subj string, obj string, pred string"), partition_by=["pred"])
+
+    def new_version(i):
+        t.delta(spark.createDataFrame([(f"d{i}", "c9", "HAS_CONCEPT")],
+                                      "subj string, obj string, pred string"),
+                spark.createDataFrame([(f"d{i}",)], "subj string"),
+                partition_by=["pred"])
+        snap = t.read(spark)
+        return [snap.groupBy("pred").count(),
+                snap.where("obj = 'c9'").join(snap.where("obj = 'c2'"), "subj")]
+
+    for q in new_version(1):
+        q.collect()
+    t.compact(spark, partition_by=["pred"])
+    queries = new_version(2)
+    before = codegen.METRIC_COMPILATION_TIME().getCount()
+    got = [sorted(q.collect()) for q in queries]
+    assert codegen.METRIC_COMPILATION_TIME().getCount() == before
+    assert got[0][0]["count"] == 40 and got[1] == []
+
+
 def test_tombstone_key_columns_must_match(spark, tmp_path):
     t = SnapshotTable(str(tmp_path / "tbl"))
     t.overwrite(_kv(spark, [("a", 1)]))
