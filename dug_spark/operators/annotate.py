@@ -19,9 +19,10 @@ Presence (distinct per document) rather than per-span duplicates: the
 reference immediately dedupes spans into a dict keyed by identifier id
 (parsers/_base.py:99-104), so downstream semantics are identical.
 
-Scale: narrow transformation — no shuffle; the trie is built once per
-executor from the broadcast (not per task); output partitioning follows the
-input scan.  At 100 TB the only cost is the linear token scan.
+Scale: narrow transformation — no shuffle; each task reads the broadcast
+and builds its lowercased term map and trie once, before its first batch;
+output partitioning follows the input scan.  At 100 TB the cost is the
+linear token scan plus one trie build per task.
 """
 
 from __future__ import annotations
@@ -82,110 +83,6 @@ def collect_dictionary(dictionary: DataFrame) -> dict[str, list]:
     return entries
 
 
-def _annotate_jvm(
-    corpus: DataFrame,
-    entries: dict[str, list],
-    id_col: str,
-    text_col: str,
-    preprocess: bool,
-    debreviator: dict[str, str] | None,
-    stopwords: list[str] | None,
-) -> DataFrame:
-    """Small-dictionary fast path: the whole scan as ONE whole-stage-
-    codegen expression — no Python workers, no broadcast, no Arrow
-    transpose (guide: prefer built-ins over the JVM↔Python boundary).
-
-    Exact semantic mirror of the trie scan: the token stream is rebuilt
-    as a single-space-joined, space-padded, lowercased string, so a
-    ``contains(' term ')`` probe is precisely "the term's words appear
-    consecutively in the token sequence" — the trie's match condition.
-    One probe per distinct surface; matched surfaces emit their
-    dictionary entries via a gated literal-struct array + explode.
-    Terms that can never match under the Python tokenizer (empty, or
-    carrying leading/trailing/double spaces) are skipped, matching the
-    trie's behavior of never finding them."""
-    from ..functions.text import DEFAULT_DEBREVIATOR, DEFAULT_STOPWORDS
-
-    def s(v: str) -> str:
-        # the text also passes through spark.sql's ``{src}`` formatting,
-        # which reads single braces as fields: double them
-        v = str(v).replace("\\", "\\\\").replace("'", "\\'")
-        return "'" + v.replace("{", "{{").replace("}", "}}") + "'"
-
-    # the expression is composed as ONE SQL string (a single F.expr /
-    # py4j round-trip): building ~50 gated struct literals through the
-    # Column API costs hundreds of py4j calls and dominates small-query
-    # latency as driver-side plan-construction time
-    text = f"coalesce(`{text_col}`, '')"
-    if preprocess:
-        deb = DEFAULT_DEBREVIATOR if debreviator is None else debreviator
-        stop = DEFAULT_STOPWORDS if stopwords is None else stopwords
-        for key, value in deb.items():
-            text = f"replace({text}, {s(key)}, {s(value)})"
-        if stop:
-            stop_arr = "array(" + ", ".join(s(w) for w in stop) + ")"
-            toks = (
-                f"filter(split({text}, '\\\\s+'), "
-                f"w -> w != '' and not array_contains({stop_arr}, w))"
-            )
-        else:
-            toks = f"filter(split({text}, '\\\\s+'), w -> w != '')"
-        padded = f"concat(' ', lower(array_join({toks}, ' ')), ' ')"
-    else:
-        toks = f"filter(split(lower({text}), '\\\\s+'), w -> w != '')"
-        padded = f"concat(' ', array_join({toks}, ' '), ' ')"
-
-    cands = []
-    for term in sorted(entries):
-        low = term.lower()
-        if not low or low != low.strip() or "  " in low:
-            continue  # the trie scan can never match these
-        hit = f"contains(_padded, {s(' ' + low + ' ')})"
-        for curie, label, types, score in entries[term]:
-            types_sql = (
-                "array(" + ", ".join(s(t) for t in types) + ")"
-                if types
-                else "cast(array() as array<string>)"
-            )
-            label_sql = s(label) if label is not None else "cast(NULL as string)"
-            curie_sql = s(curie) if curie is not None else "cast(NULL as string)"
-            score_sql = (
-                f"cast({float(score)!r} as double)"
-                if score is not None
-                else "cast(NULL as double)"
-            )
-            cands.append(
-                f"if({hit}, named_struct("
-                f"'search_text', {s(term)}, 'curie', {curie_sql}, "
-                f"'label', {label_sql}, 'types', {types_sql}, "
-                f"'score', {score_sql}), NULL)"
-            )
-    if not cands:
-        empty = corpus.sparkSession.createDataFrame([], schemas.MENTIONS_RAW)
-        return empty
-    arr = "filter(array(" + ", ".join(cands) + "), c -> c is not null)"
-    # ONE spark.sql call for the whole chain: each chained selectExpr
-    # re-ran the analyzer over the growing tree (Dataset construction
-    # analyzes eagerly), tripling the driver-side cost of the ~50-probe
-    # expression on every query that derives from mentions
-    return corpus.sparkSession.sql(
-        f"""
-        SELECT url, _m.search_text AS search_text, _m.curie AS curie,
-               _m.label AS label, _m.types AS types, _m.score AS score
-        FROM (
-          SELECT url, explode({arr}) AS _m
-          FROM (SELECT `{id_col}` AS url, {padded} AS _padded FROM {{src}})
-        )""",
-        src=corpus,
-    )
-
-
-#: above this many dictionary surfaces the per-term contains probes stop
-#: being cheaper than one trie pass (and the codegen expression tree
-#: stops being reasonable) — the Python trie path takes over
-_JVM_MAX_TERMS = 128
-
-
 def annotate_mentions(
     corpus: DataFrame,
     dictionary: DataFrame | None,
@@ -209,35 +106,18 @@ def annotate_mentions(
     side-channel of the scan — the per-partition lineage metrics the
     checkpoint manifest records.
 
-    Dictionaries at or below ``$DUG_SPARK_ANNOTATE_JVM_MAX_TERMS``
-    surfaces (default 128) run as pure JVM codegen (`_annotate_jvm`) —
-    per-surface padded-contains probes over the rebuilt token stream,
-    identical match semantics, no Python boundary.  Ontology-scale
-    dictionaries (and lineage-tracked runs, which need the accumulator
-    inside the scan) take the broadcast-trie ``mapInPandas`` path.
+    Every dictionary, whatever its size and with or without lineage, takes
+    the one broadcast-trie ``mapInPandas`` scan, and lineage rides on it.
+    Text is run through ``preprocess_series`` (when ``preprocess``),
+    lowercased and tokenized with Python ``str.split()``, which splits on
+    every Unicode whitespace character; a surface matches when its
+    single-space-separated words appear consecutively in that token
+    sequence; a null text has no tokens.  Dictionary strings travel only
+    as broadcast data, never as SQL text.
     """
-    import os
-
     spark = corpus.sparkSession
     if entries is None:
         entries = collect_dictionary(dictionary)
-    jvm_max = int(
-        os.environ.get("DUG_SPARK_ANNOTATE_JVM_MAX_TERMS", str(_JVM_MAX_TERMS))
-    )
-    if lineage_acc is None and len(entries) <= jvm_max:
-        raw = _annotate_jvm(
-            corpus, entries, id_col, text_col, preprocess, debreviator,
-            stopwords,
-        )
-        return raw.select(
-            "url",
-            F.col("url").alias("element_id"),
-            "search_text",
-            "curie",
-            "label",
-            "types",
-            "score",
-        )
     bc = spark.sparkContext.broadcast(entries)
     deb, stop = debreviator, stopwords
     do_pp = preprocess
@@ -253,7 +133,7 @@ def annotate_mentions(
             by_lower.setdefault(_term.lower(), []).append((_term, _ents))
         trie = build_trie(list(by_lower.keys()))
         for pdf in batches:
-            texts = pdf[text_col]
+            texts = pdf[text_col].fillna("")
             if do_pp:
                 texts = preprocess_series(texts, deb, stop)
             texts = texts.str.lower()

@@ -177,22 +177,71 @@ def test_extract_text_col_matches_udf(spark):
         assert r["a"] == r["b"], (r["doc_id"], r["a"], r["b"])
 
 
-def test_special_character_labels_round_trip(spark):
+@pytest.mark.parametrize("escaped_literals", ["false", "true"])
+def test_special_character_labels_round_trip(spark, escaped_literals):
     """Labels and CURIEs with braces, quotes and backslashes come back
-    verbatim from the small-dictionary (JVM) scan, whose SQL text goes
-    through ``spark.sql`` brace formatting."""
+    verbatim from the broadcast-trie scan under either SQL parser mode:
+    dictionary strings travel as broadcast data and never enter SQL
+    text, so ``spark.sql.parser.escapedStringLiterals`` cannot change
+    them."""
     entries = [
         ("alpha", "CHEBI:9000001", "N-{2S}-amine", ["chemical"], 0.95),
         ("beta", "MONDO:9000002", "o'brien syndrome", ["disease"], 0.95),
         ("gamma", "HP:{9000003}", "reflex \\ type {b}", ["phenotype"], 0.95),
     ]
-    d = spark.createDataFrame(entries, schema=schemas.TERM_DICTIONARY)
+    conf = "spark.sql.parser.escapedStringLiterals"
+    saved = spark.conf.get(conf, "false")
+    spark.conf.set(conf, escaped_literals)
+    try:
+        d = spark.createDataFrame(entries, schema=schemas.TERM_DICTIONARY)
+        corpus = spark.createDataFrame(
+            [(f"u{i}", f"lorem {e[0]} ipsum") for i, e in enumerate(entries)],
+            "url string, text string",
+        )
+        got = {
+            (r["url"], r["curie"], r["label"])
+            for r in annotate.annotate_mentions(corpus, d).collect()
+        }
+    finally:
+        spark.conf.set(conf, saved)
+    assert got == {(f"u{i}", e[1], e[2]) for i, e in enumerate(entries)}
+
+
+@pytest.mark.parametrize("preprocess", [True, False])
+def test_unicode_whitespace_tokenizes_like_str_split(spark, preprocess):
+    """Text is tokenized with Python ``str.split()``, which also splits on
+    no-break, em and information-separator spaces, for a dictionary of a
+    handful of surfaces as for any other; a surface whose words are
+    joined by anything but a plain space can never match a token run,
+    and a null text has no tokens."""
+    d = spark.createDataFrame(
+        [
+            ("heart attack", "MONDO:0005068", "heart attack", ["disease"], 0.9),
+            ("x", "TEST:0000001", "x", ["thing"], 0.9),
+            ("a\u00a0b", "TEST:0000002", "a b", ["thing"], 0.9),
+        ],
+        schema=schemas.TERM_DICTIONARY,
+    )
     corpus = spark.createDataFrame(
-        [(f"u{i}", f"lorem {e[0]} ipsum") for i, e in enumerate(entries)],
+        [
+            ("nbsp", "heart\u00a0attack"),
+            ("emsp", "heart\u2003attack"),
+            ("fs", "heart\x1cattack"),
+            ("em_x", "x\u2003x"),
+            ("nbsp_surface", "see a\u00a0b now"),
+            ("null", None),
+        ],
         "url string, text string",
     )
     got = {
-        (r["url"], r["curie"], r["label"])
-        for r in annotate.annotate_mentions(corpus, d).collect()
+        (r["url"], r["search_text"], r["curie"])
+        for r in annotate.annotate_mentions(
+            corpus, d, preprocess=preprocess
+        ).collect()
     }
-    assert got == {(f"u{i}", e[1], e[2]) for i, e in enumerate(entries)}
+    assert got == {
+        ("nbsp", "heart attack", "MONDO:0005068"),
+        ("emsp", "heart attack", "MONDO:0005068"),
+        ("fs", "heart attack", "MONDO:0005068"),
+        ("em_x", "x", "TEST:0000001"),
+    }
