@@ -85,10 +85,7 @@ _SQL_CORPUS = (
 )
 _SQL_DICT = f"dict(term, curie) AS (VALUES {_vals(_DICT)})"
 
-# shared analyzer over the documents text column (inverted-index oracle)
-from dug_spark.functions.analyzer import analyze_sql as _analyze_sql  # noqa: E402
 
-_ANALYZE_TEXT_SQL = _analyze_sql("text")
 _SQL_DICT_SCORED = f"dict(term, curie, score) AS (VALUES {_vals(_DICT_SCORED)})"
 _SQL_MENTIONS = (
     "mentions AS (SELECT c.url AS url, d.term AS search_text, d.curie AS curie "
@@ -105,8 +102,8 @@ _SQL_NMENTIONS = (
 _SQL_KGE = f"kg_edges(subject, predicate, object) AS (VALUES {_vals(_KGE)})"
 
 # href-extracted host edge list over the synthetic linked corpus
-# (_web_linked_docs) — shared by every web-graph oracle on both the
-# driver and extra registries; mirrors weblinks.extract_links/host_edges
+# (_web_linked_docs) — shared by the web-graph oracles; mirrors
+# weblinks.extract_links/host_edges
 _SQL_WEB_EDGES = (
     "WITH e AS MATERIALIZED (SELECT DISTINCT src, dst FROM ("
     "  SELECT 'h' || CAST(doc_id % 20 AS VARCHAR) || '.example.org' AS src, "
@@ -116,7 +113,6 @@ _SQL_WEB_EDGES = (
     "    'h' || CAST(((doc_id // 60) % (1 + (doc_id % 20) % 4) + 12) % 20 AS VARCHAR) || '.example.org'"
     "  ]) AS dst FROM documents) WHERE src != dst)"
 )
-
 
 
 def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -208,20 +204,6 @@ def q_kg_concept_terms(spark, sf_dir):
 def q_kg_triples_has_concept(spark, sf_dir):
     """J1 → HAS_CONCEPT triples."""
     return triples_op.has_concept_triples(_nmentions(spark, sf_dir)).select(
-        "subj", "pred", "obj"
-    )
-
-
-def q_kg_triples_subclass(spark, sf_dir):
-    """J7: 1-hop expansion against the ontology edge table."""
-    return triples_op.subclass_triples(
-        _nmentions(spark, sf_dir), fixtures.vocab_kg_edges(spark)
-    ).select("subj", "pred", "obj")
-
-
-def q_kg_triples_co_mention(spark, sf_dir):
-    """Co-mention pair triples (collect_set + pair explode, no self-join)."""
-    return triples_op.co_mention_triples(_nmentions(spark, sf_dir)).select(
         "subj", "pred", "obj"
     )
 
@@ -322,18 +304,6 @@ def q_dsir_select(spark, sf_dir):
     ).select("doc_id", "n_feats", "logw", "keep")
 
 
-def q_kg_concept_similarity(spark, sf_dir):
-    """Set-overlap similarity edges (triples.co_mention_similarity:
-    cosine/Jaccard/Dice over concept document-incidence) — rides the SAME
-    `_pair_counts` derivation as kg_npmi, weighting neighborhood overlap
-    instead of association strength.  Oracle: the counts re-derived in
-    SQL; cosine rounds to 5 (cross-engine libm sqrt), jaccard/dice are
-    exact rationals rounded identically."""
-    return triples_op.co_mention_similarity(_nmentions(spark, sf_dir)).select(
-        "src", "dst", "n_co", "cosine", "jaccard", "dice"
-    )
-
-
 def q_kg_pagerank(spark, sf_dir):
     """PageRank over the DIRECTED co-mention concept graph (edges point
     lexicographically smaller→larger curie, the pair orientation
@@ -355,85 +325,6 @@ def q_kg_pagerank(spark, sf_dir):
     # rounding boundary could flip a digit — coarser rounding keeps the
     # hash gate deterministic (same reasoning as ann_lsh's ROUND(4)).
     return pr.select("node", F.round("rank", 5).alias("rank"))
-
-
-def _ppr_iters(prefix_with_e_rv: str, damping: float = 0.85, iters: int = 10) -> str:
-    """Unrolled personalized-PageRank iterations over any prefix SQL
-    defining CTEs ``e(src, dst)`` and ``rv(node, w)`` (w normalized to
-    Σ=1): teleport AND dangling mass land on rv — mirrors
-    operators/graph.personalized_pagerank exactly."""
-    d = repr(damping)
-    sql = (
-        f"{prefix_with_e_rv}, "
-        "nodes AS MATERIALIZED (SELECT src AS node FROM e UNION "
-        "SELECT dst FROM e UNION SELECT node FROM rv), "
-        "deg AS MATERIALIZED (SELECT src AS node, COUNT(*) AS out_deg FROM e GROUP BY src), "
-        "w AS MATERIALIZED (SELECT n.node, COALESCE(rv.w, 0.0) AS w "
-        "FROM nodes n LEFT JOIN rv ON rv.node = n.node), "
-        "r0 AS MATERIALIZED (SELECT node, w AS rank FROM w)"
-    )
-    for i in range(iters):
-        dang = (
-            f"(SELECT COALESCE(SUM(r.rank), 0) FROM r{i} r "
-            "LEFT JOIN deg ON deg.node = r.node WHERE deg.node IS NULL)"
-        )
-        sql += (
-            f", r{i + 1} AS MATERIALIZED (SELECT w.node, "
-            f"(1 - {d}) * w.w + {d} * (COALESCE(c.contrib, 0) "
-            f"+ {dang} * w.w) AS rank "
-            "FROM w LEFT JOIN ("
-            f"SELECT e.dst AS node, SUM(r.rank / deg.out_deg) AS contrib "
-            f"FROM e JOIN r{i} r ON e.src = r.node "
-            "JOIN deg ON deg.node = e.src GROUP BY e.dst) c ON w.node = c.node)"
-        )
-    # ROUND(5) matches the Spark side — see q_kg_pagerank's rounding note
-    return sql + f" SELECT node, ROUND(rank, 5) AS rank FROM r{iters}"
-
-
-def q_kg_ppr(spark, sf_dir):
-    """Personalized PageRank (graph.personalized_pagerank) over the SAME
-    directed co-mention concept graph as kg_pagerank, seeded on the two
-    lexicographically first co-mention subjects (uniform weights) — the
-    seeded-relevance query a KG answers for "concepts related to this
-    seed set"; teleport and dangling mass land on the seeds, so rank
-    concentrates near them instead of uniformly.  10 iterations, damping
-    0.85, ROUND(5) both engines (float-sum order).  Oracle: REAL
-    unrolled-iteration SQL with the reset vector as a CTE."""
-    from dug_spark.operators import graph
-
-    edges = triples_op.co_mention_triples(_nmentions(spark, sf_dir)).select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst")
-    )
-    seeds = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .orderBy("node")
-        .limit(2)
-        .select("node", F.lit(1.0).alias("weight"))
-    )
-    pr = graph.personalized_pagerank(edges, seeds, damping=0.85, iterations=10)
-    return pr.select("node", F.round("rank", 5).alias("rank"))
-
-
-def _bellman_sql(prefix_with_we: str, iters: int) -> str:
-    """Unrolled Bellman-Ford rounds over any prefix SQL defining a CTE
-    ``we(src, dst, w)``: d_k = min path weight over walks of ≤ k edges
-    from the two lexicographically first source hosts — mirrors
-    operators/graph.shortest_paths (whose frontier optimization computes
-    the identical d_k sequence) exactly."""
-    sql = (
-        f"{prefix_with_we}, "
-        "seeds AS (SELECT DISTINCT src AS seed FROM we ORDER BY seed LIMIT 2), "
-        "d0 AS (SELECT seed, seed AS node, 0.0 AS dist FROM seeds)"
-    )
-    for i in range(iters):
-        sql += (
-            f", d{i + 1} AS (SELECT seed, node, MIN(dist) AS dist FROM ("
-            f"SELECT seed, node, dist FROM d{i} "
-            f"UNION ALL SELECT d.seed, w.dst AS node, d.dist + w.w AS dist "
-            f"FROM d{i} d JOIN we w ON w.src = d.node) GROUP BY seed, node)"
-        )
-    return sql + f" SELECT seed, node, dist FROM d{iters}"
 
 
 def _pagerank_iters(prefix_with_e: str, damping: float = 0.85, iters: int = 10,
@@ -533,112 +424,6 @@ _CLOSURE_SQL = (
     "FROM tc GROUP BY src, dst"
 )
 
-# the synthetic subsumption DAG shared by kg_closure / kg_communities /
-# kg_rollup: binary-tree parent i//2 for every doc_id ≥ 1 plus a second
-# parent i//3 on every 5th node (multiple inheritance)
-_ONTO_EDGE_SQL = (
-    "e AS MATERIALIZED ("
-    "SELECT 'C' || lpad(CAST(doc_id AS VARCHAR), 8, '0') AS src, "
-    "'C' || lpad(CAST(doc_id // 2 AS VARCHAR), 8, '0') AS dst "
-    "FROM documents WHERE doc_id >= 1 "
-    "UNION "
-    "SELECT 'C' || lpad(CAST(doc_id AS VARCHAR), 8, '0'), "
-    "'C' || lpad(CAST(doc_id // 3 AS VARCHAR), 8, '0') "
-    "FROM documents WHERE doc_id >= 2 AND doc_id % 5 = 0)"
-)
-
-
-def _onto_edges(spark, sf_dir):
-    """Spark side of the same synthetic subsumption DAG (q_kg_closure's
-    derivation, shared)."""
-    did = F.col("doc_id")
-
-    def c(col):
-        return F.concat(F.lit("C"), F.lpad(col.cast("long").cast("string"), 8, "0"))
-
-    docs = _pq(spark, sf_dir, "documents").select("doc_id")
-    tree = docs.where(did >= 1).select(
-        c(did).alias("src"), c(F.floor(did / 2)).alias("dst")
-    )
-    cross = docs.where((did >= 2) & (did % 5 == 0)).select(
-        c(did).alias("src"), c(F.floor(did / 3)).alias("dst")
-    )
-    return tree.unionByName(cross)
-
-
-def q_kg_communities(spark, sf_dir):
-    """Community detection by deterministic synchronous label propagation
-    (graph.label_propagation: min-label ties, fixed 4 rounds) over the
-    synthetic subsumption DAG shared with kg_closure — concept topic
-    clusters, the classic derivation one step past the reference's flat
-    KG assembly (crawler.py stops at edges).  Oracle: the rounds unrolled
-    into chained CTEs — symmetrize once, then per round a vote count and
-    a ROW_NUMBER argmax by (count desc, label asc)."""
-    from dug_spark.operators import graph
-
-    return graph.label_propagation(_onto_edges(spark, sf_dir), iterations=4)
-
-
-def _lpa_sql(iters: int = 4) -> str:
-    sql = (
-        f"WITH {_ONTO_EDGE_SQL}, "
-        "sym AS MATERIALIZED (SELECT src, dst FROM e WHERE src != dst "
-        "UNION SELECT dst, src FROM e WHERE src != dst), "
-        "l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS label FROM sym)"
-    )
-    for i in range(iters):
-        sql += (
-            f", c{i} AS (SELECT s.dst AS node, l.label, COUNT(*) AS c "
-            f"FROM sym s JOIN l{i} l ON s.src = l.node GROUP BY s.dst, l.label)"
-            f", l{i + 1} AS MATERIALIZED (SELECT node, label FROM ("
-            f"SELECT node, label, ROW_NUMBER() OVER (PARTITION BY node "
-            f"ORDER BY c DESC, label ASC) AS rn FROM c{i}) WHERE rn = 1)"
-        )
-    return sql + f" SELECT node, label FROM l{iters}"
-
-
-def q_kg_rollup(spark, sf_dir):
-    """Hierarchical count rollup (graph.taxonomy_rollup: semi-naive
-    closure + ONE ancestor-keyed aggregation) over the shared subsumption
-    DAG, with per-concept direct counts 1 + doc_id % 3 — the ontology
-    subtree statistics (own / n_desc / subtree mass) a KG pipeline
-    reports per branch; diamonds (the i//3 cross edges) must count each
-    descendant ONCE.  Oracle: recursive closure + LEFT-join aggregation."""
-    from dug_spark.operators import graph
-
-    did = F.col("doc_id")
-    counts = (
-        _pq(spark, sf_dir, "documents")
-        .select("doc_id")
-        .select(
-            F.concat(
-                F.lit("C"), F.lpad(did.cast("string"), 8, "0")
-            ).alias("node"),
-            (F.lit(1) + did % 3).alias("n"),
-        )
-    )
-    return graph.taxonomy_rollup(_onto_edges(spark, sf_dir), counts)
-
-
-_ROLLUP_SQL = (
-    f"WITH RECURSIVE {_ONTO_EDGE_SQL}, "
-    "tc AS (SELECT src, dst FROM e "
-    "UNION SELECT tc.src, e2.dst FROM tc JOIN e e2 ON tc.dst = e2.src), "
-    "cnt AS (SELECT 'C' || lpad(CAST(doc_id AS VARCHAR), 8, '0') AS node, "
-    "CAST(1 + doc_id % 3 AS BIGINT) AS dn FROM documents), "
-    "da AS (SELECT tc.dst AS node, COUNT(*) AS n_desc, "
-    "CAST(SUM(COALESCE(c.dn, 0)) AS BIGINT) AS dt "
-    "FROM tc LEFT JOIN cnt c ON c.node = tc.src GROUP BY tc.dst), "
-    # dedup inside a subquery: a UNION-bodied CTE under WITH RECURSIVE
-    # scope skips the distinct in DuckDB (observed: 2x rows)
-    "nodes AS (SELECT DISTINCT node FROM (SELECT src AS node FROM tc "
-    "UNION ALL SELECT dst FROM tc UNION ALL SELECT node FROM cnt) z) "
-    "SELECT n.node, CAST(COALESCE(c.dn, 0) AS BIGINT) AS own, "
-    "CAST(COALESCE(d.n_desc, 0) AS BIGINT) AS n_desc, "
-    "CAST(COALESCE(c.dn, 0) + COALESCE(d.dt, 0) AS BIGINT) AS subtree "
-    "FROM nodes n LEFT JOIN cnt c ON c.node = n.node "
-    "LEFT JOIN da d ON d.node = n.node"
-)
 
 # injected relation-sentence vocabulary: single-word dictionary surfaces
 _REL_TERMS = ("window", "filter", "scan", "stream")
@@ -1048,59 +833,6 @@ def q_search_concepts_simple(spark, sf_dir):
     return out["hits"].select("concept_id", "name", "type", "score")
 
 
-def q_rel_pricing_summary(spark, sf_dir):
-    """A-family partial+final agg with exact decimal arithmetic (TPC-H Q1
-    shape; reference has no money math — this exercises the agg engine).
-
-    Round 6 (guide §1.2-2): the DECIMAL casts stay per row (exact 2-dp
-    quantization, any input), but the SUM accumulators run over BIGINT
-    cents / 10^-4 units — the decimal value is integer-valued after ×100,
-    so the BIGINT cast is exact, the long sum is codegen's fast path
-    (was: widened-decimal accumulators per row), and the final
-    double-divide is the same single correctly-rounded step as
-    Decimal.toDouble.  Bit-identical output (verified row-for-row
-    against the old form on sf0.1); overflow needs rows × 1e9 ≥ 2^63 ≈
-    9 billion lineitem rows, far past what this sandbox can hold.
-    Measured 0.87 → 0.59 s isolated at sf0.1."""
-    _pq(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(
-        """
-        SELECT l_returnflag, l_linestatus,
-               CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT)) AS DOUBLE) / 100 AS sum_qty,
-               CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS DOUBLE) / 100 AS sum_base_price,
-               CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) *
-                        (100 - CAST(CAST(l_discount AS DECIMAL(18,2)) * 100 AS BIGINT))) AS DOUBLE) / 10000 AS sum_disc_price,
-               COUNT(*) AS count_order
-        FROM lineitem
-        GROUP BY l_returnflag, l_linestatus
-        """
-    )
-
-
-def q_rel_top_orders(spark, sf_dir):
-    """J equi-join + T2 top-k: top 10 orders by exact-decimal revenue.
-
-    Same BIGINT-units accumulator rewrite as q_rel_pricing_summary
-    (round 6): per-row DECIMAL quantization unchanged, long sum instead
-    of widened-decimal sum, bit-identical revenue (so the ORDER BY picks
-    the same rows)."""
-    _pq(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    _pq(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    _pq(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    return spark.sql(
-        """
-        SELECT o.o_orderkey AS o_orderkey, c.c_name AS c_name,
-               CAST(SUM(CAST(CAST(l.l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) *
-                        (100 - CAST(CAST(l.l_discount AS DECIMAL(18,2)) * 100 AS BIGINT))) AS DOUBLE) / 10000 AS revenue
-        FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-                        JOIN customer c ON o.o_custkey = c.c_custkey
-        GROUP BY o.o_orderkey, c.c_name
-        ORDER BY revenue DESC, o_orderkey ASC
-        LIMIT 10
-        """
-    )
-
-
 def q_rel_facet_counts(spark, sf_dir):
     """A10/A14: facet counts on a filtered plan, upper-cased facet label
     (X12 analog)."""
@@ -1112,15 +844,6 @@ def q_rel_facet_counts(spark, sf_dir):
     )
 
 
-def q_rel_program_list(spark, sf_dir):
-    """A8: terms agg + exact distinct cardinality per bucket."""
-    ev = _pq(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.count_distinct("user_id").alias("n_users"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-
-
 def q_rel_top_events_per_user(spark, sf_dir):
     """T3: top-3 rows per group via row_number with deterministic ties."""
     ev = _pq(spark, sf_dir, "events")
@@ -1129,40 +852,6 @@ def q_rel_top_events_per_user(spark, sf_dir):
         ev.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= 3)
         .select("user_id", "event_id", "value", "rk")
-    )
-
-
-def q_rel_semi_join(spark, sf_dir):
-    """F11/J10: left-semi — customers with at least one order."""
-    c = _pq(spark, sf_dir, "customer")
-    o = _pq(spark, sf_dir, "orders")
-    return c.join(o, c["c_custkey"] == o["o_custkey"], "left_semi").select(
-        "c_custkey", "c_name"
-    )
-
-
-def q_rel_anti_join(spark, sf_dir):
-    """J3 dangling-key check: left-anti — customers with no orders."""
-    c = _pq(spark, sf_dir, "customer")
-    o = _pq(spark, sf_dir, "orders")
-    return c.join(o, c["c_custkey"] == o["o_custkey"], "left_anti").select(
-        "c_custkey", "c_name"
-    )
-
-
-def q_rel_union_dedup(spark, sf_dir):
-    """U1: distinct union across two sources."""
-    c = _pq(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _pq(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return c.unionByName(s).distinct()
-
-
-def q_rel_grouped_collect(spark, sf_dir):
-    """A12/A13: group + sorted collect_set reshaping."""
-    ev = _pq(spark, sf_dir, "events")
-    return ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.array_join(F.array_sort(F.collect_set("event_type")), ",").alias("types"),
     )
 
 
@@ -1184,28 +873,6 @@ def q_rel_merge_upsert(spark, sf_dir):
     )
 
 
-def q_rel_metadata_extract(spark, sf_dir):
-    """X-family: regexp extraction from a metadata JSON string."""
-    ev = _pq(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        F.regexp_extract("props", "([0-9]+)", 1).cast("int").alias("k"),
-    )
-
-
-def q_rel_window_hourly(spark, sf_dir):
-    """Streaming-analog tumbling window: hourly counts + exact sums."""
-    _pq(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(
-        """
-        SELECT date_trunc('hour', ts) AS hour, event_type,
-               COUNT(*) AS n,
-               CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        FROM events GROUP BY date_trunc('hour', ts), event_type
-        """
-    )
-
-
 def q_rel_facet_exclude(spark, sf_dir):
     """A14 (server.py:234-275): exclude-own-filter faceting — each facet
     key counts values under every OTHER filter."""
@@ -1222,18 +889,6 @@ def q_rel_facet_exclude(spark, sf_dir):
     a = out["event_type"].withColumn("facet", F.lit("event_type"))
     b = out["bucket"].withColumn("facet", F.lit("bucket"))
     return a.unionByName(b).select("facet", "value", "n")
-
-
-def q_rel_top_hit_per_group(spark, sf_dir):
-    """A9 (async_search.py:477-533): terms agg + top_hits(1) — first event
-    per event_type by (ts, event_id)."""
-    ev = _pq(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type").orderBy(F.asc("ts"), F.asc("event_id"))
-    return (
-        ev.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .select("event_type", "event_id", "user_id")
-    )
 
 
 def q_search_concepts_bm25(spark, sf_dir):
@@ -1263,13 +918,6 @@ def q_search_concepts_bm25(spark, sf_dir):
 # Training-data-pipeline operators over documents/embeddings.
 
 
-def q_doc_fingerprint(spark, sf_dir):
-    """Document fingerprinting: md5 content hash per url."""
-    return _corpus(spark, sf_dir).select(
-        "url", F.md5(F.encode("text", "utf-8")).alias("fp")
-    )
-
-
 def q_dedup_exact(spark, sf_dir):
     """Exact dedup: corpus unioned with a shifted copy of itself, grouped
     by content hash, keep min id."""
@@ -1277,14 +925,6 @@ def q_dedup_exact(spark, sf_dir):
     dup = d.unionByName(d.withColumn("doc_id", F.col("doc_id") + 10000))
     return dup.groupBy(F.md5(F.encode("text", "utf-8")).alias("fp")).agg(
         F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_copies")
-    )
-
-
-def q_dedup_near_shingle(spark, sf_dir):
-    """N-gram (3-word shingle) Jaccard near-dup pairs at ≥0.9."""
-    return dedup.shingle_jaccard_pairs(
-        _pq(spark, sf_dir, "documents"), id_col="doc_id", text_col="text",
-        shingle=3, threshold=0.9,
     )
 
 
@@ -1305,17 +945,6 @@ def q_text_quality(spark, sf_dir):
     )
 
 
-def q_lang_id(spark, sf_dir):
-    """Language-ID heuristic: stopword-density thresholding."""
-    d = _pq(spark, sf_dir, "documents")
-    w = F.split("text", " ")
-    stop = F.size(F.filter(w, lambda x: x.isin("the", "a")))
-    ratio = stop.cast("double") / F.size(w)
-    return d.select(
-        "doc_id", F.when(ratio >= 0.05, "en").otherwise("unk").alias("pred_lang")
-    )
-
-
 def q_text_gopher(spark, sf_dir):
     """Gopher §A1.1 document-quality gates + repetition signals (dup-line /
     dup-3-gram / top-word fractions) over documents; VALUES oracle from the
@@ -1324,21 +953,6 @@ def q_text_gopher(spark, sf_dir):
 
     d = _pq(spark, sf_dir, "documents").select("doc_id", "text")
     return textstats.gopher_quality(d).drop("text")
-
-
-def q_text_c4_clean(spark, sf_dir):
-    """C4 §2.2 line cleaning over documents, projected to derived stats
-    (kept-line count, keep gate, cleaned length) so the oracle VALUES table
-    stays literal-only; recompute in pyoracle.c4_rows."""
-    from dug_spark.operators import textstats
-
-    d = _pq(spark, sf_dir, "documents").select("doc_id", "text")
-    return textstats.c4_line_clean(d).select(
-        "doc_id",
-        "n_kept_lines",
-        "c4_keep",
-        F.length("clean_text").alias("clean_len"),
-    )
 
 
 def q_curate_corpus(spark, sf_dir):
@@ -1379,33 +993,6 @@ def q_build_vocab(spark, sf_dir):
     )
 
 
-def q_url_dedup(spark, sf_dir):
-    """Newest-capture URL dedup over a deterministically synthesized
-    (url, warc_ts) crawl log (BASELINE input_hint shape): urls collide
-    after normalization (case, www., fragment, trailing slash), keeper =
-    max (warc_ts, url) per norm_url via partial-aggregating max_by."""
-    from dug_spark.operators import textstats
-
-    d = _pq(spark, sf_dir, "documents").select("doc_id")
-    did = F.col("doc_id")
-    scheme = F.when(did % 2 == 0, F.lit("HTTPS://WWW.H")).otherwise(
-        F.lit("https://www.h")
-    )
-    url = F.concat(
-        scheme,
-        (did % 5).cast("string"),
-        F.lit(".example.org/p/"),
-        (did % 13).cast("string"),
-        F.lit("/#s"),
-        did.cast("string"),
-    )
-    pages = d.select(
-        url.alias("url"),
-        F.timestamp_seconds(F.lit(1600000000) + did).alias("warc_ts"),
-    )
-    return textstats.dedup_by_url(pages)
-
-
 def q_host_profile(spark, sf_dir):
     """Per-host corpus profile (doc count, text bytes, https share) over
     synthesized urls — the aggregation behind host blocklists/sampling
@@ -1426,115 +1013,9 @@ def q_host_profile(spark, sf_dir):
     return textstats.host_profile(d.select(url.alias("url"), "text"))
 
 
-def q_crawl_churn(spark, sf_dir):
-    """Per-URL crawl-churn profile (capture count, content-change count,
-    version count, change ratio, mean seconds between changes) over a
-    deterministically synthesized (url, warc_ts, text) capture log in the
-    BASELINE input_hint shape: 40 urls, captures ordered by warc_ts, the
-    content version cycling 0,0,2,3 per revisit so some revisits change
-    and some don't.  ONE url-keyed shuffle: the lag window and the per-url
-    aggregate share the same hash partitioning (operators/crawl.py)."""
-    from dug_spark.operators import crawl
-
-    d = _pq(spark, sf_dir, "documents").select("doc_id")
-    did = F.col("doc_id")
-    visit = (did / 40).cast("long") % 4
-    version = F.when(visit.isin(0, 1), F.lit(0)).otherwise(visit)
-    cap = d.select(
-        F.concat(
-            F.lit("https://u"),
-            (did % 40).cast("string"),
-            F.lit(".example.org/p"),
-        ).alias("url"),
-        F.timestamp_seconds(F.lit(1600000000) + did).alias("warc_ts"),
-        F.concat(
-            F.lit("v"),
-            version.cast("string"),
-            F.lit(":"),
-            (did % 40).cast("string"),
-        ).alias("text"),
-    )
-    return crawl.snapshot_churn(cap)
-
-
-def q_kg_triple_validity(spark, sf_dir):
-    """Temporal-KG validity intervals (crawl.triple_validity): triples
-    observed across 8 deterministic crawl snapshots — doc_id encodes
-    (triple t = doc_id//8, snapshot s = doc_id%8), presence = bit s of t,
-    so every 8-snapshot presence/absence pattern (gaps, reappearances,
-    stale, current) occurs.  Timestamps exported as epoch seconds for
-    cross-engine hashing."""
-    from dug_spark.operators import crawl
-
-    d = _pq(spark, sf_dir, "documents").select("doc_id")
-    t = (F.col("doc_id") / 8).cast("long")
-    s = (F.col("doc_id") % 8).cast("int")
-    present = F.element_at(
-        F.array(*[(F.shiftright(t, b) % 2 == 1) for b in range(8)]), s + 1
-    )
-    preds = F.array(
-        F.lit("HAS_CONCEPT"),
-        F.lit("biolink:subclass_of"),
-        F.lit("co_mentioned_with"),
-    )
-    obs = d.where(present).select(
-        F.concat(F.lit("E:"), t.cast("string")).alias("subj"),
-        F.element_at(preds, (t % 3 + 1).cast("int")).alias("pred"),
-        F.concat(F.lit("C:"), (t % 13).cast("string")).alias("obj"),
-        F.timestamp_seconds(F.lit(1600000000) + s.cast("long") * 86400).alias(
-            "warc_ts"
-        ),
-    )
-    out = crawl.triple_validity(obs)
-    return out.select(
-        "subj",
-        "pred",
-        "obj",
-        F.col("valid_from").cast("long").alias("valid_from"),
-        F.col("valid_to").cast("long").alias("valid_to"),
-        "n_snapshots",
-        "is_current",
-    )
-
-
-def q_knn_cosine(spark, sf_dir):
-    """Brute-force cosine top-3 neighbors for the first 20 query vectors.
-
-    Round 6: the per-pair score runs through the vectorized numpy kernel
-    (`similarity._cos_pairs_udf`) instead of interpreted
-    aggregate/zip_with lambdas — BIT-IDENTICAL (cumsum = the same
-    left-to-right fold; see the helper's docstring), so the frozen
-    DuckDB oracle hash is unchanged by construction."""
-    emb = _pq(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    q = emb.where(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("q_id"), F.col("e").alias("qe")
-    )
-    pairs = q.crossJoin(emb).where(F.col("vec_id") != F.col("q_id"))
-    scored = pairs.select(
-        "q_id",
-        F.col("vec_id").alias("neighbor_id"),
-        similarity._cos_pairs_udf()("qe", "e").alias("cos"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 3)
-        .select("q_id", "neighbor_id", "rk", F.round("cos", 4).alias("cos_sim"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # Non-SQL-expressible ops (rows-only driver check): LSH families, media
 # plumbing, node→element casting.
-
-
-def q_dedup_minhash(spark, sf_dir):
-    """MinHash+LSH near-dup (banded candidates verified by exact Jaccard)."""
-    return dedup.minhash_near_duplicates(
-        _pq(spark, sf_dir, "documents"), threshold=0.9
-    )
 
 
 def q_near_dedup_corpus(spark, sf_dir):
@@ -1563,12 +1044,6 @@ def q_ann_lsh(spark, sf_dir):
     return similarity.lsh_topk(
         emb.where(F.col("vec_id") < 50), emb, dim=64, k=5, bits=16, bands=8
     )
-
-
-def q_ann_ivf(spark, sf_dir):
-    """IVF-cell cosine top-5 (label column as the coarse quantizer)."""
-    emb = _pq(spark, sf_dir, "embeddings")
-    return similarity.ivf_topk(emb.where(F.col("vec_id") < 50), emb, k=5)
 
 
 def q_ann_pq(spark, sf_dir):
@@ -1600,36 +1075,6 @@ def q_ann_ivf_trained(spark, sf_dir):
     emb = _pq(spark, sf_dir, "embeddings")
     return similarity.ivf_trained_topk(
         emb.where(F.col("vec_id") < 30), emb, k=5, k_cells=8, iters=1
-    )
-
-
-def q_multimodal_frames(spark, sf_dir):
-    """REAL video frame sampling (round 5): from-spec Y4M decode inside
-    mapInPandas, every-500ms stride over 4fps streams (→ source frames
-    0/2/4), each kept YUV frame BT.601-converted to RGB and re-encoded
-    as a real PNG; frames projected to md5 hex so rows are hashable
-    across engines."""
-    media = multimodal.synthetic_real_media(spark, n=24)
-    frames = multimodal.sample_frames(media, every_ms=500)
-    return frames.select(
-        "media_id", "frame_idx", F.md5("frame").alias("frame_md5")
-    )
-
-
-def q_multimodal_resize(spark, sf_dir):
-    """REAL image resize (round 5): PNG rows decode → nearest-neighbour
-    resample to 12×10 → re-encode; WAV/Y4M rows pass through untouched
-    with their original dims.  Payload md5 pins exact output bytes."""
-    media = multimodal.synthetic_real_media(spark, n=24)
-    out = multimodal.resize_images(media, 12, 10)
-    # audio rows carry no dims; -1 (not NULL) keeps the cross-engine row
-    # sort total
-    return out.select(
-        "media_id",
-        "mime",
-        F.coalesce("width", F.lit(-1)).alias("width"),
-        F.coalesce("height", F.lit(-1)).alias("height"),
-        F.md5("payload").alias("payload_md5"),
     )
 
 
@@ -1677,51 +1122,6 @@ def _real_media_payload(i: int):
         )
         planes.append((y, u, v))
     return "video/y4m", codecs.encode_y4m(w, h, 4, 1, planes), w, h
-
-
-def _multimodal_resize_rows() -> list[tuple]:
-    """Independent recompute of the REAL resize output on the
-    pure-Python codec path (use_numpy=False) — validates the Arrow
-    plumbing AND the numpy/pure bit-identity contract."""
-    import hashlib
-
-    from dug_spark.functions import codecs
-
-    rows = []
-    for i in range(24):
-        mime, payload, w, h = _real_media_payload(i)
-        if mime == "image/png":
-            w0, h0, ch, px = codecs.decode_png(payload, use_numpy=False)
-            payload = codecs.encode_png(
-                12, 10, ch, codecs.resize_nearest(w0, h0, ch, px, 12, 10)
-            )
-            w, h = 12, 10
-        if w is None:
-            w = h = -1  # matches the q_multimodal_resize coalesce
-        rows.append((f"r{i:04d}", mime, w, h, hashlib.md5(payload).hexdigest()))
-    return rows
-
-
-def _multimodal_frame_rows() -> list[tuple[str, int, str]]:
-    """Independent recompute of REAL Y4M frame sampling: decode the
-    mirrored streams, stride = (500ms·4fps)//1000 = 2, BT.601 RGB on the
-    pure-Python path, PNG-encode, md5."""
-    import hashlib
-
-    from dug_spark.functions import codecs
-
-    rows = []
-    for i in range(24):
-        mime, payload, w, h = _real_media_payload(i)
-        if mime != "video/y4m":
-            continue
-        w, h, num, den, cs, planes = codecs.decode_y4m(payload)
-        step = max(1, (500 * num) // (1000 * den))
-        for fi in range(0, len(planes), step):
-            px = codecs.y4m_frame_rgb(w, h, cs, planes[fi], use_numpy=False)
-            frame = codecs.encode_png(w, h, 3, px)
-            rows.append((f"r{i:04d}", fi, hashlib.md5(frame).hexdigest()))
-    return rows
 
 
 def q_search_bm25(spark, sf_dir):
@@ -1850,42 +1250,6 @@ def q_lm_pack(spark, sf_dir):
 
     docs = _pq(spark, sf_dir, "documents")
     return lm.pack_sequences(docs, budget=128, n_shards=8)
-
-
-def _bpe_params():
-    # small enough that the 15 distributed rounds stay snappy at sf0.01,
-    # large enough that multi-character subwords (th, the</w>, ing</w>)
-    # emerge and the encode path exercises real merge chains
-    return dict(num_merges=60, batch=4, min_count=2, max_words=5000)
-
-
-def q_bpe_merges(spark, sf_dir):
-    """Distributed BPE tokenizer training (Sennrich 2016, operators/
-    bpe.py): one corpus shuffle → word table, then batched
-    symbol-disjoint merge rounds with distributed pair counting and
-    vocab-sized driver state.  VALUES oracle: pyoracle.bpe_train, an
-    independent pure-Python recompute of the identical procedure."""
-    from dug_spark.operators import bpe
-
-    docs = _pq(spark, sf_dir, "documents")
-    return bpe.train_bpe(docs, **_bpe_params())
-
-
-def q_bpe_encode(spark, sf_dir):
-    """BPE apply: learned merges broadcast into a map-only greedy
-    encoder (per-batch word memo).  Projected to a per-doc subword
-    count + stream fingerprint.  VALUES oracle: pyoracle.bpe_doc_rows
-    over pyoracle-trained merges."""
-    from dug_spark.operators import bpe
-
-    docs = _pq(spark, sf_dir, "documents")
-    merges = bpe.train_bpe(docs, **_bpe_params())
-    enc = bpe.bpe_encode(docs, merges)
-    return enc.select(
-        "doc_id",
-        "n_subwords",
-        F.md5(F.concat_ws(" ", "subwords")).alias("subwords_fp"),
-    )
 
 
 def q_kg_node_to_elements(spark, sf_dir):
@@ -2778,56 +2142,9 @@ def oracle_sql() -> dict[str, str]:
     }
 
 
-_KNN_SQL = (
-    "WITH q AS (SELECT vec_id AS q_id, embedding AS qe FROM embeddings WHERE vec_id < 20), "
-    "sums AS (SELECT q.q_id, c.vec_id AS neighbor_id, "
-    "  SUM(CAST(q.qe[t.i] AS DOUBLE) * CAST(c.embedding[t.i] AS DOUBLE)) AS dot, "
-    "  SUM(CAST(q.qe[t.i] AS DOUBLE) * CAST(q.qe[t.i] AS DOUBLE)) AS qq, "
-    "  SUM(CAST(c.embedding[t.i] AS DOUBLE) * CAST(c.embedding[t.i] AS DOUBLE)) AS cc "
-    "  FROM q, embeddings c, range(1, 65) t(i) WHERE c.vec_id != q.q_id "
-    "  GROUP BY q.q_id, c.vec_id), "
-    "ranked AS (SELECT q_id, neighbor_id, dot / (SQRT(qq) * SQRT(cc)) AS cos, "
-    "  ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY dot / (SQRT(qq) * SQRT(cc)) DESC, "
-    "  neighbor_id ASC) AS rk FROM sums) "
-    "SELECT q_id, neighbor_id, rk, ROUND(cos, 4) AS cos_sim FROM ranked WHERE rk <= 3"
-)
-
-
 # ---------------------------------------------------------------------------
-# Extra registry: fully-oracled queries BEYOND the driver's 50-row window.
-#
-# The driver's CORRECTNESS artifact records at most 50 queries (observed in
-# round 3: 51 registered, exactly 50 captured, dict-last dropped), so
-# queries() above is held at exactly 50.  Everything registered here gets
-# the SAME Spark-vs-DuckDB rows+schema+hash check from the local harness
-# (scripts/check_oracles.py merges both registries) — retired slots stay
-# continuously verified, and new operators can land here without
-# displacing a driver-visible row.
-
-
-def q_text_mojibake(spark, sf_dir):
-    """ftfy-core mojibake repair (textstats.fix_mojibake) over a
-    deterministically corrupted corpus: doc_id%13 gets a non-ASCII suffix
-    put through one UTF-8→latin-1 misdecode round, doc_id%26 through two;
-    the operator must undo exactly that many rounds and leave every other
-    document untouched.  VALUES oracle: pyoracle.mojibake_rows."""
-    from dug_spark.functions.pyoracle import MOJI_SUFFIX
-    from dug_spark.operators import textstats as ts
-
-    m1 = MOJI_SUFFIX.encode("utf-8").decode("latin-1")
-    m2 = m1.encode("utf-8").decode("latin-1")
-    docs = _pq(spark, sf_dir, "documents")
-    injected = docs.withColumn(
-        "text",
-        F.when(F.col("doc_id") % 26 == 0, F.concat("text", F.lit(m2)))
-        .when(F.col("doc_id") % 13 == 0, F.concat("text", F.lit(m1)))
-        .otherwise(F.col("text")),
-    )
-    return ts.fix_mojibake(injected).select(
-        "doc_id",
-        "mojibake_rounds",
-        F.length("fixed_text").alias("fixed_len"),
-    )
+# Web-graph queries over a synthetic linked corpus (href-extracted host
+# edges; _SQL_WEB_EDGES and pyoracle.web_edges_py mirror it oracle-side).
 
 
 def _web_linked_docs(spark, sf_dir):
@@ -2857,72 +2174,6 @@ def _web_linked_docs(spark, sf_dir):
     )
 
 
-def q_web_host_rank(spark, sf_dir):
-    """HTML → href extraction → host edge list → PageRank (operators/
-    weblinks.py + graph.py) over the synthetic linked corpus
-    (_web_linked_docs), run through the REAL byte-decode + regexp href
-    parser and parse_url host resolution.  Oracle: the same edge
-    arithmetic in SQL + unrolled PageRank iterations."""
-    from dug_spark.operators import weblinks
-
-    pr = weblinks.host_pagerank(_web_linked_docs(spark, sf_dir), iterations=10)
-    return pr.select(
-        F.col("node").alias("host"), F.round("rank", 5).alias("rank")
-    )
-
-
-def q_web_triangles(spark, sf_dir):
-    """Host-graph triangle counts + local clustering coefficient
-    (graph.triangle_counts: degree-ordered orientation) over the same
-    href-extracted host edges as web_host_rank — the standard web-graph
-    community/spam signal one step past PageRank.  Oracle: the orientation
-    + wedge-close joins re-derived in SQL over the web_edges CTE."""
-    from dug_spark.operators import graph, weblinks
-
-    edges = weblinks.host_edges(
-        weblinks.extract_links(_web_linked_docs(spark, sf_dir))
-    )
-    return graph.triangle_counts(
-        edges, src_col="src_host", dst_col="dst_host"
-    ).select("node", "degree", "triangles", "clustering")
-
-
-def q_web_hits(spark, sf_dir):
-    """HITS hub/authority scores (graph.hits: Kleinberg's L2-normalized
-    half-passes) over the SAME href-extracted host graph as web_host_rank
-    — hubs are the directory hosts that link out to good authorities,
-    authorities the content hosts those hubs converge on; PageRank's
-    complement on the web graph.  5 iterations.  Oracle: the iterations
-    unrolled into chained CTEs (same shape as the PageRank oracle);
-    both sides round 5 (cross-engine float-sum order)."""
-    from dug_spark.operators import graph, weblinks
-
-    edges = weblinks.host_edges(
-        weblinks.extract_links(_web_linked_docs(spark, sf_dir))
-    )
-    out = graph.hits(edges, iterations=5, src_col="src_host", dst_col="dst_host")
-    return out.select(
-        "node",
-        F.round("hub", 5).alias("hub"),
-        F.round("authority", 5).alias("authority"),
-    )
-
-
-def q_web_kcore(spark, sf_dir):
-    """3-core of the href-extracted host graph (graph.k_core: iterative
-    degree peel to the unique fixpoint) — the dense-region extractor one
-    step past triangles/clustering on the same edge set.  Oracle: the
-    peel unrolled into fixed SQL rounds (converges in ≤8 on this graph;
-    extra rounds are no-ops), cross-checked to true convergence by the
-    pure-Python peel in tests/test_kcore.py."""
-    from dug_spark.operators import graph, weblinks
-
-    edges = weblinks.host_edges(
-        weblinks.extract_links(_web_linked_docs(spark, sf_dir))
-    )
-    return graph.k_core(edges, k=3, src_col="src_host", dst_col="dst_host")
-
-
 def q_web_link_pred(spark, sf_dir):
     """Link prediction (graph.link_prediction: common neighbors / Jaccard
     / Adamic-Adar, Liben-Nowell & Kleinberg 2003) over the href-extracted
@@ -2947,1273 +2198,6 @@ def q_web_link_pred(spark, sf_dir):
     )
 
 
-def q_web_shortest_paths(spark, sf_dir):
-    """Multi-source weighted shortest paths (graph.shortest_paths:
-    frontier Bellman-Ford, 8 relaxation rounds) over the href-extracted
-    host graph with deterministic integer weights
-    1 + (len(src) + 2·len(dst)) mod 5, from the two lexicographically
-    first source hosts.  Distances are sums of small integers — exact in
-    double on both engines, no rounding.  Oracle: the 8 rounds unrolled
-    into chained min-aggregate CTEs (full Bellman-Ford, which equals the
-    frontier formulation at every round)."""
-    from dug_spark.operators import graph, weblinks
-
-    e = (
-        weblinks.host_edges(
-            weblinks.extract_links(_web_linked_docs(spark, sf_dir))
-        )
-        .select(F.col("src_host").alias("src"), F.col("dst_host").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    w = e.select(
-        "src",
-        "dst",
-        (1.0 + (F.length("src") + 2 * F.length("dst")) % 5).alias("weight"),
-    )
-    seeds = e.select(F.col("src").alias("seed")).distinct().orderBy("seed").limit(2)
-    return graph.shortest_paths(w, seeds, iterations=8).select(
-        "seed", "node", "dist"
-    )
-
-
-_UNIGRAM_KW = dict(
-    vocab_size=80, seed_size=300, max_piece_len=6, em_iters=1,
-    shrink=0.6, min_count=5, max_words=2000,
-)
-
-
-def q_unigram_vocab(spark, sf_dir):
-    """Unigram-LM subword vocabulary (operators/unigram.train_unigram:
-    Kudo 2018 hard-EM variant — substring seed vocab, Viterbi expected
-    counts over the word table, count-ranked pruning with the
-    single-char coverage floor) trained on the documents text.  Every
-    trainer sum is integer-exact or sorted, so the logp column is
-    bit-identical to the pure-Python mirror (pyoracle.unigram_train) —
-    the VALUES oracle."""
-    from dug_spark.operators import unigram
-
-    docs = _pq(spark, sf_dir, "documents")
-    return unigram.train_unigram(docs, **_UNIGRAM_KW).select("piece", "logp")
-
-
-def q_unigram_encode(spark, sf_dir):
-    """Map-only unigram encoding (operators/unigram.unigram_encode):
-    Viterbi piece counts per document under the trained vocabulary,
-    projected to (doc_id, n_pieces); oracle = the mirror's per-doc
-    recompute with the identical DP and tie-break."""
-    from dug_spark.operators import unigram
-
-    docs = _pq(spark, sf_dir, "documents")
-    vocab = unigram.train_unigram(docs, **_UNIGRAM_KW)
-    return unigram.unigram_encode(
-        docs, vocab, max_piece_len=_UNIGRAM_KW["max_piece_len"]
-    ).select("doc_id", "n_pieces")
-
-
-def _doc_tokens(spark, sf_dir):
-    """(source, tok) — whitespace tokens per document source, the shared
-    input of the two sketch rows."""
-    docs = _pq(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        "source",
-        F.explode(F.split(F.col("text"), " ")).alias("tok"),
-    ).filter(F.col("tok") != "")
-
-
-def q_sketch_distinct_tokens(spark, sf_dir):
-    """Mergeable KMV distinct sketch (operators/sketch.py): per-source
-    token-vocabulary cardinality estimate from 64 bucketed xxhash64
-    minima, next to the exact countDistinct for calibration.  The
-    estimator keeps the bucket-minima sum EXACT in Decimal(38,0) so the
-    only float steps are one cast and one division — bit-reproducible
-    across partition orders and mirrored digit-for-digit by the
-    pure-Python recompute (pyoracle.kmv_rows, spec-derived XXH64), the
-    VALUES oracle."""
-    from dug_spark.operators import sketch as sk
-
-    toks = _doc_tokens(spark, sf_dir)
-    est = sk.kmv_estimate(
-        sk.kmv_sketch(toks, ["source"], "tok", buckets=64), ["source"], 64
-    )
-    exact = toks.groupBy("source").agg(
-        F.countDistinct("tok").alias("exact_distinct")
-    )
-    return est.join(exact, "source").select(
-        "source", "buckets_hit", "est_distinct", "exact_distinct"
-    )
-
-
-def q_sketch_snapshot_overlap(spark, sf_dir):
-    """Sketch mergeability + inclusion-exclusion (sketch.kmv_overlap):
-    token-vocabulary overlap between two doc_id slices of each source
-    (doc_id%3==0 vs the rest — 3 is coprime with the generator's
-    source = doc_id%20 assignment, so both slices hit every source) —
-    the 'how much does crawl B add over crawl A' question answered from
-    two constant-size sketches, no raw-data rejoin.
-    Oracle: pyoracle.kmv_overlap_rows (same minima, same rounding)."""
-    from dug_spark.operators import sketch as sk
-
-    toks = _doc_tokens(spark, sf_dir)
-    sa = sk.kmv_sketch(
-        toks.filter(F.col("doc_id") % 3 == 0), ["source"], "tok", 64
-    )
-    sb = sk.kmv_sketch(
-        toks.filter(F.col("doc_id") % 3 != 0), ["source"], "tok", 64
-    )
-    return sk.kmv_overlap(sa, sb, ["source"], 64)
-
-
-def q_sketch_heavy_hitters(spark, sf_dir):
-    """Misra-Gries heavy hitters (sketch.heavy_hitters): tokens covering
-    >= 0.2% of the whitespace-token stream, found via bounded per-partition
-    MG summaries ((k+1) x partitions shuffle rows, k=1024) and then
-    verified EXACTLY on the broadcast candidate set — so despite the
-    sketch underneath, the contract is plain GROUP BY/HAVING and the
-    oracle is ordinary SQL.  This is the scale path behind
-    plans/skew.hot_keys_sketched (BASELINE north_star's salted
-    repartitioning on skewed high-frequency keys)."""
-    from dug_spark.operators.sketch import heavy_hitters
-
-    toks = _doc_tokens(spark, sf_dir).select("tok")
-    n = toks.count()
-    # k=1024 > 500 ⇒ n/(k+1) < n/500 < min_count at every sf
-    return heavy_hitters(toks, "tok", n // 500 + 1, k=1024)
-
-
-def q_weighted_sample(spark, sf_dir):
-    """Per-group weighted reservoir (importance.weighted_sample_per_group):
-    5 docs per language sampled ∝ n_chars via the hash-seeded Gumbel-top-k
-    form of Efraimidis-Spirakis — run through the SALTED two-phase path
-    (salt_factor=4) so the contract row exercises the hot-group plan.
-    VALUES oracle: pyoracle.weighted_sample_rows (same xxh64 noise,
-    same tie-break)."""
-    from dug_spark.operators.importance import weighted_sample_per_group
-
-    docs = _pq(spark, sf_dir, "documents")
-    return weighted_sample_per_group(
-        docs.select("lang", "doc_id", "n_chars"),
-        "lang",
-        "doc_id",
-        k=5,
-        weight_col="n_chars",
-        seed=11,
-        salt_factor=4,
-    )
-
-
-def q_search_hybrid_rrf(spark, sf_dir):
-    """Hybrid lexical+vector retrieval via reciprocal-rank fusion
-    (search.rrf_fuse, Cormack SIGIR 2009 / the ES hybrid default):
-    BM25 top-50 for 'spark window stream' fused with the exact cosine
-    top-50 for the vec_id=0 embedding (search.cosine_topk_single —
-    query folded in as literals, map-only corpus pass), score
-    Σ 1/(60+rank).  Both input lists are already driver-window-verified
-    primitives (search_bm25, knn_cosine); this row gates the fusion
-    semantics end-to-end in SQL."""
-    from pyspark.sql.window import Window
-
-    from dug_spark.operators import search
-
-    docs = _pq(spark, sf_dir, "documents")
-    emb = _pq(spark, sf_dir, "embeddings")
-    bm = search.bm25_topk(docs, "spark window stream", k=50)
-    w = Window.orderBy(F.desc("score"), F.asc("id"))
-    bm_r = bm.withColumn("rank", F.row_number().over(w)).select("id", "rank")
-    qv = [float(x) for x in emb.where(F.col("vec_id") == 0).first()["embedding"]]
-    vec_r = search.cosine_topk_single(emb, qv, k=50, exclude_id=0).select(
-        "id", "rank"
-    )
-    return search.rrf_fuse([bm_r, vec_r], k=10).select(
-        F.col("id").alias("doc_id"), "rrf_score", "n_lists", "rank"
-    )
-
-
-_ROBOTS_RULES = [
-    (f"h{k}.example.org", ag, d, p)
-    for k in range(20)
-    for ag, d, p in (
-        [("*", "disallow", "/p1"), ("*", "allow", "/p1/d*1$"),
-         ("*", "disallow", "/p3"), ("*", "allow", "/p3")]
-        + ([("dugbot", "disallow", "/p2")] if k % 2 == 0 else [])
-    )
-]
-
-
-def _robots_url(doc_id: int) -> str:
-    return f"https://h{doc_id % 20}.example.org/p{doc_id % 7}/d{doc_id}"
-
-
-def q_crawl_robots(spark, sf_dir):
-    """RFC 9309 robots.txt compliance (crawl.robots_filter) over a
-    doc_id-derived URL frontier and a 100-line parsed-rules dimension
-    table: even hosts carry a dugbot-specific group (which SHADOWS their
-    '*' group per §2.2.2 — only /p2 is off), odd hosts exercise
-    longest-match (/p1 vs /p1/d*1$ with wildcard+anchor) and the
-    allow-wins length tie (/p3).  VALUES oracle:
-    pyoracle.robots_allowed — an independent pure-regex recompute."""
-    from dug_spark.operators.crawl import robots_filter
-
-    did = F.col("doc_id")
-    urls = _pq(spark, sf_dir, "documents").select(
-        F.concat(
-            F.lit("https://h"), (did % 20).cast("string"),
-            F.lit(".example.org/p"), (did % 7).cast("string"),
-            F.lit("/d"), did.cast("string"),
-        ).alias("url")
-    )
-    rules = spark.createDataFrame(
-        _ROBOTS_RULES, "host string, agent string, directive string, pattern string"
-    )
-    return robots_filter(urls, rules, "dugbot")
-
-
-def q_temporal_asof(spark, sf_dir):
-    """Backward as-of join (temporal.asof_join, union-window plan — ONE
-    shuffle, zero Join nodes, plan-asserted in tests): every click event
-    gains the user's latest prior-or-simultaneous purchase value.  The
-    oracle is DuckDB's native ASOF LEFT JOIN over the same (key, ts)
-    max_by-deduped right side — a fully independent implementation of
-    the same point-in-time semantics."""
-    from dug_spark.operators.temporal import asof_join
-
-    ev = _pq(spark, sf_dir, "events")
-    left = ev.where(F.col("event_type") == "click").select(
-        "user_id", "ts", "event_id"
-    )
-    right = ev.where(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "value"
-    )
-    return asof_join(left, right, "user_id", "ts", "ts", ["value"]).select(
-        "event_id",
-        "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        F.round("value", 6).alias("purchase_value"),
-        F.unix_micros(F.col("matched_ts").cast("timestamp")).alias("matched_ts_us"),
-    )
-
-
-def q_temporal_range_join(spark, sf_dir):
-    """Bucketed range join (temporal.range_join_bucketed, 3600 s
-    buckets): click/view events land in deterministic per-user-bucket
-    maintenance windows (10 user buckets × 30 daily windows of 1.5-4.5 h,
-    generated identically in both engines from range()).  The bucketed
-    equi-join rewrite must return EXACTLY the naive interval-predicate
-    join the oracle states."""
-    from dug_spark.operators.temporal import range_join_bucketed
-
-    base = 1704067200  # 2024-01-01 UTC
-    w = (
-        spark.range(10)
-        .select(F.col("id").alias("ub"))
-        .crossJoin(spark.range(30).select(F.col("id").alias("j")))
-        .select(
-            "ub",
-            (F.col("ub") * 100 + F.col("j")).alias("win_id"),
-            (
-                (F.lit(base) + F.col("j") * 86400 + F.col("ub") * 3600)
-                * F.lit(1000000)
-            ).alias("s_us"),
-            (
-                (
-                    F.lit(base)
-                    + F.col("j") * 86400
-                    + F.col("ub") * 3600
-                    + (F.lit(1) + (F.col("ub") + F.col("j")) % 3) * 5400
-                )
-                * F.lit(1000000)
-            ).alias("e_us"),
-        )
-    )
-    pts = (
-        _pq(spark, sf_dir, "events")
-        .where(F.col("event_type").isin("click", "view"))
-        .select(
-            "event_id",
-            (F.col("user_id") % 10).alias("ub"),
-            F.unix_micros(F.col("ts").cast("timestamp")).alias("pt_us"),
-        )
-    )
-    return range_join_bucketed(
-        pts, w, "ub", "pt_us", "s_us", "e_us", 3600.0 * 1e6
-    ).select("event_id", "ub", "win_id", "pt_us")
-
-
-def q_temporal_sessionize(spark, sf_dir):
-    """Batch gap-rule sessionization (temporal.sessionize, single
-    Exchange plan-asserted): 1-hour-gap sessions over each user's event
-    stream.  Oracle: the identical lag/cumsum SQL windows in DuckDB —
-    equal-timestamp ties provably get the same session_seq under any
-    tie order, so the values are engine-order-independent."""
-    from dug_spark.operators.temporal import sessionize
-
-    ev = _pq(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    return sessionize(ev, "user_id", "ts", gap_seconds=3600.0).select(
-        "event_id",
-        "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        "session_seq",
-    )
-
-
-def q_sketch_bloom(spark, sf_dir):
-    """Mergeable Bloom membership filter (sketch.bloom_build/bloom_probe
-    — the sketch trio's membership leg next to KMV cardinality and MG
-    frequency): build over the whitespace tokens of sources src0-src4,
-    probe every distinct corpus token, report might_contain next to
-    exact membership.  num_bits=4096 keeps the FP set non-empty on
-    purpose — the filter is seeded-hash-deterministic, so even the false
-    positives ARE the contract.  VALUES oracle: pyoracle.bloom_rows
-    (spec-derived XXH64, same signed-word bit math)."""
-    from dug_spark.operators import sketch as sk
-
-    toks = _doc_tokens(spark, sf_dir)
-    build = toks.where(
-        F.col("source").isin("src0", "src1", "src2", "src3", "src4")
-    ).select("tok")
-    words = sk.bloom_words(sk.bloom_build(build, "tok", 4096, 4), 4096)
-    probe = toks.select("tok").distinct()
-    built = build.distinct().withColumn("present", F.lit(True))
-    return (
-        sk.bloom_probe(probe, "tok", words, 4096, 4)
-        .join(built.withColumnRenamed("tok", "btok"),
-              F.col("tok") == F.col("btok"), "left")
-        .select(
-            "tok",
-            "might_contain",
-            F.coalesce("present", F.lit(False)).alias("present"),
-        )
-    )
-
-
-def _sitemap_page(d: int, s: str) -> tuple[str, str]:
-    """Deterministic sitemap XML for doc (d, source s) — q_crawl_sitemap's
-    Spark side synthesizes the SAME bytes with column ops.  d%25==0 docs
-    become sitemapindex pages (2 child entries); the rest urlset pages
-    with 3 <url> entries exercising every optional field, the entity
-    escape in <loc>, and whitespace around values."""
-    head = '<?xml version="1.0" encoding="UTF-8"?>\n'
-    if d % 25 == 0:
-        ents = []
-        for j in (1, 2):
-            ents.append(
-                f"<sitemap>\n  <loc>https://{s}.example.org/sitemap-{d + j}.xml</loc>"
-                f"\n  <lastmod>2024-01-{(d + j) % 9 + 1:02d}</lastmod>\n</sitemap>"
-            )
-        xml = (
-            head
-            + '<sitemapindex xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">'
-            + "".join(ents)
-            + "</sitemapindex>"
-        )
-    else:
-        ents = []
-        for k in range(3):
-            e = d * 3 + k
-            loc = f"https://{s}.example.org/p/{e}" + (
-                "?a=1&amp;b=2" if e % 5 == 0 else ""
-            )
-            lastmod = (
-                f"\n  <lastmod>2024-{e % 12 + 1:02d}-{e % 28 + 1:02d}</lastmod>"
-                if e % 3 != 0
-                else ""
-            )
-            cf = (
-                "\n  <changefreq>"
-                + ["daily", "weekly", "monthly"][e % 5]
-                + "</changefreq>"
-                if e % 5 < 3
-                else ""
-            )
-            pr = f"\n  <priority>0.{e % 10}</priority>" if e % 4 != 0 else ""
-            ents.append(f"<url>\n  <loc> {loc} </loc>{lastmod}{cf}{pr}\n</url>")
-        xml = (
-            head
-            + '<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">'
-            + "".join(ents)
-            + "</urlset>"
-        )
-    return (f"https://{s}.example.org/sitemap-{d}.xml", xml)
-
-
-def q_crawl_sitemap(spark, sf_dir):
-    """Sitemap protocol parser (crawl.parse_sitemaps — sitemaps.org 0.9,
-    the frontier-seeding companion to crawl_robots): doc_id-derived
-    urlset AND sitemapindex pages synthesized as column ops, parsed
-    map-side (regexp blocks + posexplode, zero shuffle, zero UDF) to one
-    row per entry with loc entity-decoded and optional fields NULL when
-    absent.  VALUES oracle: pyoracle.sitemap_entry_rows over the same
-    _sitemap_page bytes."""
-    from dug_spark.operators import crawl
-
-    docs = _pq(spark, sf_dir, "documents").select("doc_id", "source")
-    d, s = F.col("doc_id"), F.col("source")
-
-    def url_block(k: int):
-        e = d * 3 + F.lit(k)
-        loc = F.concat(
-            F.lit("https://"), s, F.lit(".example.org/p/"), e.cast("string"),
-            F.when(e % 5 == 0, F.lit("?a=1&amp;b=2")).otherwise(F.lit("")),
-        )
-        lastmod = F.when(
-            e % 3 != 0,
-            F.concat(
-                F.lit("\n  <lastmod>2024-"),
-                F.lpad((e % 12 + 1).cast("string"), 2, "0"),
-                F.lit("-"),
-                F.lpad((e % 28 + 1).cast("string"), 2, "0"),
-                F.lit("</lastmod>"),
-            ),
-        ).otherwise(F.lit(""))
-        cf = F.when(
-            e % 5 < 3,
-            F.concat(
-                F.lit("\n  <changefreq>"),
-                F.element_at(
-                    F.array(F.lit("daily"), F.lit("weekly"), F.lit("monthly")),
-                    (e % 5).cast("int") + 1,
-                ),
-                F.lit("</changefreq>"),
-            ),
-        ).otherwise(F.lit(""))
-        pr = F.when(
-            e % 4 != 0,
-            F.concat(
-                F.lit("\n  <priority>0."),
-                (e % 10).cast("string"),
-                F.lit("</priority>"),
-            ),
-        ).otherwise(F.lit(""))
-        return F.concat(
-            F.lit("<url>\n  <loc> "), loc, F.lit(" </loc>"),
-            lastmod, cf, pr, F.lit("\n</url>"),
-        )
-
-    def idx_block(j: int):
-        dj = d + F.lit(j)
-        return F.concat(
-            F.lit("<sitemap>\n  <loc>https://"), s,
-            F.lit(".example.org/sitemap-"), dj.cast("string"),
-            F.lit(".xml</loc>\n  <lastmod>2024-01-"),
-            F.lpad((dj % 9 + 1).cast("string"), 2, "0"),
-            F.lit("</lastmod>\n</sitemap>"),
-        )
-
-    head = F.lit('<?xml version="1.0" encoding="UTF-8"?>\n')
-    xml = F.when(
-        d % 25 == 0,
-        F.concat(
-            head,
-            F.lit('<sitemapindex xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">'),
-            idx_block(1), idx_block(2), F.lit("</sitemapindex>"),
-        ),
-    ).otherwise(
-        F.concat(
-            head,
-            F.lit('<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">'),
-            url_block(0), url_block(1), url_block(2), F.lit("</urlset>"),
-        )
-    )
-    pages = docs.select(
-        F.concat(
-            F.lit("https://"), s, F.lit(".example.org/sitemap-"),
-            d.cast("string"), F.lit(".xml"),
-        ).alias("url"),
-        xml.alias("xml"),
-    )
-    # the operator's absent-field contract is NULL (pytest-checked); the
-    # gate row coalesces to sentinels so the hash compare never depends
-    # on engine NULL-ordering
-    return crawl.parse_sitemaps(pages).select(
-        "sitemap_url",
-        "kind",
-        "entry_idx",
-        "loc",
-        F.coalesce("lastmod", F.lit("")).alias("lastmod"),
-        F.coalesce("changefreq", F.lit("")).alias("changefreq"),
-        F.coalesce("priority", F.lit(-1.0)).alias("priority"),
-    )
-
-
-def _split_host(d, s):
-    """Synthetic leakage unit shared by q_corpus_split's Spark side and
-    its SQL oracle: ~97×|sources| distinct hosts from (doc_id, source)."""
-    return F.concat(
-        F.lit("h"), (d % 97).cast("string"), F.lit("."), s,
-        F.lit(".example.org"),
-    )
-
-
-def q_corpus_split(spark, sf_dir):
-    """Leakage-safe corpus split (curate.leakage_safe_split): every doc of
-    a host lands in the same train/val/test split via
-    substr(md5(salt||host),1,8) compared against cumulative-weight hex
-    literals — a narrow map (one codegen pass, zero shuffle) whose exact
-    assignment the DuckDB oracle reproduces from the same literals
-    (split_thresholds)."""
-    from dug_spark.operators import curate
-
-    docs = _pq(spark, sf_dir, "documents").select("doc_id", "source")
-    units = docs.withColumn(
-        "host", _split_host(F.col("doc_id"), F.col("source"))
-    )
-    return curate.leakage_safe_split(units, unit_col="host", salt="r5").select(
-        "doc_id", "host", "split"
-    )
-
-
-_COMPACT_TARGET = 64 * 1024 * 1024
-
-
-def _file_size(d: int, nc: int) -> int:
-    """Deterministic synthetic data-file size for doc (d, n_chars nc) —
-    exact-integer arithmetic shared by q_compaction_plan's Spark side
-    (same expression in column ops) and the VALUES oracle."""
-    return (nc * 7919 + d * 104729) % (256 * 1024 * 1024) + 1024
-
-
-def q_compaction_plan(spark, sf_dir):
-    """Small-file compaction planner (plans/compact.compaction_plan):
-    per-table-partition first-fit-decreasing bin-packing of file
-    metadata into 64 MiB rewrite groups — ONE shuffle on the partition
-    key, then per-group Python over manifest-sized Arrow batches (the
-    input is file metadata, not corpus data).  VALUES oracle:
-    pyoracle.compaction_rows, an independent FFD recompute."""
-    from dug_spark.plans import compact
-
-    docs = _pq(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
-    d, nc = F.col("doc_id"), F.col("n_chars")
-    files = docs.select(
-        F.col("source").alias("partition"),
-        F.concat(F.lit("part-"), d.cast("string"), F.lit(".parquet")).alias(
-            "file"
-        ),
-        ((nc * 7919 + d * 104729) % (256 * 1024 * 1024) + 1024).alias(
-            "size_bytes"
-        ),
-    )
-    return compact.compaction_plan(files, target_bytes=_COMPACT_TARGET)
-
-
-def q_kg_align(spark, sf_dir):
-    """Cross-snapshot entity alignment (canonicalize.align_entities):
-    token-set Jaccard over entity names via an inverted-index token join
-    (set-similarity blocking — never a cross join), reciprocal-best
-    acceptance with deterministic tie-breaks.  Snapshots derive from
-    `part`: left = keys %3≠0 named `p_name k<key%101>`, right = keys
-    %5≠0 (re-keyed +10^6) named the same plus a ` v2` release token —
-    true pairs share 3/4 tokens (sim 0.75) while same-name
-    different-key pairs top out at 2/5, so the mutual-top-1 gate does
-    real work.  Oracle: the same derivation in pure SQL (unnest +
-    joins + two windows)."""
-    from dug_spark.operators import canonicalize
-
-    part = _pq(spark, sf_dir, "part")
-    keyed = F.concat(
-        F.col("p_name"), F.lit(" k"),
-        (F.col("p_partkey") % 101).cast("string"),
-    )
-    left = part.where(F.col("p_partkey") % 3 != 0).select(
-        F.col("p_partkey").alias("id"), keyed.alias("name")
-    )
-    right = part.where(F.col("p_partkey") % 5 != 0).select(
-        (F.col("p_partkey") + 1000000).alias("id"),
-        F.concat(keyed, F.lit(" v2")).alias("name"),
-    )
-    return canonicalize.align_entities(left, right, min_sim=0.34)
-
-
-def _content_page(d: int, t: str, s: str) -> tuple[str, str]:
-    """Deterministic article-shaped HTML for doc (d, text t, source s) —
-    q_main_content's Spark side synthesizes the SAME bytes with column
-    ops: head+script (must strip), a link-dense nav (must drop), the
-    doc text as the article paragraph (kept when ≥80 chars), a short
-    note (must drop), and a footer link list (must drop)."""
-    t = (t or "").replace("\n", " ")
-    nav = (
-        '<nav><a href="/">Home</a> <a href="/a">News</a> '
-        '<a href="/b">About</a></nav>'
-    )
-    html = (
-        "<html><head><title>T</title><script>var x=1;</script></head>"
-        f"<body>{nav}<article><p>{t}</p>"
-        f"<p>Short note {d}.</p></article>"
-        f'<footer><a href="/c">Terms</a> <a href="/d">Privacy {s}</a>'
-        "</footer></body></html>"
-    )
-    return (f"https://{s}.example.org/art/{d}", html)
-
-
-def q_main_content(spark, sf_dir):
-    """Main-content extraction (weblinks.extract_main_content —
-    simplified jusText/Arc90: block segmentation + length/link-density
-    gate): article paragraphs survive, nav/footer link lists and short
-    notes drop, script/head strip — ONE narrow map of nested
-    higher-order functions, zero shuffle, zero UDF.  VALUES oracle:
-    pyoracle.main_content_rows over the same _content_page bytes."""
-    from dug_spark.operators import weblinks
-
-    docs = _pq(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    d, s = F.col("doc_id"), F.col("source")
-    t = F.regexp_replace(F.coalesce(F.col("text"), F.lit("")), "\n", " ")
-    html = F.concat(
-        F.lit(
-            "<html><head><title>T</title><script>var x=1;</script></head>"
-            '<body><nav><a href="/">Home</a> <a href="/a">News</a> '
-            '<a href="/b">About</a></nav><article><p>'
-        ),
-        t,
-        F.lit("</p><p>Short note "),
-        d.cast("string"),
-        F.lit('.</p></article><footer><a href="/c">Terms</a> '
-              '<a href="/d">Privacy '),
-        s,
-        F.lit("</a></footer></body></html>"),
-    )
-    pages = docs.select(
-        F.concat(
-            F.lit("https://"), s, F.lit(".example.org/art/"), d.cast("string")
-        ).alias("url"),
-        F.encode(html, "UTF-8").alias("html"),
-    )
-    return weblinks.extract_main_content(pages)
-
-
-def _robots_page(d: int, s: str) -> tuple[str, str]:
-    """Deterministic robots.txt for doc (d, source s) — q_robots_parse's
-    Spark side synthesizes the SAME bytes with column ops.  Mods
-    exercise: headerless junk rule (d%7==0, must drop), multi-agent
-    header (d%4==0), empty Disallow (d%5==0, must drop), comments,
-    blank lines, a '*' group, and a Sitemap discovery line."""
-    lines = []
-    if d % 7 == 0:
-        lines.append("Disallow: /orphan")
-    lines.append(f"# robots for {s}")
-    lines.append("User-agent: DugBot")
-    if d % 4 == 0:
-        lines.append("User-agent: otherbot")
-    lines.append(f"Disallow: /private/{d % 13}")
-    if d % 5 == 0:
-        lines.append("Disallow:")
-    lines.append(f"Allow: /private/{d % 13}/public")
-    lines.append("")
-    lines.append("User-agent: *")
-    lines.append("Disallow: /tmp")
-    lines.append(f"Sitemap: https://{s}.example.org/sitemap-{d}.xml")
-    return (f"{s}-{d}.example.org", "\n".join(lines))
-
-
-def _robots_pages_df(spark, sf_dir):
-    docs = _pq(spark, sf_dir, "documents").select("doc_id", "source")
-    d, s = F.col("doc_id"), F.col("source")
-
-    def when_line(cond, *parts):
-        return F.when(cond, F.concat(*parts)).otherwise(F.lit(""))
-
-    txt = F.concat(
-        when_line(d % 7 == 0, F.lit("Disallow: /orphan\n")),
-        F.lit("# robots for "), s, F.lit("\nUser-agent: DugBot\n"),
-        when_line(d % 4 == 0, F.lit("User-agent: otherbot\n")),
-        F.lit("Disallow: /private/"), (d % 13).cast("string"), F.lit("\n"),
-        when_line(d % 5 == 0, F.lit("Disallow:\n")),
-        F.lit("Allow: /private/"), (d % 13).cast("string"),
-        F.lit("/public\n\nUser-agent: *\nDisallow: /tmp\nSitemap: https://"),
-        s, F.lit(".example.org/sitemap-"), d.cast("string"), F.lit(".xml"),
-    )
-    return docs.select(
-        F.concat(s, F.lit("-"), d.cast("string"), F.lit(".example.org"))
-        .alias("host"),
-        txt.alias("robots_txt"),
-    )
-
-
-def q_robots_parse(spark, sf_dir):
-    """robots.txt parsing (crawl.parse_robots — RFC 9309 §2.1-2.2 group
-    semantics): raw bodies → the (host, agent, directive, pattern,
-    line_no) rule table robots_filter consumes; consecutive User-agent
-    lines form one header, headerless and empty-pattern rules drop.
-    One host-keyed window + a dimension-sized (host, block) self-join.
-    VALUES oracle: pyoracle.robots_parse_rows over the same
-    _robots_page bytes."""
-    from dug_spark.operators import crawl
-
-    return crawl.parse_robots(_robots_pages_df(spark, sf_dir))
-
-
-def q_robots_sitemaps(spark, sf_dir):
-    """Sitemap discovery from robots.txt (crawl.robots_sitemap_urls —
-    RFC 9309 §2.3: the directive is group-independent): pure map +
-    distinct, the edge that feeds parse_sitemaps.  VALUES oracle: the
-    sitemap half of pyoracle.robots_parse_rows."""
-    from dug_spark.operators import crawl
-
-    return crawl.robots_sitemap_urls(_robots_pages_df(spark, sf_dir))
-
-
-def q_canonical_elect(spark, sf_dir):
-    """Canonical-URL duplicate election (weblinks.canonical_elect — the
-    consumer of page_metadata's rel=canonical signal): docs cluster in
-    groups of 4 via canonical = p/<doc_id - doc_id%4> (the %4==0 leader
-    declares none), keeper = the key's own page, one verdict row per
-    page.  One near-unique-key shuffle + row_number.  Oracle: the same
-    election in pure SQL."""
-    from dug_spark.operators import weblinks
-
-    docs = _pq(spark, sf_dir, "documents").select("doc_id")
-    d = F.col("doc_id")
-    pages = docs.select(
-        F.concat(F.lit("https://ex.org/p/"), d.cast("string")).alias("url"),
-        F.when(
-            d % 4 != 0,
-            F.concat(
-                F.lit("https://ex.org/p/"), (d - d % 4).cast("string")
-            ),
-        ).alias("canonical"),
-    )
-    return weblinks.canonical_elect(pages)
-
-
-_CRAWL_BUDGET = 1_000_000
-
-
-def q_crawl_budget(spark, sf_dir):
-    """Crawl budget apportionment (crawl.allocate_budget — Hamilton's
-    largest-remainder method): ~970 synthetic hosts scored by total
-    n_chars share a 10^6-fetch budget; quotas sum exactly to the budget
-    and each host is within 1 of its exact share.  One scalar total +
-    one window rank over the host table (dimension-scale).  Oracle: the
-    same apportionment in pure SQL — float expressions parenthesized
-    identically (budget·(score/total)) so floor() sees bit-identical
-    doubles on both engines."""
-    from dug_spark.operators import crawl
-
-    docs = _pq(spark, sf_dir, "documents").select(
-        "doc_id", "source", "n_chars"
-    )
-    hosts = docs.groupBy(
-        _split_host(F.col("doc_id"), F.col("source")).alias("host")
-    ).agg(F.sum("n_chars").cast("double").alias("score"))
-    return crawl.allocate_budget(hosts, _CRAWL_BUDGET)
-
-
-def _boiler_text(d: int, t: str, s: str) -> str:
-    """Deterministic host-templated document body for doc (d, text t,
-    source s) — shared grammar between q_host_boilerplate's Spark side
-    (same expression as column ops) and the VALUES mirror.  NAV/footer
-    lines appear on every page of the host (true boilerplate); the
-    PROMO line only on d%3==0 pages (~1/3 < the 0.5 threshold — must
-    survive)."""
-    promo = f"PROMO {s}\n" if d % 3 == 0 else ""
-    return f"NAV {s} MENU\n{promo}{t or ''}\nCopyright {s}"
-
-
-def q_host_boilerplate(spark, sf_dir):
-    """Host-scoped boilerplate removal (curate.strip_host_boilerplate —
-    the RefinedWeb/CCNet host-local complement to the C4 global line
-    rule): per-host template lines (≥50% of the host's docs, ≥2 docs)
-    stripped from every page, sub-threshold repeated lines kept.  One
-    (host,line) distinct + aggregation, broadcast host-size join,
-    sort-struct reassembly.  VALUES oracle:
-    pyoracle.host_boilerplate_strip_rows over the same decorated
-    bodies."""
-    from dug_spark.operators import curate
-
-    docs = _pq(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    d, s = F.col("doc_id"), F.col("source")
-    promo = F.when(
-        d % 3 == 0, F.concat(F.lit("PROMO "), s, F.lit("\n"))
-    ).otherwise(F.lit(""))
-    body = F.concat(
-        F.lit("NAV "), s, F.lit(" MENU\n"), promo,
-        F.coalesce(F.col("text"), F.lit("")), F.lit("\nCopyright "), s,
-    )
-    decorated = docs.select(
-        d.alias("doc_id"), s.alias("host"), body.alias("text")
-    )
-    return curate.strip_host_boilerplate(decorated, host_col="host")
-
-
-def _feed_page(d: int, s: str) -> tuple[str, str]:
-    """Deterministic RSS (d even) / Atom (d odd) feed for doc (d, source
-    s), 2 entries each — q_crawl_feeds' Spark side synthesizes the SAME
-    bytes with column ops.  Mods exercise absent title (e%7==0), absent
-    link (e%5==0), absent date (e%3==0, Atom falling back to <updated>
-    when e%2==0), absent id (e%4==0), and the &amp; entity in titles."""
-    head = '<?xml version="1.0" encoding="UTF-8"?>\n'
-    ents = []
-    for k in (0, 1):
-        e = d * 2 + k
-        title = f"\n  <title>Post {e} &amp; co</title>" if e % 7 != 0 else ""
-        url = f"https://{s}.example.org/a/{e}"
-        day = f"{e % 28 + 1:02d}"
-        if d % 2 == 0:
-            link = f"\n  <link>{url}</link>" if e % 5 != 0 else ""
-            date = (
-                f"\n  <pubDate>Mon, {day} Jan 2024 00:00:00 GMT</pubDate>"
-                if e % 3 != 0
-                else ""
-            )
-            gid = f"\n  <guid>tag:{s},{e}</guid>" if e % 4 != 0 else ""
-            ents.append(f"<item>{title}{link}{date}{gid}\n</item>")
-        else:
-            link = (
-                f'\n  <link rel="alternate" href="{url}"/>'
-                if e % 5 != 0
-                else ""
-            )
-            if e % 3 != 0:
-                date = f"\n  <published>2024-01-{day}T00:00:00Z</published>"
-            elif e % 2 == 0:
-                date = f"\n  <updated>2024-02-{day}T00:00:00Z</updated>"
-            else:
-                date = ""
-            gid = f"\n  <id>urn:{s}:{e}</id>" if e % 4 != 0 else ""
-            ents.append(f"<entry>{title}{link}{date}{gid}\n</entry>")
-    if d % 2 == 0:
-        xml = (
-            head + '<rss version="2.0"><channel><title>F</title>'
-            + "".join(ents) + "</channel></rss>"
-        )
-    else:
-        xml = (
-            head + '<feed xmlns="http://www.w3.org/2005/Atom">'
-            + "".join(ents) + "</feed>"
-        )
-    return (f"https://{s}.example.org/feed-{d}.xml", xml)
-
-
-def q_crawl_feeds(spark, sf_dir):
-    """RSS 2.0 / Atom (RFC 4287) feed parser (crawl.parse_feeds — the
-    third discovery surface after crawl_robots and crawl_sitemap):
-    doc_id-derived feeds synthesized as column ops, parsed map-side
-    (regexp blocks + posexplode, zero shuffle, zero UDF) to one row per
-    entry with entity-decoded title/link, Atom published→updated
-    fallback, NULL absent fields.  VALUES oracle:
-    pyoracle.feed_entry_rows over the same _feed_page bytes."""
-    from dug_spark.operators import crawl
-
-    docs = _pq(spark, sf_dir, "documents").select("doc_id", "source")
-    d, s = F.col("doc_id"), F.col("source")
-
-    def entry_block(k: int):
-        e = d * 2 + F.lit(k)
-        es = e.cast("string")
-        title = F.when(
-            e % 7 != 0,
-            F.concat(F.lit("\n  <title>Post "), es, F.lit(" &amp; co</title>")),
-        ).otherwise(F.lit(""))
-        url = F.concat(F.lit("https://"), s, F.lit(".example.org/a/"), es)
-        day = F.lpad((e % 28 + 1).cast("string"), 2, "0")
-        rss_link = F.when(
-            e % 5 != 0, F.concat(F.lit("\n  <link>"), url, F.lit("</link>"))
-        ).otherwise(F.lit(""))
-        rss_date = F.when(
-            e % 3 != 0,
-            F.concat(
-                F.lit("\n  <pubDate>Mon, "), day,
-                F.lit(" Jan 2024 00:00:00 GMT</pubDate>"),
-            ),
-        ).otherwise(F.lit(""))
-        rss_gid = F.when(
-            e % 4 != 0,
-            F.concat(F.lit("\n  <guid>tag:"), s, F.lit(","), es, F.lit("</guid>")),
-        ).otherwise(F.lit(""))
-        atom_link = F.when(
-            e % 5 != 0,
-            F.concat(F.lit('\n  <link rel="alternate" href="'), url, F.lit('"/>')),
-        ).otherwise(F.lit(""))
-        atom_date = F.when(
-            e % 3 != 0,
-            F.concat(
-                F.lit("\n  <published>2024-01-"), day,
-                F.lit("T00:00:00Z</published>"),
-            ),
-        ).when(
-            e % 2 == 0,
-            F.concat(
-                F.lit("\n  <updated>2024-02-"), day, F.lit("T00:00:00Z</updated>")
-            ),
-        ).otherwise(F.lit(""))
-        atom_gid = F.when(
-            e % 4 != 0,
-            F.concat(F.lit("\n  <id>urn:"), s, F.lit(":"), es, F.lit("</id>")),
-        ).otherwise(F.lit(""))
-        return F.when(
-            d % 2 == 0,
-            F.concat(
-                F.lit("<item>"), title, rss_link, rss_date, rss_gid,
-                F.lit("\n</item>"),
-            ),
-        ).otherwise(
-            F.concat(
-                F.lit("<entry>"), title, atom_link, atom_date, atom_gid,
-                F.lit("\n</entry>"),
-            )
-        )
-
-    head = F.lit('<?xml version="1.0" encoding="UTF-8"?>\n')
-    body = F.concat(entry_block(0), entry_block(1))
-    xml = F.when(
-        d % 2 == 0,
-        F.concat(
-            head, F.lit('<rss version="2.0"><channel><title>F</title>'),
-            body, F.lit("</channel></rss>"),
-        ),
-    ).otherwise(
-        F.concat(
-            head, F.lit('<feed xmlns="http://www.w3.org/2005/Atom">'),
-            body, F.lit("</feed>"),
-        )
-    )
-    pages = docs.select(
-        F.concat(
-            F.lit("https://"), s, F.lit(".example.org/feed-"),
-            d.cast("string"), F.lit(".xml"),
-        ).alias("url"),
-        xml.alias("xml"),
-    )
-    return crawl.parse_feeds(pages).select(
-        "feed_url",
-        "kind",
-        "entry_idx",
-        F.coalesce("title", F.lit("")).alias("title"),
-        F.coalesce("link", F.lit("")).alias("link"),
-        F.coalesce("published", F.lit("")).alias("published"),
-        F.coalesce("entry_id", F.lit("")).alias("entry_id"),
-    )
-
-
-def _meta_page(d: int, s: str, lang: str) -> tuple[str, str]:
-    """Deterministic HTML head for doc (d, source s, lang) — the Spark
-    side of q_page_metadata synthesizes the SAME bytes with column ops.
-    Mods exercise: absent lang (d%3==0), absent title (d%7==0), both
-    meta-attribute orders (d%2), absent description (d%5==0), absent
-    canonical (d%4==0), og:title (d%6<3), robots directives (d%8<3),
-    and the &amp; entity in title/description."""
-    lang_attr = f' lang="{lang}"' if d % 3 != 0 else ""
-    parts = [f"<!doctype html>\n<html{lang_attr}>\n<head>"]
-    if d % 7 != 0:
-        parts.append(f"<title> Page {d} &amp; {s} </title>")
-    if d % 5 != 0:
-        c = f"Summary {d} &amp; co"
-        parts.append(
-            f'<meta name="description" content="{c}">'
-            if d % 2 == 0
-            else f'<meta content="{c}" name="description">'
-        )
-    if d % 4 != 0:
-        href = f"https://{s}.example.org/c/{d}"
-        parts.append(
-            f'<link rel="canonical" href="{href}">'
-            if d % 2 == 0
-            else f'<link href="{href}" rel="canonical">'
-        )
-    if d % 6 < 3:
-        parts.append(f'<meta property="og:title" content="OG {d}">')
-    r = d % 8
-    if r < 3:
-        rv = ["noindex, nofollow", "noindex", "nofollow"][r]
-        parts.append(f'<meta name="robots" content="{rv}">')
-    parts.append(f'</head>\n<body><a href="/p/{d}">x</a></body></html>')
-    return (f"https://{s}.example.org/p/{d}", "\n".join(parts))
-
-
-def q_page_metadata(spark, sf_dir):
-    """HTML head metadata extraction (weblinks.page_metadata): title /
-    description / canonical / og:title / html lang / robots directives
-    from doc_id-derived pages synthesized as column ops — one narrow
-    codegen map (case-insensitive regexes, both meta attribute orders,
-    entity decode), zero shuffle, zero UDF.  VALUES oracle:
-    pyoracle.page_metadata_rows over the same _meta_page bytes."""
-    from dug_spark.operators import weblinks
-
-    docs = _pq(spark, sf_dir, "documents").select("doc_id", "source", "lang")
-    d, s = F.col("doc_id"), F.col("source")
-    nl = F.lit("\n")
-    lang_attr = F.when(
-        d % 3 != 0, F.concat(F.lit(' lang="'), F.col("lang"), F.lit('"'))
-    ).otherwise(F.lit(""))
-    title = F.when(
-        d % 7 != 0,
-        F.concat(
-            nl, F.lit("<title> Page "), d.cast("string"),
-            F.lit(" &amp; "), s, F.lit(" </title>"),
-        ),
-    ).otherwise(F.lit(""))
-    content = F.concat(
-        F.lit("Summary "), d.cast("string"), F.lit(" &amp; co")
-    )
-    desc = F.when(
-        d % 5 != 0,
-        F.when(
-            d % 2 == 0,
-            F.concat(
-                nl, F.lit('<meta name="description" content="'),
-                content, F.lit('">'),
-            ),
-        ).otherwise(
-            F.concat(
-                nl, F.lit('<meta content="'), content,
-                F.lit('" name="description">'),
-            )
-        ),
-    ).otherwise(F.lit(""))
-    href = F.concat(
-        F.lit("https://"), s, F.lit(".example.org/c/"), d.cast("string")
-    )
-    canon = F.when(
-        d % 4 != 0,
-        F.when(
-            d % 2 == 0,
-            F.concat(nl, F.lit('<link rel="canonical" href="'), href, F.lit('">')),
-        ).otherwise(
-            F.concat(nl, F.lit('<link href="'), href, F.lit('" rel="canonical">'))
-        ),
-    ).otherwise(F.lit(""))
-    og = F.when(
-        d % 6 < 3,
-        F.concat(
-            nl, F.lit('<meta property="og:title" content="OG '),
-            d.cast("string"), F.lit('">'),
-        ),
-    ).otherwise(F.lit(""))
-    robots = F.when(
-        d % 8 < 3,
-        F.concat(
-            nl, F.lit('<meta name="robots" content="'),
-            F.element_at(
-                F.array(
-                    F.lit("noindex, nofollow"), F.lit("noindex"),
-                    F.lit("nofollow"),
-                ),
-                (d % 8).cast("int") + 1,
-            ),
-            F.lit('">'),
-        ),
-    ).otherwise(F.lit(""))
-    html = F.concat(
-        F.lit("<!doctype html>\n<html"), lang_attr, F.lit(">\n<head>"),
-        title, desc, canon, og, robots,
-        F.lit('\n</head>\n<body><a href="/p/'), d.cast("string"),
-        F.lit('">x</a></body></html>'),
-    )
-    pages = docs.select(
-        F.concat(
-            F.lit("https://"), s, F.lit(".example.org/p/"), d.cast("string")
-        ).alias("url"),
-        F.encode(html, "UTF-8").alias("html"),
-    )
-    out = weblinks.page_metadata(pages)
-    # sentinel-coalesce the nullable strings so the hash compare never
-    # depends on engine NULL handling (same convention as crawl_sitemap)
-    return out.select(
-        "url",
-        F.coalesce("title", F.lit("")).alias("title"),
-        F.coalesce("meta_description", F.lit("")).alias("meta_description"),
-        F.coalesce("canonical", F.lit("")).alias("canonical"),
-        F.coalesce("og_title", F.lit("")).alias("og_title"),
-        F.coalesce("html_lang", F.lit("")).alias("html_lang"),
-        "noindex",
-        "nofollow",
-    )
-
-
-def q_sketch_cms(spark, sf_dir):
-    """Count-min frequency sketch (sketch.cms_build/cms_estimate —
-    Cormode & Muthukrishnan 2005, the sketch family's frequency leg next
-    to KMV/MG/Bloom): 4x512 exact-integer counters over ALL corpus
-    whitespace tokens, then the min-over-rows estimate for every
-    distinct token next to its exact count.  width=512 keeps collisions
-    non-empty on purpose — est >= true everywhere and the deterministic
-    overshoots ARE the contract.  VALUES oracle: pyoracle.cms_rows
-    (spec-derived XXH64, same chained-seed positions)."""
-    from dug_spark.operators import sketch as sk
-
-    toks = _doc_tokens(spark, sf_dir)
-    cms = sk.cms_build(toks, "tok", width=512, depth=4)
-    probe = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("true_n"))
-    return sk.cms_estimate(cms, probe, "tok", width=512, depth=4).select(
-        "tok", "est", "true_n"
-    )
-
-
-def q_dedup_minhash_incr(spark, sf_dir):
-    """Incremental near-dup (dedup.minhash_incremental): the doc_id%4==0
-    quarter of the corpus arrives as a NEW batch against a signature
-    store built from the other three quarters — matches verified with
-    the MinHash Jaccard estimator (equal-component fraction; the store
-    has no text to re-shingle), at least one side new, never old-old.
-    VALUES oracle: pyoracle.minhash_incremental_rows (its own sigs,
-    buckets, and estimator over the same split)."""
-    from dug_spark.operators import dedup as dd
-
-    docs = _pq(spark, sf_dir, "documents")
-    old = docs.where(F.col("doc_id") % 4 != 0)
-    new = docs.where(F.col("doc_id") % 4 == 0)
-    store = dd.minhash_signatures(old)
-    matches, _new_store = dd.minhash_incremental(new, store, threshold=0.5)
-    return matches
-
-
-def q_classify_eval(spark, sf_dir):
-    """Classifier evaluation (classify.evaluate_classifier): per-source
-    confusion counts + precision/recall/F1/accuracy for the heuristic
-    "contains ' the '" predicting lang='en' over the documents table —
-    one conditional-sum aggregate, the audit surface every curation
-    threshold needs.  Plain-SQL oracle (NULL where denominators are
-    empty, matching the operator's refusal to fake 0/0)."""
-    from dug_spark.operators.classify import evaluate_classifier
-
-    docs = _pq(spark, sf_dir, "documents").select(
-        "source",
-        (F.col("lang") == "en").alias("label"),
-        F.col("text").contains(" the ").alias("pred"),
-    )
-    return evaluate_classifier(docs, "label", "pred", "source")
-
-
-def q_crawl_frontier(spark, sf_dir):
-    """Politeness-aware frontier scheduling (crawl.frontier_schedule —
-    Mercator-style host round-robin): every host's round k precedes any
-    host's round k+1; within a round, priority desc then url asc.  URLs
-    and priorities derive from doc_id; the oracle states the same two
-    ROW_NUMBER windows in SQL."""
-    from dug_spark.operators.crawl import frontier_schedule
-
-    did = F.col("doc_id")
-    urls = _pq(spark, sf_dir, "documents").select(
-        F.concat(
-            F.lit("https://h"), (did % 20).cast("string"),
-            F.lit(".example.org/p"), (did % 7).cast("string"),
-            F.lit("/d"), did.cast("string"),
-        ).alias("url"),
-        (did % 7).cast("double").alias("prio"),
-    )
-    return frontier_schedule(urls, priority_col="prio")
-
-
-def q_kg_ntriples(spark, sf_dir):
-    """RDF N-Triples serialization (triples.to_ntriples, W3C N-Triples
-    1.1): the pipeline's full triple output as interchange lines —
-    map-only concat/escape column ops, no shuffle added.  Oracle: the
-    kg_triples_all derivation wrapped in the same IRI mapping in SQL."""
-    from dug_spark.operators.triples import to_ntriples
-
-    from dug_spark import fixtures as _fx
-    from dug_spark.operators import triples as triples_op
-
-    t = triples_op.build_triples(
-        _nmentions(spark, sf_dir), _fx.vocab_kg_edges(spark)
-    ).select("subj", "pred", "obj")
-    return to_ntriples(t)
-
-
-def q_kg_diff(spark, sf_dir):
-    """KG snapshot delta (triples.kg_diff): the pipeline's triples with
-    the doc_id%3==0 documents removed vs the full materialization —
-    'removed' rows are the dropped docs' triples, 'added' is empty; two
-    LEFT ANTI joins, change-sized output.  Plain-SQL EXCEPT oracle."""
-    from dug_spark import fixtures as _fx
-    from dug_spark.operators import triples as triples_op
-    from dug_spark.operators.triples import kg_diff
-
-    full = triples_op.build_triples(
-        _nmentions(spark, sf_dir), _fx.vocab_kg_edges(spark)
-    ).select("subj", "pred", "obj")
-    subset = full.where(
-        ~(
-            F.col("subj").rlike("/doc/\\d+$")
-            & (F.regexp_extract("subj", "/doc/(\\d+)$", 1).cast("long") % 3 == 0)
-        )
-    )
-    return kg_diff(full, subset)
-
-
-def q_mix_temperature(spark, sf_dir):
-    """Temperature-scaled mixture fractions
-    (textstats.temperature_fractions — the GPT-3/PaLM/mT5 domain
-    reweighting rule, p_g ∝ mass_g^(1/T)): per-source spec table at
-    T=2, budget 0.5, mass = n_chars (token-weight proxy); fractions cap
-    at 1 (visible oversampling limit, never silently renormalized).
-    Plain-SQL oracle (POWER + window-free aggregates)."""
-    from dug_spark.operators.textstats import temperature_fractions
-
-    docs = _pq(spark, sf_dir, "documents")
-    return temperature_fractions(
-        docs, "source", temperature=2.0, budget_frac=0.5, weight_col="n_chars"
-    )
-
-
-def q_text_sentence_chunks(spark, sf_dir):
-    """Sentence-boundary chunking (text.sentence_chunks_col — the
-    retrieval-style segmentation the reference's character-window
-    chunker cuts through): greedy sentence packing at 120 chars over
-    the documents table, exploded to (doc_id, chunk_idx, chunk) rows.
-    Pure F.aggregate fold, codegen, no UDF.  VALUES oracle:
-    pyoracle.sentence_chunks per document."""
-    from dug_spark.functions.text import sentence_chunks_col
-
-    docs = _pq(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        F.posexplode(sentence_chunks_col(F.col("text"), max_chars=120)).alias(
-            "chunk_idx", "chunk"
-        ),
-    )
-
-
-def q_search_qlm(spark, sf_dir):
-    """Query-likelihood retrieval with Dirichlet smoothing (search.qlm_topk
-    — Zhai & Lafferty 2001 / Lucene LMDirichletSimilarity, the second
-    similarity family an ES index can declare besides BM25): one corpus
-    aggregation (total tokens + per-term collection frequency, folded to
-    literals), map-side scoring, TakeOrderedAndProject top-20.  Plain-SQL
-    DuckDB oracle re-derives cf/total and the clamped per-term score with
-    the same (mu*cf)/total op order."""
-    from dug_spark.operators import search
-
-    return search.qlm_topk(
-        _pq(spark, sf_dir, "documents"), "spark window stream", k=20
-    ).select(F.col("id").alias("doc_id"), "score")
-
-
-def q_web_betweenness(spark, sf_dir):
-    """Sampled-source betweenness centrality (graph.betweenness:
-    level-synchronous Brandes, forward σ BFS + backward δ accumulation)
-    over the href-extracted host graph from the four lexicographically
-    first source hosts — the broker-host score degree/eigenvector
-    families miss.  max_depth 10 (≥ this graph's diameter).  Oracle:
-    the depth-capped pure-Python Brandes mirror
-    (pyoracle.betweenness_rows) over the shared web_edges_py derivation;
-    both sides round 5 (δ float-sum order)."""
-    from dug_spark.operators import graph, weblinks
-
-    e = weblinks.host_edges(
-        weblinks.extract_links(_web_linked_docs(spark, sf_dir))
-    ).select(F.col("src_host").alias("src"), F.col("dst_host").alias("dst"))
-    seeds = e.select(F.col("src").alias("seed")).distinct().orderBy("seed").limit(4)
-    bc = graph.betweenness(e, seeds, max_depth=10)
-    return bc.select("node", F.round("betweenness", 5).alias("betweenness"))
-
-
-def q_web_walks(spark, sf_dir):
-    """Deterministic random-walk corpus over the href-extracted host
-    graph (graph.random_walks: hash-argmin neighbor draws, DeepWalk's
-    sampling pass made byte-reproducible) — 2 walks × ≤4 steps per host.
-    Oracle: bit-exact pure-Python mirror (pyoracle.random_walk_rows over
-    the shared web_edges_py synthesis)."""
-    from dug_spark.operators import graph, weblinks
-
-    edges = weblinks.host_edges(
-        weblinks.extract_links(_web_linked_docs(spark, sf_dir))
-    )
-    return graph.random_walks(
-        edges, walk_length=4, walks_per_node=2,
-        src_col="src_host", dst_col="dst_host",
-    )
-
-
 def q_web_scc(spark, sf_dir):
     """Strongly connected components of the DIRECTED href host graph
     (graph.strongly_connected_components: trim + forward-color +
@@ -4228,1985 +2212,3 @@ def q_web_scc(spark, sf_dir):
     return graph.strongly_connected_components(
         edges, src_col="src_host", dst_col="dst_host"
     )
-
-
-def q_web_anf(spark, sf_dir):
-    """Approximate neighborhood function over the href host graph
-    (graph.neighborhood_function, ANF/Palmer 2002: FM bitmask sketches
-    OR-propagated 3 hops — per-node reach estimates and the effective
-    diameter's raw statistic at constant bytes/node).  Oracle: bit-exact
-    pure-Python FM mirror (pyoracle.anf_rows)."""
-    from dug_spark.operators import graph, weblinks
-
-    edges = weblinks.host_edges(
-        weblinks.extract_links(_web_linked_docs(spark, sf_dir))
-    )
-    return graph.neighborhood_function(
-        edges, hops=3, src_col="src_host", dst_col="dst_host"
-    )
-
-
-def q_web_skipgrams(spark, sf_dir):
-    """Skip-gram co-occurrence counts (graph.walks_to_skipgrams, the
-    DeepWalk→word2vec training-pair materialization) over the
-    deterministic host-graph walks — map-side pair expansion, ONE count
-    shuffle.  Oracle: pyoracle.skipgram_rows over the bit-exact walk
-    mirror."""
-    from dug_spark.operators import graph, weblinks
-
-    edges = weblinks.host_edges(
-        weblinks.extract_links(_web_linked_docs(spark, sf_dir))
-    )
-    walks = graph.random_walks(
-        edges, walk_length=4, walks_per_node=2,
-        src_col="src_host", dst_col="dst_host",
-    )
-    return graph.walks_to_skipgrams(walks, window=2)
-
-
-def _kcore_sql(prefix_with_e: str, k: int = 3, rounds: int = 8) -> str:
-    """Unrolled k-core peel over any prefix SQL defining a CTE
-    ``e(src, dst)``: symmetrize, then per round degree-count / peel /
-    edge-filter.  ``rounds`` must be ≥ the rounds the peel actually needs
-    (a no-op round is harmless; too few rounds fails the oracle check —
-    the convergence-true mirror lives in pyoracle.k_core_rows)."""
-    parts = [
-        prefix_with_e,
-        ", s0 AS (SELECT src, dst FROM e UNION SELECT dst, src FROM e)",
-    ]
-    for i in range(rounds):
-        parts.append(
-            f", d{i} AS (SELECT src AS node, COUNT(*) AS degree "
-            f"FROM s{i} GROUP BY src)"
-            f", p{i} AS (SELECT node FROM d{i} WHERE degree < {k})"
-            f", s{i + 1} AS (SELECT src, dst FROM s{i} "
-            f"WHERE src NOT IN (SELECT node FROM p{i}) "
-            f"AND dst NOT IN (SELECT node FROM p{i}))"
-        )
-    parts.append(
-        f" SELECT src AS node, COUNT(*) AS degree FROM s{rounds} GROUP BY src"
-    )
-    return "".join(parts)
-
-
-def _hits_iters(prefix_with_e: str, iters: int = 5) -> str:
-    """Unrolled HITS iterations over any prefix SQL that defines a CTE
-    ``e(src, dst)`` — mirrors operators/graph.hits exactly: h0 = 1/√n,
-    a0 = 0, then per iteration authority-from-hub (L2-normalize) followed
-    by hub-from-fresh-authority (L2-normalize); no-in-edge nodes keep
-    authority 0 via the LEFT JOIN + COALESCE."""
-    sql = (
-        f"{prefix_with_e}, "
-        "nodes AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst FROM e), "
-        "s0 AS MATERIALIZED (SELECT node, "
-        "1.0 / SQRT((SELECT COUNT(*) FROM nodes)) AS hub, "
-        "0.0 AS authority FROM nodes)"
-    )
-    for i in range(iters):
-        sql += (
-            f", ar{i} AS MATERIALIZED (SELECT b.node, b.hub, "
-            f"COALESCE(c.a_raw, 0) AS authority FROM s{i} b LEFT JOIN ("
-            f"SELECT e.dst AS node, SUM(s.hub) AS a_raw FROM e "
-            f"JOIN s{i} s ON e.src = s.node GROUP BY e.dst) c ON b.node = c.node)"
-            f", an{i} AS (SELECT CASE WHEN SQRT(SUM(authority * authority)) = 0 "
-            f"THEN 1 ELSE SQRT(SUM(authority * authority)) END AS v FROM ar{i})"
-            f", aa{i} AS MATERIALIZED (SELECT node, hub, "
-            f"authority / (SELECT v FROM an{i}) AS authority FROM ar{i})"
-            f", hr{i} AS MATERIALIZED (SELECT b.node, "
-            f"COALESCE(c.h_raw, 0) AS hub, b.authority FROM aa{i} b LEFT JOIN ("
-            f"SELECT e.src AS node, SUM(s.authority) AS h_raw FROM e "
-            f"JOIN aa{i} s ON e.dst = s.node GROUP BY e.src) c ON b.node = c.node)"
-            f", hn{i} AS (SELECT CASE WHEN SQRT(SUM(hub * hub)) = 0 "
-            f"THEN 1 ELSE SQRT(SUM(hub * hub)) END AS v FROM hr{i})"
-            f", s{i + 1} AS MATERIALIZED (SELECT node, "
-            f"hub / (SELECT v FROM hn{i}) AS hub, authority FROM hr{i})"
-        )
-    return sql + (
-        f" SELECT node, ROUND(hub, 5) AS hub, "
-        f"ROUND(authority, 5) AS authority FROM s{iters}"
-    )
-
-
-def q_warc_extract(spark, sf_dir):
-    """WARC container round-trip (sources/warc_parser): each document is
-    written as a spec-conformant single-record WARC response file via
-    ``build_warc_record`` (odd doc_ids wrapped as a per-record gzip
-    member — the ``.warc.gz`` Common Crawl layout), then recovered
-    through the REAL byte-walking parser (``parse_warc_column``:
-    binaryFile-shaped column → mapInPandas).  Writer and parser are
-    independent code paths, so the oracle restates the generation
-    arithmetic directly: url / epoch / status / content-type plus the
-    md5 of the recovered HTTP payload."""
-    import zlib
-    from datetime import datetime, timezone
-
-    import pandas as pd
-
-    from dug_spark.sources import warc_parser as wp
-
-    docs = (
-        _pq(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 60)
-        .select("doc_id", "text")
-    )
-
-    def build(batches):
-        for pdf in batches:
-            out = []
-            for _, r in pdf.iterrows():
-                did = int(r["doc_id"])
-                url = f"https://h{did % 20}.example.org/w/{did}"
-                ts = datetime.fromtimestamp(1704067200 + did, tz=timezone.utc)
-                payload = (
-                    "<html><body><p>" + (r["text"] or "") + "</p></body></html>"
-                ).encode("utf-8")
-                rec = wp.build_warc_record(
-                    url, ts.strftime("%Y-%m-%dT%H:%M:%SZ"), payload
-                )
-                if did % 2 == 1:
-                    c = zlib.compressobj(wbits=31)
-                    rec = c.compress(rec) + c.flush()
-                out.append(rec)
-            yield pd.DataFrame({"content": pd.Series(out, dtype="object")})
-
-    files = docs.mapInPandas(build, schema="content binary")
-    parsed = wp.parse_warc_column(files)
-    return parsed.select(
-        "url",
-        F.col("warc_ts").cast("long").alias("warc_epoch"),
-        "http_status",
-        "content_type",
-        F.md5("html").alias("payload_md5"),
-    )
-
-
-def q_inverted_index(spark, sf_dir):
-    """Inverted-index materialization (search.build_inverted_index):
-    token → per-shard (df, cf, id-ordered postings fingerprint) through
-    the shared std_with_stopwords analyzer, shards = id % 4 (the
-    hot-token skew split), min_df=2 pruning on the ACROSS-shard df.
-    Oracle: the same tokenize → tf → shard → string_agg postings chain
-    in SQL."""
-    from dug_spark.operators import search
-
-    docs = _pq(spark, sf_dir, "documents")
-    out = search.build_inverted_index(
-        docs, text_col="text", id_col="doc_id", num_shards=4, min_df=2
-    )
-    return out.select("token", "shard", "df", "cf", "postings_fp")
-
-
-def q_url_canon(spark, sf_dir):
-    """URL canonicalization (textstats.canonical_url): fragment, case,
-    www., default ports, tracking params, param ORDER and trailing slash
-    all collapse — over six deterministic mess-variants per doc_id
-    (uppercase authority, :443/:80, utm/fbclid params, unsorted params,
-    non-default port that must SURVIVE).  Oracle: the same construction
-    + the same regex/list chain in DuckDB (no lookarounds in the shared
-    pattern class; DuckDB regexp_replace stays first-match — every
-    pattern is anchored so first IS all)."""
-    from dug_spark.operators import textstats as ts
-
-    did = F.col("doc_id")
-    k = (did % 20).cast("string")
-    url = (
-        F.when(
-            did % 6 == 0,
-            F.concat(
-                F.lit("https://WWW.H"), k,
-                F.lit(".example.org:443/a/b/?utm_source=x&b=2&a=1#frag"),
-            ),
-        )
-        .when(
-            did % 6 == 1,
-            F.concat(F.lit("http://h"), k, F.lit(".example.org:80/a")),
-        )
-        .when(
-            did % 6 == 2,
-            F.concat(
-                F.lit("https://h"), k, F.lit(".example.org/a/?fbclid=zzz")
-            ),
-        )
-        .when(
-            did % 6 == 3,
-            F.concat(
-                F.lit("http://h"), k,
-                F.lit(".example.org/p?z=1&y=2&utm_campaign=c"),
-            ),
-        )
-        .when(
-            did % 6 == 4,
-            F.concat(F.lit("https://www.h"), k, F.lit(".example.org/")),
-        )
-        .otherwise(
-            F.concat(F.lit("http://h"), k, F.lit(".example.org:8080/q?a=1"))
-        )
-    )
-    docs = _pq(spark, sf_dir, "documents").select(
-        "doc_id", url.alias("url")
-    )
-    return ts.canonical_url(docs).select("doc_id", "url", "canon_url")
-
-
-_URL_CANON_SQL = (
-    "WITH s AS (SELECT doc_id, CASE CAST(doc_id % 6 AS INT) "
-    "WHEN 0 THEN 'https://WWW.H' || k || '.example.org:443/a/b/?utm_source=x&b=2&a=1#frag' "
-    "WHEN 1 THEN 'http://h' || k || '.example.org:80/a' "
-    "WHEN 2 THEN 'https://h' || k || '.example.org/a/?fbclid=zzz' "
-    "WHEN 3 THEN 'http://h' || k || '.example.org/p?z=1&y=2&utm_campaign=c' "
-    "WHEN 4 THEN 'https://www.h' || k || '.example.org/' "
-    "ELSE 'http://h' || k || '.example.org:8080/q?a=1' END AS url "
-    "FROM (SELECT doc_id, CAST(doc_id % 20 AS VARCHAR) AS k FROM documents)), "
-    "u0 AS (SELECT doc_id, url, regexp_replace(url, '#.*$', '') AS u FROM s), "
-    "u1 AS (SELECT doc_id, url, "
-    "lower(regexp_extract(u, '^[^/]*//[^/]*')) "
-    "|| regexp_replace(u, '^[^/]*//[^/]*', '') AS u FROM u0), "
-    "u2 AS (SELECT doc_id, url, regexp_replace(regexp_replace(regexp_replace(u, "
-    "'^(https?)://www\\.', '\\1://'), "
-    "'^(http://[^/:?]+):80([/?]|$)', '\\1\\2'), "
-    "'^(https://[^/:?]+):443([/?]|$)', '\\1\\2') AS u FROM u1), "
-    "p AS (SELECT doc_id, url, "
-    "regexp_replace(regexp_extract(u, '^[^?]*'), '/$', '') AS base, "
-    "list_sort(list_filter(string_split(regexp_replace(u, '^[^?]*\\??', ''), '&'), "
-    "q -> q <> '' AND NOT regexp_matches(q, "
-    "'^(utm_[a-z]+|gclid|fbclid|msclkid|mc_cid|mc_eid|igshid|ref_src)='))) AS prms "
-    "FROM u2) "
-    # DuckDB array_to_string([]) is NULL, not '' — coalesce before compare
-    "SELECT doc_id, url, "
-    "CASE WHEN COALESCE(array_to_string(prms, '&'), '') = '' THEN base "
-    "ELSE base || '?' || array_to_string(prms, '&') END AS canon_url FROM p"
-)
-
-
-def q_quality_nb(spark, sf_dir):
-    """Model-based quality classification (operators/classify.py):
-    multinomial Naive Bayes trained on the corpus's own weak labels
-    (lang='en' as the trusted class — the GPT-3 seed-vs-crawl shape),
-    vocab 256, then applied map-only.  Oracle: token counting, Laplace
-    smoothing, the per-token log-likelihood-ratio weights and the per-doc
-    sums all re-derived in SQL; scores round to 4 (cross-engine float
-    summation order, same reasoning as the PageRank rounding)."""
-    from dug_spark.operators import classify
-
-    docs = _pq(spark, sf_dir, "documents").withColumn(
-        "label", F.col("lang") == "en"
-    )
-    out = classify.quality_classifier(docs, vocab_size=256, alpha=1.0)
-    return out.select("doc_id", "nb_score", "nb_keep")
-
-
-def q_span_dedup(spark, sf_dir):
-    """Duplicate-SPAN removal at token 8-gram granularity
-    (dedup.remove_duplicate_spans — the Lee et al. 2022 ExactSubstr
-    semantics as relational passes).  Every doc_id % 7 == 0 document gets
-    a shared 10-token boilerplate suffix injected (so three overlapping
-    duplicated 8-windows per copy must union to exactly 10 removed tokens
-    everywhere except the single keeper), on top of whatever natural
-    duplication the corpus carries.  Doc ids are zero-padded strings so
-    the (id, start) keeper election is lexicographic in BOTH engines."""
-    from dug_spark.operators import dedup as dd
-
-    docs = _pq(spark, sf_dir, "documents").select(
-        F.lpad(F.col("doc_id").cast("string"), 8, "0").alias("doc_id"),
-        F.when(
-            F.col("doc_id") % 7 == 0, F.concat("text", F.lit(_BOILERPLATE))
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    return dd.remove_duplicate_spans(docs, id_col="doc_id", k=8).select(
-        "doc_id", "clean_text", "n_tokens", "n_tokens_removed"
-    )
-
-
-_BOILERPLATE = " bq1 bq2 bq3 bq4 bq5 bq6 bq7 bq8 bq9 bq10"
-
-
-def q_tfidf_keywords(spark, sf_dir):
-    """Per-document top-3 tf-idf keywords (textstats.tfidf_keywords,
-    smoothed scikit-learn idf).  Score rounds to 6 BEFORE the rank window
-    in both engines, so libm last-ulp jitter collapses into exact ties
-    resolved lexicographically."""
-    from dug_spark.operators import textstats as ts
-
-    docs = _pq(spark, sf_dir, "documents")
-    return ts.tfidf_keywords(docs, top_k=3).select(
-        "doc_id", "token", "tf", "score", "rk"
-    )
-
-
-def q_sample_mix(spark, sf_dir):
-    """Deterministic domain-mixture sampling (textstats.sample_corpus_mix):
-    per-source keep fractions decided by pmod(xxhash64(id#salt), 10^6) —
-    reproducible across runs/partitionings, monotone under fraction
-    raises.  Oracle: full VALUES recompute via the pyoracle xxh64 spec
-    implementation."""
-    from dug_spark.operators import textstats as ts
-
-    docs = _pq(spark, sf_dir, "documents")
-    out = ts.sample_corpus_mix(
-        docs,
-        fractions=_MIX_FRACTIONS,
-        group_col="source",
-        id_col="doc_id",
-        default_fraction=0.05,
-    )
-    return out.select("doc_id", "bucket", "keep")
-
-
-_MIX_FRACTIONS = {"src0": 1.0, "src1": 0.5, "src2": 0.25, "src3": 0.1}
-
-
-def q_dedup_incremental(spark, sf_dir):
-    """Incremental exact dedup (dedup.exact_dedup_incremental): the new
-    batch (doc_id ≥ 250) checked against the accumulated fingerprint
-    index (doc_id < 250) — dup_of_seen membership + within-batch min-id
-    election.  Oracle: the same md5 probe + window election in SQL."""
-    from dug_spark.operators import dedup as dd
-
-    docs = _pq(spark, sf_dir, "documents")
-    seen = docs.where(F.col("doc_id") < 250).select(
-        F.md5(F.encode(F.coalesce("text", F.lit("")), "utf-8")).alias("fp")
-    )
-    batch = docs.where(F.col("doc_id") >= 250)
-    return dd.exact_dedup_incremental(batch, seen).select(
-        "doc_id", "fp", "dup_of_seen", "keep"
-    )
-
-
-def q_host_anchors(spark, sf_dir):
-    """Anchor-text mining (weblinks.extract_anchors → host_anchor_terms):
-    top-3 anchor terms per DESTINATION host over the synthetic linked
-    corpus — run through the REAL decode + zipped two-group regexp
-    extraction and the shared href→host resolution.  Oracle: the link
-    arithmetic re-derived per anchor token in SQL ('a'/'b'/'c' to the
-    three computed dst hosts, 'd' to the self host, 'e' dropped as a
-    fragment)."""
-    from dug_spark.operators import weblinks
-
-    return weblinks.host_anchor_terms(
-        _web_linked_docs(spark, sf_dir), top_k=3
-    ).select("host", "token", "n", "rk")
-
-
-def q_corpus_profile(spark, sf_dir):
-    """Per-language corpus profiling (textstats.corpus_profile): counts,
-    char totals/means and EXACT interpolated p50/p95 length quantiles —
-    Spark F.percentile and DuckDB quantile_cont share the linear
-    interpolation definition, so the gate is a bit-level check that the
-    threshold-setting table is engine-independent."""
-    from dug_spark.operators import textstats as ts
-
-    docs = _pq(spark, sf_dir, "documents")
-    return ts.corpus_profile(docs, group_col="lang").select(
-        "grp", "n_docs", "total_chars", "mean_chars", "p50_chars", "p95_chars"
-    )
-
-
-def q_semantic_dedup(spark, sf_dir):
-    """SemDeDup (dedup.semantic_dedup): Lloyd-trained cells + within-cell
-    min-id cosine collapse at tau=0.95 over the first 300 embeddings.
-    Oracle: full VALUES recompute (pyoracle.semantic_dedup_rows — same
-    rounded centroids, same sequential-fold cosine)."""
-    from dug_spark.operators import dedup as dd
-
-    emb = _pq(spark, sf_dir, "embeddings").where(F.col("vec_id") < 300)
-    return dd.semantic_dedup(
-        emb, id_col="vec_id", vec_col="embedding", k=8, tau=0.95, iters=2
-    ).select("vec_id", "cell", "keep")
-
-
-_ZORDER_PREDS = ("links_to", "mentions", "same_as", "subclass_of")
-_ZORDER_BITS = 8
-
-
-def q_zorder_layout(spark, sf_dir):
-    """Z-order layout keys (plans.zorder.zorder_keys — the Morton-code
-    clustering step for the materialized triple table): md5 hash-bucket
-    per lookup dimension + bit-interleaved code, pure projection, zero
-    shuffle/UDF.  Synthetic (subj, pred) derived from doc_id with column
-    ops; VALUES oracle pyoracle.zorder_rows over the same derivation."""
-    from dug_spark.plans import zorder
-
-    docs = _pq(spark, sf_dir, "documents").select("doc_id")
-    d = F.col("doc_id")
-    preds = F.array(*[F.lit(p) for p in _ZORDER_PREDS])
-    trip = docs.select(
-        "doc_id",
-        F.concat(F.lit("doc:"), (d % 41).cast("string")).alias("subj"),
-        F.element_at(preds, (d % 4 + 1).cast("int")).alias("pred"),
-    )
-    return zorder.zorder_keys(trip, ["subj", "pred"], bits=_ZORDER_BITS).select(
-        "doc_id", "subj", "pred", "subj_bucket", "pred_bucket", "z"
-    )
-
-
-def q_kg_cc_star(spark, sf_dir):
-    """Two-phase star connected components (canonicalize.
-    connected_components_star — Kiveris et al. SoCC 2014): alternating
-    Large-Star/Small-Star contraction, O(log² n) rounds independent of
-    graph diameter (min-label propagation is O(diameter)).  Same edge
-    fixture and same recursive-CTE oracle as kg_connected_components:
-    the two algorithms must produce identical (id, comp) labelings."""
-    edges = spark.createDataFrame(_CC_EDGES, "src string, dst string")
-    return canonicalize.connected_components_star(edges).select("id", "comp")
-
-
-def _delay_pages_df(spark, sf_dir):
-    """Deterministic robots bodies exercising every Crawl-delay path:
-    headerless directive (d%6==0, drops), specific-agent group with a
-    numeric delay (absent when d%4==0), an invalid value in-group
-    (d%5==0, drops), and a '*' fallback group (always present)."""
-    docs = _pq(spark, sf_dir, "documents").select("doc_id", "source")
-    d, s = F.col("doc_id"), F.col("source")
-
-    def when_line(cond, *parts):
-        return F.when(cond, F.concat(*parts)).otherwise(F.lit(""))
-
-    txt = F.concat(
-        when_line(d % 6 == 0, F.lit("Crawl-delay: 99\n")),
-        F.lit("User-agent: DugBot\n"),
-        when_line(d % 4 != 0, F.lit("Crawl-delay: "), (d % 7).cast("string"), F.lit("\n")),
-        when_line(d % 5 == 0, F.lit("Crawl-delay: fast\n")),
-        F.lit("Disallow: /x\n\nUser-agent: *\nCrawl-delay: "),
-        (d % 3).cast("string"),
-        F.lit(".5\n"),
-    )
-    return docs.select(
-        F.concat(s, F.lit("-"), d.cast("string"), F.lit(".example.org"))
-        .alias("host"),
-        txt.alias("robots_txt"),
-    )
-
-
-def q_robots_delays(spark, sf_dir):
-    """Crawl-delay extraction (crawl.robots_crawl_delays): RFC-9309-style
-    group binding, specific agent over '*', invalid/headerless values
-    drop, conservative MAX.  Oracle: the synthesis is formulaic, so the
-    expected delay is a closed-form CASE over doc_id."""
-    from dug_spark.operators import crawl
-
-    return crawl.robots_crawl_delays(
-        _delay_pages_df(spark, sf_dir), agent="DugBot"
-    )
-
-
-def _jsonld_page(d: int, s: str) -> tuple:
-    """Deterministic page html for (doc_id d, source s) — q_jsonld's
-    Spark side synthesizes the SAME bytes with column ops.  Exercises:
-    a plain JS script (ignored), a valid Article block, an extra Person
-    block (d%3==0, no url/description), a malformed block (d%4==0), and
-    an array block (d%5==0) — the latter two must drop."""
-    parts = ["<html><script type=\"text/javascript\">var x=1;</script>"]
-    parts.append(
-        '<script type="application/ld+json">{"@type": "Article", '
-        f'"name": "art-{d}", "url": "https://{s}.org/{d}", '
-        f'"description": "desc {d % 7}"}}</script>'
-    )
-    if d % 3 == 0:
-        parts.append(
-            '<script type="application/ld+json">'
-            f'{{"@type": "Person", "name": "p{d}"}}</script>'
-        )
-    if d % 4 == 0:
-        parts.append('<script type="application/ld+json">{oops</script>')
-    if d % 5 == 0:
-        parts.append(
-            '<script type="application/ld+json">'
-            '[{"@type": "Thing", "name": "a"}]</script>'
-        )
-    parts.append("</html>")
-    return (f"https://{s}.example.org/{d}", "".join(parts))
-
-
-def _jsonld_pages_df(spark, sf_dir):
-    docs = _pq(spark, sf_dir, "documents").select("doc_id", "source")
-    d, s = F.col("doc_id"), F.col("source")
-
-    def when_part(cond, *parts):
-        return F.when(cond, F.concat(*parts)).otherwise(F.lit(""))
-
-    html = F.concat(
-        F.lit('<html><script type="text/javascript">var x=1;</script>'),
-        F.lit('<script type="application/ld+json">{"@type": "Article", "name": "art-'),
-        d.cast("string"),
-        F.lit('", "url": "https://'),
-        s,
-        F.lit(".org/"),
-        d.cast("string"),
-        F.lit('", "description": "desc '),
-        (d % 7).cast("string"),
-        F.lit('"}</script>'),
-        when_part(
-            d % 3 == 0,
-            F.lit('<script type="application/ld+json">{"@type": "Person", "name": "p'),
-            d.cast("string"),
-            F.lit('"}</script>'),
-        ),
-        when_part(
-            d % 4 == 0,
-            F.lit('<script type="application/ld+json">{oops</script>'),
-        ),
-        when_part(
-            d % 5 == 0,
-            F.lit('<script type="application/ld+json">[{"@type": "Thing", "name": "a"}]</script>'),
-        ),
-        F.lit("</html>"),
-    )
-    return docs.select(
-        F.concat(F.lit("https://"), s, F.lit(".example.org/"), d.cast("string"))
-        .alias("url"),
-        html.alias("html"),
-    )
-
-
-def q_jsonld(spark, sf_dir):
-    """schema.org JSON-LD extraction (weblinks.extract_jsonld): ld+json
-    blocks → typed entities via from_json; malformed/array blocks drop.
-    VALUES oracle pyoracle.jsonld_rows over the same page bytes."""
-    from dug_spark.operators import weblinks
-
-    return weblinks.extract_jsonld(_jsonld_pages_df(spark, sf_dir))
-
-
-def q_kg_jsonld_triples(spark, sf_dir):
-    """Declared-markup triples (weblinks.jsonld_to_triples): page
-    declares_entity schema:<Type>/<name> + the entity's rdf:type edge.
-    Oracle: the same derivation in SQL over the jsonld VALUES table."""
-    from dug_spark.operators import weblinks
-
-    return weblinks.jsonld_to_triples(
-        weblinks.extract_jsonld(_jsonld_pages_df(spark, sf_dir))
-    )
-
-
-def _table_page(d: int, s: str) -> tuple:
-    """Deterministic table html for (doc_id d, source s) — q_html_tables'
-    Spark side synthesizes the SAME bytes with column ops.  Exercises:
-    header row, data rows with tag + whitespace noise inside cells,
-    attribute-carrying and uppercase tags (d%3==0 second table), and a
-    rowless table (d%4==0) contributing nothing."""
-    h = [
-        "<html><table class=\"t\">",
-        "<tr><th>key</th><th>value</th></tr>",
-        f"<tr><td>rows</td><td> <b>{d % 9}</b>\n</td></tr>",
-        f"<tr><td>src</td><td>{s}</td></tr>",
-        "</table>",
-    ]
-    if d % 3 == 0:
-        h.append(f"<TABLE><TR><TD>x-{d % 5}</TD></TR></TABLE>")
-    if d % 4 == 0:
-        h.append("<table><caption>empty</caption></table>")
-    h.append("</html>")
-    return (f"https://{s}.example.org/{d}", "".join(h))
-
-
-def _table_pages_df(spark, sf_dir):
-    docs = _pq(spark, sf_dir, "documents").select("doc_id", "source")
-    d, s = F.col("doc_id"), F.col("source")
-
-    def when_part(cond, *parts):
-        return F.when(cond, F.concat(*parts)).otherwise(F.lit(""))
-
-    html = F.concat(
-        F.lit('<html><table class="t"><tr><th>key</th><th>value</th></tr>'
-              "<tr><td>rows</td><td> <b>"),
-        (d % 9).cast("string"),
-        F.lit("</b>\n</td></tr><tr><td>src</td><td>"),
-        s,
-        F.lit("</td></tr></table>"),
-        when_part(
-            d % 3 == 0,
-            F.lit("<TABLE><TR><TD>x-"),
-            (d % 5).cast("string"),
-            F.lit("</TD></TR></TABLE>"),
-        ),
-        when_part(
-            d % 4 == 0, F.lit("<table><caption>empty</caption></table>")
-        ),
-        F.lit("</html>"),
-    )
-    return docs.select(
-        F.concat(F.lit("https://"), s, F.lit(".example.org/"), d.cast("string"))
-        .alias("url"),
-        html.alias("html"),
-    )
-
-
-def q_html_tables(spark, sf_dir):
-    """HTML table extraction (weblinks.extract_tables): three nested
-    non-greedy extractions as higher-order functions, one cell row per
-    (url, table, row, col) with header flag and cleaned text.  VALUES
-    oracle pyoracle.html_table_rows over the same page bytes."""
-    from dug_spark.operators import weblinks
-
-    return weblinks.extract_tables(_table_pages_df(spark, sf_dir))
-
-
-def q_web_rank_weighted(spark, sf_dir):
-    """Weighted PageRank (graph.pagerank weight_col=...): rank flows
-    proportionally to edge weight — here a 2^-k temporal-decay weight
-    (exact binary doubles, cross-engine safe) over a deterministic host
-    graph.  Oracle: the weighted unrolled-iteration SQL."""
-    from dug_spark.operators import graph
-
-    docs = _pq(spark, sf_dir, "documents").select("doc_id")
-    d = F.col("doc_id")
-    edges = docs.select(
-        F.concat(F.lit("h"), (d % 97).cast("string")).alias("src"),
-        F.concat(F.lit("h"), ((d * 7 + 3) % 97).cast("string")).alias("dst"),
-        F.pow(F.lit(2.0), -(d % 5).cast("double")).alias("w"),
-    ).where(F.col("src") != F.col("dst"))
-    return graph.pagerank(
-        edges, iterations=10, weight_col="w", broadcast_ranks=True
-    ).select("node", F.round("rank", 5).alias("rank"))
-
-
-def q_kg_table_triples(spark, sf_dir):
-    """Infobox attribute triples (weblinks.tables_to_triples): 2-column
-    tables → (page, attr:<key-slug>, value).  Oracle: the same shape
-    detection + key slugging in SQL over the html_tables VALUES."""
-    from dug_spark.operators import weblinks
-
-    return weblinks.tables_to_triples(
-        weblinks.extract_tables(_table_pages_df(spark, sf_dir))
-    )
-
-
-def q_kg_provenance(spark, sf_dir):
-    """Per-triple provenance rollup (triples.provenance_rollup): one row
-    per asserted subclass triple with its evidence — distinct supporting
-    docs, mention count, add-k-saturated confidence.  Oracle: the same
-    join + grouped aggregates in SQL."""
-    nm = _nmentions(spark, sf_dir).select(F.col("url").alias("doc_id"), "curie")
-    edges = fixtures.vocab_kg_edges(spark).where(
-        F.col("predicate") == "biolink:subclass_of"
-    )
-    doc_triples = nm.join(edges, nm["curie"] == edges["subject"]).select(
-        F.col("subject").alias("subj"),
-        F.lit("biolink:subclass_of").alias("pred"),
-        F.col("object").alias("obj"),
-        "doc_id",
-    )
-    return triples_op.provenance_rollup(doc_triples)
-
-
-def q_table_stats(spark, sf_dir):
-    """ANALYZE-style column statistics (plans.stats.collect_column_stats,
-    exact-NDV variant): every column's null count / NDV / min / max /
-    avg string length in ONE aggregation pass over the table.  Oracle:
-    the same aggregates per column, one UNION ALL branch each."""
-    from dug_spark.plans import stats
-
-    return stats.collect_column_stats(
-        _pq(spark, sf_dir, "documents"), exact_ndv=True
-    )
-
-
-def q_winnow_fp(spark, sf_dir):
-    """Winnowing fingerprints (dedup.winnow_fingerprints — Schleimer/
-    Wilkerson/Aiken SIGMOD 2003, the MOSS local fingerprinting with the
-    ≥ k+w−1 shared-run coverage guarantee): one narrow map of
-    higher-order functions + explode.  VALUES oracle
-    pyoracle.winnow_rows (spec-derived XXH64) over the documents text."""
-    docs = _pq(spark, sf_dir, "documents")
-    return dedup.winnow_fingerprints(docs, k=5, window=4)
-
-
-def q_winnow_pairs(spark, sf_dir):
-    """MOSS-style overlap report (dedup.winnow_overlap): fp-keyed
-    self-join with the max_df stop-fingerprint guard, overlap =
-    shared / min(|fp_a|, |fp_b|).  VALUES oracle
-    pyoracle.winnow_overlap_rows."""
-    docs = _pq(spark, sf_dir, "documents")
-    fps = dedup.winnow_fingerprints(docs, k=5, window=4)
-    return dedup.winnow_overlap(fps, min_shared=2, max_df=50)
-
-
-def q_sig_terms(spark, sf_dir):
-    """ES significant_terms / JLH (search.significant_terms): terms
-    over-represented in the lang='de' slice vs the whole corpus,
-    document-frequency semantics, background includes foreground.
-    Oracle: same analyzer fragment + identical double arithmetic."""
-    from dug_spark.operators import search
-
-    docs = _pq(spark, sf_dir, "documents").withColumn(
-        "is_de", F.col("lang") == "de"
-    )
-    return search.significant_terms(
-        docs, subset_col="is_de", min_doc_count=3, top_n=25
-    )
-
-
-def q_bitext_margin(spark, sf_dir):
-    """Margin-based bitext mining (similarity.margin_bitext — Artetxe &
-    Schwenk ACL 2019 ratio margin, k=4, mutual argmax, threshold=1.0)
-    between two disjoint halves of the embeddings table standing in for
-    two monolingual spaces.  Oracle: the same margin algebra in SQL over
-    the identical double-cast cosine sums (ROUND 4 policy as knn)."""
-    from dug_spark.operators import similarity as sim
-
-    emb = _pq(spark, sf_dir, "embeddings")
-    src = emb.where(F.col("vec_id") < 40)
-    tgt = emb.where((F.col("vec_id") >= 40) & (F.col("vec_id") < 120))
-    return sim.margin_bitext(src, tgt, k=4, threshold=1.0, mutual=True)
-
-
-def q_kg_cc_merge(spark, sf_dir):
-    """Incremental component merge (canonicalize.merge_components): solve
-    the first half of the CC edge fixture, fold the second half in as an
-    increment — must equal the full solve bit-for-bit, so the oracle is
-    the SAME recursive-CTE over all edges as kg_connected_components."""
-    half = len(_CC_EDGES) // 2
-    base = spark.createDataFrame(_CC_EDGES[:half], "src string, dst string")
-    inc = spark.createDataFrame(_CC_EDGES[half:], "src string, dst string")
-    labels = canonicalize.connected_components_star(base)
-    return canonicalize.merge_components(labels, inc).select("id", "comp")
-
-
-def q_kg_triples_subclass(spark, sf_dir):  # noqa: F811 — kept verbatim
-    """Subclass triples (pred-filter view; superseded in the driver
-    registry by kg_triples_all which carries the same rows)."""
-    return triples_op.build_triples(
-        _nmentions(spark, sf_dir), fixtures.vocab_kg_edges(spark)
-    ).where(F.col("pred") == "biolink:subclass_of").select("subj", "pred", "obj")
-
-
-def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        # round 5: retired from the 50-row driver window in favor of
-        # search_bm25_fuzzy (curate_corpus carries the same per-doc C4
-        # verdicts there); stays fully oracled here
-        "text_c4_clean": q_text_c4_clean,
-        "dedup_minhash": q_dedup_minhash,
-        "text_mojibake": q_text_mojibake,
-        "web_host_rank": q_web_host_rank,
-        "kg_triples_subclass": q_kg_triples_subclass,
-        "ann_ivf": q_ann_ivf,
-        "multimodal_resize": q_multimodal_resize,
-        "multimodal_frames": q_multimodal_frames,
-        "lang_id": q_lang_id,
-        "doc_fingerprint": q_doc_fingerprint,
-        "rel_program_list": q_rel_program_list,
-        "rel_semi_join": q_rel_semi_join,
-        "rel_anti_join": q_rel_anti_join,
-        "bpe_merges": q_bpe_merges,
-        "bpe_encode": q_bpe_encode,
-        # round 5 (cont.): retired from the driver window by kg_npmi
-        # (same pair derivation, plus weights)
-        "kg_triples_co_mention": q_kg_triples_co_mention,
-        # round 5 (cont.): new graph-analytics + curation operators
-        "web_triangles": q_web_triangles,
-        "web_hits": q_web_hits,
-        "warc_extract": q_warc_extract,
-        "inverted_index": q_inverted_index,
-        "url_canon": q_url_canon,
-        # round 5 (cont.): retired driver slots (→ kg_closure,
-        # relation_extract); both stay fully oracled here
-        "rel_top_orders": q_rel_top_orders,
-        "rel_union_dedup": q_rel_union_dedup,
-        "rel_top_hit_per_group": q_rel_top_hit_per_group,
-        "quality_nb": q_quality_nb,
-        "span_dedup": q_span_dedup,
-        "semantic_dedup": q_semantic_dedup,
-        "tfidf_keywords": q_tfidf_keywords,
-        "sample_mix": q_sample_mix,
-        "dedup_incremental": q_dedup_incremental,
-        "host_anchors": q_host_anchors,
-        "corpus_profile": q_corpus_profile,
-        # round 5 (cont.): community detection + subtree rollup over the
-        # shared synthetic subsumption DAG
-        "kg_communities": q_kg_communities,
-        "kg_rollup": q_kg_rollup,
-        "kg_concept_similarity": q_kg_concept_similarity,
-        "knn_cosine": q_knn_cosine,
-        # round 5 (cont.): crawl temporality over the input_hint shape
-        "crawl_churn": q_crawl_churn,
-        # round 5 (cont. 3): temporal-KG validity intervals over crawl
-        # snapshots (SCD-2 islands; crawl.triple_validity)
-        "kg_triple_validity": q_kg_triple_validity,
-        "web_kcore": q_web_kcore,
-        "web_walks": q_web_walks,
-        # round 5 (cont. 2): retired from the driver window by ann_pq /
-        # web_scc; both stay fully oracled here
-        "rel_grouped_collect": q_rel_grouped_collect,
-        # round 5 (cont. 3): retired from the driver window by kg_bgp /
-        # kg_khop; both stay fully oracled here
-        "rel_pricing_summary": q_rel_pricing_summary,
-        "rel_window_hourly": q_rel_window_hourly,
-        "rel_metadata_extract": q_rel_metadata_extract,
-        "web_anf": q_web_anf,
-        "web_skipgrams": q_web_skipgrams,
-        # round 5 (cont. 4): retired from the driver window by
-        # kg_validate / web_link_pred; both stay fully oracled here, plus
-        # the new weighted-SSSP row
-        "dedup_near_shingle": q_dedup_near_shingle,
-        "url_dedup": q_url_dedup,
-        "web_shortest_paths": q_web_shortest_paths,
-        "kg_ppr": q_kg_ppr,
-        "web_betweenness": q_web_betweenness,
-        "unigram_vocab": q_unigram_vocab,
-        "unigram_encode": q_unigram_encode,
-        # round 5 (cont. 5): mergeable KMV distinct sketches
-        "sketch_distinct_tokens": q_sketch_distinct_tokens,
-        "sketch_snapshot_overlap": q_sketch_snapshot_overlap,
-        # round 5 (cont. 6): Misra-Gries exact-verified heavy hitters,
-        # per-group weighted reservoir sampling
-        "sketch_heavy_hitters": q_sketch_heavy_hitters,
-        "weighted_sample": q_weighted_sample,
-        "search_hybrid_rrf": q_search_hybrid_rrf,
-        "crawl_robots": q_crawl_robots,
-        "temporal_asof": q_temporal_asof,
-        "temporal_range_join": q_temporal_range_join,
-        "temporal_sessionize": q_temporal_sessionize,
-        "sketch_bloom": q_sketch_bloom,
-        "dedup_minhash_incr": q_dedup_minhash_incr,
-        "classify_eval": q_classify_eval,
-        "crawl_frontier": q_crawl_frontier,
-        "kg_ntriples": q_kg_ntriples,
-        "kg_diff": q_kg_diff,
-        "mix_temperature": q_mix_temperature,
-        "text_sentence_chunks": q_text_sentence_chunks,
-        # round 5 (cont. 7): Dirichlet query-likelihood retrieval,
-        # count-min frequency sketch
-        "search_qlm": q_search_qlm,
-        "sketch_cms": q_sketch_cms,
-        "crawl_sitemap": q_crawl_sitemap,
-        "corpus_split": q_corpus_split,
-        "page_metadata": q_page_metadata,
-        "crawl_feeds": q_crawl_feeds,
-        "compaction_plan": q_compaction_plan,
-        "kg_align_snapshots": q_kg_align,
-        "host_boilerplate": q_host_boilerplate,
-        "crawl_budget": q_crawl_budget,
-        "robots_parse": q_robots_parse,
-        "robots_sitemaps": q_robots_sitemaps,
-        "canonical_elect": q_canonical_elect,
-        "main_content": q_main_content,
-        # round 5 (cont. 8): Morton-code layout for the triple table,
-        # diameter-independent star-contraction connected components
-        "zorder_layout": q_zorder_layout,
-        "kg_cc_star": q_kg_cc_star,
-        "kg_cc_merge": q_kg_cc_merge,
-        "bitext_margin": q_bitext_margin,
-        "search_sig_terms": q_sig_terms,
-        "robots_delays": q_robots_delays,
-        "winnow_fp": q_winnow_fp,
-        "winnow_pairs": q_winnow_pairs,
-        "table_stats": q_table_stats,
-        "kg_provenance": q_kg_provenance,
-        "jsonld_entities": q_jsonld,
-        "kg_jsonld_triples": q_kg_jsonld_triples,
-        "html_tables": q_html_tables,
-        "kg_table_triples": q_kg_table_triples,
-        "web_rank_weighted": q_web_rank_weighted,
-    }
-
-
-def extra_oracle_sql() -> dict[str, str]:
-    corpus_cte = f"WITH {_SQL_CORPUS}, {_SQL_DICT}, {_SQL_MENTIONS}"
-    norm_cte = f"{corpus_cte}, {_SQL_NORM}, {_SQL_NMENTIONS}"
-    web_edges = _SQL_WEB_EDGES
-    # degree-ordered triangle counting over the same web-host edge CTE:
-    # orientation low-(degree, id) → high, wedges on the shared oriented
-    # source, closed by the oriented (b, c) edge — mirrors
-    # graph.triangle_counts exactly
-    tri_sql = (
-        web_edges
-        + ", canon AS (SELECT DISTINCT LEAST(src, dst) AS lo, GREATEST(src, dst) AS hi FROM e)"
-        ", deg AS (SELECT node, COUNT(*) AS degree FROM ("
-        "  SELECT lo AS node FROM canon UNION ALL SELECT hi AS node FROM canon) GROUP BY node)"
-        ", o AS (SELECT "
-        "  CASE WHEN dl.degree < dh.degree OR (dl.degree = dh.degree AND c.lo < c.hi) "
-        "       THEN c.lo ELSE c.hi END AS u, "
-        "  CASE WHEN dl.degree < dh.degree OR (dl.degree = dh.degree AND c.lo < c.hi) "
-        "       THEN c.hi ELSE c.lo END AS v, "
-        "  CASE WHEN dl.degree < dh.degree OR (dl.degree = dh.degree AND c.lo < c.hi) "
-        "       THEN dh.degree ELSE dl.degree END AS d_v "
-        "  FROM canon c JOIN deg dl ON dl.node = c.lo JOIN deg dh ON dh.node = c.hi)"
-        ", wdg AS (SELECT o1.u AS u, o1.v AS b, o2.v AS c FROM o o1 JOIN o o2 "
-        "  ON o1.u = o2.u AND (o1.d_v < o2.d_v OR (o1.d_v = o2.d_v AND o1.v < o2.v)))"
-        ", tclosed AS (SELECT wdg.u, wdg.b, wdg.c FROM wdg "
-        "  JOIN o ON o.u = wdg.b AND o.v = wdg.c)"
-        ", tri AS (SELECT node, COUNT(*) AS triangles FROM ("
-        "  SELECT u AS node FROM tclosed UNION ALL SELECT b FROM tclosed "
-        "  UNION ALL SELECT c FROM tclosed) GROUP BY node) "
-        "SELECT d.node, d.degree, COALESCE(tri.triangles, 0) AS triangles, "
-        "ROUND(CASE WHEN d.degree >= 2 THEN 2.0 * COALESCE(tri.triangles, 0) "
-        "  / (d.degree * (d.degree - 1.0)) ELSE 0.0 END, 6) AS clustering "
-        "FROM deg d LEFT JOIN tri ON tri.node = d.node"
-    )
-    # multinomial NB re-derived in SQL: tokenize → top-256 vocab
-    # (count desc, token asc) → Laplace-smoothed per-class token counts →
-    # per-token log-likelihood ratios → per-doc sum + log-prior bias
-    nb_sql = (
-        "WITH lab AS (SELECT doc_id, text, (lang = 'en') AS y FROM documents), "
-        "tok AS (SELECT doc_id, y, unnest(list_filter("
-        "  string_split_regex(lower(COALESCE(text, '')), '[^a-z0-9]+'), x -> x <> '')) AS token "
-        "  FROM lab), "
-        "vstats AS (SELECT token, COUNT(*) AS n FROM tok GROUP BY token), "
-        "vocab AS (SELECT token FROM vstats ORDER BY n DESC, token ASC LIMIT 256), "
-        "nv AS (SELECT CAST(COUNT(*) AS DOUBLE) AS v FROM vocab), "
-        "counts AS (SELECT y, t.token, COUNT(*) AS c FROM tok t "
-        "  JOIN vocab USING (token) GROUP BY y, t.token), "
-        "tot AS (SELECT COALESCE(SUM(CASE WHEN y THEN c END), 0) AS t_pos, "
-        "  COALESCE(SUM(CASE WHEN NOT y THEN c END), 0) AS t_neg FROM counts), "
-        "prior AS (SELECT SUM(CASE WHEN y THEN 1 ELSE 0 END) AS n_pos, "
-        "  SUM(CASE WHEN NOT y THEN 1 ELSE 0 END) AS n_neg FROM lab), "
-        "w AS (SELECT v.token, "
-        "  ln((COALESCE(cp.c, 0) + 1.0) / ((SELECT t_pos FROM tot) + (SELECT v FROM nv)))"
-        "  - ln((COALESCE(cn.c, 0) + 1.0) / ((SELECT t_neg FROM tot) + (SELECT v FROM nv))) AS lw "
-        "  FROM vocab v LEFT JOIN counts cp ON cp.token = v.token AND cp.y "
-        "  LEFT JOIN counts cn ON cn.token = v.token AND NOT cn.y), "
-        "bias AS (SELECT ln(CAST(n_pos AS DOUBLE) / n_neg) AS b FROM prior), "
-        "scores AS (SELECT t.doc_id, SUM(w.lw) AS s FROM tok t "
-        "  JOIN w ON w.token = t.token GROUP BY t.doc_id) "
-        "SELECT d.doc_id, "
-        "ROUND((SELECT b FROM bias) + COALESCE(s.s, 0), 4) AS nb_score, "
-        "ROUND((SELECT b FROM bias) + COALESCE(s.s, 0), 4) > 0 AS nb_keep "
-        "FROM documents d LEFT JOIN scores s ON s.doc_id = d.doc_id"
-    )
-    # duplicate-span removal re-derived in SQL: window 8-grams via lead,
-    # md5 fingerprint aggregation with (id, start) keeper election,
-    # token-level span union, per-doc reassembly
-    _lead_gram = " || ' ' || ".join(
-        ["tok"] + [f"lead(tok, {i}) OVER wd" for i in range(1, 8)]
-    )
-    span_sql = (
-        "WITH base AS (SELECT lpad(CAST(doc_id AS VARCHAR), 8, '0') AS id, "
-        f"  CASE WHEN doc_id % 7 = 0 THEN text || '{_BOILERPLATE}' ELSE text END AS text "
-        "  FROM documents), "
-        "toks AS (SELECT id, unnest(l) AS tok, generate_subscripts(l, 1) - 1 AS idx "
-        "  FROM (SELECT id, list_filter(string_split_regex(COALESCE(text, ''), '\\s+'), "
-        "        y -> y <> '') AS l FROM base)), "
-        "g AS (SELECT id, idx, CASE WHEN lead(tok, 7) OVER wd IS NOT NULL "
-        f"  THEN md5({_lead_gram}) END AS h FROM toks "
-        "  WINDOW wd AS (PARTITION BY id ORDER BY idx)), "
-        "occ AS (SELECT id, idx, h, id || '#' || lpad(CAST(idx AS VARCHAR), 12, '0') AS okey "
-        "  FROM g WHERE h IS NOT NULL), "
-        "stats AS (SELECT h, COUNT(*) AS n, MIN(okey) AS keeper FROM occ "
-        "  GROUP BY h HAVING COUNT(*) >= 2), "
-        "doomed AS (SELECT o.id, o.idx AS s FROM occ o JOIN stats st ON st.h = o.h "
-        "  WHERE o.okey <> st.keeper), "
-        "removed AS (SELECT DISTINCT t.id, t.idx FROM toks t "
-        "  JOIN doomed d ON d.id = t.id AND t.idx BETWEEN d.s AND d.s + 7), "
-        "kept AS (SELECT t.id, string_agg(t.tok, ' ' ORDER BY t.idx) AS clean_text, "
-        "  COUNT(*) AS n_kept FROM toks t WHERE NOT EXISTS ("
-        "    SELECT 1 FROM removed r WHERE r.id = t.id AND r.idx = t.idx) GROUP BY t.id), "
-        "nrm AS (SELECT id, COUNT(*) AS n_rm FROM removed GROUP BY id) "
-        "SELECT b.id AS doc_id, COALESCE(k.clean_text, '') AS clean_text, "
-        "(COALESCE(k.n_kept, 0) + COALESCE(nrm.n_rm, 0)) AS n_tokens, "
-        "COALESCE(nrm.n_rm, 0) AS n_tokens_removed "
-        "FROM base b LEFT JOIN kept k ON k.id = b.id LEFT JOIN nrm ON nrm.id = b.id"
-    )
-    out = {
-        "web_host_rank": (
-            "SELECT node AS host, rank FROM ("
-            + _pagerank_iters(web_edges)
-            + ")"
-        ),
-        "web_triangles": tri_sql,
-        # identical contract to kg_connected_components (comp = min
-        # reachable id) — the two CC algorithms must agree bit-for-bit
-        "kg_cc_star": (
-            f"WITH RECURSIVE e(src, dst) AS (VALUES {_vals(_CC_EDGES)}), "
-            "sym AS (SELECT src, dst FROM e UNION SELECT dst, src FROM e), "
-            "nodes AS (SELECT DISTINCT src AS id FROM sym), "
-            "reach(id, r) AS (SELECT id, id FROM nodes "
-            "  UNION SELECT s.dst, reach.r FROM reach JOIN sym s ON s.src = reach.id) "
-            "SELECT id, MIN(r) AS comp FROM reach GROUP BY id"
-        ),
-        # weighted PR: same derivation, 2^-k weights are exact binary
-        # doubles so the weighted sums agree at ROUND 5 like kg_pagerank
-        "web_rank_weighted": (
-            "SELECT node, rank FROM ("
-            + _pagerank_iters(
-                "WITH e AS MATERIALIZED ("
-                "SELECT 'h' || CAST(doc_id % 97 AS VARCHAR) AS src, "
-                "'h' || CAST((doc_id * 7 + 3) % 97 AS VARCHAR) AS dst, "
-                "POWER(2.0, -CAST(doc_id % 5 AS DOUBLE)) AS w "
-                "FROM documents "
-                "WHERE 'h' || CAST(doc_id % 97 AS VARCHAR) "
-                "  <> 'h' || CAST((doc_id * 7 + 3) % 97 AS VARCHAR))",
-                weighted=True,
-            )
-            + ")"
-        ),
-        # provenance: same join + grouped aggregates; confidence =
-        # n_docs/(n_docs+5) with identical double arithmetic
-        "kg_provenance": (
-            f"{norm_cte}, {_SQL_KGE} "
-            "SELECT e.subject AS subj, 'biolink:subclass_of' AS pred, "
-            "e.object AS obj, "
-            "CAST(COUNT(DISTINCT m.url) AS BIGINT) AS n_docs, "
-            "CAST(COUNT(*) AS BIGINT) AS n_mentions, "
-            "ROUND(CAST(COUNT(DISTINCT m.url) AS DOUBLE) "
-            "  / (CAST(COUNT(DISTINCT m.url) AS DOUBLE) + 5.0), 6) "
-            "  AS confidence "
-            "FROM nmentions m JOIN kg_edges e ON e.subject = m.curie "
-            "WHERE e.predicate = 'biolink:subclass_of' "
-            "GROUP BY e.subject, e.object"
-        ),
-        # one UNION ALL branch per column over a single aggregate CTE;
-        # binary string collation in both engines makes min/max match
-        "table_stats": (
-            "WITH a AS (SELECT COUNT(*) AS n_rows, "
-            + ", ".join(
-                f"CAST(SUM(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS BIGINT)"
-                f" AS {c}_nulls, "
-                f"CAST(COUNT(DISTINCT {c}) AS BIGINT) AS {c}_ndv, "
-                f"MIN(CAST({c} AS VARCHAR)) AS {c}_min, "
-                f"MAX(CAST({c} AS VARCHAR)) AS {c}_max, "
-                f"ROUND(AVG(LENGTH(CAST({c} AS VARCHAR))), 4) AS {c}_len"
-                for c in ("doc_id", "text", "lang", "source", "n_chars")
-            )
-            + " FROM documents) "
-            + " UNION ALL ".join(
-                f"SELECT '{c}' AS column, n_rows, {c}_nulls AS n_nulls, "
-                f"{c}_ndv AS ndv, {c}_min AS min_str, {c}_max AS max_str, "
-                f"{c}_len AS avg_len FROM a"
-                for c in ("doc_id", "text", "lang", "source", "n_chars")
-            )
-        ),
-        # Crawl-delay: the synthesis is formulaic, so the semantics
-        # (specific agent beats '*', invalid values drop) close-form to a
-        # CASE on doc_id; hosts match q_robots_delays' concat exactly
-        "robots_delays": (
-            "SELECT source || '-' || CAST(doc_id AS VARCHAR) "
-            "  || '.example.org' AS host, "
-            "CASE WHEN doc_id % 4 <> 0 THEN CAST(doc_id % 7 AS DOUBLE) "
-            "     ELSE CAST(doc_id % 3 AS DOUBLE) + 0.5 END AS crawl_delay_s "
-            "FROM documents"
-        ),
-        # ES significant_terms / JLH with doc-frequency semantics and
-        # background ⊇ foreground; same analyzer fragment, identical
-        # double arithmetic (counts → literal-equivalent divisions)
-        "search_sig_terms": (
-            "WITH d AS (SELECT doc_id, (lang = 'de') AS fg, text FROM documents), "
-            "tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_all, "
-            "  CAST(SUM(CASE WHEN fg THEN 1 ELSE 0 END) AS DOUBLE) AS n_fg FROM d), "
-            "dt AS (SELECT DISTINCT doc_id, fg, "
-            f"  unnest({_analyzer_sql('text')}) AS term FROM d), "
-            "stats AS (SELECT term, SUM(CASE WHEN fg THEN 1 ELSE 0 END) AS fg_df, "
-            "  COUNT(*) AS bg_df FROM dt GROUP BY term), "
-            "scored AS (SELECT term, fg_df, bg_df, "
-            "  (CAST(fg_df AS DOUBLE) / (SELECT n_fg FROM tot) "
-            "   - CAST(bg_df AS DOUBLE) / (SELECT n_all FROM tot)) "
-            "  * ((CAST(fg_df AS DOUBLE) / (SELECT n_fg FROM tot)) "
-            "     / (CAST(bg_df AS DOUBLE) / (SELECT n_all FROM tot))) AS jlh "
-            "  FROM stats "
-            "  WHERE fg_df >= 3 AND CAST(fg_df AS DOUBLE) / (SELECT n_fg FROM tot) "
-            "    > CAST(bg_df AS DOUBLE) / (SELECT n_all FROM tot)) "
-            "SELECT term, fg_df, bg_df, ROUND(jlh, 6) AS jlh FROM scored "
-            "ORDER BY jlh DESC, term ASC LIMIT 25"
-        ),
-        # Artetxe-Schwenk ratio margin re-derived in SQL over the same
-        # double-cast cosine sums as knn_cosine; mutual-argmax election
-        "bitext_margin": (
-            "WITH s AS (SELECT vec_id AS src_id, embedding AS se "
-            "  FROM embeddings WHERE vec_id < 40), "
-            "t AS (SELECT vec_id AS tgt_id, embedding AS te "
-            "  FROM embeddings WHERE vec_id >= 40 AND vec_id < 120), "
-            "sums AS (SELECT s.src_id, t.tgt_id, "
-            "  SUM(CAST(s.se[r.i] AS DOUBLE) * CAST(t.te[r.i] AS DOUBLE)) AS dot, "
-            "  SUM(CAST(s.se[r.i] AS DOUBLE) * CAST(s.se[r.i] AS DOUBLE)) AS ss, "
-            "  SUM(CAST(t.te[r.i] AS DOUBLE) * CAST(t.te[r.i] AS DOUBLE)) AS tt "
-            "  FROM s, t, range(1, 65) r(i) GROUP BY s.src_id, t.tgt_id), "
-            "cosed AS (SELECT src_id, tgt_id, dot / (SQRT(ss) * SQRT(tt)) AS cos "
-            "  FROM sums), "
-            "rx AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY src_id "
-            "  ORDER BY cos DESC, tgt_id ASC) AS rkx FROM cosed), "
-            "ax AS (SELECT src_id, AVG(cos) AS ax FROM rx WHERE rkx <= 4 "
-            "  GROUP BY src_id), "
-            "ry AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY tgt_id "
-            "  ORDER BY cos DESC, src_id ASC) AS rky FROM cosed), "
-            "ay AS (SELECT tgt_id, AVG(cos) AS ay FROM ry WHERE rky <= 4 "
-            "  GROUP BY tgt_id), "
-            "m AS (SELECT c.src_id, c.tgt_id, "
-            "  c.cos / (0.5 * (ax.ax + ay.ay)) AS margin "
-            "  FROM cosed c JOIN ax USING (src_id) JOIN ay USING (tgt_id)), "
-            "el AS (SELECT *, "
-            "  ROW_NUMBER() OVER (PARTITION BY src_id "
-            "    ORDER BY margin DESC, tgt_id ASC) AS bx, "
-            "  ROW_NUMBER() OVER (PARTITION BY tgt_id "
-            "    ORDER BY margin DESC, src_id ASC) AS by FROM m) "
-            "SELECT src_id, tgt_id, ROUND(margin, 4) AS margin FROM el "
-            "WHERE bx = 1 AND by = 1 AND margin >= 1.0"
-        ),
-        # incremental merge must equal the full solve over ALL edges
-        "kg_cc_merge": (
-            f"WITH RECURSIVE e(src, dst) AS (VALUES {_vals(_CC_EDGES)}), "
-            "sym AS (SELECT src, dst FROM e UNION SELECT dst, src FROM e), "
-            "nodes AS (SELECT DISTINCT src AS id FROM sym), "
-            "reach(id, r) AS (SELECT id, id FROM nodes "
-            "  UNION SELECT s.dst, reach.r FROM reach JOIN sym s ON s.src = reach.id) "
-            "SELECT id, MIN(r) AS comp FROM reach GROUP BY id"
-        ),
-        # hybrid retrieval: the BM25 CTE mirrors the search_bm25 oracle
-        # (same analyzer, same similarity) at LIMIT 50, the cosine CTE
-        # mirrors knn_cosine for the single query vec_id=0, and the
-        # fusion is the SIGIR-2009 RRF sum 1/(60+rank)
-        "search_hybrid_rrf": (
-            "WITH toks AS (SELECT doc_id, "
-            f"  {_analyzer_sql('text')} AS tk FROM documents), "
-            "lens AS (SELECT doc_id, tk, len(tk) AS dl FROM toks), "
-            "stats AS (SELECT COUNT(*) AS n, AVG(dl) AS avgdl FROM lens), "
-            "qq(tok) AS (VALUES ('spark'), ('stream'), ('window')), "
-            "tf AS (SELECT l.doc_id, l.dl, qq.tok, "
-            "  len(list_filter(l.tk, x -> x = qq.tok)) AS tf FROM lens l CROSS JOIN qq), "
-            "dfq AS (SELECT tok, SUM(CASE WHEN tf > 0 THEN 1 ELSE 0 END) AS df FROM tf GROUP BY tok), "
-            "scored AS (SELECT t.doc_id, "
-            "  SUM(ln(1.0 + (s.n - d.df + 0.5) / (d.df + 0.5)) "
-            "      * t.tf * 2.2 / (t.tf + 1.2 * (1.0 - 0.75 + 0.75 * t.dl / s.avgdl))) AS score "
-            "  FROM tf t JOIN dfq d ON t.tok = d.tok CROSS JOIN stats s GROUP BY t.doc_id), "
-            "bmr AS (SELECT doc_id AS id, ROW_NUMBER() OVER (ORDER BY score DESC, doc_id ASC) AS rk "
-            "  FROM scored WHERE score > 0 ORDER BY score DESC, doc_id ASC LIMIT 50), "
-            "qv AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0), "
-            "sums AS (SELECT c.vec_id AS id, "
-            "  SUM(CAST(q.qe[t.i] AS DOUBLE) * CAST(c.embedding[t.i] AS DOUBLE)) AS dot, "
-            "  SUM(CAST(q.qe[t.i] AS DOUBLE) * CAST(q.qe[t.i] AS DOUBLE)) AS qn, "
-            "  SUM(CAST(c.embedding[t.i] AS DOUBLE) * CAST(c.embedding[t.i] AS DOUBLE)) AS cn "
-            "  FROM qv q, embeddings c, range(1, 65) t(i) WHERE c.vec_id != 0 "
-            "  GROUP BY c.vec_id), "
-            "vecr AS (SELECT id, ROW_NUMBER() OVER (ORDER BY dot/(SQRT(qn)*SQRT(cn)) DESC, id ASC) AS rk "
-            "  FROM sums ORDER BY dot/(SQRT(qn)*SQRT(cn)) DESC, id ASC LIMIT 50), "
-            "lists AS (SELECT id, rk FROM bmr UNION ALL SELECT id, rk FROM vecr), "
-            "fused AS (SELECT id, SUM(1.0/(60.0+rk)) AS rrf, COUNT(*) AS n_lists FROM lists GROUP BY id) "
-            "SELECT id AS doc_id, ROUND(rrf, 6) AS rrf_score, n_lists, "
-            "  CAST(ROW_NUMBER() OVER (ORDER BY rrf DESC, id ASC) AS INTEGER) AS rank "
-            "FROM fused ORDER BY rrf DESC, id ASC LIMIT 10"
-        ),
-        # as-of: DuckDB's native ASOF LEFT JOIN is the independent oracle;
-        # right side deduped per (user, ts) with max_by like the operator
-        "temporal_asof": (
-            "WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'), "
-            "r AS (SELECT user_id, ts, MAX(value) AS value FROM events "
-            "      WHERE event_type = 'purchase' GROUP BY user_id, ts) "
-            "SELECT l.event_id, l.user_id, epoch_us(l.ts) AS ts_us, "
-            "  ROUND(r.value, 6) AS purchase_value, epoch_us(r.ts) AS matched_ts_us "
-            "FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts"
-        ),
-        # range join: the naive interval predicate IS the oracle; the
-        # Spark side must reproduce it exactly through the bucket rewrite
-        "temporal_range_join": (
-            "WITH w AS (SELECT t1.ub, t1.ub * 100 + t2.j AS win_id, "
-            "  (1704067200 + t2.j * 86400 + t1.ub * 3600) * 1000000 AS s_us, "
-            "  (1704067200 + t2.j * 86400 + t1.ub * 3600 + (1 + (t1.ub + t2.j) % 3) * 5400) * 1000000 AS e_us "
-            "  FROM range(10) t1(ub), range(30) t2(j)), "
-            "p AS (SELECT event_id, user_id % 10 AS ub, epoch_us(ts) AS pt_us FROM events "
-            "  WHERE event_type IN ('click', 'view')) "
-            "SELECT p.event_id, p.ub, w.win_id, p.pt_us FROM p JOIN w "
-            "ON p.ub = w.ub AND w.s_us <= p.pt_us AND p.pt_us < w.e_us"
-        ),
-        "temporal_sessionize": (
-            "WITH o AS (SELECT event_id, user_id, ts, "
-            "  LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev "
-            "  FROM events) "
-            "SELECT event_id, user_id, epoch_us(ts) AS ts_us, "
-            "  SUM(CASE WHEN prev IS NULL OR epoch_us(ts) - epoch_us(prev) > 3600000000 "
-            "      THEN 1 ELSE 0 END) OVER (PARTITION BY user_id ORDER BY ts "
-            "      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq "
-            "FROM o"
-        ),
-        "mix_temperature": (
-            "WITH per AS (SELECT source, CAST(SUM(n_chars) AS DOUBLE) AS mass "
-            "  FROM documents GROUP BY source), "
-            "tot AS (SELECT SUM(mass) AS t, SUM(POWER(mass, 0.5)) AS pt FROM per) "
-            "SELECT source, mass, "
-            "  ROUND(POWER(mass, 0.5) / tot.pt, 6) AS p_target, "
-            "  ROUND(LEAST(1.0, POWER(mass, 0.5) / tot.pt * 0.5 * tot.t / mass), 6) AS fraction "
-            "FROM per CROSS JOIN tot"
-        ),
-        "kg_diff": (
-            "WITH t AS (" + oracle_sql()["kg_triples_all"] + "), "
-            "sub AS (SELECT * FROM t WHERE NOT (regexp_matches(subj, '/doc/[0-9]+$') "
-            "  AND COALESCE(TRY_CAST(regexp_extract(subj, '/doc/([0-9]+)$', 1) AS BIGINT) % 3 = 0, FALSE))), "
-            "added AS (SELECT DISTINCT subj, pred, obj FROM sub EXCEPT SELECT DISTINCT subj, pred, obj FROM t), "
-            "removed AS (SELECT DISTINCT subj, pred, obj FROM t EXCEPT SELECT DISTINCT subj, pred, obj FROM sub) "
-            "SELECT subj, pred, obj, 'added' AS change FROM added "
-            "UNION ALL SELECT subj, pred, obj, 'removed' AS change FROM removed"
-        ),
-        "kg_ntriples": (
-            "WITH t AS (" + oracle_sql()["kg_triples_all"] + ") "
-            "SELECT '<' || CASE WHEN subj LIKE 'http://%' OR subj LIKE 'https://%' "
-            "  THEN subj ELSE 'https://example.org/id/' || subj END || '> ' || "
-            "  '<https://example.org/pred/' || pred || '> ' || "
-            "  '<' || CASE WHEN obj LIKE 'http://%' OR obj LIKE 'https://%' "
-            "  THEN obj ELSE 'https://example.org/id/' || obj END || '> .' AS line "
-            "FROM t"
-        ),
-        "classify_eval": (
-            "WITH v AS (SELECT source, (lang = 'en') AS label, "
-            "  (text LIKE '% the %') AS pred FROM documents "
-            "  WHERE lang IS NOT NULL AND text IS NOT NULL), "
-            "c AS (SELECT source, "
-            "  SUM(CASE WHEN label AND pred THEN 1 ELSE 0 END) AS tp, "
-            "  SUM(CASE WHEN NOT label AND pred THEN 1 ELSE 0 END) AS fp, "
-            "  SUM(CASE WHEN label AND NOT pred THEN 1 ELSE 0 END) AS fn, "
-            "  SUM(CASE WHEN NOT label AND NOT pred THEN 1 ELSE 0 END) AS tn "
-            "  FROM v GROUP BY source) "
-            "SELECT source, tp, fp, fn, tn, "
-            "  ROUND(tp / NULLIF(tp + fp, 0), 6) AS precision, "
-            "  ROUND(tp / NULLIF(tp + fn, 0), 6) AS recall, "
-            "  ROUND(2.0 * (tp / NULLIF(tp + fp, 0)) * (tp / NULLIF(tp + fn, 0)) "
-            "    / NULLIF((tp / NULLIF(tp + fp, 0)) + (tp / NULLIF(tp + fn, 0)), 0), 6) AS f1, "
-            "  ROUND((tp + tn) / NULLIF(tp + fp + fn + tn, 0), 6) AS accuracy "
-            "FROM c"
-        ),
-        "crawl_frontier": (
-            "WITH u AS (SELECT 'https://h' || CAST(doc_id % 20 AS VARCHAR) || "
-            "  '.example.org/p' || CAST(doc_id % 7 AS VARCHAR) || '/d' || "
-            "  CAST(doc_id AS VARCHAR) AS url, "
-            "  CAST(doc_id % 7 AS DOUBLE) AS prio, "
-            "  'h' || CAST(doc_id % 20 AS VARCHAR) || '.example.org' AS host "
-            "  FROM documents), "
-            "r AS (SELECT url, host, prio, "
-            "  ROW_NUMBER() OVER (PARTITION BY host ORDER BY prio DESC, url ASC) AS host_seq "
-            "  FROM u) "
-            "SELECT url, host, CAST(host_seq AS INTEGER) AS host_seq, "
-            "  CAST(ROW_NUMBER() OVER (ORDER BY host_seq ASC, prio DESC, url ASC) AS INTEGER) AS crawl_order "
-            "FROM r"
-        ),
-        # MG heavy hitters verify exactly, so the oracle is plain SQL:
-        # the same tokenization as _doc_tokens, GROUP BY ... HAVING with
-        # the 0.2%-of-stream threshold (integer arithmetic both sides)
-        "sketch_heavy_hitters": (
-            "WITH t AS (SELECT unnest(string_split(text, ' ')) AS tok "
-            "FROM documents), tk AS (SELECT tok FROM t WHERE tok <> ''), "
-            "n AS (SELECT COUNT(*) AS total FROM tk) "
-            "SELECT tok, COUNT(*) AS cnt FROM tk GROUP BY tok "
-            "HAVING COUNT(*) >= (SELECT total // 500 + 1 FROM n)"
-        ),
-        "web_hits": _hits_iters(web_edges, iters=5),
-        "inverted_index": (
-            "WITH tok AS (SELECT doc_id AS id, "
-            f"unnest({_ANALYZE_TEXT_SQL}) AS token FROM documents), "
-            "tf AS (SELECT id, token, COUNT(*) AS tf FROM tok GROUP BY id, token), "
-            "p AS (SELECT token, CAST(id % 4 AS INT) AS shard, COUNT(*) AS df, "
-            "CAST(SUM(tf) AS BIGINT) AS cf, "
-            "md5(string_agg(CAST(id AS VARCHAR) || ':' || CAST(tf AS VARCHAR), "
-            "',' ORDER BY id)) AS postings_fp "
-            "FROM tf GROUP BY token, CAST(id % 4 AS INT)), "
-            "tot AS (SELECT token, SUM(df) AS tdf FROM p GROUP BY token) "
-            "SELECT p.token, p.shard, p.df, p.cf, p.postings_fp "
-            "FROM p JOIN tot USING (token) WHERE tot.tdf >= 2"
-        ),
-        "rel_top_orders": (
-            "SELECT o.o_orderkey AS o_orderkey, c.c_name AS c_name, "
-            "CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2)) * "
-            "(1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue "
-            "FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey "
-            "JOIN customer c ON o.o_custkey = c.c_custkey "
-            "GROUP BY o.o_orderkey, c.c_name ORDER BY revenue DESC, o_orderkey ASC LIMIT 10"
-        ),
-        "rel_union_dedup": (
-            "SELECT c_nationkey AS nationkey FROM customer "
-            "UNION SELECT s_nationkey FROM supplier"
-        ),
-        "url_canon": _URL_CANON_SQL,
-        "warc_extract": (
-            "SELECT 'https://h' || CAST(doc_id % 20 AS VARCHAR) "
-            "|| '.example.org/w/' || CAST(doc_id AS VARCHAR) AS url, "
-            "1704067200 + doc_id AS warc_epoch, "
-            "200 AS http_status, "
-            "'text/html' AS content_type, "
-            "md5('<html><body><p>' || COALESCE(text, '') || '</p></body></html>') "
-            "AS payload_md5 "
-            "FROM documents WHERE doc_id < 60"
-        ),
-        "quality_nb": nb_sql,
-        "span_dedup": span_sql,
-        "tfidf_keywords": (
-            "WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token "
-            "  FROM documents), "
-            "tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok "
-            "  WHERE token <> '' GROUP BY doc_id, token), "
-            "nn AS (SELECT CAST(COUNT(DISTINCT doc_id) AS DOUBLE) AS n FROM documents), "
-            "dfq AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY token), "
-            "scored AS (SELECT tf.doc_id, tf.token, tf.tf, "
-            "  ROUND(tf.tf * (ln(((SELECT n FROM nn) + 1.0) / (dfq.df + 1.0)) + 1.0), 6) AS score "
-            "  FROM tf JOIN dfq USING (token)), "
-            "r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id "
-            "  ORDER BY score DESC, token ASC) AS rk FROM scored) "
-            "SELECT doc_id, token, tf, score, rk FROM r WHERE rk <= 3"
-        ),
-        "host_anchors": (
-            "WITH la AS ("
-            "  SELECT 'h' || CAST((doc_id // 20) % (1 + (doc_id % 20) % 5) % 20 AS VARCHAR) "
-            "    || '.example.org' AS host, 'a' AS token FROM documents "
-            "  UNION ALL SELECT 'h' || CAST(((doc_id // 40) % (1 + (doc_id % 20) % 7) + 5) % 20 AS VARCHAR) "
-            "    || '.example.org', 'b' FROM documents "
-            "  UNION ALL SELECT 'h' || CAST(((doc_id // 60) % (1 + (doc_id % 20) % 4) + 12) % 20 AS VARCHAR) "
-            "    || '.example.org', 'c' FROM documents "
-            "  UNION ALL SELECT 'h' || CAST(doc_id % 20 AS VARCHAR) || '.example.org', 'd' "
-            "    FROM documents), "
-            "c AS (SELECT host, token, COUNT(*) AS n FROM la GROUP BY host, token), "
-            "r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY host "
-            "  ORDER BY n DESC, token ASC) AS rk FROM c) "
-            "SELECT host, token, n, rk FROM r WHERE rk <= 3"
-        ),
-        "corpus_profile": (
-            "SELECT lang AS grp, COUNT(*) AS n_docs, "
-            "CAST(SUM(length(COALESCE(text, ''))) AS BIGINT) AS total_chars, "
-            "ROUND(AVG(length(COALESCE(text, ''))), 6) AS mean_chars, "
-            "ROUND(quantile_cont(length(COALESCE(text, '')), 0.5), 6) AS p50_chars, "
-            "ROUND(quantile_cont(length(COALESCE(text, '')), 0.95), 6) AS p95_chars "
-            "FROM documents GROUP BY lang"
-        ),
-        "dedup_incremental": (
-            "WITH seenfp AS (SELECT DISTINCT md5(COALESCE(text, '')) AS fp "
-            "  FROM documents WHERE doc_id < 250), "
-            "batch AS (SELECT doc_id, md5(COALESCE(text, '')) AS fp "
-            "  FROM documents WHERE doc_id >= 250), "
-            "j AS (SELECT b.doc_id, b.fp, (s.fp IS NOT NULL) AS dup_of_seen, "
-            "  ROW_NUMBER() OVER (PARTITION BY b.fp ORDER BY b.doc_id) AS rk "
-            "  FROM batch b LEFT JOIN seenfp s ON s.fp = b.fp) "
-            "SELECT doc_id, fp, dup_of_seen, "
-            "(NOT dup_of_seen AND rk = 1) AS keep FROM j"
-        ),
-        "kg_triples_co_mention": (
-            f"{norm_cte}, dm AS (SELECT DISTINCT url, curie FROM nmentions) "
-            "SELECT DISTINCT a.curie AS subj, 'co_mentioned_with' AS pred, b.curie AS obj "
-            "FROM dm a JOIN dm b ON a.url = b.url AND a.curie < b.curie"
-        ),
-        "knn_cosine": _KNN_SQL,
-        "rel_pricing_summary": (
-            "SELECT l_returnflag, l_linestatus, "
-            "CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty, "
-            "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price, "
-            "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * "
-            "(1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price, "
-            "COUNT(*) AS count_order FROM lineitem GROUP BY l_returnflag, l_linestatus"
-        ),
-        "rel_window_hourly": (
-            "SELECT date_trunc('hour', ts) AS hour, event_type, COUNT(*) AS n, "
-            "CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value "
-            "FROM events GROUP BY date_trunc('hour', ts), event_type"
-        ),
-        "rel_top_hit_per_group": (
-            "SELECT event_type, event_id, user_id FROM ("
-            "SELECT event_type, event_id, user_id, ROW_NUMBER() OVER "
-            "(PARTITION BY event_type ORDER BY ts ASC, event_id ASC) AS rk FROM events) "
-            "WHERE rk = 1"
-        ),
-        "kg_communities": _lpa_sql(iters=4),
-        "kg_rollup": _ROLLUP_SQL,
-        "kg_concept_similarity": (
-            f"{norm_cte}, dm AS (SELECT DISTINCT url, curie FROM nmentions), "
-            "pd AS (SELECT url, COUNT(*) AS sz FROM dm GROUP BY url), "
-            "docs AS (SELECT url FROM pd WHERE sz BETWEEN 1 AND 64), "
-            "marg AS (SELECT curie, COUNT(*) AS c FROM dm JOIN docs USING (url) GROUP BY curie), "
-            "co AS (SELECT a.curie AS src, b.curie AS dst, COUNT(*) AS n_co "
-            "  FROM dm a JOIN dm b ON a.url = b.url AND a.curie < b.curie "
-            "  JOIN docs ON docs.url = a.url GROUP BY 1, 2) "
-            "SELECT src, dst, n_co, "
-            "ROUND(CAST(n_co AS DOUBLE) / sqrt(ma.c * mb.c), 5) AS cosine, "
-            "ROUND(CAST(n_co AS DOUBLE) / (ma.c + mb.c - n_co), 5) AS jaccard, "
-            "ROUND(2.0 * n_co / (ma.c + mb.c), 5) AS dice "
-            "FROM co JOIN marg ma ON ma.curie = co.src "
-            "JOIN marg mb ON mb.curie = co.dst"
-        ),
-        "kg_triple_validity": (
-            # same (triple, snapshot) synthesis as q_kg_triple_validity:
-            # t = doc_id//8, s = doc_id%8, present iff bit s of t
-            "WITH obs AS (SELECT "
-            "  'E:' || CAST(doc_id // 8 AS VARCHAR) AS subj, "
-            "  ['HAS_CONCEPT','biolink:subclass_of','co_mentioned_with']"
-            "[CAST((doc_id // 8) % 3 AS INT) + 1] AS pred, "
-            "  'C:' || CAST((doc_id // 8) % 13 AS VARCHAR) AS obj, "
-            "  TIMESTAMP '2020-09-13 12:26:40' + (doc_id % 8) * INTERVAL 1 DAY AS warc_ts "
-            "  FROM documents WHERE ((doc_id // 8) >> CAST(doc_id % 8 AS INT)) & 1 = 1), "
-            "tl AS (SELECT warc_ts, ROW_NUMBER() OVER (ORDER BY warc_ts) AS sidx "
-            "  FROM (SELECT DISTINCT warc_ts FROM obs)), "
-            "o2 AS (SELECT DISTINCT subj, pred, obj, o.warc_ts, sidx "
-            "  FROM obs o JOIN tl ON tl.warc_ts = o.warc_ts), "
-            "isl AS (SELECT subj, pred, obj, warc_ts, sidx, "
-            "  sidx - ROW_NUMBER() OVER (PARTITION BY subj, pred, obj ORDER BY sidx) AS run "
-            "  FROM o2) "
-            "SELECT subj, pred, obj, "
-            "CAST(epoch(MIN(warc_ts)) AS BIGINT) AS valid_from, "
-            "CAST(epoch(MAX(warc_ts)) AS BIGINT) AS valid_to, "
-            "COUNT(*) AS n_snapshots, "
-            "MAX(warc_ts) = (SELECT MAX(warc_ts) FROM obs) AS is_current "
-            "FROM isl GROUP BY subj, pred, obj, run"
-        ),
-        "crawl_churn": (
-            # same capture synthesis as q_crawl_churn; change detection on
-            # the version text directly (the Spark side hashes it — counts
-            # and flags are hash-function-independent, collisions aside)
-            "WITH cap AS (SELECT "
-            "  'https://u' || CAST(doc_id % 40 AS VARCHAR) || '.example.org/p' AS url, "
-            "  TIMESTAMP '2020-09-13 12:26:40' + doc_id * INTERVAL 1 SECOND AS warc_ts, "
-            "  'v' || CAST(CASE WHEN (doc_id // 40) % 4 IN (0, 1) THEN 0 "
-            "       ELSE (doc_id // 40) % 4 END AS VARCHAR) "
-            "    || ':' || CAST(doc_id % 40 AS VARCHAR) AS text "
-            "  FROM documents), "
-            "hist AS (SELECT url, warc_ts, text, "
-            "  lag(text) OVER (PARTITION BY url ORDER BY warc_ts) AS prev FROM cap) "
-            "SELECT url, COUNT(*) AS n_captures, "
-            "COALESCE(SUM(CASE WHEN prev IS NOT NULL AND text <> prev THEN 1 ELSE 0 END), 0) AS n_changes, "
-            "COUNT(DISTINCT text) AS n_versions, "
-            "ROUND(SUM(CASE WHEN prev IS NOT NULL AND text <> prev THEN 1 ELSE 0 END) "
-            "  * 1.0 / NULLIF(COUNT(*) - 1, 0), 6) AS change_ratio, "
-            "CAST(MIN(epoch(warc_ts)) AS BIGINT) AS first_epoch, "
-            "CAST(MAX(epoch(warc_ts)) AS BIGINT) AS last_epoch, "
-            "ROUND((MAX(epoch(warc_ts)) - MIN(epoch(warc_ts))) * 1.0 "
-            "  / NULLIF(SUM(CASE WHEN prev IS NOT NULL AND text <> prev THEN 1 ELSE 0 END), 0), 6) "
-            "  AS mean_change_secs "
-            "FROM hist GROUP BY url"
-        ),
-        "web_kcore": _kcore_sql(web_edges, k=3, rounds=8),
-        "rel_grouped_collect": (
-            "SELECT user_id, COUNT(*) AS n_events, "
-            "string_agg(DISTINCT event_type, ',' ORDER BY event_type) AS types "
-            "FROM events GROUP BY user_id"
-        ),
-        "rel_metadata_extract": (
-            "SELECT event_id, CAST(regexp_extract(props, '[0-9]+') AS INT) AS k FROM events"
-        ),
-        "kg_triples_subclass": (
-            f"{norm_cte}, {_SQL_KGE} "
-            "SELECT DISTINCT e.subject AS subj, 'biolink:subclass_of' AS pred, e.object AS obj "
-            "FROM kg_edges e WHERE e.predicate = 'biolink:subclass_of' "
-            "AND e.subject IN (SELECT curie FROM nmentions)"
-        ),
-        "multimodal_resize": (
-            "SELECT media_id, mime, width, height, payload_md5 FROM (VALUES "
-            + _vals(_multimodal_resize_rows())
-            + ") AS t(media_id, mime, width, height, payload_md5)"
-        ),
-        "multimodal_frames": (
-            "SELECT media_id, frame_idx, frame_md5 FROM (VALUES "
-            + _vals(_multimodal_frame_rows())
-            + ") AS t(media_id, frame_idx, frame_md5)"
-        ),
-        "lang_id": (
-            "SELECT doc_id, CASE WHEN "
-            "len(list_filter(string_split(text, ' '), x -> x IN ('the', 'a'))) * 1.0 "
-            "/ len(string_split(text, ' ')) >= 0.05 THEN 'en' ELSE 'unk' END AS pred_lang "
-            "FROM documents"
-        ),
-        "doc_fingerprint": (
-            f"WITH {_SQL_CORPUS} SELECT url, md5(text) AS fp FROM corpus"
-        ),
-        "rel_program_list": (
-            "SELECT event_type, COUNT(DISTINCT user_id) AS n_users, COUNT(*) AS n_events "
-            "FROM events GROUP BY event_type"
-        ),
-        "rel_semi_join": (
-            "SELECT c_custkey, c_name FROM customer c "
-            "WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)"
-        ),
-        "rel_anti_join": (
-            "SELECT c_custkey, c_name FROM customer c "
-            "WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)"
-        ),
-        # round 5 (cont. 4): retired driver slots — moved verbatim from
-        # the driver dict when kg_validate / web_link_pred rotated in
-        "dedup_near_shingle": (
-            "WITH docs AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents), "
-            "sh AS (SELECT DISTINCT doc_id, unnest("
-            "[w[i] || ' ' || w[i+1] || ' ' || w[i+2] for i in range(1, len(w) - 1)]) AS s "
-            "  FROM docs), "
-            "sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id), "
-            "pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter "
-            "  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2) "
-            "SELECT id_a, id_b, ROUND(inter * 1.0 / (sa.sz + sb.sz - inter), 6) AS jaccard "
-            "FROM pairs JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b "
-            "WHERE inter * 1.0 / (sa.sz + sb.sz - inter) >= 0.9"
-        ),
-        "url_dedup": (
-            "WITH u AS (SELECT doc_id, "
-            "(CASE WHEN doc_id % 2 = 0 THEN 'HTTPS://WWW.H' ELSE 'https://www.h' END) "
-            "|| (doc_id % 5) || '.example.org/p/' || (doc_id % 13) || '/#s' || doc_id AS url, "
-            "TIMESTAMP '2020-09-13 12:26:40' + doc_id * INTERVAL 1 SECOND AS warc_ts "
-            "FROM documents), "
-            "g AS (SELECT 'https://h' || (doc_id % 5) || '.example.org/p/' || (doc_id % 13) "
-            "AS norm_url, MAX(doc_id) AS mid, COUNT(*) AS n_captures FROM u GROUP BY 1) "
-            "SELECT g.norm_url, u.url, u.warc_ts, g.n_captures "
-            "FROM g JOIN u ON u.doc_id = g.mid"
-        ),
-        # weighted SSSP: 8 Bellman-Ford rounds unrolled into chained
-        # min-aggregate CTEs (equal to the frontier formulation at every
-        # round) over the shared host-edge CTE with deterministic
-        # integer weights
-        "web_shortest_paths": _bellman_sql(
-            web_edges
-            + ", we AS (SELECT src, dst, "
-            "1.0 + (LENGTH(src) + 2 * LENGTH(dst)) % 5 AS w FROM e)",
-            iters=8,
-        ),
-        "kg_ppr": _ppr_iters(
-            f"{norm_cte}, dm AS (SELECT DISTINCT url, curie FROM nmentions), "
-            "e AS MATERIALIZED (SELECT DISTINCT a.curie AS src, b.curie AS dst "
-            "FROM dm a JOIN dm b ON a.url = b.url AND a.curie < b.curie), "
-            "seeds AS (SELECT DISTINCT src FROM e ORDER BY src LIMIT 2), "
-            "rv AS (SELECT src AS node, 1.0 / (SELECT COUNT(*) FROM seeds) AS w "
-            "FROM seeds)",
-            damping=0.85,
-            iters=10,
-        ),
-        # Dirichlet query-likelihood (Zhai & Lafferty 2001 / Lucene
-        # LMDirichletSimilarity): per matching term max(0, ln(1 +
-        # tf/(mu*p(t|C))) + ln(mu/(dl+mu))), p(t|C) = cf/total — the
-        # (2000.0*cf)/total op order matches qlm_topk's folded literal
-        # bit-for-bit; filter on the RAW sum, round for display
-        "search_qlm": (
-            "WITH toks AS (SELECT doc_id, "
-            f"  {_analyzer_sql('text')} AS tk FROM documents), "
-            "lens AS (SELECT doc_id, tk, len(tk) AS dl FROM toks), "
-            "stats AS (SELECT SUM(dl) AS total FROM lens), "
-            "q(tok) AS (VALUES ('spark'), ('stream'), ('window')), "
-            "tf AS (SELECT l.doc_id, l.dl, q.tok, "
-            "  len(list_filter(l.tk, x -> x = q.tok)) AS tf FROM lens l CROSS JOIN q), "
-            "cf AS (SELECT tok, SUM(tf) AS cf FROM tf GROUP BY tok), "
-            "scored AS (SELECT t.doc_id, "
-            "  SUM(CASE WHEN t.tf > 0 AND c.cf > 0 THEN GREATEST(0.0, "
-            "    ln(1.0 + t.tf / ((2000.0 * c.cf) / s.total)) "
-            "    + ln(2000.0 / (t.dl + 2000.0))) ELSE 0.0 END) AS score "
-            "  FROM tf t JOIN cf c ON t.tok = c.tok CROSS JOIN stats s "
-            "  GROUP BY t.doc_id) "
-            "SELECT doc_id, ROUND(score, 6) AS score FROM scored WHERE score > 0 "
-            "ORDER BY score DESC, doc_id ASC LIMIT 20"
-        ),
-    }
-    # pyoracle-backed VALUES oracles (same degradation contract as
-    # _pyoracle_values: missing parquet/duckdb ⇒ entry omitted, weaker
-    # rows-only check locally; a recompute bug must raise)
-    import sys as _sys
-
-    # duckdb raises duckdb.Error (not OSError) for a missing/unreadable
-    # parquet; the tuple is rebound after the import succeeds so the
-    # except clause never references an unbound name on ImportError.
-    _degrade_errs: tuple = (ImportError, OSError)
-    try:
-        import duckdb
-
-        _degrade_errs = (ImportError, OSError, duckdb.Error)
-
-        from dug_spark.functions import pyoracle as po
-
-        sf = _pyoracle_sf()
-        con = duckdb.connect()
-        docs = [
-            (int(d), t)
-            for d, t in con.execute(
-                f"SELECT doc_id, text FROM '{sf}/documents.parquet'"
-            ).fetchall()
-        ]
-        vecs = [
-            (int(v), [float(x) for x in e], lab)
-            for v, e, lab in con.execute(
-                f"SELECT vec_id, embedding, label FROM '{sf}/embeddings.parquet'"
-            ).fetchall()
-        ]
-        con.close()
-        qs3 = [t for t in vecs if t[0] < 50]
-        out["text_c4_clean"] = _values_or_empty(
-            po.c4_rows(docs),
-            "doc_id, n_kept_lines, c4_keep, clean_len",
-            "BIGINT, INTEGER, BOOLEAN, INTEGER",
-        )
-        out["dedup_minhash"] = _values_or_empty(
-            po.minhash_pairs(docs, threshold=0.9),
-            "id_a, id_b, jaccard",
-            "BIGINT, BIGINT, DOUBLE",
-        )
-        out["text_mojibake"] = _values_or_empty(
-            po.mojibake_rows(docs),
-            "doc_id, mojibake_rounds, fixed_len",
-            "BIGINT, INTEGER, INTEGER",
-        )
-        out["ann_ivf"] = _values_or_empty(
-            po.ivf_topk(qs3, vecs, k=5),
-            "q_id, neighbor_id, rk, cos_sim",
-            "BIGINT, BIGINT, INTEGER, DOUBLE",
-        )
-        out["web_skipgrams"] = _values_or_empty(
-            po.skipgram_rows(
-                po.random_walk_rows(
-                    po.web_edges_py([d for d, _t in docs]),
-                    walk_length=4, walks_per_node=2,
-                ),
-                window=2,
-            ),
-            "center, context, n_pairs",
-            "VARCHAR, VARCHAR, BIGINT",
-        )
-        out["web_anf"] = _values_or_empty(
-            po.anf_rows(po.web_edges_py([d for d, _t in docs]), hops=3),
-            "node, hop, sum_lzb, est",
-            "VARCHAR, INTEGER, INTEGER, DOUBLE",
-        )
-        _uni_vocab = po.unigram_train(docs, **_UNIGRAM_KW)
-        out["unigram_vocab"] = _values_or_empty(
-            _uni_vocab,
-            "piece, logp",
-            "VARCHAR, DOUBLE",
-        )
-        out["unigram_encode"] = _values_or_empty(
-            po.unigram_doc_rows(
-                docs, _uni_vocab, max_piece_len=_UNIGRAM_KW["max_piece_len"]
-            ),
-            "doc_id, n_pieces",
-            "BIGINT, BIGINT",
-        )
-        _web_e = po.web_edges_py([d for d, _t in docs])
-        out["web_betweenness"] = _values_or_empty(
-            po.betweenness_rows(
-                _web_e,
-                seeds=sorted({s for s, _ in _web_e})[:4],
-                max_depth=10,
-            ),
-            "node, betweenness",
-            "VARCHAR, DOUBLE",
-        )
-        out["web_walks"] = _values_or_empty(
-            po.random_walk_rows(
-                po.web_edges_py([d for d, _t in docs]),
-                walk_length=4, walks_per_node=2,
-            ),
-            "start, walk_no, path, steps",
-            "VARCHAR, INTEGER, VARCHAR, INTEGER",
-        )
-        bpe_merges = po.bpe_train(
-            docs, num_merges=60, batch=4, min_count=2, max_words=5000
-        )
-        # "left"/"right"/"rank" are DuckDB reserved words — quoted
-        out["bpe_merges"] = _values_or_empty(
-            bpe_merges,
-            '"rank", "left", "right", cnt',
-            "INTEGER, VARCHAR, VARCHAR, BIGINT",
-        )
-        out["bpe_encode"] = _values_or_empty(
-            po.bpe_doc_rows(docs, bpe_merges),
-            "doc_id, n_subwords, subwords_fp",
-            "BIGINT, INTEGER, VARCHAR",
-        )
-        out["semantic_dedup"] = _values_or_empty(
-            po.semantic_dedup_rows(
-                [(v, e) for v, e, _l in vecs if v < 300], k=8, tau=0.95, iters=2
-            ),
-            "vec_id, cell, keep",
-            "BIGINT, INTEGER, BOOLEAN",
-        )
-        con2 = duckdb.connect()
-        id_src = [
-            (int(d), s)
-            for d, s in con2.execute(
-                f"SELECT doc_id, source FROM '{sf}/documents.parquet'"
-            ).fetchall()
-        ]
-        docs_src = [
-            (int(d), t, s)
-            for d, t, s in con2.execute(
-                f"SELECT doc_id, text, source FROM '{sf}/documents.parquet'"
-            ).fetchall()
-        ]
-        lang_chars = [
-            (lang, int(d), int(nc))
-            for d, lang, nc in con2.execute(
-                f"SELECT doc_id, lang, n_chars FROM '{sf}/documents.parquet'"
-            ).fetchall()
-        ]
-        con2.close()
-        out["sample_mix"] = _values_or_empty(
-            po.sample_mix_rows(id_src, _MIX_FRACTIONS, default_fraction=0.05),
-            "doc_id, bucket, keep",
-            "BIGINT, BIGINT, BOOLEAN",
-        )
-        out["sketch_distinct_tokens"] = _values_or_empty(
-            po.kmv_rows(docs_src, buckets=64),
-            "source, buckets_hit, est_distinct, exact_distinct",
-            "VARCHAR, BIGINT, DOUBLE, BIGINT",
-        )
-        out["sketch_snapshot_overlap"] = _values_or_empty(
-            po.kmv_overlap_rows(docs_src, buckets=64),
-            "source, est_a, est_b, est_union, est_intersect, jaccard_est",
-            "VARCHAR, DOUBLE, DOUBLE, DOUBLE, DOUBLE, DOUBLE",
-        )
-        btoks = [
-            t
-            for d, text, src in docs_src
-            if src in ("src0", "src1", "src2", "src3", "src4")
-            for t in text.split(" ")
-            if t
-        ]
-        ptoks = [t for _d, text, _s in docs_src for t in text.split(" ") if t]
-        out["dedup_minhash_incr"] = _values_or_empty(
-            po.minhash_incremental_rows(
-                [(d, t) for d, t, _s in docs_src if d % 4 != 0],
-                [(d, t) for d, t, _s in docs_src if d % 4 == 0],
-                threshold=0.5,
-            ),
-            "id_a, id_b, sig_jaccard",
-            "BIGINT, BIGINT, DOUBLE",
-        )
-        out["text_sentence_chunks"] = _values_or_empty(
-            [
-                (d, i, c)
-                for d, t, _s in docs_src
-                for i, c in enumerate(po.sentence_chunks(t, 120) or [])
-            ],
-            "doc_id, chunk_idx, chunk",
-            "BIGINT, INTEGER, VARCHAR",
-        )
-        out["sketch_bloom"] = _values_or_empty(
-            po.bloom_rows(btoks, ptoks, 4096, 4),
-            "tok, might_contain, present",
-            "VARCHAR, BOOLEAN, BOOLEAN",
-        )
-        out["sketch_cms"] = _values_or_empty(
-            po.cms_rows(ptoks, width=512, depth=4),
-            "tok, est, true_n",
-            "VARCHAR, BIGINT, BIGINT",
-        )
-        out["crawl_sitemap"] = _values_or_empty(
-            [
-                (u, k, i, loc, lm or "", cf or "",
-                 pr if pr is not None else -1.0)
-                for (u, k, i, loc, lm, cf, pr) in po.sitemap_entry_rows(
-                    [_sitemap_page(d, s) for d, s in id_src]
-                )
-            ],
-            "sitemap_url, kind, entry_idx, loc, lastmod, changefreq, priority",
-            "VARCHAR, VARCHAR, INTEGER, VARCHAR, VARCHAR, VARCHAR, DOUBLE",
-        )
-        # pure-SQL oracle: DuckDB recomputes the md5-bucket assignment
-        # from the SAME hex literals curate.split_thresholds emits
-        from dug_spark.operators.curate import split_thresholds as _sth
-
-        _ths = _sth((("train", 0.9), ("val", 0.05), ("test", 0.05)))
-        _host_sql = (
-            "'h' || CAST(doc_id % 97 AS VARCHAR) || '.' || source"
-            " || '.example.org'"
-        )
-        _h8 = f"substr(md5('r5' || {_host_sql}), 1, 8)"
-        _case = "CASE " + " ".join(
-            f"WHEN {_h8} < '{hx}' THEN '{nm}'" for nm, hx in _ths
-        ) + " ELSE 'test' END"
-        out["corpus_split"] = (
-            f"SELECT doc_id, {_host_sql} AS host, {_case} AS split "
-            "FROM documents"
-        )
-        _lang_of = {did: lg for lg, did, _nc in lang_chars}
-        _nc_of = {did: nc for _lg, did, nc in lang_chars}
-        out["page_metadata"] = _values_or_empty(
-            [
-                (u, t or "", de or "", c or "", og or "", lg or "", ni, nf)
-                for (u, t, de, c, og, lg, ni, nf) in po.page_metadata_rows(
-                    [_meta_page(d, s, _lang_of[d]) for d, s in id_src]
-                )
-            ],
-            "url, title, meta_description, canonical, og_title, html_lang,"
-            " noindex, nofollow",
-            "VARCHAR, VARCHAR, VARCHAR, VARCHAR, VARCHAR, VARCHAR,"
-            " BOOLEAN, BOOLEAN",
-        )
-        out["crawl_feeds"] = _values_or_empty(
-            [
-                (u, k, i, t or "", ln or "", pb or "", eid or "")
-                for (u, k, i, t, ln, pb, eid) in po.feed_entry_rows(
-                    [_feed_page(d, s) for d, s in id_src]
-                )
-            ],
-            "feed_url, kind, entry_idx, title, link, published, entry_id",
-            "VARCHAR, VARCHAR, INTEGER, VARCHAR, VARCHAR, VARCHAR, VARCHAR",
-        )
-        out["main_content"] = _values_or_empty(
-            po.main_content_rows(
-                [_content_page(d, t, s) for d, t, s in docs_src]
-            ),
-            "url, main_text, n_blocks, n_blocks_kept",
-            "VARCHAR, VARCHAR, INTEGER, INTEGER",
-        )
-        out["canonical_elect"] = """
-WITH pages AS (
-  SELECT 'https://ex.org/p/' || CAST(doc_id AS VARCHAR) AS url,
-         CASE WHEN doc_id % 4 <> 0
-              THEN 'https://ex.org/p/'
-                   || CAST(doc_id - doc_id % 4 AS VARCHAR) END AS canonical
-  FROM documents
-), keyed AS (
-  SELECT url, COALESCE(canonical, url) AS canonical_key FROM pages
-)
-SELECT url, canonical_key,
-       ROW_NUMBER() OVER (
-         PARTITION BY canonical_key
-         ORDER BY (url = canonical_key) DESC, url ASC) = 1 AS keep
-FROM keyed
-"""
-        _rb_rules, _rb_maps = po.robots_parse_rows(
-            [_robots_page(d, s) for d, s in id_src]
-        )
-        out["robots_parse"] = _values_or_empty(
-            _rb_rules,
-            "host, agent, directive, pattern, line_no",
-            "VARCHAR, VARCHAR, VARCHAR, VARCHAR, INTEGER",
-        )
-        out["robots_sitemaps"] = _values_or_empty(
-            _rb_maps, "host, sitemap_url", "VARCHAR, VARCHAR"
-        )
-        _wn_docs = [(d, t) for d, t, _s in docs_src]
-        out["winnow_fp"] = _values_or_empty(
-            po.winnow_rows(_wn_docs, 5, 4),
-            "id, pos, fp",
-            "BIGINT, INTEGER, BIGINT",
-        )
-        out["winnow_pairs"] = _values_or_empty(
-            po.winnow_overlap_rows(_wn_docs, 5, 4, min_shared=2, max_df=50),
-            "id_a, id_b, shared, overlap",
-            "BIGINT, BIGINT, BIGINT, DOUBLE",
-        )
-        _tb_rows = po.html_table_rows([_table_page(d, s) for d, s in id_src])
-        out["html_tables"] = _values_or_empty(
-            _tb_rows,
-            "url, table_idx, row_idx, col_idx, is_header, cell",
-            "VARCHAR, INTEGER, INTEGER, INTEGER, BOOLEAN, VARCHAR",
-        )
-        if _tb_rows:
-            out["kg_table_triples"] = (
-                "WITH c(url, table_idx, row_idx, col_idx, is_header, cell) "
-                f"AS (VALUES {_vals(_tb_rows)}), "
-                "shape AS (SELECT url, table_idx, MAX(col_idx) AS mc "
-                "  FROM c GROUP BY url, table_idx), "
-                "two AS (SELECT url, table_idx FROM shape WHERE mc = 1), "
-                "data AS (SELECT c.* FROM c JOIN two USING (url, table_idx) "
-                "  WHERE NOT is_header), "
-                "k AS (SELECT url, table_idx, row_idx, "
-                "  array_to_string(list_filter(string_split_regex(lower(cell), "
-                "  '[^a-z0-9]+'), x -> x <> ''), '_') AS key "
-                "  FROM data WHERE col_idx = 0), "
-                "v AS (SELECT url, table_idx, row_idx, cell AS value "
-                "  FROM data WHERE col_idx = 1) "
-                "SELECT DISTINCT k.url AS subj, 'attr:' || key AS pred, "
-                "value AS obj FROM k JOIN v USING (url, table_idx, row_idx) "
-                "WHERE key <> '' AND value <> ''"
-            )
-        _jl_rows = po.jsonld_rows([_jsonld_page(d, s) for d, s in id_src])
-        out["jsonld_entities"] = _values_or_empty(
-            _jl_rows,
-            "url, block_idx, entity_type, name, entity_url, description",
-            "VARCHAR, INTEGER, VARCHAR, VARCHAR, VARCHAR, VARCHAR",
-        )
-        out["kg_jsonld_triples"] = (
-            "WITH e(url, block_idx, entity_type, name, entity_url, description) AS ("
-            + ("VALUES " + _vals(_jl_rows) if _jl_rows else
-               "SELECT NULL, NULL, NULL, NULL, NULL, NULL WHERE FALSE")
-            + "), ent AS (SELECT url, "
-            "  'schema:' || entity_type || '/' || name AS eid, "
-            "  'schema:' || entity_type AS etype "
-            "  FROM e WHERE name IS NOT NULL) "
-            "SELECT DISTINCT subj, pred, obj FROM ("
-            "  SELECT url AS subj, 'declares_entity' AS pred, eid AS obj FROM ent "
-            "  UNION ALL "
-            "  SELECT eid AS subj, 'rdf:type' AS pred, etype AS obj FROM ent)"
-        )
-        _zo_in = [
-            (d, f"doc:{d % 41}", _ZORDER_PREDS[d % 4]) for d, _s in id_src
-        ]
-        out["zorder_layout"] = _values_or_empty(
-            [
-                (d, s, p, sb, pb, z)
-                for (d, s, p), (_d, sb, pb, z) in zip(
-                    _zo_in, po.zorder_rows(_zo_in, _ZORDER_BITS)
-                )
-            ],
-            "doc_id, subj, pred, subj_bucket, pred_bucket, z",
-            "BIGINT, VARCHAR, VARCHAR, BIGINT, BIGINT, BIGINT",
-        )
-        out["crawl_budget"] = f"""
-WITH h AS (
-  SELECT 'h' || CAST(doc_id % 97 AS VARCHAR) || '.' || source
-           || '.example.org' AS host,
-         GREATEST(COALESCE(CAST(SUM(n_chars) AS DOUBLE), 0), 0) AS score
-  FROM documents GROUP BY 1
-), t AS (SELECT SUM(score) AS total, COUNT(*) AS n FROM h),
-b AS (
-  SELECT host, score,
-         CASE WHEN t.total > 0
-              THEN {_CRAWL_BUDGET}.0 * (score / t.total)
-              ELSE {_CRAWL_BUDGET}.0 * (1.0 / t.n) END AS exact_share
-  FROM h, t
-), fl AS (
-  SELECT *, CAST(FLOOR(exact_share) AS BIGINT) AS flr FROM b
-), lo AS (SELECT {_CRAWL_BUDGET} - SUM(flr) AS leftover FROM fl),
-r AS (
-  SELECT *, ROW_NUMBER() OVER (
-    ORDER BY exact_share - flr DESC, host ASC) AS rn
-  FROM fl)
-SELECT host, score, ROUND(exact_share, 6) AS exact_share,
-       flr + CASE WHEN rn <= (SELECT leftover FROM lo) THEN 1 ELSE 0 END
-         AS quota
-FROM r
-"""
-        out["host_boilerplate"] = _values_or_empty(
-            po.host_boilerplate_strip_rows(
-                [(s, d, _boiler_text(d, t, s)) for d, t, s in docs_src]
-            ),
-            "id, host, clean_text, n_lines_kept, n_lines_removed",
-            "BIGINT, VARCHAR, VARCHAR, BIGINT, BIGINT",
-        )
-        out["kg_align_snapshots"] = """
-WITH lt AS (
-  SELECT DISTINCT lid, tok FROM (
-    SELECT p_partkey AS lid,
-           unnest(string_split_regex(
-             lower(p_name || ' k' || CAST(p_partkey % 101 AS VARCHAR)),
-             '[^a-z0-9]+')) AS tok
-    FROM part WHERE p_partkey % 3 <> 0)
-  WHERE tok <> ''
-), rt AS (
-  SELECT DISTINCT rid, tok FROM (
-    SELECT p_partkey + 1000000 AS rid,
-           unnest(string_split_regex(
-             lower(p_name || ' k' || CAST(p_partkey % 101 AS VARCHAR)
-                   || ' v2'),
-             '[^a-z0-9]+')) AS tok
-    FROM part WHERE p_partkey % 5 <> 0)
-  WHERE tok <> ''
-), ls AS (SELECT lid, COUNT(*) AS ln FROM lt GROUP BY lid),
-rs AS (SELECT rid, COUNT(*) AS rn FROM rt GROUP BY rid),
-pairs AS (
-  SELECT lt.lid, rt.rid, COUNT(*) AS n_shared
-  FROM lt JOIN rt USING (tok) GROUP BY lt.lid, rt.rid
-), sims AS (
-  SELECT p.lid, p.rid, p.n_shared,
-         CAST(p.n_shared AS DOUBLE) / (ls.ln + rs.rn - p.n_shared) AS sim
-  FROM pairs p JOIN ls ON ls.lid = p.lid JOIN rs ON rs.rid = p.rid
-  WHERE CAST(p.n_shared AS DOUBLE) / (ls.ln + rs.rn - p.n_shared) >= 0.34
-), ranked AS (
-  SELECT *,
-    ROW_NUMBER() OVER (PARTITION BY lid ORDER BY sim DESC, rid ASC) AS lr,
-    ROW_NUMBER() OVER (PARTITION BY rid ORDER BY sim DESC, lid ASC) AS rr
-  FROM sims)
-SELECT lid AS left_id, rid AS right_id, ROUND(sim, 6) AS sim, n_shared
-FROM ranked WHERE lr = 1 AND rr = 1
-"""
-        out["compaction_plan"] = _values_or_empty(
-            po.compaction_rows(
-                [
-                    (s, f"part-{d}.parquet", _file_size(d, _nc_of[d]))
-                    for d, s in id_src
-                ],
-                _COMPACT_TARGET,
-            ),
-            "partition, group_id, file, size_bytes, group_bytes,"
-            " n_files_in_group, rewrite",
-            "VARCHAR, INTEGER, VARCHAR, BIGINT, BIGINT, INTEGER, BOOLEAN",
-        )
-        out["weighted_sample"] = _values_or_empty(
-            po.weighted_sample_rows(lang_chars, k=5, seed=11),
-            "lang, doc_id, rank",
-            "VARCHAR, BIGINT, INTEGER",
-        )
-        out["crawl_robots"] = _values_or_empty(
-            po.robots_allowed(
-                [_robots_url(d) for d, _s in id_src], _ROBOTS_RULES, "dugbot"
-            ),
-            "url, allowed",
-            "VARCHAR, BOOLEAN",
-        )
-    except _degrade_errs as e:
-        print(f"extra pyoracle VALUES degraded: {e!r}", file=_sys.stderr)
-    return out

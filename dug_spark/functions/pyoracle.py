@@ -361,34 +361,6 @@ def sample_mix_rows(
     return out
 
 
-def semantic_dedup_rows(
-    vectors: list[tuple[int, list[float]]],
-    k: int = 8,
-    tau: float = 0.95,
-    iters: int = 2,
-) -> list[tuple[int, int, bool]]:
-    """Recompute of dedup.semantic_dedup (SemDeDup): trained Lloyd cells
-    (ivf_train — identical rounded centroids), then the greedy min-id
-    election — a vector is dropped iff some smaller-id vector in the same
-    cell has cosine ≥ tau.  The cosine folds left-to-right exactly like
-    the F.aggregate expressions and rounds half-up to 6 before the
-    comparison, mirroring the Spark side's F.round(cos, 6) >= tau."""
-    centroids = ivf_train(vectors, k, iters)
-    assigned = [(vid, v, _assign_cell(v, centroids)) for vid, v in vectors]
-    by_cell: dict = defaultdict(list)
-    for vid, v, cell in assigned:
-        by_cell[cell].append((vid, v))
-    doomed: set = set()
-    for vs in by_cell.values():
-        vs = sorted(vs, key=lambda t: t[0])
-        for j in range(1, len(vs)):
-            for i in range(j):
-                if round_half_up(_cos(vs[i][1], vs[j][1]), 6) >= tau:
-                    doomed.add(vs[j][0])
-                    break
-    return [(vid, cell, vid not in doomed) for vid, _v, cell in assigned]
-
-
 def ivf_topk(
     queries: list[tuple[int, list[float], object]],
     corpus: list[tuple[int, list[float], object]],
@@ -770,43 +742,6 @@ def pack_rows(
 
 
 MOJI_SUFFIX = " café naïve résumé — señor über"
-
-
-def mojibake_rows(docs: list[tuple[int, str]]) -> list[tuple]:
-    """(doc_id, mojibake_rounds, fixed_len) after deterministic mojibake
-    injection (doc_id%13: one latin-1 misdecode round on a non-ASCII
-    suffix; doc_id%26: two) and the ftfy-core repair rule — independent
-    recompute of textstats.fix_mojibake over the injected corpus."""
-    m1 = MOJI_SUFFIX.encode("utf-8").decode("latin-1")
-    m2 = m1.encode("utf-8").decode("latin-1")
-    out = []
-    for d, t in docs:
-        if d % 26 == 0:
-            s = t + m2
-        elif d % 13 == 0:
-            s = t + m1
-        else:
-            s = t
-        rounds = 0
-        for _ in range(2):
-            raw = None
-            for codec in ("latin-1", "cp1252"):
-                try:
-                    raw = s.encode(codec)
-                    break
-                except UnicodeEncodeError:
-                    pass
-            if raw is None:
-                break
-            try:
-                rep = raw.decode("utf-8")
-            except UnicodeDecodeError:
-                break
-            if rep == s:
-                break
-            s, rounds = rep, rounds + 1
-        out.append((d, rounds, len(s)))
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1487,61 +1422,6 @@ def _kmv_est(mins: dict, buckets: int) -> float:
     s = sum(mins.values()) + (1 << 63) * (2 * buckets - len(mins))
     est = float(buckets * buckets) * 2.0**64 / float(s) - buckets
     return round_half_up(est, 4)
-
-
-def kmv_rows(
-    docs: list[tuple[int, str, str]], buckets: int = 64
-) -> list[tuple[str, int, float, int]]:
-    """Mirror of the sketch_distinct_tokens registry query:
-    (source, buckets_hit, est_distinct, exact_distinct) per document
-    source, over whitespace tokens."""
-    toks: dict[str, list[str]] = {}
-    for _d, text, src in docs:
-        toks.setdefault(src, []).extend(
-            t for t in (text or "").split(" ") if t != ""
-        )
-    rows = []
-    for src in sorted(toks):
-        mins = _kmv_mins(toks[src], buckets)
-        rows.append(
-            (src, len(mins), _kmv_est(mins, buckets), len(set(toks[src])))
-        )
-    return rows
-
-
-def kmv_overlap_rows(
-    docs: list[tuple[int, str, str]], buckets: int = 64
-) -> list[tuple[str, float, float, float, float, float]]:
-    """Mirror of sketch_snapshot_overlap: token-vocabulary overlap between
-    the doc_id%3==0 slice and the rest of each source (3 is coprime with
-    the generator's source = doc_id%20), via sketch merge +
-    inclusion-exclusion.  (source, est_a, est_b, est_union,
-    est_intersect, jaccard_est)."""
-    halves: dict[tuple[str, int], list[str]] = {}
-    for d, text, src in docs:
-        halves.setdefault((src, 0 if d % 3 == 0 else 1), []).extend(
-            t for t in (text or "").split(" ") if t != ""
-        )
-    rows = []
-    for src in sorted({s for s, _ in halves}):
-        ma = _kmv_mins(halves.get((src, 0), []), buckets)
-        mb = _kmv_mins(halves.get((src, 1), []), buckets)
-        if not ma or not mb:
-            continue  # inner join: both sides must observe the group
-        mu = dict(ma)
-        for b, h in mb.items():
-            if b not in mu or h < mu[b]:
-                mu[b] = h
-        ea, eb, eu = (
-            _kmv_est(ma, buckets),
-            _kmv_est(mb, buckets),
-            _kmv_est(mu, buckets),
-        )
-        inter = max(round_half_up(ea + eb - eu, 4), 0.0)
-        rows.append(
-            (src, ea, eb, eu, inter, round_half_up(inter / eu, 4))
-        )
-    return rows
 
 
 def weighted_sample_rows(

@@ -12,8 +12,8 @@ Each iteration joins edges ⋈ ranks on src — with ``broadcast_ranks``
 graph) the edge side never shuffles; only the dst-keyed contribution
 aggregate moves node-sized data.  Past ~10^5-10^6 nodes the per-
 iteration re-broadcast dominates — measured at 1.6M nodes / 16M edges
-the shuffle join runs ~5× faster per iteration (jobs/
-graph_scale_evidence.py; numbers in BASELINE.md) — so pass
+the shuffle join runs ~5× faster per iteration (BASELINE.md, "PageRank
+scale evidence") — so pass
 ``broadcast_ranks=False`` there, and pre-partition edges by src once so
 every iteration reuses the exchange.
 Each iteration eagerly localCheckpoints the node-sized rank table

@@ -305,23 +305,6 @@ def _expand_in_vocab(
 _DF_AGG_WIDTH = 48
 
 
-def _group_tf(tk_col: str, group: list[str]) -> F.Column:
-    """SynonymQuery tf = Σ member tfs == count of tokens ∈ group (members
-    are distinct): ONE literal-array membership scan over the token array,
-    not |group| chained size(filter) additions — keeps the score
-    expression O(|query|) wide at fuzziness>0."""
-    if len(group) == 1:
-        # closure over a literal — NOT a default-arg lambda: `lambda x,
-        # t=...` reads as a TWO-arg (element, index) HOF and silently
-        # compares against the array position (dedup._minhash_component)
-        lit = F.lit(group[0])
-        return F.size(F.filter(tk_col, lambda x: x == lit)).cast("double")
-    members = F.array(*[F.lit(t) for t in group])
-    return F.size(
-        F.filter(tk_col, lambda x: F.array_contains(members, x))
-    ).cast("double")
-
-
 _ANALYZED = re.compile(r"[a-z0-9 ]*")
 
 
@@ -346,8 +329,11 @@ def _sql_dbl(v: float) -> str:
 
 
 def _group_tf_sql(tk_col: str, group: list[str]) -> str:
-    """SQL-text twin of ``_group_tf`` (same expressions, composed as one
-    string — py4j round-trip economy for the scoring expression)."""
+    """SynonymQuery tf = Σ member tfs == count of tokens ∈ group (members
+    are distinct): ONE literal-array membership scan over the token array,
+    not |group| chained size(filter) additions — keeps the score
+    expression O(|query|) wide at fuzziness>0.  Composed as SQL text —
+    py4j round-trip economy for the scoring expression."""
     if len(group) == 1:
         return (
             f"CAST(size(filter({tk_col}, x -> x = {_sql_str(group[0])}))"
@@ -361,21 +347,12 @@ def _group_tf_sql(tk_col: str, group: list[str]) -> str:
 
 
 def _group_present_sql(tk_col: str, group: list[str]) -> str:
-    """SQL-text twin of ``_group_present``."""
+    """≥1 group member present in the token array — arrays_overlap against
+    a literal array (the match operator=and gate under fuzzy expansion)."""
     if len(group) == 1:
         return f"array_contains({tk_col}, {_sql_str(group[0])})"
     members = "array(" + ", ".join(_sql_str(t) for t in group) + ")"
     return f"arrays_overlap({tk_col}, {members})"
-
-
-def _group_present(tk_col: str, group: list[str]) -> F.Column:
-    """≥1 group member present in the token array — arrays_overlap against
-    a literal array (the match operator=and gate under fuzzy expansion)."""
-    if len(group) == 1:
-        return F.array_contains(tk_col, group[0])
-    return F.arrays_overlap(
-        F.col(tk_col), F.array(*[F.lit(t) for t in group])
-    )
 
 
 def _term_doc_freqs(
@@ -512,8 +489,10 @@ def bm25_topk(
 
 
 def _eq_lit(t: str):
-    """Single-arg equality closure over a literal for array HOFs (see the
-    _group_tf note on why a default-arg lambda is wrong here)."""
+    """Single-arg equality closure over a literal for array HOFs — NOT a
+    default-arg lambda: `lambda x, t=...` reads as the TWO-arg (element,
+    index) HOF form and silently compares against the array position
+    (dedup._minhash_component)."""
     lit = F.lit(t)
 
     def _eq(x):
@@ -563,9 +542,7 @@ def qlm_topk(
         return base.select("id", F.lit(0.0).alias("score")).where(F.lit(False))
     stats = base.agg(
         F.sum("dl").alias("total"),
-        # _group_tf-style single-arg closures — a default-arg lambda would
-        # read as the TWO-arg (element, index) HOF form and silently
-        # compare against the array position
+        # single-arg closures (see _eq_lit)
         *[
             F.sum(F.size(F.filter("toks", _eq_lit(t)))).alias(f"cf_{i}")
             for i, t in enumerate(toks)

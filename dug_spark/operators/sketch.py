@@ -33,10 +33,10 @@ Design — every number is deterministic and cross-checkable:
       n_hat = B^2 * 2^64 / double(S) - B
   so the only floating-point steps are one decimal->double cast and one
   division — bit-reproducible across partition orders, mirrored exactly
-  by dug_spark.functions.pyoracle.kmv_rows (spec-derived XXH64), and safe
-  to hash-compare at ROUND(.., 4).  This is the same exact-integer
-  discipline the PageRank oracle rounding advisory (ADVICE r4) asked for,
-  applied from the start.
+  by dug_spark.functions.pyoracle._kmv_mins/_kmv_est (spec-derived
+  XXH64), and safe to hash-compare at ROUND(.., 4).  This is the same
+  exact-integer discipline the PageRank oracle rounding advisory (ADVICE
+  r4) asked for, applied from the start.
 
 Mergeability: sketches are unioned by ``min`` per (group, bucket) —
 associative and exact, so per-partition, per-day, or per-snapshot

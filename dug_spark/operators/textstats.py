@@ -667,7 +667,8 @@ def _repair_mojibake_text(s: str, max_rounds: int = 2) -> tuple[str, int]:
     misdecoded as a legacy codec) — undo it, up to ``max_rounds`` times
     for double-encoded text.  Legitimate accented text fails the UTF-8
     re-decode (single high bytes are invalid UTF-8), so it is never
-    touched.  Pure function; mirrored in pyoracle.mojibake_rows."""
+    touched.  Pure function; tests/test_mojibake.py checks it against
+    hand-built misdecodes."""
     rounds = 0
     for _ in range(max_rounds):
         raw = None

@@ -66,7 +66,6 @@ class Pipeline:
     use_extracted_html: bool = False
     canonicalize: bool = True
     greenlist: list[str] | None = None  # None → reference default (F6)
-    persist_mentions: bool = False
     # collect {source_partition: (input_docs, mentions)} from the annotate
     # scan via a Spark accumulator (plans/lineage.py) — zero extra jobs
     track_lineage: bool = False
@@ -77,10 +76,6 @@ class Pipeline:
     # chain.  Set False to run the stepwise operator chain instead
     # (identical output triples — test_pipeline asserts the equivalence).
     fold_dimensions: bool = True
-    # Skip the partition-floor check when the caller guarantees the corpus
-    # is already well-partitioned (the check costs a plan→RDD conversion
-    # on the driver per run).
-    ensure_min_partitions: bool = True
     _canon_mapping: DataFrame | None = field(default=None, init=False, repr=False)
     _effective_dict: DataFrame | None = field(default=None, init=False, repr=False)
     _dict_entries: dict | None = field(default=None, init=False, repr=False)
@@ -165,10 +160,9 @@ class Pipeline:
         # would serialize every downstream pandas-UDF stage.  At real
         # corpus scale the scan already has thousands of partitions and
         # this is a no-op.
-        if self.ensure_min_partitions:
-            target = df.sparkSession.sparkContext.defaultParallelism
-            if df.rdd.getNumPartitions() < target:
-                df = df.repartition(target, "url")
+        target = df.sparkSession.sparkContext.defaultParallelism
+        if df.rdd.getNumPartitions() < target:
+            df = df.repartition(target, "url")
         if self.use_extracted_html:
             # BASELINE invariant: extract_text(html) byte-identical to
             # text — as whole-stage codegen (extract_text_col), so the
@@ -202,15 +196,6 @@ class Pipeline:
                     )
         if self.synonyms is not None:
             m = normalize.attach_synonyms(m, self.synonyms)
-
-        if self.persist_mentions:
-            # opt-in: callers that materialize mentions AND the derived
-            # tables avoid re-running the annotation scan per output.
-            # build_triples always persists its own narrow (element_id,
-            # curie) projection, so triples alone never needs this.
-            from pyspark import StorageLevel
-
-            m = m.persist(StorageLevel.MEMORY_AND_DISK)
 
         conc = concepts.build_concepts(m)
         edges = concepts.element_concept_edges(m)

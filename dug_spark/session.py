@@ -38,6 +38,14 @@ if os.path.isdir(_SHM) and os.access(_SHM, os.W_OK):
     _COMMON["spark.local.dir"] = os.path.join(_SHM, "spark_local")
 
 
+def _default_driver_memory() -> str:
+    """A quarter of physical memory, capped at 48g.  In local mode the
+    driver JVM is the whole engine; a heap larger than the host lets it
+    grow until the kernel OOM-kills it mid-run."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys // 4, 48 << 30) >> 20}m"
+
+
 def get_spark(
     app_name: str = "dug_spark",
     cores: int | None = None,
@@ -46,10 +54,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a local SparkSession.
 
-    ``cores`` defaults to $SPARK_GRAFT_CPUS or 32.  Shuffle partitions
-    default to the core count — at cluster scale this would instead be
-    sized so post-shuffle partitions land at 128–256 MB (AQE coalescing
-    makes the exact number forgiving).
+    ``cores`` defaults to $SPARK_GRAFT_CPUS or 32, driver memory to
+    $SPARK_GRAFT_DRIVER_MEM or ``_default_driver_memory()``.  Shuffle
+    partitions default to the core count — at cluster scale this would
+    instead be sized so post-shuffle partitions land at 128–256 MB (AQE
+    coalescing makes the exact number forgiving).
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -59,7 +68,10 @@ def get_spark(
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
     )
     java_opts = os.environ.get("SPARK_GRAFT_JAVA_OPTS")
     if java_opts:
