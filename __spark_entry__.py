@@ -1649,8 +1649,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # round 5 (cont.): kg_triples_co_mention (unweighted pairs — a
         # strict projection of kg_npmi's output, and its triple form still
         # rides in kg_triples_all) cedes its slot to the NPMI-weighted
-        # edge family; the pair view keeps continuous verification in the
-        # extra registry
+        # edge family
         "kg_npmi": q_kg_npmi,
         "kg_triples_all": q_kg_triples_all,
         "kg_connected_components": q_kg_connected_components,
@@ -1659,16 +1658,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # BGP matching (the TranQL-analog) and seeded k-hop reachability.
         # rel_pricing_summary / rel_window_hourly cede their slots (plain
         # one-shot SQL aggregations whose shapes ride in dedup_exact /
-        # rel_top_events_per_user); both keep continuous verification in
-        # the extra registry
+        # rel_top_events_per_user)
         "kg_bgp": q_kg_bgp,
         "kg_khop": q_kg_khop,
         # round 5 (cont. 4): dedup_near_shingle (the documented crossJoin
         # exact-audit path — near-dup semantics stay driver-visible via
         # near_dedup_corpus, whose candidate verify IS this Jaccard on
         # the LSH candidate set) cedes its slot to the SHACL-lite triple
-        # integrity gate, the kg_construct publish gate; the shingle row
-        # stays green in the extra registry
+        # integrity gate, the kg_construct publish gate
         "kg_validate": q_kg_validate,
         "kg_expand": q_kg_expand,
         "kg_node_to_elements": q_kg_node_to_elements,
@@ -1687,8 +1684,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # round 5: text_c4_clean (a strict sub-stage of curate_corpus,
         # whose oracle row carries the same per-doc C4 verdicts) cedes
         # its slot to the fuzziness=1 contract row — the reference's
-        # DEFAULT match semantics; c4 keeps continuous verification in
-        # the extra registry
+        # DEFAULT match semantics
         "search_bm25_fuzzy": q_search_bm25_fuzzy,
         "search_concepts_bm25": q_search_concepts_bm25,
         "rel_var_grouped_filtered": q_var_grouped_filtered,
@@ -1698,13 +1694,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # argmax-per-group window semantics stay driver-visible via
         # rel_top_events_per_user AND via kg_disambiguate's own winner
         # election) cedes its slot to entity disambiguation, the
-        # kg_construct-core operator; the top-hit row stays green in the
-        # extra registry
+        # kg_construct-core operator
         "kg_disambiguate": q_kg_disambiguate,
         # round 5 (cont.): rel_top_orders (plain pagination, T2 —
         # rel_top_events_per_user keeps window-rank semantics driver-
-        # visible) cedes its slot to the ontology ancestor closure; the
-        # pagination row stays green in the extra registry
+        # visible) cedes its slot to the ontology ancestor closure
         "kg_closure": q_kg_closure,
         "rel_facet_counts": q_rel_facet_counts,
         "rel_top_events_per_user": q_rel_top_events_per_user,
@@ -1724,7 +1718,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # round 5 (cont.): rel_union_dedup (U1 unionByName+distinct —
         # exercised inside kg_triples_all and near_dedup_corpus) cedes
         # its slot to typed relation extraction, the kg_construct-core
-        # operator; the union row stays green in the extra registry
+        # operator
         "relation_extract": q_relation_extract,
         "rel_merge_upsert": q_rel_merge_upsert,
         # round 5 (cont. 2): rel_grouped_collect (A12 collect_list
@@ -1732,15 +1726,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # grouped flatten) and rel_metadata_extract (X-class regex
         # projection — exercised inside relation_extract's zipped
         # two-group extraction) cede their slots to the IVFPQ ANN search
-        # and web-graph SCC rows; both stay green in the extra registry
+        # and web-graph SCC rows
         "ann_pq": q_ann_pq,
         "web_scc": q_web_scc,
         # round 5 (cont. 4): url_dedup (newest-capture max_by election —
         # its argmax-per-key shape stays driver-visible via
-        # rel_top_events_per_user and inside crawl_churn's latest-capture
-        # logic in the extra registry) cedes its slot to link prediction
-        # over the host graph; the url row stays green in the extra
-        # registry
+        # rel_top_events_per_user) cedes its slot to link prediction
+        # over the host graph
         "web_link_pred": q_web_link_pred,
         "dedup_exact": q_dedup_exact,
         "text_quality": q_text_quality,
@@ -1748,8 +1740,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # cosine top-k semantics stay driver-visible via ann_lsh /
         # ann_ivf_trained, whose exact re-rank IS this computation on the
         # candidate set) cedes its slot to DSIR importance resampling,
-        # the training-data selection operator; the knn row stays green
-        # in the extra registry
+        # the training-data selection operator
         "dsir_select": q_dsir_select,
         "dedup_embedding": q_dedup_embedding,
         # round 4 (cont.): LM-perplexity filtering and sequence packing
@@ -1764,8 +1755,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # pure-Python spec recompute (see _pyoracle_values)
         # round 5: dedup_minhash (candidate pairs) cedes its slot to the
         # composed end-state — pairs → connected clusters → keeper
-        # election; the pair view keeps continuous verification in the
-        # extra registry
+        # election
         "near_dedup_corpus": q_near_dedup_corpus,
         "dedup_simhash": q_dedup_simhash,
         "ann_lsh": q_ann_lsh,
@@ -2151,8 +2141,8 @@ def _web_linked_docs(spark, sf_dir):
     """Deterministic linked HTML corpus synthesized from the documents
     table (20 hosts; three doc_id-derived absolute / www-prefixed /
     scheme-relative links per page, plus a relative and a fragment link
-    that must drop out) — shared by the web_host_rank and web_triangles
-    rows; the oracle side mirrors the arithmetic in the web_edges CTE."""
+    that must drop out) — shared by the web_link_pred and web_scc rows;
+    the oracle side mirrors the arithmetic in the web_edges CTE."""
     did = F.col("doc_id")
     h = lambda k: F.concat(
         F.lit("h"), (k % 20).cast("long").cast("string"), F.lit(".example.org")

@@ -28,5 +28,3 @@ Layout
 - ``plans``        checkpoint manifest / exact resume, skew-salting helpers
 - ``pipeline``     end-to-end corpus → triples driver
 """
-
-__version__ = "0.1.0"

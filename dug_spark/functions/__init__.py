@@ -4,7 +4,5 @@ from .text import (  # noqa: F401
     extract_text_udf,
     ngram_jaccard,
     preprocess_series,
-    preprocess_udf,
     sliding_window,
-    sliding_window_udf,
 )

@@ -1,8 +1,7 @@
 """Biolink naming helpers (SURVEY §2.7 X5/X6).
 
 - ``biolink_snake_case``: CamelCase → snake_case with non-alnum → '_'
-  (/root/reference/src/dug/utils.py:53-72) — provided both as a Python
-  function and as a Column expression (regexp chain, whole-stage codegen).
+  (the reference's src/dug/utils.py:53-72).
 - ``prettify_biolink_type``: 'biolink:SmallMolecule' → 'small molecule'
   (annotators/_base.py:171-179 fallback path; the bmt-toolkit lookup is a
   static table → broadcast join in normalize when a table is supplied).
@@ -12,9 +11,6 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 
 def biolink_snake_case(arg: str) -> str:
     tmp = re.sub(r"\W", "_", arg)
@@ -22,26 +18,8 @@ def biolink_snake_case(arg: str) -> str:
     return re.sub(r"^[A-Z](?=[a-z])", lambda c: c.group(0).lower(), tmp)
 
 
-def biolink_snake_case_col(col) -> Column:
-    """Column form of X5 (regexp chain).  Note: lower-cases the whole
-    result rather than only hump letters — identical on CamelCase input,
-    which is all the reference feeds it; use the Python form inside an
-    Arrow UDF if exact all-caps-acronym behavior matters."""
-    c = F.regexp_replace(col, r"\W", "_")
-    # lowercase a single interior capital between lowercase letters:
-    # insert _ then lower-case the whole camel hump via two passes
-    c = F.regexp_replace(c, r"(?<=[a-z])([A-Z])(?=[a-z])", "_$1")
-    return F.lower(c)
-
-
 def prettify_biolink_type(bl_type: str) -> str:
     """'biolink:SmallMolecule' → 'small molecule' (fallback regex split,
     annotators/_base.py:174-179)."""
     bare = bl_type.replace("biolink:", "")
     return " ".join(re.split("(?=[A-Z])", bare)[1:]).lower()
-
-
-def prettify_biolink_type_col(col) -> Column:
-    bare = F.regexp_replace(col, "^biolink:", "")
-    spaced = F.regexp_replace(bare, r"(?<=.)(?=[A-Z])", " ")
-    return F.lower(spaced)

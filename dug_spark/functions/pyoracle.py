@@ -251,10 +251,6 @@ def lsh_sigs(vectors: list[list[float]], planes: list[list[float]]) -> list[int]
     return out
 
 
-def lsh_sig(v: list[float], planes: list[list[float]]) -> int:
-    return lsh_sigs([v], planes)[0]
-
-
 def lsh_topk(
     queries: list[tuple[int, list[float]]],
     corpus: list[tuple[int, list[float]]],

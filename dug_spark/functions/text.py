@@ -14,7 +14,7 @@ from typing import Iterator, List
 
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, StringType
+from pyspark.sql.types import DoubleType, StringType
 
 # Reference defaults: debreviator {"bmi": "body mass index", "_": " "}
 # (monarch_annotator.py:174-176), stopwords ["the"] (config.py:36-39).
@@ -56,15 +56,6 @@ def preprocess_series(
     return out.map(lambda t: " ".join(w for w in t.split() if w not in stop))
 
 
-def preprocess_udf(debreviator=None, stopwords=None):
-    @F.pandas_udf(StringType())
-    def _pp(batch: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in batch:
-            yield preprocess_series(s, debreviator, stopwords)
-
-    return _pp
-
-
 def sliding_window(
     text: str, max_characters: int = 2000, padding_words: int = 5
 ) -> List[str]:
@@ -95,17 +86,6 @@ def sliding_window(
                 # index lands exactly on the last word
                 chunks.append(buf)
             return chunks
-
-
-def sliding_window_udf(max_characters: int = 2000, padding_words: int = 5):
-    @F.pandas_udf(ArrayType(StringType()))
-    def _sw(batch: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in batch:
-            yield s.fillna("").map(
-                lambda t: sliding_window(t, max_characters, padding_words)
-            )
-
-    return _sw
 
 
 def extract_text_col(col) -> F.Column:

@@ -392,23 +392,6 @@ def near_dedup_corpus(
     )
 
 
-def near_dedup_keepers(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    **kwargs,
-) -> DataFrame:
-    """The kept corpus: ``df`` semi-joined to near_dedup_corpus keepers —
-    the frame a pipeline feeds to tokenization.  One corpus-keyed join;
-    all other work is duplicate-graph-sized."""
-    keepers = (
-        near_dedup_corpus(df, id_col, text_col, **kwargs)
-        .where("keep")
-        .select(id_col)
-    )
-    return df.join(keepers, id_col, "left_semi")
-
-
 def simhash(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 64
 ) -> DataFrame:

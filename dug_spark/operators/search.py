@@ -1128,26 +1128,6 @@ def search_variables(
     )
 
 
-def make_result(hits: DataFrame) -> DataFrame:
-    """_make_result reshape (async_search.py:340-398): group hits by
-    data_type → collection, nest the elements."""
-    return (
-        hits.groupBy("data_type", "collection_id")
-        .agg(
-            F.first("collection_name").alias("c_name"),
-            F.collect_list(
-                F.struct("element_id", "element_name", "element_desc", "score")
-            ).alias("elements"),
-        )
-        .groupBy("data_type")
-        .agg(
-            F.collect_list(
-                F.struct("collection_id", "c_name", "elements")
-            ).alias("collections")
-        )
-    )
-
-
 def group_variables(hits: DataFrame) -> DataFrame:
     """search_var_grouped flatten-join (J11/A13, server.py:150-195): group
     flat variable×study hits by variable id — one row per variable carrying
@@ -1333,21 +1313,6 @@ def facet_counts(
         .orderBy(F.desc("n"), F.asc("value"))
         for k in facet_cols
     }
-
-
-def program_list(variables: DataFrame) -> DataFrame:
-    """search_program_list (async_search.py:568-594): data_type buckets +
-    collection cardinality."""
-    return (
-        variables.groupBy("data_type")
-        .agg(F.count_distinct("collection_id").alias("n_collections"))
-        .orderBy("data_type")
-    )
-
-
-def dump_concepts(concepts: DataFrame, offset: int = 0, size: int = 100) -> DataFrame:
-    """dump_concepts (async_search.py:73-81): stable full export page."""
-    return concepts.orderBy("concept_id").offset(offset).limit(size)
 
 
 def search_kg(

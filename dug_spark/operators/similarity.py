@@ -122,7 +122,7 @@ def lsh_signatures(
     64-plane bank through `aggregate(zip_with(...))` costs ~4096
     interpreted ops per ROW — measured ~4× slower than 16 planes on the
     same data, while the numpy path is flat in `bits` up to memory
-    bandwidth.  pyoracle.lsh_sig recomputes with the same numpy
+    bandwidth.  pyoracle.lsh_sigs recomputes with the same numpy
     primitive, so the sketch stays bit-reproducible cross-checked."""
     if not 0 < bits <= 64:
         raise ValueError(f"bits must be in 1..64, got {bits}")

@@ -37,18 +37,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-VIOLATION_SCHEMA = "subj string, pred string, obj string, violation string"
-
-
-def _prefix(col):
-    # text before the first ':', '' when there is none — matches
-    # normalize.curie_prefix semantics for proper CURIEs and gives bare
-    # ids (document urls) the '' prefix.
-    return F.when(
-        F.col(col).contains(":"), F.split(F.col(col), ":", 2).getItem(0)
-    ).otherwise(F.lit(""))
-
-
 def validate_triples(
     triples: DataFrame,
     constraints: DataFrame,

@@ -18,6 +18,19 @@ from .functions.text import extract_text_col
 from .operators import annotate, canonicalize, concepts, link, normalize, triples
 
 
+def _scan_partitions(df: DataFrame) -> int:
+    """Partition count of ``df``'s widest input scan, read from the
+    physical plan without running a Spark job.  ``df.rdd`` would execute
+    an adaptive plan's broadcast and shuffle stages (the recrawl's
+    hash-compare join), which the real write then runs again; a leaf
+    scan's RDD only lists its files."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()  # the initial plan; no stage has run
+    leaves = plan.collectLeaves()
+    return max(leaves.apply(i).execute().getNumPartitions() for i in range(leaves.size()))
+
+
 @dataclass
 class PipelineResult:
     mentions: DataFrame
@@ -161,7 +174,7 @@ class Pipeline:
         # corpus scale the scan already has thousands of partitions and
         # this is a no-op.
         target = df.sparkSession.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < target:
+        if _scan_partitions(df) < target:
             df = df.repartition(target, "url")
         if self.use_extracted_html:
             # BASELINE invariant: extract_text(html) byte-identical to

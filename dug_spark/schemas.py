@@ -14,8 +14,6 @@ from pyspark.sql.types import (
     ArrayType,
     BinaryType,
     DoubleType,
-    IntegerType,
-    LongType,
     MapType,
     StringType,
     StructField,
@@ -126,50 +124,5 @@ ELEMENTS = StructType(
         StructField("element_action", S, True),
         StructField("collection_action", S, True),
         StructField("metadata", MapType(S, S), True),
-    ]
-)
-
-# Concepts keyed by canonical CURIE (DugConcept, parsers/_base.py:84-150).
-CONCEPTS = StructType(
-    [
-        StructField("concept_id", S, False),
-        StructField("name", S, True),
-        StructField("description", S, True),
-        StructField("type", S, True),
-        StructField("search_terms", AS, True),
-        StructField("optional_terms", AS, True),
-    ]
-)
-
-# The engine's native output: normalized triple table (BASELINE north_rule).
-TRIPLES = StructType(
-    [
-        StructField("subj", S, False),
-        StructField("pred", S, False),
-        StructField("obj", S, False),
-        StructField("source_partition", IntegerType(), True),
-        StructField("lineage", S, True),
-    ]
-)
-
-# Checkpoint manifest: one row per (stage, input partition) — exact resume
-# + extraction-count metrics (replaces the crawlspace file cache,
-# crawler.py:37-43 / concept_expander.py:29-32).
-MANIFEST = StructType(
-    [
-        StructField("stage", S, False),
-        StructField("partition_id", IntegerType(), False),
-        StructField("input_rows", LongType(), True),
-        StructField("output_rows", LongType(), True),
-        StructField("wall_ms", LongType(), True),
-        StructField("run_id", S, True),
-    ]
-)
-
-EMBEDDINGS = StructType(
-    [
-        StructField("vec_id", LongType(), False),
-        StructField("embedding", ArrayType(DoubleType()), False),
-        StructField("label", IntegerType(), True),
     ]
 )

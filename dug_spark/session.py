@@ -17,6 +17,15 @@ from pyspark.sql import SparkSession
 #  - UTC session TZ: DuckDB-oracle comparability (duckdb timestamps are
 #    UTC-naive).
 #  - maxRecordsPerBatch: bounds pandas-UDF batch memory on wide text rows.
+#  - codegen cache: Spark keeps compiled whole-stage classes in an LRU
+#    cache of 100 entries by default, but one build → recrawl → KG reads →
+#    compact cycle uses ~140 classes, so at that size every operation's
+#    classes are evicted before its next call and Janino compiles them
+#    again (~12 ms a class, and a fresh class for the JIT to warm).
+#    kgbench's build_dense set-up plus three cycles needs 290 distinct
+#    classes (659 compiles at the default size); 1000 entries is ~3× that
+#    working set and a few MB of bytecode (~2.9 KB a class).  Static
+#    conf: it only takes effect when the session is created.
 _COMMON = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -27,6 +36,7 @@ _COMMON = {
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
     "spark.ui.enabled": "false",
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 # Shuffle/spill dir: prefer tmpfs when present — this sandbox's block
@@ -83,9 +93,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -99,6 +99,43 @@ def test_pipeline_determinism(spark):
     assert a == b
 
 
+def test_run_over_recrawl_join_runs_no_job(spark, tmp_path, monkeypatch):
+    """Planning a recrawl's change set (incremental_update's url-keyed
+    hash-compare join, broadcast under AQE) runs no Spark job: the
+    partition floor reads its count from the plan, where ``df.rdd``
+    ran the join's broadcast stage, which the write then ran again.
+    build_triples is stubbed out: its lazy localCheckpoint executes the
+    input's adaptive stages as well, and the checkpoint it returns reuses
+    their output."""
+    from dug_spark.operators import triples
+
+    path = str(tmp_path / "pages")
+    fixtures.heart_corpus(spark, n_docs=24).write.parquet(path)
+    prev = spark.read.parquet(path)
+    new = prev.withColumn(
+        "text", F.when(F.col("url").endswith("/3"), "heart attack").otherwise(F.col("text"))
+    )
+    h = F.xxhash64("text")
+    changed = (
+        new.withColumn("_h", h)
+        .join(prev.select("url", h.alias("_h_prev")), "url", "left")
+        .where(F.col("_h_prev").isNull() | (F.col("_h") != F.col("_h_prev")))
+        .drop("_h", "_h_prev")
+    )
+    monkeypatch.setattr(triples, "build_triples", lambda mentions, kg_edges: mentions)
+    pipe = _pipeline(spark)
+    pipe.run(prev)  # the dictionary fold runs its jobs once per pipeline
+    sc = spark.sparkContext
+    sc.setJobGroup("pipe_run", "pipe_run")
+    try:
+        pipe.run(changed)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("pipe_run")) == []
+    assert [r["url"] for r in changed.collect()] == ["https://example.org/doc/3"]
+
+
 def test_pipeline_kg_expansion_wiring(spark):
     """crawler.py:71-95: the run expands mention concepts against the KG —
     optional_terms (A4) fill from answer-node names+synonyms, answers are
