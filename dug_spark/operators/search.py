@@ -328,30 +328,33 @@ def _sql_dbl(v: float) -> str:
     return f"CAST('{float(v)!r}' AS DOUBLE)"
 
 
-def _group_tf_sql(tk_col: str, group: list[str]) -> str:
-    """SynonymQuery tf = Σ member tfs == count of tokens ∈ group (members
-    are distinct): ONE literal-array membership scan over the token array,
-    not |group| chained size(filter) additions — keeps the score
-    expression O(|query|) wide at fuzziness>0.  Composed as SQL text —
-    py4j round-trip economy for the scoring expression."""
+def _sql_group(group: list[str]) -> str:
+    """A synonym group as SQL: its one term, or an array of its terms."""
     if len(group) == 1:
-        return (
-            f"CAST(size(filter({tk_col}, x -> x = {_sql_str(group[0])}))"
-            " AS DOUBLE)"
-        )
-    members = "array(" + ", ".join(_sql_str(t) for t in group) + ")"
+        return _sql_str(group[0])
+    return "array(" + ", ".join(_sql_str(t) for t in group) + ")"
+
+
+def _group_tf_sql(tk_col: str, members: str, single: bool) -> str:
+    """SynonymQuery tf = Σ member tfs == count of tokens ∈ group (members
+    are distinct): ONE membership scan over the token array, not |group|
+    chained size(filter) additions — keeps the score expression
+    O(|query|) wide at fuzziness>0.  ``members`` is SQL for the group (a
+    string, or an array unless ``single``).  Composed as SQL text — py4j
+    round-trip economy for the scoring expression."""
+    if single:
+        return f"CAST(size(filter({tk_col}, x -> x = {members})) AS DOUBLE)"
     return (
         f"CAST(size(filter({tk_col}, x -> array_contains({members}, x)))"
         " AS DOUBLE)"
     )
 
 
-def _group_present_sql(tk_col: str, group: list[str]) -> str:
+def _group_present_sql(tk_col: str, members: str, single: bool) -> str:
     """≥1 group member present in the token array — arrays_overlap against
-    a literal array (the match operator=and gate under fuzzy expansion)."""
-    if len(group) == 1:
-        return f"array_contains({tk_col}, {_sql_str(group[0])})"
-    members = "array(" + ", ".join(_sql_str(t) for t in group) + ")"
+    the member array (the match operator=and gate under fuzzy expansion)."""
+    if single:
+        return f"array_contains({tk_col}, {members})"
     return f"arrays_overlap({tk_col}, {members})"
 
 
@@ -469,7 +472,7 @@ def bm25_topk(
         # group, not |group| chained size(filter) additions: keeps the
         # score expression O(|query|) deep at fuzziness>0 where a group
         # can hold max_expansions members (Catalyst codegen width guard)
-        tf = _group_tf_sql("toks", group)
+        tf = _group_tf_sql("toks", _sql_group(group), len(group) == 1)
         score_terms.append(
             f"{_sql_dbl(idf)} * {tf} * {_sql_dbl(k1 + 1.0)} / ({tf}"
             f" + {_sql_dbl(k1)} * ({_sql_dbl(1.0 - b)}"
@@ -890,6 +893,22 @@ def _score_topk(
     # its old Column tree node for node (same operators, same association
     # order, float literals spliced via repr → parseDouble exact
     # round-trip), so scores are bit-identical.
+    #
+    # What depends on the query or the index (terms, phrase, idf, avgdl)
+    # is bound, not spliced into the score: ``bind`` returns a column
+    # ``_p<i>`` of a one-row ``inline`` generator over a literal struct.
+    # A literal double is written into the generated Java source, and a
+    # literal string reorders its common subexpressions, so with literals
+    # every distinct query compiled its own classes (~30 ms) while a
+    # repeated one reused them.  Bound, a query compiles only the first
+    # time its shape (terms per field, synonym group sizes) is seen.
+    params: list[str] = []
+
+    def bind(sql: str) -> str:
+        params.append(sql)
+        return f"_p{len(params) - 1}"
+
+    padded_phrase = bind(_sql_str(" " + phrase + " "))
     contribs = []
     for fname, _col, clauses, arr in fields:
         n_f = state.doc_count[fname]
@@ -902,24 +921,27 @@ def _score_topk(
             )
         else:
             groups = {t: [t] for t in toks}
-        avgdl = state.sum_dl[fname] / float(n_f)
+        avgdl = bind(_sql_dbl(state.sum_dl[fname] / float(n_f)))
+        members = {q: bind(_sql_group(groups[q])) for q in toks}
         terms = []
         for q in toks:
             group = groups[q]
             # SynonymQuery docFreq
             df_t = max(df_by_term.get(t, 0) for t in group)
             idf = math.log(1.0 + (n_f - df_t + 0.5) / (df_t + 0.5))
-            tf = _group_tf_sql(f"tk_{fname}", group)  # Σ member tfs, one scan
+            # Σ member tfs, one scan
+            tf = _group_tf_sql(f"tk_{fname}", members[q], len(group) == 1)
             terms.append(
-                f"{_sql_dbl(idf)} * {tf} * {_sql_dbl(k1 + 1.0)} / ({tf}"
+                f"{bind(_sql_dbl(idf))} * {tf} * {_sql_dbl(k1 + 1.0)} / ({tf}"
                 f" + {_sql_dbl(k1)} * ({_sql_dbl(1.0 - b)}"
                 f" + {_sql_dbl(b)} * CAST(dl_{fname} AS DOUBLE)"
-                f" / {_sql_dbl(avgdl)}))"
+                f" / {avgdl}))"
             )
         bm25 = " + ".join(terms)
         padded = f"concat(' ', array_join(tk_{fname}, ' '), ' ')"
         all_present = " AND ".join(
-            _group_present_sql(f"tk_{fname}", groups[q]) for q in toks
+            _group_present_sql(f"tk_{fname}", members[q], len(groups[q]) == 1)
+            for q in toks
         )
         mult = _sql_dbl(0.0)
         for gate, boost in clauses:
@@ -929,10 +951,10 @@ def _score_topk(
                     # position_increment_gap — no cross-element phrases)
                     hit = (
                         f"exists(el_{fname}, p ->"
-                        f" contains(p, {_sql_str(' ' + phrase + ' ')}))"
+                        f" contains(p, {padded_phrase}))"
                     )
                 else:
-                    hit = f"contains({padded}, {_sql_str(' ' + phrase + ' ')})"
+                    hit = f"contains({padded}, {padded_phrase})"
                 g = f"IF({hit}, {_sql_dbl(1.0)}, {_sql_dbl(0.0)})"
             elif gate == "and":
                 g = f"IF({all_present}, {_sql_dbl(1.0)}, {_sql_dbl(0.0)})"
@@ -947,8 +969,10 @@ def _score_topk(
     total = " + ".join(contribs)
     if where is not None:
         base = base.where(where)
+    bound = ", ".join(f"'_p{i}', {v}" for i, v in enumerate(params))
     return (
-        base.selectExpr(
+        base.selectExpr("*", f"inline(array(named_struct({bound})))")
+        .selectExpr(
             "id", *[f"`{c}`" for c in extra_cols], f"{total} AS _raw"
         )
         .where(F.col("_raw") > 0)

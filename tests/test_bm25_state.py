@@ -105,6 +105,21 @@ def test_steady_state_search_runs_one_job(spark):
     assert n == [1]
 
 
+def test_new_query_of_a_seen_shape_compiles_no_class(spark):
+    """Query terms, phrase, idf and avgdl are bound as columns of a one-row
+    generator, not spliced into the score as literals, so a query with a
+    new text but a shape already served (two terms here) reuses the
+    generated classes.  With literals every new text compiled 2."""
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    idx = spark.createDataFrame(_concept_rows(), CONCEPT_SCHEMA)
+    search.search_concepts_bm25(idx, "heart attack", k=10).collect()
+    for q in ("blood pressure", "stroke risk", "reflex factor"):
+        c0 = codegen.METRIC_COMPILATION_TIME().getCount()
+        hits = search.search_concepts_bm25(idx, q, k=10).collect()
+        assert hits, q
+        assert codegen.METRIC_COMPILATION_TIME().getCount() - c0 == 0, q
+
+
 def _scores(df):
     return {r["concept_id"]: r["score"] for r in df.collect()}
 
