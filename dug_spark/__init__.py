@@ -20,11 +20,21 @@ Layout
                    external data
 - ``functions``    scalar/vectorized text functions (preprocess, chunking,
                    n-gram scoring)
-- ``operators``    the operator inventory from SURVEY.md §2 (annotate,
-                   normalize, canonicalize, expand, aggregate, dedup,
-                   similarity, text-stats, search)
+- ``operators``    the KG path (annotate, link, normalize, canonicalize,
+                   expand, concepts, triples, validate, bgp, search,
+                   sink) plus the operators the ``__spark_entry__``
+                   queries use (dedup, similarity, text-stats, curate,
+                   lm, importance, graph, weblinks, relations,
+                   multimodal), and two modules only tests reach yet
+                   (crawl, sketch)
 - ``sources``      parsers for the reference's input formats (dbGaP-style
-                   XML, TOPMed TSV+tags, RADx JSON)
-- ``plans``        checkpoint manifest / exact resume, skew-salting helpers
+                   XML, TOPMed TSV+tags, RADx JSON, WARC)
+- ``plans``        JSON commit records, checkpoint manifest / exact
+                   resume, skew-salting helpers, snapshot tables
 - ``pipeline``     end-to-end corpus → triples driver
+
+Every other module is reached from ``__spark_entry__.py``, ``kgbench/``
+or ``jobs/run_pipeline.py``, or is Dug's own surface (sources, sink,
+biolink, metrics); ``tests/test_reachability.py`` checks it and holds the
+test-only modules to its named list.
 """

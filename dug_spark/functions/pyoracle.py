@@ -740,116 +740,6 @@ def pack_rows(
 MOJI_SUFFIX = " café naïve résumé — señor über"
 
 
-# ---------------------------------------------------------------------------
-# BPE subword training/apply (Sennrich et al. 2016) — independent mirror
-# of operators/bpe.py, including its batched-round candidate-slice
-# semantics (rank by (cnt desc, left, right), 4·batch slice, greedy
-# symbol-disjoint prefix per round).
-
-
-def bpe_train(
-    docs: list[tuple[int, str]],
-    num_merges: int,
-    batch: int = 1,
-    min_count: int = 2,
-    max_words: int = 50_000,
-) -> list[tuple[int, str, str, int]]:
-    wc: dict[str, int] = {}
-    for _id, text in docs:
-        for w in (text or "").split(" "):
-            if w:
-                wc[w] = wc.get(w, 0) + 1
-    items = sorted(
-        ((w, n) for w, n in wc.items() if n >= min_count),
-        key=lambda t: (-t[1], t[0]),
-    )[:max_words]
-    words = [(list(w[:-1]) + [w[-1] + "</w>"], n) for w, n in items]
-
-    merges: list[tuple[int, str, str, int]] = []
-    while len(merges) < num_merges:
-        want = min(batch, num_merges - len(merges))
-        counts: dict[tuple[str, str], int] = {}
-        for sym, n in words:
-            for i in range(len(sym) - 1):
-                p = (sym[i], sym[i + 1])
-                counts[p] = counts.get(p, 0) + n
-        cands = sorted(
-            counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )[: 4 * want]
-        chosen: list[tuple[str, str, int]] = []
-        used: set[str] = set()
-        for (left, right), cnt in cands:
-            if len(chosen) >= want:
-                break
-            if left in used or right in used:
-                continue
-            chosen.append((left, right, cnt))
-            used.add(left)
-            used.add(right)
-        if not chosen:
-            break
-        for left, right, cnt in chosen:
-            merges.append((len(merges), left, right, cnt))
-        pairs = [(left, right) for left, right, _ in chosen]
-        for idx, (sym, n) in enumerate(words):
-            for left, right in pairs:
-                i, out = 0, []
-                while i < len(sym):
-                    if i + 1 < len(sym) and sym[i] == left and sym[i + 1] == right:
-                        out.append(left + right)
-                        i += 2
-                    else:
-                        out.append(sym[i])
-                        i += 1
-                sym = out
-            words[idx] = (sym, n)
-    return merges
-
-
-def bpe_apply_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
-    if not word:
-        return []
-    sym = list(word[:-1]) + [word[-1] + "</w>"]
-    while len(sym) >= 2:
-        best, best_i = None, -1
-        for i in range(len(sym) - 1):
-            r = ranks.get((sym[i], sym[i + 1]))
-            if r is not None and (best is None or r < best):
-                best, best_i = r, i
-        if best is None:
-            break
-        left, right = sym[best_i], sym[best_i + 1]
-        i, out = 0, []
-        while i < len(sym):
-            if i + 1 < len(sym) and sym[i] == left and sym[i + 1] == right:
-                out.append(left + right)
-                i += 2
-            else:
-                out.append(sym[i])
-                i += 1
-        sym = out
-    return sym
-
-
-def bpe_doc_rows(
-    docs: list[tuple[int, str]],
-    merges: list[tuple[int, str, str, int]],
-) -> list[tuple[int, int, str]]:
-    """(doc_id, n_subwords, md5 of the space-joined subword stream)."""
-    import hashlib
-
-    ranks = {(left, right): k for k, left, right, _ in merges}
-    rows = []
-    for did, text in docs:
-        subs: list[str] = []
-        for w in (text or "").split(" "):
-            if w:
-                subs.extend(bpe_apply_word(w, ranks))
-        fp = hashlib.md5(" ".join(subs).encode("utf-8")).hexdigest()
-        rows.append((did, len(subs), fp))
-    return rows
-
-
 def dsir_rows(
     raw: list[tuple[int, str]],
     target: list[tuple[int, str]],
@@ -1265,134 +1155,6 @@ def betweenness_rows(
     return sorted((v, round(bc[v], ndigits)) for v in reached)
 
 
-def _uni_viterbi(word: str, logp: dict, max_len: int) -> list:
-    """Mirror of operators/unigram.viterbi_segment (identical DP
-    arithmetic and longer-final-piece tie-break)."""
-    import math as _m
-
-    n = len(word)
-    best = [0.0] + [-_m.inf] * n
-    back = [0] * (n + 1)
-    for end in range(1, n + 1):
-        for start in range(max(0, end - max_len), end):
-            piece = word[start:end]
-            lp = logp.get(piece)
-            if lp is None:
-                if end - start == 1:
-                    lp = -100.0
-                else:
-                    continue
-            score = best[start] + lp
-            if score > best[end] or (score == best[end] and start < back[end]):
-                best[end] = score
-                back[end] = start
-    out = []
-    end = n
-    while end > 0:
-        start = back[end]
-        out.append(word[start:end])
-        end = start
-    return out[::-1]
-
-
-def unigram_train(
-    docs: list[tuple[int, str]],
-    vocab_size: int = 400,
-    seed_size: int = 2000,
-    max_piece_len: int = 8,
-    em_iters: int = 2,
-    shrink: float = 0.75,
-    min_count: int = 2,
-    max_words: int = 50_000,
-) -> list[tuple[str, float]]:
-    """Mirror of operators/unigram.train_unigram: whitespace word
-    counts (deterministic cap), substring seed vocab, hard-EM rounds,
-    count-ranked pruning with the single-char coverage floor.  Every
-    distributed sum in the trainer is integer-exact (piece counts are
-    sums of word counts), so the mirror's logp values equal the Spark
-    path's bit-for-bit; the one irrational sum (prune renorm) is sorted
-    on both sides."""
-    import math as _m
-
-    wc: dict[str, int] = {}
-    for _id, text in docs:
-        for w in (text or "").split(" "):
-            if w:
-                wc[w] = wc.get(w, 0) + 1
-    words = sorted(
-        ((w, n) for w, n in wc.items() if n >= min_count),
-        key=lambda t: (-t[1], t[0]),
-    )[:max_words]
-
-    counts: dict[str, float] = {}
-    for w, n in words:
-        for i in range(len(w)):
-            for j in range(i + 1, min(i + max_piece_len, len(w)) + 1):
-                p = w[i:j]
-                counts[p] = counts.get(p, 0.0) + float(n)
-    chars = {p: c for p, c in counts.items() if len(p) == 1}
-    multi = sorted(
-        ((p, c) for p, c in counts.items() if len(p) > 1),
-        key=lambda t: (-t[1], t[0]),
-    )[: max(0, seed_size - len(chars))]
-    keep = dict(chars)
-    keep.update(dict(multi))
-    total = sum(keep.values())
-    logp = {p: _m.log(c / total) for p, c in keep.items()}
-
-    def em(model: dict) -> dict:
-        cnt: dict[str, float] = {}
-        for w, n in words:
-            for piece in _uni_viterbi(w, model, max_piece_len):
-                cnt[piece] = cnt.get(piece, 0.0) + float(n)
-        tot = sum(cnt.values())
-        out: dict[str, float] = {}
-        for p in model:
-            c = cnt.get(p, 0.0)
-            if c > 0:
-                out[p] = _m.log(c / tot)
-            elif len(p) == 1:
-                out[p] = _m.log(0.5 / tot)
-        return out
-
-    while True:
-        for _ in range(em_iters):
-            logp = em(logp)
-        if len(logp) <= vocab_size:
-            break
-        n_next = max(vocab_size, int(len(logp) * shrink))
-        if n_next >= len(logp):
-            break
-        singles = [(p, lp) for p, lp in logp.items() if len(p) == 1]
-        multis = sorted(
-            ((p, lp) for p, lp in logp.items() if len(p) > 1),
-            key=lambda t: (-t[1], t[0]),
-        )[: max(0, n_next - len(singles))]
-        kept = dict(singles)
-        kept.update(dict(multis))
-        z = sum(_m.exp(lp) for _, lp in sorted(kept.items()))
-        logp = {p: lp - _m.log(z) for p, lp in kept.items()}
-
-    return sorted(logp.items(), key=lambda t: (-t[1], t[0]))
-
-
-def unigram_doc_rows(
-    docs: list[tuple[int, str]],
-    vocab: list[tuple[str, float]],
-    max_piece_len: int = 8,
-) -> list[tuple[int, int]]:
-    """Mirror of operators/unigram.unigram_encode projected to
-    (doc_id, n_pieces)."""
-    model = dict(vocab)
-    rows = []
-    for doc_id, text in docs:
-        n = 0
-        for w in (text or "").split():
-            n += len(_uni_viterbi(w, model, max_piece_len))
-        rows.append((doc_id, n))
-    return sorted(rows)
-
-
 # ---------------------------------------------------------------------------
 # KMV distinct sketch (mirror of operators/sketch.py)
 
@@ -1785,39 +1547,6 @@ def feed_entry_rows(pages: list[tuple[str, str]]) -> list[tuple]:
     return out
 
 
-def compaction_rows(
-    files: list[tuple[str, str, int]], target_bytes: int
-) -> list[tuple]:
-    """Independent recompute of plans/compact.compaction_plan over
-    (partition, file, size) rows: first-fit-decreasing per partition on
-    the (size DESC, file ASC) order, oversized files own a bin, dense
-    group ids, rewrite only for multi-file groups.  Written against the
-    CONTRACT (FFD definition), not by importing the operator's packer."""
-    by_part: dict[str, list[tuple[str, int]]] = {}
-    for part, f, sz in files:
-        by_part.setdefault(part, []).append((f, int(sz)))
-    out = []
-    for part in sorted(by_part):
-        items = sorted(by_part[part], key=lambda fs: (-fs[1], fs[0]))
-        groups: list[dict] = []
-        for f, sz in items:
-            placed = False
-            if sz < target_bytes:
-                for g in groups:
-                    if g["total"] + sz <= target_bytes:
-                        g["files"].append((f, sz))
-                        g["total"] += sz
-                        placed = True
-                        break
-            if not placed:
-                groups.append({"files": [(f, sz)], "total": sz})
-        for gid, g in enumerate(groups):
-            n = len(g["files"])
-            for f, sz in g["files"]:
-                out.append((part, gid, f, sz, g["total"], n, n > 1))
-    return out
-
-
 def host_boilerplate_strip_rows(
     docs: list[tuple[str, int, str]],
     min_docs: int = 2,
@@ -1951,38 +1680,6 @@ def main_content_rows(
             if n >= min_chars and float(lc) <= max_link_density * float(n)
         ]
         out.append((url, dec("\n\n".join(kept)), len(measured), len(kept)))
-    return out
-
-
-def zorder_bucket(value, bits: int, salt: str = "") -> int:
-    """Mirror of plans.zorder.hash_bucket: first 8 hex chars of
-    md5(salt || str(value)) as an int, mod 2^bits; NULL hashes as ''."""
-    import hashlib as _hashlib
-
-    s = salt + ("" if value is None else str(value))
-    return int(
-        _hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16
-    ) % (1 << bits)
-
-
-def zorder_interleave(buckets, bits: int) -> int:
-    """Mirror of plans.zorder.z_value: bit i of dimension d lands at
-    output bit i*D + d."""
-    dims = len(buckets)
-    z = 0
-    for i in range(bits):
-        for d, b in enumerate(buckets):
-            z |= ((int(b) >> i) & 1) << (i * dims + d)
-    return z
-
-
-def zorder_rows(rows, bits: int, salt: str = ""):
-    """Mirror of plans.zorder.zorder_keys over (row_id, *dim_values)
-    tuples: (row_id, bucket_0, ..., bucket_{D-1}, z) per input row."""
-    out = []
-    for rid, *vals in rows:
-        bs = [zorder_bucket(v, bits, salt) for v in vals]
-        out.append((rid, *bs, zorder_interleave(bs, bits)))
     return out
 
 

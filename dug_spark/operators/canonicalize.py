@@ -23,11 +23,12 @@ NodeNorm says", which is a fixed function of the same table).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+# edge lists up to this size take connected_components' driver-side fast path
+CC_DRIVER_EDGES = 200_000
 
 
 def equivalence_edges(curie_norm: DataFrame) -> DataFrame:
@@ -86,7 +87,7 @@ def connected_components(
     edges: DataFrame,
     max_iter: int = 25,
     num_partitions: int | None = None,
-    driver_cutoff_edges: int | None = None,
+    driver_cutoff_edges: int = CC_DRIVER_EDGES,
 ) -> DataFrame:
     """edges(src, dst) → (id, comp) with comp = min node id reachable.
 
@@ -99,8 +100,8 @@ def connected_components(
     dimension-sized equivalence graph the driver round-trips otherwise
     dominate wall time.
 
-    Small-graph fast path: below ``driver_cutoff_edges`` edges (env
-    ``DUG_SPARK_CC_DRIVER_EDGES``, default 200k — a few MB collected)
+    Small-graph fast path: below ``driver_cutoff_edges`` edges (default
+    ``CC_DRIVER_EDGES``, 200k — a few MB collected)
     the fixpoint runs as a driver-side worklist over the collected edge
     list instead of a multi-round shuffle loop whose per-round cluster
     latency dwarfs the label work.  Equivalence graphs are
@@ -110,10 +111,6 @@ def connected_components(
     fixpoint, pytest-asserted equal).
     """
     spark = edges.sparkSession
-    if driver_cutoff_edges is None:
-        driver_cutoff_edges = int(
-            os.environ.get("DUG_SPARK_CC_DRIVER_EDGES", "200000")
-        )
     if driver_cutoff_edges > 0:
         # one job: if ≤ cutoff rows come back the edge list is complete
         probe = (

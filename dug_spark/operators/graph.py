@@ -31,11 +31,12 @@ aggregate per iteration (node-sized scan, scalar result).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+# edge lists up to this size take transitive_closure's driver-side fast path
+TC_DRIVER_EDGES = 100_000
 
 
 def _closure_in_driver(
@@ -398,7 +399,7 @@ def transitive_closure(
     dst_col: str = "dst",
     max_iterations: int = 30,
     strategy: str = "doubling",
-    driver_cutoff_edges: int | None = None,
+    driver_cutoff_edges: int = TC_DRIVER_EDGES,
     driver_pair_cap: int = 10_000_000,
 ) -> DataFrame:
     """Reachability closure with minimum hop distance over a DAG edge
@@ -447,8 +448,8 @@ def transitive_closure(
     (tens of thousands of terms, not corpus-sized), and running a
     multi-round shuffle loop over a few-MB edge list pays cluster
     scheduling latency per round for no parallelism gain.  Below
-    ``driver_cutoff_edges`` edges (env ``DUG_SPARK_TC_DRIVER_EDGES``,
-    default 100k — a few MB collected) the closure is computed as a
+    ``driver_cutoff_edges`` edges (default ``TC_DRIVER_EDGES``, 100k —
+    a few MB collected) the closure is computed as a
     driver-side layered BFS (identical first-discovery-is-min-depth
     semantics) and returned as one Arrow-built DataFrame; if the pair
     set overruns ``driver_pair_cap`` mid-build (a deep/path-like graph
@@ -460,10 +461,6 @@ def transitive_closure(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).where(F.col("src").isNotNull() & F.col("dst").isNotNull())
 
-    if driver_cutoff_edges is None:
-        driver_cutoff_edges = int(
-            os.environ.get("DUG_SPARK_TC_DRIVER_EDGES", "100000")
-        )
     if driver_cutoff_edges > 0:
         probe = raw.limit(driver_cutoff_edges + 1).collect()
         if len(probe) <= driver_cutoff_edges:

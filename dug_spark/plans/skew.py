@@ -7,8 +7,9 @@ CURIEs dominate the mentions/triples key distribution; a plain
 into one task.
 
 Strategy (complements AQE skew-join splitting, which only helps *joins*):
-1. one cheap frequency pass finds keys above `hot_threshold` (a top-k
-   sketch at scale — exact count here, same plan shape);
+1. one exact frequency pass finds keys above `hot_threshold` (every
+   caller salts on concept CURIEs, a key space the dictionary bounds, so
+   the per-key count aggregate stays dictionary-sized);
 2. hot keys get a salt column `pmod(xxhash64(row-unique col), factor)`,
    cold keys salt=0;
 3. repartition on (key, salt) → hot keys spread over `factor` tasks.
@@ -26,26 +27,13 @@ from pyspark.sql import functions as F
 
 
 def hot_keys(df: DataFrame, key: str, hot_threshold: int) -> DataFrame:
-    """Keys whose row count exceeds hot_threshold (the frequency sketch)."""
+    """Keys whose row count exceeds hot_threshold (the frequency pass)."""
     return (
         df.groupBy(key)
         .agg(F.count(F.lit(1)).alias("_freq"))
         .where(F.col("_freq") > hot_threshold)
         .select(key)
     )
-
-
-def hot_keys_sketched(
-    df: DataFrame, key: str, hot_threshold: int, k: int = 1024
-) -> DataFrame:
-    """The 10^12-row scale path for :func:`hot_keys`: identical output
-    (exact — Misra-Gries candidates, exactly verified), but the shuffle
-    carries <= (k+1) x partitions summary rows instead of one row per
-    distinct key.  See operators/sketch.heavy_hitters for the guarantee
-    and the k-sizing rule (k >= n/hot_threshold + 1)."""
-    from dug_spark.operators.sketch import heavy_hitters
-
-    return heavy_hitters(df, key, hot_threshold + 1, k=k).select(key)
 
 
 def salted_repartition(
@@ -55,20 +43,14 @@ def salted_repartition(
     num_partitions: int,
     hot_threshold: int = 1_000_000,
     factor: int = 16,
-    sketched: bool = False,
 ) -> DataFrame:
     """Repartition on (key, salt) where salt spreads only the hot keys.
 
     ``salt_source`` is any per-row (near-)unique column (e.g. url) so the
     salt is deterministic — re-runs land rows in the same partitions,
     which keeps the checkpoint manifest stable for exact resume.
-
-    ``sketched=True`` swaps the hot-key pass to the Misra-Gries scale
-    path (same keys, bounded shuffle) — the right setting whenever the
-    distinct-key space is itself web-scale (URL hosts, CURIEs).
     """
-    finder = hot_keys_sketched if sketched else hot_keys
-    hot = finder(df, key, hot_threshold).withColumn("_is_hot", F.lit(True))
+    hot = hot_keys(df, key, hot_threshold).withColumn("_is_hot", F.lit(True))
     out = df.join(F.broadcast(hot), key, "left").withColumn(
         "_salt",
         F.when(

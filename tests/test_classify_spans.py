@@ -1,79 +1,7 @@
-"""NB quality classifier (operators/classify.py), duplicate-span removal
-and SemDeDup (operators/dedup.py): golden semantics + Python mirrors."""
+"""Duplicate-span removal and SemDeDup (operators/dedup.py): golden
+semantics + Python mirrors."""
 
-import math
-
-import pytest
-from pyspark.sql import functions as F
-
-from dug_spark.operators import classify, dedup
-
-
-# ---------------------------------------------------------------------------
-# Naive Bayes quality classifier
-
-
-@pytest.fixture
-def labeled_df(spark):
-    rows = [
-        ("good clean prose with the usual words", True),
-        ("more good clean prose the usual", True),
-        ("spam spam buy pills spam", False),
-        ("buy buy pills spam now", False),
-    ]
-    return spark.createDataFrame(rows, "text string, label boolean")
-
-
-def test_nb_separates_classes(spark, labeled_df):
-    w, b = classify.train_nb(labeled_df, vocab_size=64)
-    scored = classify.nb_score(labeled_df, w, b).collect()
-    by_label = {r["label"]: r for r in scored}
-    # every trusted doc scores above every spam doc
-    pos = [r["nb_score"] for r in scored if r["label"]]
-    neg = [r["nb_score"] for r in scored if not r["label"]]
-    assert min(pos) > max(neg)
-    assert all(r["nb_keep"] == (r["nb_score"] > 0) for r in scored)
-
-
-def test_nb_weights_match_closed_form(spark, labeled_df):
-    w, b = classify.train_nb(labeled_df, vocab_size=64, alpha=1.0)
-    # recompute from raw counts
-    toks_pos = "good clean prose with the usual words more good clean prose the usual".split()
-    toks_neg = "spam spam buy pills spam buy buy pills spam now".split()
-    vocab = set(toks_pos) | set(toks_neg)
-    v = len(vocab)
-    t_pos, t_neg = len(toks_pos), len(toks_neg)
-    for t in vocab:
-        exp = math.log((toks_pos.count(t) + 1) / (t_pos + v)) - math.log(
-            (toks_neg.count(t) + 1) / (t_neg + v)
-        )
-        assert w[t] == pytest.approx(exp, rel=1e-12), t
-    assert b == pytest.approx(math.log(1.0))
-
-
-def test_nb_score_of_empty_doc_is_bias(spark, labeled_df):
-    w, b = classify.train_nb(labeled_df, vocab_size=64)
-    df = spark.createDataFrame([("",), (None,), ("zzz qqq unseen",)], "text string")
-    got = [r["nb_score"] for r in classify.nb_score(df, w, b).collect()]
-    assert got == [round(b, 4)] * 3
-
-
-def test_quality_classifier_composition(spark, labeled_df):
-    out = classify.quality_classifier(labeled_df, label_col="label")
-    rows = out.collect()
-    assert {r["nb_keep"] for r in rows if r["label"]} == {True}
-    assert {r["nb_keep"] for r in rows if not r["label"]} == {False}
-
-
-def test_nb_requires_both_classes(spark):
-    df = spark.createDataFrame([("a b", True)], "text string, label boolean")
-    with pytest.raises(ValueError):
-        classify.train_nb(df)
-
-
-def test_nb_vocab_bound_respected(spark, labeled_df):
-    w, _ = classify.train_nb(labeled_df, vocab_size=3)
-    assert len(w) == 3
+from dug_spark.operators import dedup
 
 
 # ---------------------------------------------------------------------------
@@ -183,35 +111,3 @@ def test_semantic_dedup_scale_invariant_cosine(spark):
 
 
 # --- evaluate_classifier ----------------------------------------------------
-
-
-def test_evaluate_classifier_hand_computed(spark):
-    from dug_spark.operators.classify import evaluate_classifier
-
-    rows = [
-        ("g1", True, True), ("g1", True, True), ("g1", True, False),
-        ("g1", False, True), ("g1", False, False),
-        ("g2", False, False), ("g2", False, False),  # no positives at all
-        ("g3", True, None),  # NULL pred excluded
-    ]
-    df = spark.createDataFrame(rows, "grp string, label boolean, pred boolean")
-    got = {
-        r["grp"]: (r["tp"], r["fp"], r["fn"], r["tn"],
-                   r["precision"], r["recall"], r["f1"], r["accuracy"])
-        for r in evaluate_classifier(df, "label", "pred", "grp").collect()
-    }
-    assert got["g1"] == (2, 1, 1, 1, round(2/3, 6), round(2/3, 6),
-                         round(2/3, 6), 0.6)
-    # no predicted positives and no actual positives: precision/recall NULL
-    assert got["g2"] == (0, 0, 0, 2, None, None, None, 1.0)
-    assert "g3" not in got  # its only row had NULL pred
-
-
-def test_evaluate_classifier_global_mode(spark):
-    from dug_spark.operators.classify import evaluate_classifier
-
-    df = spark.createDataFrame(
-        [(True, True), (False, True)], "label boolean, pred boolean"
-    )
-    row = evaluate_classifier(df, "label", "pred").collect()[0]
-    assert (row["tp"], row["fp"], row["precision"]) == (1, 1, 0.5)

@@ -111,30 +111,6 @@ def test_weighted_sample_empty_and_all_invalid(spark):
     assert weighted_sample_per_group(bad, "g", "id", 3, "w").count() == 0
 
 
-def test_asof_empty_right_side(spark):
-    from dug_spark.operators.temporal import asof_join
-
-    left = spark.createDataFrame([(1, 5.0, "a")], "k long, t double, tag string")
-    right = spark.createDataFrame([], "k long, rt double, v double")
-    rows = asof_join(left, right, "k", "t", "rt", ["v"]).collect()
-    assert len(rows) == 1 and rows[0]["v"] is None and rows[0]["matched_ts"] is None
-
-
-def test_range_join_empty_sides(spark):
-    from dug_spark.operators.temporal import range_join_bucketed
-
-    pts = spark.createDataFrame([(1, 2.0)], "k long, p double")
-    win = spark.createDataFrame([], "k long, s double, e double")
-    assert range_join_bucketed(pts, win, "k", "p", "s", "e", 1.0).count() == 0
-
-
-def test_sessionize_empty(spark):
-    from dug_spark.operators.temporal import sessionize
-
-    df = spark.createDataFrame([], "k long, t double")
-    assert sessionize(df, "k", "t", 10.0).count() == 0
-
-
 def test_robots_empty_rules_all_allowed(spark):
     from dug_spark.operators.crawl import robots_filter
 
@@ -172,13 +148,6 @@ def test_minhash_incremental_empty_new_batch(spark):
     empty = spark.createDataFrame([], "doc_id long, text string")
     matches, new_store = dd.minhash_incremental(empty, store)
     assert matches.count() == 0 and new_store.count() == 1
-
-
-def test_evaluate_classifier_empty(spark):
-    from dug_spark.operators.classify import evaluate_classifier
-
-    df = spark.createDataFrame([], "label boolean, pred boolean")
-    assert evaluate_classifier(df, "label", "pred").count() == 1  # global row of zeros
 
 
 def test_kg_diff_and_ntriples_empty(spark):

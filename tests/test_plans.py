@@ -253,27 +253,3 @@ def test_resume_backfills_manifest_after_crash_window(spark, tmp_path):
     cm3 = CheckpointManager(root, run_id="r_back2")
     cm3.run_or_resume(spark, "s", lambda: (_ for _ in ()).throw(AssertionError))
     assert {r["run_id"] for r in cm3.metrics(spark, "s").collect()} == {"r_back"}
-
-
-def test_salted_repartition_sketched_equals_exact(spark):
-    """sketched=True (Misra-Gries hot-key pass) must produce the same
-    rows AND spread the hot key exactly like the exact pass."""
-    df = spark.range(20000).select(
-        F.when(F.col("id") < 10000, F.lit("HOT")).otherwise(
-            F.concat(F.lit("k"), F.col("id"))
-        ).alias("curie"),
-        F.col("id").cast("string").alias("url"),
-    )
-    out = salted_repartition(
-        df, "curie", "url", num_partitions=16, hot_threshold=1000, factor=8,
-        sketched=True,
-    )
-    parts = (
-        out.where(F.col("curie") == "HOT")
-        .select(F.spark_partition_id().alias("p"))
-        .distinct()
-        .count()
-    )
-    assert parts >= 4
-    assert out.count() == 20000
-    assert out.columns == ["curie", "url"]

@@ -168,14 +168,6 @@ def test_mg_summary_bounded_and_no_false_negatives(spark, skewed):
         assert merged[key] >= true - eps
 
 
-def test_hot_keys_sketched_matches_exact(spark, skewed):
-    from dug_spark.plans import skew
-
-    exact = {r["k"] for r in skew.hot_keys(skewed, "k", 299).collect()}
-    sk = {r["k"] for r in skew.hot_keys_sketched(skewed, "k", 299, k=64).collect()}
-    assert sk == exact == {"key_0", "key_1", "key_2"}
-
-
 def test_heavy_hitters_verify_is_broadcast_semi_join(spark, skewed):
     plan = sketch.heavy_hitters(
         skewed, "k", min_count=250, k=64

@@ -1,133 +1,10 @@
-"""Streaming ingest (AvailableNow + checkpoint resume) and multimodal
-plumbing tests."""
+"""Multimodal plumbing tests: media feature extraction, frame sampling,
+resizing and the from-spec PNG/WAV/Y4M codecs."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from dug_spark import fixtures
 from dug_spark.operators import multimodal
-from dug_spark.pipeline import Pipeline
-from dug_spark.streaming.ingest import (
-    sessionize_events,
-    stream_corpus_to_triples,
-    windowed_event_counts,
-)
-
-SF = "/root/testdata/sf0.001"
-
-
-def test_sessionize_events_stateful_stream(spark, tmp_path):
-    """applyInPandasWithState e2e: file stream → stateful sessionizer →
-    memory sink.  Two micro-batches for the same user accumulate state."""
-    ev = spark.read.parquet(f"{SF}/events.parquet").where(F.col("user_id") < 5)
-    in_dir = str(tmp_path / "sess_in")
-    ckpt = str(tmp_path / "sess_ckpt")
-    # two files → maxFilesPerTrigger=1 forces ≥2 micro-batches
-    ev.where(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(in_dir)
-    ev.where(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(in_dir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    q = (
-        sessionize_events(stream)
-        .writeStream.format("memory")
-        .queryName("sessions")
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = spark.sql("SELECT * FROM sessions").toPandas()
-    assert set(out["status"]) == {"open"}
-    # the last 'open' row per user carries the full running aggregate
-    expected = {
-        r["user_id"]: (r["n"], r["total"])
-        for r in ev.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total"))
-        .collect()
-    }
-    last = out.groupby("user_id").last()
-    for uid, (n, total) in expected.items():
-        assert last.loc[uid, "n_events"] == n
-        assert abs(last.loc[uid, "total_value"] - total) < 1e-6
-
-
-def test_windowed_event_counts_streaming_watermark(spark, tmp_path):
-    """Watermarked tumbling window over a real stream matches the batch
-    plan on the same input (append mode emits only finalized windows after
-    the AvailableNow drain completes state)."""
-    ev = spark.read.parquet(f"{SF}/events.parquet").where(F.col("user_id") < 20)
-    in_dir = str(tmp_path / "win_in")
-    ckpt = str(tmp_path / "win_ckpt")
-    ev.coalesce(1).write.parquet(in_dir)
-    stream = spark.readStream.schema(ev.schema).parquet(in_dir)
-    q = (
-        windowed_event_counts(stream, window="1 hour", watermark="0 seconds")
-        .writeStream.format("memory")
-        .queryName("wincounts")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["window_start"], r["event_type"]): (r["n"], r["sum_value"])
-        for r in spark.sql("SELECT * FROM wincounts").collect()
-    }
-    want = {
-        (r["window_start"], r["event_type"]): (r["n"], r["sum_value"])
-        for r in windowed_event_counts(ev, window="1 hour").collect()
-    }
-    # append-mode emits a window once its watermark passes; with the max-ts
-    # watermark the final window may be withheld — every emitted window must
-    # match batch exactly, and most windows must have been emitted
-    assert got
-    for k, v in got.items():
-        assert want[k][0] == v[0] and abs(want[k][1] - v[1]) < 1e-6
-    assert len(got) >= len(want) - 5
-
-
-def test_stream_corpus_availablenow_exactly_once(spark, tmp_path):
-    corpus = fixtures.corpus_from_documents(spark, SF).limit(60)
-    in_dir, out_dir, ckpt = (
-        str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt"),
-    )
-    corpus.write.mode("overwrite").parquet(in_dir)
-    pipe = Pipeline(
-        dictionary=fixtures.vocab_dictionary(spark),
-        curie_norm=fixtures.vocab_norm(spark),
-    )
-    stream_corpus_to_triples(spark, in_dir, out_dir, ckpt, pipe)
-    n1 = spark.read.parquet(out_dir).count()
-    assert n1 > 0
-    # re-run with nothing new: checkpoint makes it a no-op (exact resume)
-    stream_corpus_to_triples(spark, in_dir, out_dir, ckpt, pipe)
-    assert spark.read.parquet(out_dir).count() == n1
-    # append new files: only the delta is processed
-    extra = spark.createDataFrame(
-        [
-            ("https://example.org/doc/late1", None, None, "the hash join and window beat sort merge", "en"),
-            ("https://example.org/doc/late2", None, None, "stream filter scan", "en"),
-        ],
-        corpus.schema,
-    )
-    extra.write.mode("append").parquet(in_dir)
-    stream_corpus_to_triples(spark, in_dir, out_dir, ckpt, pipe)
-    out = spark.read.parquet(out_dir)
-    n3 = out.count()
-    assert n3 > n1
-    assert out.where(F.col("subj").contains("late1")).count() > 0
-
-
-def test_windowed_event_counts_batch_parity(spark):
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    out = windowed_event_counts(ev, window="1 hour")
-    rows = out.collect()
-    assert sum(r["n"] for r in rows) == ev.count()
 
 
 def test_multimodal_feature_extraction(spark):
@@ -203,35 +80,6 @@ def test_resize_real_raises_for_non_png_image(spark):
     )
     with _pytest.raises(Exception, match="image/jpeg"):
         multimodal.resize_images(media, 8, 8).collect()
-
-
-def test_session_fn_last_ts_accumulates_across_chunks():
-    """Arrow delivers group rows in multiple non-ts-ordered chunks; the
-    emitted last_ts must be the max across ALL chunks, not the last
-    chunk's max."""
-    import pandas as pd
-
-    from dug_spark.streaming.ingest import _session_fn
-
-    class FakeState:
-        hasTimedOut = False
-        exists = False
-
-        def update(self, v):
-            self.v = v
-
-        def setTimeoutDuration(self, ms):
-            pass
-
-    t1 = pd.Timestamp("2024-01-01 10:00:00")
-    t2 = pd.Timestamp("2024-01-01 09:00:00")  # later chunk, EARLIER ts
-    chunk_a = pd.DataFrame({"ts": [t1], "value": [1.0]})
-    chunk_b = pd.DataFrame({"ts": [t2], "value": [2.0]})
-    out = list(_session_fn((7,), iter([chunk_a, chunk_b]), FakeState()))
-    assert len(out) == 1
-    row = out[0].iloc[0]
-    assert row["last_ts"] == t1
-    assert row["n_events"] == 2 and row["total_value"] == 3.0
 
 
 def test_sample_frames_mixed_media(spark):
@@ -460,57 +308,6 @@ def test_codec_numpy_pure_bit_identity_fuzz():
         )
 
 
-def test_stream_curate_native_map_only(spark, tmp_path):
-    """The curation map stages run natively in a stream (no foreachBatch):
-    file stream → stream_curate → memory sink, two micro-batches; output
-    matches the batch operators row-for-row."""
-    from dug_spark.streaming.ingest import stream_curate
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").where(
-        F.col("doc_id") < 40
-    ).select("doc_id", "text")
-    crafted = spark.createDataFrame(
-        [(9301, "a fine first line with enough words right here.\n"
-                "mail bob@example.com with the second good line here.\n"
-                "the third line also ends properly with the word done.")],
-        "doc_id long, text string",
-    )
-    in_dir = str(tmp_path / "cur_in")
-    docs.coalesce(1).write.parquet(in_dir)
-    crafted.coalesce(1).write.mode("append").parquet(in_dir)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    q = (
-        stream_curate(stream)
-        .writeStream.format("memory")
-        .queryName("curated")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r["doc_id"]: r for r in spark.sql("select * from curated").collect()}
-    assert len(got) == 41
-    assert got[9301]["c4_keep"] and got[9301]["n_email"] == 1
-    # same rows as the batch path (stream_curate is the same column plan)
-    from dug_spark.operators import textstats
-
-    batch = textstats.redact_pii(
-        textstats.gopher_quality(
-            textstats.c4_line_clean(docs.unionByName(crafted)), "text"
-        ),
-        "clean_text",
-    )
-    want_keep = {
-        r["doc_id"]: (r["c4_keep"], r["gopher_keep"], r["pii_found"])
-        for r in batch.collect()
-    }
-    for did, r in got.items():
-        assert (r["c4_keep"], r["gopher_keep"], r["pii_found"]) == want_keep[did]
-
-
 # ---------------------------------------------------------------------------
 # Y4M codec (from-spec YUV4MPEG2 — dug_spark/functions/codecs.py)
 
@@ -610,45 +407,3 @@ def test_y4m_gray_maps_luma_to_gray_rgb():
         r, g, b = flat[px * 3 : px * 3 + 3]
         assert r == g == b
     assert flat[0] == 0 and flat[6:9] == b"\xff\xff\xff"
-
-
-def test_stream_exact_dedup_cross_batch(spark, tmp_path):
-    """Cross-micro-batch stateful dedup: a hash seen in batch 1 must not
-    re-emit in batch 2; within a batch the min-url doc wins; dups_so_far
-    counts the first batch's copies."""
-    from dug_spark.streaming.ingest import stream_exact_dedup
-
-    in_dir = str(tmp_path / "dedup_in")
-    ckpt = str(tmp_path / "dedup_ckpt")
-    b1 = spark.createDataFrame(
-        [("u03", "alpha"), ("u01", "alpha"), ("u02", "beta")], "url string, text string"
-    )
-    b2 = spark.createDataFrame(
-        [("u00", "alpha"), ("u04", "gamma"), ("u05", "beta")], "url string, text string"
-    )
-    b1.coalesce(1).write.parquet(in_dir)
-    b2.coalesce(1).write.mode("append").parquet(in_dir)
-    stream = (
-        spark.readStream.schema(b1.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    q = (
-        stream_exact_dedup(stream)
-        .writeStream.format("memory")
-        .queryName("streamdedup")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = {r["url"]: r["dups_so_far"] for r in spark.sql(
-        "SELECT * FROM streamdedup").collect()}
-    # file order within a dir stream is not guaranteed; accept either
-    # batch order but require exactly one keeper per distinct text with
-    # the min url OF ITS FIRST batch and no re-emission of a seen hash
-    assert len(out) == 3
-    assert set(out) in ({"u01", "u02", "u04"}, {"u00", "u05", "u04"})
-    if "u01" in out:
-        assert out["u01"] == 2 and out["u02"] == 1 and out["u04"] == 1

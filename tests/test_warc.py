@@ -3,10 +3,8 @@ gzip members, HTTP block split, and the lift to the BASELINE corpus
 shape."""
 
 import gzip
-import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from dug_spark.sources import warc_parser as wp
 
@@ -103,38 +101,3 @@ def test_registry_lookup():
     assert get_parser("warc") is wp.read_warc
     with pytest.raises(Exception):
         get_parser("warcx")
-
-
-def test_stream_warc_to_corpus_incremental(spark, tmp_path):
-    """AvailableNow drain: first run parses the landed segments; a second
-    run after a new segment lands appends ONLY the new rows."""
-    from dug_spark.streaming.ingest import stream_warc_to_corpus
-
-    in_dir, out_dir, ckpt = (
-        str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
-    )
-    os.makedirs(in_dir)
-
-    def land(name, urls):
-        data = b"".join(
-            wp.build_warc_record(
-                u, "2024-01-01T00:00:00Z", b"<html><body><p>x</p></body></html>"
-            )
-            for u in urls
-        )
-        with open(os.path.join(in_dir, name), "wb") as f:
-            f.write(data)
-
-    land("seg0.warc", ["https://a.org/1", "https://a.org/2"])
-    stream_warc_to_corpus(spark, in_dir, out_dir, ckpt)
-    first = spark.read.parquet(out_dir)
-    assert sorted(r["url"] for r in first.collect()) == [
-        "https://a.org/1", "https://a.org/2",
-    ]
-    land("seg1.warc", ["https://b.org/3"])
-    stream_warc_to_corpus(spark, in_dir, out_dir, ckpt)
-    both = spark.read.parquet(out_dir)
-    assert sorted(r["url"] for r in both.collect()) == [
-        "https://a.org/1", "https://a.org/2", "https://b.org/3",
-    ]
-    assert both.columns == ["url", "warc_ts", "html", "text", "lang"]
