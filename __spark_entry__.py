@@ -1127,7 +1127,8 @@ def _real_media_payload(i: int):
 def q_search_bm25(spark, sf_dir):
     """True BM25 top-20 over the documents table (the ES similarity
     behind every boosted clause in async_search.py:113-218), fully
-    distributed: one stats aggregation + map-side scoring + top-k."""
+    distributed: the per-index state's vocabulary aggregate + map-side
+    scoring + top-k."""
     from dug_spark.operators import search
 
     return search.bm25_topk(
@@ -1140,12 +1141,13 @@ def q_search_bm25_fuzzy(spark, sf_dir):
     prefix_length=3 on every match clause (async_search.py:113, :278-315,
     :624) — as a driver-visible contract row: each query token expands to
     its edit-distance-1 neighborhood sharing its first 3 characters in
-    the field vocabulary (fuzzy_expand_terms, one vocabulary-sized
-    aggregation) and scores with Lucene SynonymQuery blending (tf = Σ
-    member tfs, docFreq = max member df).  The DuckDB oracle derives the
-    SAME expansion independently in SQL (levenshtein + prefix + the
-    sorted-ascending max_expansions cap) — nothing is pre-folded as
-    literals, so the gate covers expansion + blending end-to-end.
+    the field vocabulary (search._expand_in_vocab, on the driver over the
+    index state's vocabulary) and scores with Lucene SynonymQuery
+    blending (tf = Σ member tfs, docFreq = max member df).  The DuckDB
+    oracle derives the SAME expansion independently in SQL (levenshtein
+    + prefix + the sorted-ascending max_expansions cap) — nothing is
+    pre-folded as literals, so the gate covers expansion + blending
+    end-to-end.
 
     The raw documents vocabulary has no edit-distance-1 neighbors, which
     would make fuzziness a no-op; the view appends doc_id-derived variant
@@ -1490,10 +1492,10 @@ def _bm25_fuzzy_oracle() -> str:
     with exact 3-char prefix → sorted-ascending cap at max_expansions=50
     with the original token always kept) and the SynonymQuery blend
     (group tf = Σ member tfs, group docFreq = max member df) — the full
-    semantics of search.fuzzy_expand_terms + bm25_topk, nothing folded in
+    semantics of search._expand_in_vocab + bm25_topk, nothing folded in
     as precomputed literals.  Both engines use plain Levenshtein
     (insert/delete/substitute; ES's transposition-as-1 Damerau variant is
-    the documented deviation, noted in fuzzy_expand_terms)."""
+    the documented deviation, noted in _expand_in_vocab)."""
     an = _analyzer_sql
     return (
         # same doc_id-derived variant decoration as q_search_bm25_fuzzy

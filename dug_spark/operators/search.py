@@ -13,35 +13,34 @@ Re-expresses the reference's Elasticsearch DSL as DataFrame plans:
   (:730-736).
 - facet helpers (server.py:234-291): exclude-own-filter counts, ordering.
 
-Scoring fidelity: ``bm25_topk`` / ``bm25_boosted_topk`` implement the
-actual Lucene BM25 similarity behind every ES match clause, composed with
-the reference's per-field clause boosts and tokenized by the shared
-``std_with_stopwords`` analyzer (functions/analyzer.py).  ES
-``fuzziness`` — the reference's default (fuzziness=1, prefix_length=3 on
-every match clause, async_search.py:113) — is implemented by
-SynonymQuery blending over a deterministic expansion in both BM25 entry
-points: ``bm25_topk`` runs ``fuzzy_expand_terms`` (JVM levenshtein over a
-vocabulary aggregation), the boosted entry points apply the same prefix,
-distance and cap rules to the vocabulary their index state already holds
-(``_expand_in_vocab``, no Spark job).  It carries a full cross-engine
-oracle (the ``search_bm25_fuzzy`` contract row derives the same expansion
-in DuckDB SQL).  The legacy
-``concept_score``/``variable_score`` structure-only predicates are kept
-for the deterministic fallback paths.  Remaining documented deviation:
-phrase matching is contiguous on stopword-stripped tokens (ES keeps
-position gaps where stopwords were removed).
+Scoring fidelity: one BM25 engine implements the actual Lucene BM25
+similarity behind every ES match clause, composed with the reference's
+per-field clause boosts and tokenized by the shared
+``std_with_stopwords`` analyzer (functions/analyzer.py).
+``bm25_boosted_topk`` and its index wrappers (``search_concepts_bm25``,
+``search_variables_bm25``) score several boosted fields; ``bm25_topk``
+is the same engine over one text column with one plain-match clause.
+ES ``fuzziness`` — the reference's default (fuzziness=1, prefix_length=3
+on every match clause, async_search.py:113) — is SynonymQuery blending
+over a deterministic expansion that the driver derives in the
+vocabulary the index state already holds (``_expand_in_vocab``, no
+Spark job).  It carries a full cross-engine oracle (the
+``search_bm25_fuzzy`` contract row derives the same expansion in DuckDB
+SQL).  The legacy ``concept_score``/``variable_score`` structure-only
+predicates are kept for the deterministic fallback paths.  Remaining
+documented deviation: phrase matching is contiguous on stopword-stripped
+tokens (ES keeps position gaps where stopwords were removed).
 
 Serving plan shape: as in ES, where tokens, field lengths and term
-statistics are index-time state, the boosted BM25 entry points
-(``bm25_boosted_topk``, ``search_concepts_bm25``,
-``search_variables_bm25``) build that state once per index DataFrame —
-the tokenized base, persisted, plus per-field docCount, Σdl and the
-term → docFreq vocabulary, which the driver holds (vocabulary-sized, as
-Lucene's resident term dictionary).  Every later query against the same
-DataFrame object folds idf on the driver and runs one map-side scoring
-scan ending in TakeOrderedAndProject: one Spark job, fuzzy or not.
-Query text reaches Spark SQL only as analyzer output (``[a-z0-9 ]``), so
-the spliced literals parse the same under every parser setting.
+statistics are index-time state, every BM25 entry point builds that
+state once per index DataFrame — the tokenized base, persisted, plus
+per-field docCount, Σdl and the term → docFreq vocabulary, which the
+driver holds (vocabulary-sized, as Lucene's resident term dictionary).
+Every later query against the same DataFrame object folds idf on the
+driver and runs one map-side scoring scan ending in
+TakeOrderedAndProject: one Spark job, fuzzy or not.  Query text reaches
+Spark SQL only as analyzer output (``[a-z0-9 ]``), so the spliced
+literals parse the same under every parser setting.
 """
 
 from __future__ import annotations
@@ -210,52 +209,6 @@ def simple_variable_score(query: str) -> F.Column:
     )
 
 
-def fuzzy_expand_terms(
-    df: DataFrame,
-    tk_col,
-    qtoks: list[str],
-    fuzziness: int = 1,
-    prefix_length: int = 3,
-    max_expansions: int = 50,
-) -> dict[str, list[str]]:
-    """ES ``match`` fuzziness (the reference passes ``fuzziness=1,
-    prefix_length=3`` to every match clause — async_search.py:126-218,
-    :624-736): each query token expands to the field's indexed terms
-    within ``fuzziness`` edits that share its first ``prefix_length``
-    characters exactly (the token itself is always in its group).
-
-    Scale shape: ONE distinct-token aggregation over the field (the
-    shuffle is vocabulary-sized, not corpus-sized), the prefix +
-    levenshtein predicates evaluated JVM-side, and only the matching
-    terms — ≤ |query| · max_expansions after the cap — reach the driver.
-    The cap keeps the widest group bounded (ES default max_expansions=50);
-    deterministic keep-order: matched terms sorted ascending (ES keeps
-    top-by-frequency — documented deviation, irrelevant until a group
-    exceeds the cap).  Edit distance is plain Levenshtein (JVM
-    ``levenshtein``; ES counts a transposition as 1 edit — Damerau —
-    the second documented deviation, affecting only swapped-adjacent-
-    character typos).  Returns {query token: sorted expansion group}."""
-    if not qtoks:
-        return {}
-    vocab = df.select(F.explode(tk_col).alias("t")).distinct()
-    flags = [
-        (
-            F.col("t").startswith(q[:prefix_length])
-            & (F.levenshtein(F.col("t"), F.lit(q)) <= fuzziness)
-        ).alias(f"m_{i}")
-        for i, q in enumerate(qtoks)
-    ]
-    rows = vocab.select("t", *flags).where(
-        reduce(lambda a, b_: a | b_, [F.col(f"m_{i}") for i in range(len(qtoks))])
-    ).collect()
-    groups: dict[str, set[str]] = {q: {q} for q in qtoks}
-    for r in rows:
-        for i, q in enumerate(qtoks):
-            if r[f"m_{i}"]:
-                groups[q].add(r["t"])
-    return {q: _cap_group(q, terms, max_expansions) for q, terms in groups.items()}
-
-
 def _cap_group(q: str, terms, max_expansions: int) -> list[str]:
     """The sorted expansion group of ``q`` under the max_expansions cap:
     the original token ALWAYS stays in its group (ES keeps the distance-0
@@ -265,7 +218,7 @@ def _cap_group(q: str, terms, max_expansions: int) -> list[str]:
 
 
 def _levenshtein(a: str, b: str) -> int:
-    """Plain Levenshtein distance, as the JVM ``levenshtein`` computes it."""
+    """Plain Levenshtein distance (insert, delete, substitute)."""
     prev = list(range(len(b) + 1))
     for i, ca in enumerate(a, 1):
         cur = [i]
@@ -279,11 +232,22 @@ def _expand_in_vocab(
     terms: list[str], qtoks: list[str], fuzziness: int, prefix_length: int,
     max_expansions: int = 50,
 ) -> dict[str, list[str]]:
-    """``fuzzy_expand_terms`` against a field vocabulary the driver already
-    holds (a BM25 index state's sorted term list): same prefix and
-    distance predicates, same cap, no Spark job.  The prefix rule is a
-    bisect into ``terms``; only terms inside the prefix range are
-    measured."""
+    """ES ``match`` fuzziness (the reference passes ``fuzziness=1,
+    prefix_length=3`` to every match clause — async_search.py:126-218,
+    :624-736) in a field vocabulary the driver already holds (a BM25 index
+    state's sorted term list), so no Spark job: each query token expands
+    to the terms within ``fuzziness`` edits that share its first
+    ``prefix_length`` characters exactly (the token itself is always in
+    its group).  The prefix rule is a bisect into ``terms``; only terms
+    inside the prefix range are measured.
+
+    The cap keeps the widest group bounded (ES default max_expansions=50)
+    with a deterministic keep-order: matched terms sorted ascending (ES
+    keeps top-by-frequency — a documented deviation, irrelevant until a
+    group exceeds the cap).  Edit distance is plain Levenshtein (ES counts
+    a transposition as 1 edit — Damerau — the second documented
+    deviation, affecting only swapped-adjacent-character typos).  Returns
+    {query token: sorted expansion group}."""
     groups = {}
     for q in qtoks:
         prefix = q[:prefix_length]
@@ -296,13 +260,6 @@ def _expand_in_vocab(
             i += 1
         groups[q] = _cap_group(q, near, max_expansions)
     return groups
-
-
-#: bm25_topk: above this many distinct term df columns, per-term conditional
-#: sums in ONE agg would build thousands of Catalyst expression nodes
-#: (fuzziness=1 × max_expansions=50 × multi-token query) — switch to the
-#: explode-based df aggregation instead (VERDICT r4 "agg-width" guard)
-_DF_AGG_WIDTH = 48
 
 
 _ANALYZED = re.compile(r"[a-z0-9 ]*")
@@ -358,25 +315,6 @@ def _group_present_sql(tk_col: str, members: str, single: bool) -> str:
     return f"arrays_overlap({tk_col}, {members})"
 
 
-def _term_doc_freqs(
-    base: DataFrame, tk_col: str, terms: list[str]
-) -> dict[str, int]:
-    """Per-term document frequency via ONE explode→filter→groupBy
-    aggregation — the wide-expansion path.  Scale shape: array_distinct
-    runs map-side, the filter keeps only query/expansion terms BEFORE the
-    exchange, so the shuffle is ≤ |terms| keys × partial counts; the
-    collected result is |terms|-sized."""
-    rows = (
-        base.select(F.explode(F.array_distinct(tk_col)).alias("t"))
-        .where(F.col("t").isin(terms))
-        .groupBy("t")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .collect()
-    )
-    found = {r["t"]: r["df"] for r in rows}
-    return {t: found.get(t, 0) for t in terms}
-
-
 def bm25_topk(
     df: DataFrame,
     query: str,
@@ -390,200 +328,30 @@ def bm25_topk(
     prefix_length: int = 3,
 ) -> DataFrame:
     """True BM25 (the Lucene/ES 'match' similarity behind every boost in
-    _get_concepts_query, async_search.py:113-218) as a distributed plan —
-    narrows the engine's documented score-fidelity deviation from
-    "structure-only stand-in" to "same similarity function".  Text and
-    query tokenize through the shared ``std_with_stopwords`` analyzer
-    (functions/analyzer.py — the analyzer the reference declares on every
-    text field, index.py:87-117).
-
-    Two passes, both scale-safe at 10^12 docs:
-      1. term statistics — ONE aggregation over the corpus collecting
-         N, avg field length, and per-query-token document frequency
-         (conditional sums; the result is |query|-sized, collected to
-         the driver and folded into literal idf weights);
-      2. scoring — map-side only: per-doc tf via array ops, the BM25
-         sum as a literal expression, then a global top-k
-         (TakeOrderedAndProject — no shuffle of the scored corpus).
+    _get_concepts_query, async_search.py:113-218) over one text column:
+    the boosted engine (``bm25_boosted_topk``) with one field and one
+    plain-match clause of boost 1, so it shares that engine's per-index
+    state — built by the first query against ``df``, after which every
+    query is one map-side scoring scan ending in TakeOrderedAndProject.
+    Text and query tokenize through the shared ``std_with_stopwords``
+    analyzer (functions/analyzer.py — the analyzer the reference declares
+    on every text field, index.py:87-117).
 
     idf = ln(1 + (N − df + 0.5)/(df + 0.5));  score = Σ_t idf_t ·
-    tf·(k1+1)/(tf + k1·(1 − b + b·len/avglen)).  Ties broken by id.
+    tf·(k1+1)/(tf + k1·(1 − b + b·len/avglen)), with N the docs that have
+    ≥1 token (Lucene's docCount) and avglen over those docs.  Ties broken
+    by id.  Output: (id, score) top-k.
 
     ``fuzziness`` > 0 expands each query token to its edit-distance
-    neighborhood in the field vocabulary (fuzzy_expand_terms) and scores
-    each group with Lucene SynonymQuery semantics — the blend ES applies
-    to fuzzy-expanded match terms: one BM25 evaluation per group with
-    tf = Σ member tfs and docFreq = max member df.  fuzziness=0 makes
-    every group a singleton and reduces to plain BM25 exactly.
+    neighborhood in the field vocabulary (``_expand_in_vocab``) and scores
+    each group with Lucene SynonymQuery semantics — one BM25 evaluation
+    per group with tf = Σ member tfs and docFreq = max member df.
+    fuzziness=0 makes every group a singleton: plain BM25.
     """
-    import math
-
-    toks = sorted(set(analyzer.analyze(query, stopwords)))
-    # ONE tokenization pass: the stats aggregation, the (fuzzy) vocab
-    # scan and the scoring scan all read the materialized token arrays —
-    # without the cut each pays the full analyze_col regex pass again.
-    # Stats aggregate + score expression composed as SQL text (same
-    # expression trees, one py4j round-trip each — see _score_topk)
-    base = df.selectExpr(
-        f"`{id_col}` AS id",
-        f"{analyzer.analyze_spark_col_sql(f'`{text_col}`', stopwords)} AS toks",
-    ).withColumn("dl", F.size("toks")).localCheckpoint(eager=False)
-    if fuzziness > 0:
-        groups = fuzzy_expand_terms(base, F.col("toks"), toks, fuzziness, prefix_length)
-    else:
-        groups = {t: [t] for t in toks}
-    terms = sorted({t for g in groups.values() for t in g})
-    if len(terms) > _DF_AGG_WIDTH:
-        # wide fuzzy expansion: df via the explode aggregation, corpus
-        # stats in their own (2-column) agg — bounded expression width
-        stats = base.agg(
-            F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
-        ).collect()[0]
-        n, avgdl = stats["n"], float(stats["avgdl"] or 0.0)
-        if n == 0 or not toks:
-            return base.select("id", F.lit(0.0).alias("score")).where(
-                F.lit(False)
-            )
-        df_by_term = _term_doc_freqs(base, "toks", terms)
-    else:
-        stats = base.sparkSession.sql(
-            "SELECT count(1) AS n, avg(dl) AS avgdl"
-            + "".join(
-                f", sum(IF(array_contains(toks, {_sql_str(t)}), 1, 0)) AS df_{i}"
-                for i, t in enumerate(terms)
-            )
-            + " FROM {b}",
-            b=base,
-        ).collect()[0]
-        n, avgdl = stats["n"], float(stats["avgdl"] or 0.0)
-        if n == 0 or not toks:
-            return base.select("id", F.lit(0.0).alias("score")).where(
-                F.lit(False)
-            )
-        df_by_term = {t: stats[f"df_{i}"] for i, t in enumerate(terms)}
-
-    score_terms = []
-    for q in toks:
-        group = groups[q]
-        df_t = max(df_by_term[t] for t in group)  # SynonymQuery docFreq
-        idf = math.log(1.0 + (n - df_t + 0.5) / (df_t + 0.5))
-        # SynonymQuery tf = Σ member tfs == count of tokens ∈ group
-        # (members are distinct) — ONE literal-array membership scan per
-        # group, not |group| chained size(filter) additions: keeps the
-        # score expression O(|query|) deep at fuzziness>0 where a group
-        # can hold max_expansions members (Catalyst codegen width guard)
-        tf = _group_tf_sql("toks", _sql_group(group), len(group) == 1)
-        score_terms.append(
-            f"{_sql_dbl(idf)} * {tf} * {_sql_dbl(k1 + 1.0)} / ({tf}"
-            f" + {_sql_dbl(k1)} * ({_sql_dbl(1.0 - b)}"
-            f" + {_sql_dbl(b)} * CAST(dl AS DOUBLE) / {_sql_dbl(avgdl)}))"
-        )
-    # filter on the RAW score, then round for display: filtering the
-    # rounded value would drop a doc whose true score is in (0, 5e-7)
-    # while a SQL oracle's WHERE score > 0 (bound to the unrounded
-    # column) keeps it as 0.000000 — a latent gate mismatch at N ≳ 1e6
-    return (
-        base.selectExpr("id", " + ".join(score_terms) + " AS _raw")
-        .where(F.col("_raw") > 0)
-        .select("id", F.round("_raw", 6).alias("score"))
-        .orderBy(F.desc("score"), F.asc("id"))
-        .limit(k)
-    )
-
-
-def _eq_lit(t: str):
-    """Single-arg equality closure over a literal for array HOFs — NOT a
-    default-arg lambda: `lambda x, t=...` reads as the TWO-arg (element,
-    index) HOF form and silently compares against the array position
-    (dedup._minhash_component)."""
-    lit = F.lit(t)
-
-    def _eq(x):
-        return x == lit
-
-    return _eq
-
-
-def qlm_topk(
-    df: DataFrame,
-    query: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 20,
-    mu: float = 2000.0,
-    stopwords: bool = True,
-) -> DataFrame:
-    """Query-likelihood retrieval with Dirichlet smoothing (Zhai &
-    Lafferty 2001, SIGIR; Lucene's public ``LMDirichletSimilarity`` — the
-    other similarity the reference's ES backend can be configured with
-    besides BM25, async_search.py:113's match clauses score through
-    whatever similarity the index declares).  Per matching query term t
-    (tf > 0):
-
-        score_t = max(0, ln(1 + tf / (mu * p(t|C))) + ln(mu / (dl + mu)))
-
-    with p(t|C) = cf_t / total_tokens (collection frequency), the Lucene
-    rank-equivalent form of the Dirichlet-smoothed query likelihood
-    restricted to matching terms, clamped at 0 per term exactly as
-    LMDirichletSimilarity does.  Query and documents tokenize through the
-    shared ``std_with_stopwords`` analyzer.
-
-    Scale shape (same two-pass plan as ``bm25_topk``, safe at 10^12
-    docs): ONE corpus aggregation collects total token count and
-    per-query-term collection frequency (|query|-sized result, folded
-    into literals); scoring is map-side column expressions; the top-k is
-    TakeOrderedAndProject — the scored corpus never shuffles.
-    """
-    import math
-
-    toks = sorted(set(analyzer.analyze(query, stopwords)))
-    toks_col = analyzer.analyze_col(F.col(text_col), stopwords)
-    base = df.select(
-        F.col(id_col).alias("id"), toks_col.alias("toks")
-    ).withColumn("dl", F.size("toks"))
-    if not toks:
-        return base.select("id", F.lit(0.0).alias("score")).where(F.lit(False))
-    stats = base.agg(
-        F.sum("dl").alias("total"),
-        # single-arg closures (see _eq_lit)
-        *[
-            F.sum(F.size(F.filter("toks", _eq_lit(t)))).alias(f"cf_{i}")
-            for i, t in enumerate(toks)
-        ],
-    ).collect()[0]
-    total = int(stats["total"] or 0)
-    if total == 0:
-        return base.select("id", F.lit(0.0).alias("score")).where(F.lit(False))
-    dl_term = F.log(F.lit(mu) / (F.col("dl").cast("double") + F.lit(mu)))
-    score = None
-    for i, t in enumerate(toks):
-        cf = int(stats[f"cf_{i}"] or 0)
-        if cf == 0:
-            continue  # absent from the collection ⇒ tf = 0 everywhere
-        # mu * p(t|C), evaluated in this exact op order on both sides of
-        # the oracle gate ((mu * cf) / total) so the folded literal is
-        # bit-identical to the SQL recompute
-        mu_p = (mu * cf) / total
-        tf = F.size(F.filter("toks", _eq_lit(t))).cast("double")
-        term = F.when(
-            tf > 0,
-            F.greatest(
-                F.lit(0.0),
-                F.log(F.lit(1.0) + tf / F.lit(mu_p)) + dl_term,
-            ),
-        ).otherwise(F.lit(0.0))
-        score = term if score is None else score + term
-    if score is None:
-        return base.select("id", F.lit(0.0).alias("score")).where(F.lit(False))
-    # filter on the RAW score, round for display (same latent-gate note
-    # as bm25_topk: rounding before the > 0 filter would disagree with a
-    # SQL oracle bound to the unrounded column)
-    return (
-        base.select("id", score.alias("_raw"))
-        .where(F.col("_raw") > 0)
-        .select("id", F.round("_raw", 6).alias("score"))
-        .orderBy(F.desc("score"), F.asc("id"))
-        .limit(k)
+    fields = [(text_col, F.col(text_col), [("or", 1.0)], None)]
+    state = _index_state(df, fields, id_col, [], stopwords)
+    return _score_topk(
+        state, query, fields, k, k1, b, stopwords, [], fuzziness, prefix_length
     )
 
 
@@ -664,10 +432,10 @@ def bm25_boosted_topk(
     still use the joined text (ES field length counts real tokens only —
     gap positions don't add to dl).
     ``fuzziness`` > 0 expands each query token against each FIELD's own
-    vocabulary (the state's terms, expanded on the driver with
-    fuzzy_expand_terms' prefix, distance and cap rules, so no Spark job —
-    ES expands per field) and scores groups with SynonymQuery blending
-    (tf = Σ member tfs, docFreq = max);
+    vocabulary (the state's terms, expanded on the driver by
+    ``_expand_in_vocab``, so no Spark job — ES expands per field) and
+    scores groups with SynonymQuery blending (tf = Σ member tfs,
+    docFreq = max);
     match_phrase clauses stay exact (ES match_phrase has no fuzziness),
     and the "and" gate requires every group to have ≥1 member present.
     Remaining deviation, documented: phrase matching is contiguous on
@@ -1457,236 +1225,3 @@ def search_vars_unscored(
     if concept:
         out = out.where(F.array_contains("identifiers", concept))
     return out.drop("_score").orderBy("element_id")
-
-
-def build_inverted_index(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_shards: int = 1,
-    min_df: int = 1,
-) -> DataFrame:
-    """Materialize the inverted index as a TABLE: one row per (token,
-    shard) with df, cf and the id-ordered posting list — the Spark-native
-    counterpart of the reference's index creation (it delegates the
-    postings to Elasticsearch, search.py:index_doc; here the index IS a
-    DataFrame you can write to parquet/Iceberg and join against).
-    Tokenization is the shared ``std_with_stopwords`` analyzer, so the
-    postings agree with every BM25 scorer in this module.
-
-    Scale shape: one (id, token)-keyed tf aggregation + one token-keyed
-    postings aggregation, both with map-side partial combine.  The
-    posting LIST is the skew hazard — a token appearing in 10^10
-    documents is one row — so ``num_shards`` splits each token's
-    postings by ``id % num_shards`` (numeric ids; hash upstream for
-    string ids): per-shard lists stay bounded and a term lookup reads
-    all shards of one token, which is exactly how Lucene segments
-    partition the same structure.  ``min_df`` drops hapax noise at the
-    source (df filter BEFORE the list materializes, pushed into the
-    aggregate via HAVING semantics)."""
-    toks = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(analyzer.analyze_col(F.col(text_col))).alias("token"),
-    )
-    tf = toks.groupBy("id", "token").agg(F.count(F.lit(1)).alias("tf"))
-    shard = (
-        F.pmod(F.col("id"), F.lit(num_shards)).cast("int")
-        if num_shards > 1
-        else F.lit(0)
-    )
-    postings = (
-        tf.withColumn("shard", shard)
-        .groupBy("token", "shard")
-        .agg(
-            F.count(F.lit(1)).alias("df"),
-            F.sum("tf").alias("cf"),
-            F.array_sort(F.collect_list(F.struct("id", "tf"))).alias("plist"),
-        )
-    )
-    if min_df > 1:
-        # per-token df across shards, not per-shard (a sharded hot token
-        # must not flap around the threshold shard by shard).  A window
-        # sum over the postings keeps this ONE pass — the old aggregate +
-        # broadcast-join replayed the whole tf→postings chain a second
-        # time to build the token totals (12 exchanges → 6)
-        from pyspark.sql import Window
-
-        postings = (
-            postings.withColumn(
-                "_tdf", F.sum("df").over(Window.partitionBy("token"))
-            )
-            .where(F.col("_tdf") >= min_df)
-            .drop("_tdf")
-        )
-    return postings.select(
-        "token",
-        "shard",
-        "df",
-        "cf",
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    "plist",
-                    lambda s: F.concat_ws(
-                        ":", s["id"].cast("string"), s["tf"].cast("string")
-                    ),
-                ),
-            )
-        ).alias("postings_fp"),
-        F.col("plist").alias("postings"),
-    )
-
-
-def rrf_fuse(
-    ranked_lists: list[DataFrame],
-    id_col: str = "id",
-    rank_col: str = "rank",
-    k: int = 10,
-    k0: int = 60,
-) -> DataFrame:
-    """Reciprocal-rank fusion (Cormack, Clarke & Buettcher, SIGIR 2009):
-    fuse any number of ranked retrieval lists into one ranking by
-    rrf_score(d) = Σ_lists 1/(k0 + rank_d), the standard way hybrid
-    (lexical + vector) search engines combine BM25 and ANN results —
-    rank-based, so the two lists' incomparable score scales never meet.
-
-    Inputs are (id, rank) frames — top-N slices, so the fusion aggregate
-    touches at most N x |lists| rows regardless of corpus size: union →
-    one tiny hash agg → TakeOrderedAndProject.  Output: (id, rrf_score,
-    n_lists, rank) for the fused top-k, ties broken by id asc.  k0=60 is
-    the paper's (and Elasticsearch's) default.
-    """
-    if not ranked_lists:
-        raise ValueError("rrf_fuse: need at least one ranked list")
-    slim = [
-        df.select(
-            F.col(id_col).alias("id"), F.col(rank_col).cast("long").alias("r")
-        )
-        for df in ranked_lists
-    ]
-    from pyspark.sql.window import Window
-
-    fused = (
-        reduce(lambda a, b: a.unionByName(b), slim)
-        .groupBy("id")
-        .agg(
-            F.sum(F.lit(1.0) / (F.lit(float(k0)) + F.col("r"))).alias("_rrf"),
-            F.count(F.lit(1)).alias("n_lists"),
-        )
-    )
-    w = Window.orderBy(F.desc("_rrf"), F.asc("id"))
-    return (
-        fused.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("id", F.round("_rrf", 6).alias("rrf_score"), "n_lists", "rank")
-    )
-
-
-def cosine_topk_single(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_id: int | None = None,
-) -> DataFrame:
-    """Exact cosine top-k of ONE query vector against the embedding table:
-    the query is folded in as literals (no join, no crossJoin), the dot
-    product and norms are JVM-side F.aggregate folds, and the top-k is a
-    TakeOrderedAndProject — one map-only pass over the corpus, the right
-    single-query plan at any scale (the multi-query batch case is
-    similarity.ann_lsh / ann_ivf).  Returns (id, rank, cos_sim[round 4])."""
-    import math
-
-    qnorm = math.sqrt(sum(float(x) * float(x) for x in query_vec))
-    qarr = F.array(*[F.lit(float(x)) for x in query_vec])
-    v = F.col(vec_col)
-    dot = F.aggregate(
-        F.zip_with(qarr, v, lambda a, b: a * b.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    nrm = F.sqrt(
-        F.aggregate(
-            v, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-        )
-    )
-    base = embeddings
-    if exclude_id is not None:
-        base = base.where(F.col(id_col) != exclude_id)
-    scored = base.select(
-        F.col(id_col).alias("id"), (dot / (F.lit(qnorm) * nrm)).alias("_cos")
-    )
-    from pyspark.sql.window import Window
-
-    top = (
-        scored.orderBy(F.desc("_cos"), F.asc("id"))
-        .limit(int(k))
-        .withColumn(
-            "rank", F.row_number().over(Window.orderBy(F.desc("_cos"), F.asc("id")))
-        )
-    )
-    return top.select("id", "rank", F.round("_cos", 4).alias("cos_sim"))
-
-
-def significant_terms(
-    df: DataFrame,
-    subset_col: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_doc_count: int = 3,
-    top_n: int = 25,
-) -> DataFrame:
-    """Elasticsearch's ``significant_terms`` aggregation re-derived as a
-    DataFrame plan (the JLH heuristic — ES SignificantTermsHeuristic
-    default family; the reference delegates all aggregations to ES,
-    reference `src/dug/core/async_search.py` builds the agg DSL): which
-    terms are unusually frequent in a document subset versus the whole
-    corpus?
-
-        jlh(t) = (fg% − bg%) · (fg% / bg%),   kept when fg% > bg%,
-
-    with document-frequency semantics (each doc counts a term once) and
-    the background INCLUDING the foreground, both as in ES.  Used for
-    "what characterizes this source / language / study group" drills.
-
-    Plan shape: corpus totals fold to two literals (one tiny agg —
-    the same literal-folding the BM25 family uses), then ONE
-    explode+distinct and ONE term aggregation with a conditional
-    foreground sum — a single corpus pass and a term-keyed shuffle; the
-    JLH arithmetic is all literal-side codegen.  Tokenization is the
-    shared ``std_with_stopwords`` analyzer, so the oracle is
-    bit-identical cross-engine.
-    """
-    fg = F.col(subset_col).cast("boolean")
-    n_all, n_fg = df.agg(
-        F.count(F.lit(1)), F.sum(fg.cast("int"))
-    ).first()
-    n_fg = int(n_fg or 0)
-    if n_fg == 0:
-        raise ValueError(f"significant_terms: empty foreground {subset_col}")
-    doc_terms = (
-        df.select(
-            F.col(id_col),
-            fg.alias("fg"),
-            F.explode(analyzer.analyze_col(F.col(text_col))).alias("term"),
-        )
-        .distinct()
-    )
-    stats = doc_terms.groupBy("term").agg(
-        F.sum(F.col("fg").cast("int")).alias("fg_df"),
-        F.count(F.lit(1)).alias("bg_df"),
-    )
-    fg_pct = F.col("fg_df").cast("double") / F.lit(float(n_fg))
-    bg_pct = F.col("bg_df").cast("double") / F.lit(float(n_all))
-    scored = stats.withColumn(
-        "jlh", (fg_pct - bg_pct) * (fg_pct / bg_pct)
-    ).where(
-        (F.col("fg_df") >= min_doc_count) & (fg_pct > bg_pct)
-    )
-    return (
-        scored.orderBy(F.desc("jlh"), F.asc("term"))
-        .limit(int(top_n))
-        .select("term", "fg_df", "bg_df", F.round("jlh", 6).alias("jlh"))
-    )

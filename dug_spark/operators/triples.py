@@ -124,15 +124,14 @@ def build_triples(
     ONE corpus-sized shuffle.
 
     mentions collapse to per-document concept arrays (`doc_concept_sets`,
-    one groupBy on the unique doc key), materialized once with an eager
-    localCheckpoint — the array table has one row per document, ~|concepts|×
-    smaller than the flat pair table, so the three downstream branches
-    re-read a compact relation instead of re-running the Python annotation
-    scan (3× the dominant cost) or racing to build a lazy cache.
+    one groupBy on the unique doc key).  The three branches read that same
+    shuffle: the planner reuses the identical exchange, so the Python
+    annotation scan below it runs once per action, and building the
+    result runs no Spark job.
     HAS_CONCEPT = explode (already distinct: unique doc key × set);
     subclass   = ontology edges semi-joined to the exploded live concepts;
     co-mention = pair explode of the same arrays."""
-    per_doc = doc_concept_sets(mentions).localCheckpoint(eager=False)
+    per_doc = doc_concept_sets(mentions)
     out = _finish(
         per_doc.select(
             F.col("element_id").alias("subj"),

@@ -48,8 +48,8 @@ class PipelineResult:
     def lineage(self) -> dict[int, tuple[int, int]]:
         """{source_partition: (input_rows, extracted_mentions)} — read
         after an action has materialized the annotate scan.  CUMULATIVE
-        across actions that re-execute the scan (build_triples eagerly
-        checkpoints once at plan build); CheckpointManager.write_stage
+        across actions that execute the scan (each stage write of a
+        derived DataFrame is one); CheckpointManager.write_stage
         snapshots before/after its write to attribute a single pass."""
         return dict(self.lineage_acc.value) if self.lineage_acc is not None else {}
 

@@ -132,7 +132,7 @@ class CheckpointManager:
                     shutil.rmtree(path, ignore_errors=True)
         tmp = final + f".tmp-{self.run_id}"
         # the accumulator is cumulative across every action that executes
-        # the annotate scan (e.g. build_triples' eager checkpoint); snapshot
+        # the annotate scan (e.g. an earlier stage's write); snapshot
         # before the write so the recorded lineage is exactly this stage's
         # pass over the source partitions
         before = dict(lineage_acc.value) if lineage_acc is not None else {}

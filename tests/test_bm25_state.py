@@ -105,6 +105,28 @@ def test_steady_state_search_runs_one_job(spark):
     assert n == [1]
 
 
+def test_plain_bm25_reuses_the_state_one_job_per_query(spark):
+    """bm25_topk scores through the same per-index state: after the first
+    query against a DataFrame, each query is ONE Spark job, exact or
+    fuzzy — no statistics aggregate and no vocabulary scan per query."""
+    rng = random.Random(5)
+    words = ["spark", "sparks", "window", "windows", "stream", "strean",
+             "winter", "jobs", "fast"]
+    docs = spark.createDataFrame(
+        [(i, " ".join(rng.choice(words) for _ in range(rng.randint(1, 6))))
+         for i in range(40)],
+        "doc_id long, text string",
+    )
+    search.bm25_topk(docs, "spark window", k=5).collect()
+    for fuzziness in (0, 1):
+        with _jobs(spark, f"bm25-plain-{fuzziness}") as n:
+            hits = search.bm25_topk(
+                docs, "stream window", k=5, fuzziness=fuzziness
+            ).collect()
+        assert hits, fuzziness
+        assert n == [1], fuzziness
+
+
 def test_new_query_of_a_seen_shape_compiles_no_class(spark):
     """Query terms, phrase, idf and avgdl are bound as columns of a one-row
     generator, not spliced into the score as literals, so a query with a
@@ -221,27 +243,6 @@ def test_reused_state_matches_a_fresh_index_over_a_query_stream(spark):
             assert reused == []
         elif query == "heart attack":
             assert reused
-
-
-def test_driver_expansion_matches_fuzzy_expand_terms(spark):
-    """The boosted entry points expand query tokens in the vocabulary their
-    state holds; the groups equal fuzzy_expand_terms' JVM expansion,
-    prefix rule, distance bound and max_expansions cap included."""
-    from pyspark.sql import functions as F
-
-    vocab = ["heart", "hearts", "heard", "hart", "heat", "hearth", "xheart",
-             "blood", "blod", "bloods", "presure", "pressure", "pressures"]
-    vocab += [f"heaz{i}" for i in range(60)] + [f"hea{i}" for i in range(60)]
-    df = spark.createDataFrame([(vocab,)], "tk array<string>")
-    qtoks = ["heart", "hea1", "blood", "pressure", "zzz", "he"]
-    for fuzziness, prefix_length in [(1, 3), (2, 3), (1, 0), (1, 2)]:
-        want = search.fuzzy_expand_terms(
-            df, F.col("tk"), qtoks, fuzziness, prefix_length
-        )
-        got = search._expand_in_vocab(
-            sorted(vocab), qtoks, fuzziness, prefix_length
-        )
-        assert got == want, (fuzziness, prefix_length)
 
 
 def test_concept_search_shares_the_index_state(spark):

@@ -2,8 +2,6 @@
 
 import random
 
-from pyspark.sql import functions as F
-
 from dug_spark.operators import canonicalize
 
 

@@ -331,10 +331,10 @@ def test_language_id_ngram_holdout_sentences(spark):
 
 
 def test_bm25_scan_prunes_columns(spark):
-    """Column pruning reaches the scan: the BM25 scoring plan reads ONLY
-    the (id, toks, dl) projection — since r6 the tokenized projection is
-    materialized once (localCheckpoint) and the scoring scan reads that
-    ExistingRDD, so no other document column survives into the plan."""
+    """Column pruning reaches the scan: the BM25 index state persists only
+    the tokenized (id, tokens, length) projection, so the scoring plan
+    reads an InMemoryTableScan whose parquet scan reads doc_id and text
+    and no other document column."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     from dug_spark.operators import search
 
@@ -344,8 +344,10 @@ def test_bm25_scan_prunes_columns(spark):
         .executedPlan()
         .toString()
     )
-    assert "Scan ExistingRDD[id#" in plan and "toks#" in plan, plan[:2000]
-    for col in ("lang#", "source#", "n_chars#", "text#"):
+    assert "InMemoryTableScan" in plan, plan[:2000]
+    scan = plan[plan.index("InMemoryTableScan"):]
+    assert "ReadSchema: struct<doc_id:bigint,text:string>" in scan, plan[:2000]
+    for col in ("lang#", "source#", "n_chars#"):
         assert col not in plan, plan[:2000]
 
 

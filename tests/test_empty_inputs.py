@@ -157,9 +157,3 @@ def test_kg_diff_and_ntriples_empty(spark):
     assert kg_diff(t, t).count() == 0
     assert to_ntriples(t).count() == 0
 
-
-def test_rrf_fuse_empty_lists(spark):
-    from dug_spark.operators.search import rrf_fuse
-
-    a = spark.createDataFrame([], "id long, rank long")
-    assert rrf_fuse([a], k=5).count() == 0

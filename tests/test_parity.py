@@ -3,8 +3,6 @@ implementation of the reference semantics (annotate → normalize/greenlist →
 canonicalize → triples).  BASELINE gate is P/R ≥ 0.95; equivalence here is
 exact (P = R = 1.0)."""
 
-from pyspark.sql import functions as F
-
 from dug_spark import fixtures
 from dug_spark.pipeline import Pipeline
 

@@ -99,16 +99,14 @@ def test_pipeline_determinism(spark):
     assert a == b
 
 
-def test_run_over_recrawl_join_runs_no_job(spark, tmp_path, monkeypatch):
+def test_run_over_recrawl_join_runs_no_job(spark, tmp_path):
     """Planning a recrawl's change set (incremental_update's url-keyed
     hash-compare join, broadcast under AQE) runs no Spark job: the
     partition floor reads its count from the plan, where ``df.rdd``
-    ran the join's broadcast stage, which the write then ran again.
-    build_triples is stubbed out: its lazy localCheckpoint executes the
-    input's adaptive stages as well, and the checkpoint it returns reuses
-    their output."""
-    from dug_spark.operators import triples
-
+    ran the join's broadcast stage, which the write then ran again; and
+    build_triples plans its three families over one shared shuffle with
+    no checkpoint (a localCheckpoint executes the input's adaptive stages
+    when it is planned)."""
     path = str(tmp_path / "pages")
     fixtures.heart_corpus(spark, n_docs=24).write.parquet(path)
     prev = spark.read.parquet(path)
@@ -122,7 +120,6 @@ def test_run_over_recrawl_join_runs_no_job(spark, tmp_path, monkeypatch):
         .where(F.col("_h_prev").isNull() | (F.col("_h") != F.col("_h_prev")))
         .drop("_h", "_h_prev")
     )
-    monkeypatch.setattr(triples, "build_triples", lambda mentions, kg_edges: mentions)
     pipe = _pipeline(spark)
     pipe.run(prev)  # the dictionary fold runs its jobs once per pipeline
     sc = spark.sparkContext

@@ -139,7 +139,7 @@ def test_manifest_records_source_lineage(spark, tmp_path):
     # extraction counts across source partitions = total mentions written
     assert sum(r["output_rows"] for r in src) == sum(r["output_rows"] for r in out)
     # PipelineResult.lineage() is cumulative across scan-executing actions
-    # (build_triples' eager checkpoint + the stage write = 2 passes here)
+    # (the stage write is the only one here: 1 pass)
     lin = res.lineage()
     total = sum(v[0] for v in lin.values())
     assert total >= n_en and total % n_en == 0

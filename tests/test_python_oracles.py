@@ -6,8 +6,6 @@ gate for the xxhash64/hyperplane query families."""
 
 from __future__ import annotations
 
-from collections import defaultdict
-
 import pytest
 from pyspark.sql import functions as F
 

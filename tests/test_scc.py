@@ -1,8 +1,6 @@
 """Strongly connected components (graph.strongly_connected_components)
 vs the iterative-Tarjan mirror (pyoracle.scc_rows)."""
 
-import pytest
-
 from dug_spark.functions import pyoracle as po
 from dug_spark.operators import graph
 

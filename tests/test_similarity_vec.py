@@ -12,7 +12,6 @@ from __future__ import annotations
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from dug_spark.operators import similarity
 

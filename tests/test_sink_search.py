@@ -459,45 +459,6 @@ def test_bm25_empty_query_and_corpus(spark):
     assert search.bm25_topk(empty, "x", k=5).collect() == []
 
 
-def test_qlm_topk_hand_check(spark):
-    """Dirichlet query-likelihood against a hand mirror of the Lucene
-    LMDirichletSimilarity form: per matching term max(0, ln(1 +
-    tf/(mu*cf/total)) + ln(mu/(dl+mu))); plan stays TakeOrdered."""
-    import math
-
-    rows = [(1, "x y x"), (2, "x"), (3, "z z z z"), (4, "y y")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    mu = 2000.0
-    out = search.qlm_topk(df, "x", k=10, mu=mu).collect()
-    total, cf_x = 10, 3
-
-    def score(tf, dl):
-        mu_p = (mu * cf_x) / total
-        return round(
-            max(0.0, math.log(1.0 + tf / mu_p) + math.log(mu / (dl + mu))), 6
-        )
-
-    got = {r["id"]: r["score"] for r in out}
-    assert set(got) == {1, 2}, "only docs containing a query token score"
-    assert abs(got[1] - score(2, 3)) < 1e-9
-    assert abs(got[2] - score(1, 1)) < 1e-9
-    assert [r["id"] for r in out] == sorted(got, key=lambda d: (-got[d], d))
-    plan = (
-        search.qlm_topk(df, "x y", k=5)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "TakeOrdered" in plan
-    # a term absent from the collection contributes nothing (no log(0));
-    # stopword-only queries and empty corpora return empty
-    out2 = {r["id"] for r in search.qlm_topk(df, "x q99", k=10).collect()}
-    assert out2 == {1, 2}
-    assert search.qlm_topk(df, "the and", k=5).collect() == []
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    assert search.qlm_topk(empty, "x", k=5).collect() == []
-
-
 # ---------------------------------------------------------------------------
 # std_with_stopwords analyzer + multi-field boosted BM25 (round 4)
 
@@ -543,30 +504,6 @@ def test_bm25_query_stopwords_ignored(spark):
     df2 = spark.createDataFrame(rows2, "doc_id long, text string")
     c = {(r["id"], r["score"]) for r in search.bm25_topk(df2, "x", k=10).collect()}
     assert a == c
-
-
-def test_bm25_boosted_single_or_field_equals_plain(spark):
-    """With one field and a single or^1 clause, the multi-field machinery
-    reduces to bm25_topk (per-field docCount == corpus count when every
-    doc has tokens) — cross-validates the two implementations."""
-    from pyspark.sql import functions as F
-
-    rows = [(1, "x y x w"), (2, "x q"), (3, "z z z z"), (4, "y y w")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    plain = [
-        (r["id"], r["score"]) for r in search.bm25_topk(df, "x y", k=10).collect()
-    ]
-    boosted = [
-        (int(r["id"]), r["score"])
-        for r in search.bm25_boosted_topk(
-            df.select(F.col("doc_id").cast("string").alias("concept_id"), "text"),
-            "x y",
-            [("f", F.col("text"), [("or", 1.0)])],
-            id_col="concept_id",
-            k=10,
-        ).collect()
-    ]
-    assert sorted(plain) == sorted(boosted)
 
 
 def test_bm25_boosted_gates_and_empty_field(spark):
@@ -645,21 +582,19 @@ def test_bm25_boosted_plan_takeordered(spark):
 # blending — validated against an independent pure-Python recompute
 
 
-def test_fuzzy_expand_terms_prefix_and_distance(spark):
+def test_fuzzy_expand_terms_prefix_and_distance():
     """fuzziness=1, prefix_length=3 (the reference's match-clause
     parameters): expansion requires an EXACT 3-char prefix and ≤1 edit;
     the query token is always in its own group."""
-    docs = [(1, "spark spork sparks spring stark sparkly")]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
     from dug_spark.functions import analyzer
 
-    base = df.select(analyzer.analyze_col(F.col("text")).alias("tk"))
-    groups = search.fuzzy_expand_terms(base, F.col("tk"), ["spark"])
+    vocab = sorted(set(analyzer.analyze("spark spork sparks spring stark sparkly")))
+    groups = search._expand_in_vocab(vocab, ["spark"], 1, 3)
     # spork fails the prefix (spo), spring fails (spr), stark fails (sta),
     # sparkly is 2 edits away
     assert groups == {"spark": ["spark", "sparks"]}
     # a query token absent from the vocabulary keeps its singleton group
-    groups2 = search.fuzzy_expand_terms(base, F.col("tk"), ["zzz"])
+    groups2 = search._expand_in_vocab(vocab, ["zzz"], 1, 3)
     assert groups2 == {"zzz": ["zzz"]}
 
 
@@ -710,46 +645,6 @@ def test_bm25_fuzzy_matches_python_recompute(spark):
         r["id"] for r in search.bm25_topk(df, "spark", k=10, fuzziness=0).collect()
     }
     assert 2 not in out0 and {1, 3} <= out0
-
-
-def test_bm25_wide_df_path_matches_inline(spark, monkeypatch):
-    """The agg-width guard: above _DF_AGG_WIDTH (field, term) columns the
-    df statistics come from the explode aggregation instead of inline
-    conditional sums — forcing the wide path must give bit-identical
-    output on both BM25 entry points."""
-    rows = [
-        (1, "spark jobs run fast"),
-        (2, "sparks fly stream tonight"),
-        (3, "spark sparks strean engines"),
-        (4, "other words entirely here"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    inline = search.bm25_topk(df, "spark stream", k=10, fuzziness=1).collect()
-    monkeypatch.setattr(search, "_DF_AGG_WIDTH", 0)
-    wide = search.bm25_topk(df, "spark stream", k=10, fuzziness=1).collect()
-    assert [(r["id"], r["score"]) for r in inline] == [
-        (r["id"], r["score"]) for r in wide
-    ]
-
-    def cdf():
-        return spark.createDataFrame(
-            [(str(i), t) for i, t in rows], "concept_id string, name string"
-        )
-
-    fields = [("name", F.col("name"), [("phrase", 10.0), ("or", 1.0)])]
-    monkeypatch.undo()
-    inline_b = search.bm25_boosted_topk(
-        cdf(), "spark stream", fields, k=10, fuzziness=1
-    ).collect()
-    monkeypatch.setattr(search, "_DF_AGG_WIDTH", 0)
-    # a fresh DataFrame over the same rows: the index state is built per
-    # DataFrame object, so this compares a rebuilt state, not a reused one
-    wide_b = search.bm25_boosted_topk(
-        cdf(), "spark stream", fields, k=10, fuzziness=1
-    ).collect()
-    assert [(r["id"], r["score"]) for r in inline_b] == [
-        (r["id"], r["score"]) for r in wide_b
-    ]
 
 
 def test_bm25_boosted_fuzzy_and_gate(spark):
@@ -805,17 +700,11 @@ def test_phrase_gate_not_across_array_elements(spark):
     assert out["c2"] > out["c1"]
 
 
-def test_fuzzy_cap_keeps_original_token(spark):
+def test_fuzzy_cap_keeps_original_token():
     """max_expansions never evicts the distance-0 query token from its
     own group."""
-    vocab = " ".join(f"con{c}e" for c in "abcdefghij") + " cone"
-    df = spark.createDataFrame([(1, vocab)], "doc_id long, text string")
-    from dug_spark.functions import analyzer
-
-    base = df.select(analyzer.analyze_col(F.col("text")).alias("tk"))
-    groups = search.fuzzy_expand_terms(
-        base, F.col("tk"), ["cone"], max_expansions=3
-    )
+    vocab = sorted([f"con{c}e" for c in "abcdefghij"] + ["cone"])
+    groups = search._expand_in_vocab(vocab, ["cone"], 1, 3, max_expansions=3)
     assert "cone" in groups["cone"]
     assert len(groups["cone"]) == 3
 
@@ -832,60 +721,3 @@ def test_simple_negated_phrase_null_field(spark):
     ).withColumn("data_type", F.lit("d"))
     hits = search.search_variables(df, '-"heart attack" text').collect()
     assert [h["element_id"] for h in hits] == ["v1"]
-
-
-# --- hybrid RRF fusion -----------------------------------------------------
-
-
-def test_rrf_fuse_hand_computed(spark):
-    from dug_spark.operators.search import rrf_fuse
-
-    a = spark.createDataFrame([(10, 1), (20, 2), (30, 3)], "id long, rank long")
-    b = spark.createDataFrame([(20, 1), (40, 2)], "id long, rank long")
-    got = {
-        r["id"]: (r["rrf_score"], r["n_lists"], r["rank"])
-        for r in rrf_fuse([a, b], k=10).collect()
-    }
-    # 20: 1/62 + 1/61; 10: 1/61; 40: 1/62; 30: 1/63
-    assert got[20] == (round(1 / 62 + 1 / 61, 6), 2, 1)
-    assert got[10] == (round(1 / 61, 6), 1, 2)
-    assert got[40] == (round(1 / 62, 6), 1, 3)
-    assert got[30] == (round(1 / 63, 6), 1, 4)
-
-
-def test_rrf_fuse_empty_and_k_cap(spark):
-    from dug_spark.operators.search import rrf_fuse
-
-    a = spark.createDataFrame([(i, i + 1) for i in range(20)], "id long, rank long")
-    assert rrf_fuse([a], k=5).count() == 5
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        rrf_fuse([])
-
-
-def test_cosine_topk_single_matches_bruteforce(spark, sf_dir):
-    import math
-
-    from dug_spark.operators.search import cosine_topk_single
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    rows = {r["vec_id"]: list(map(float, r["embedding"])) for r in emb.collect()}
-    qv = rows[0]
-    qn = math.sqrt(sum(x * x for x in qv))
-
-    def cos(v):
-        return sum(a * b for a, b in zip(qv, v)) / (
-            qn * math.sqrt(sum(x * x for x in v))
-        )
-
-    want = sorted(
-        ((cos(v), i) for i, v in rows.items() if i != 0),
-        key=lambda t: (-t[0], t[1]),
-    )[:5]
-    got = cosine_topk_single(emb, qv, k=5, exclude_id=0).collect()
-    assert [(r["id"], r["rank"]) for r in got] == [
-        (i, r + 1) for r, (_c, i) in enumerate(want)
-    ]
-    for r, (c, _i) in zip(got, want):
-        assert abs(r["cos_sim"] - round(c, 4)) <= 1e-4
