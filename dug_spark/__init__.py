@@ -25,8 +25,8 @@ Layout
                    sink) plus the operators the ``__spark_entry__``
                    queries use (dedup, similarity, text-stats, curate,
                    lm, importance, graph, weblinks, relations,
-                   multimodal), and two modules only tests reach yet
-                   (crawl, sketch)
+                   multimodal), and one module only tests reach yet
+                   (sketch)
 - ``sources``      parsers for the reference's input formats (dbGaP-style
                    XML, TOPMed TSV+tags, RADx JSON, WARC)
 - ``plans``        JSON commit records, checkpoint manifest / exact
@@ -35,6 +35,7 @@ Layout
 
 Every other module is reached from ``__spark_entry__.py``, ``kgbench/``
 or ``jobs/run_pipeline.py``, or is Dug's own surface (sources, sink,
-biolink, metrics); ``tests/test_reachability.py`` checks it and holds the
-test-only modules to its named list.
+biolink, metrics); ``tests/test_reachability.py`` checks it, holds the
+test-only modules to its named list, and fails on any top-level name
+no ``.py`` file of the repo references.
 """

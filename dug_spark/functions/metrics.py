@@ -11,7 +11,6 @@ same key, nothing driver-sized but the final 3 numbers.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 _KEY = ["subj", "pred", "obj"]
 

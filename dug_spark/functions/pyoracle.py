@@ -1204,50 +1204,6 @@ def weighted_sample_rows(
     return out
 
 
-def robots_allowed(
-    urls: list[str],
-    rules: list[tuple],
-    agent: str,
-) -> list[tuple]:
-    """Recompute of operators/crawl.robots_filter: rules =
-    (host, agent, directive, pattern); RFC 9309 group selection
-    (agent-specific group shadows '*'), longest-match precedence, allow
-    wins length ties, no match / no rules ⇒ allowed.  Same pattern
-    translation: escape regex specials except '*' (→ '.*') and a
-    trailing '$' (→ end anchor).  Returns (url, allowed) sorted by url."""
-    import re as _re
-
-    def rx(pattern: str):
-        anchored = pattern.endswith("$")
-        body = pattern[:-1] if anchored else pattern
-        esc = _re.sub(r"([.^$+?(){}\[\]|\\])", r"\\\1", body)
-        return _re.compile("^" + esc.replace("*", ".*") + ("$" if anchored else ""))
-
-    by_host: dict = {}
-    for host, ag, directive, pattern in rules:
-        by_host.setdefault(host, []).append((ag, directive, pattern))
-    out = []
-    for url in urls:
-        m = _re.match(r"^[a-z][a-z0-9+.-]*://([^/?#]+)([^#]*)", url)
-        host, path = m.group(1), m.group(2) or "/"
-        host_rules = by_host.get(host, [])
-        group = (
-            agent
-            if any(ag == agent for ag, _d, _p in host_rules)
-            else "*"
-        )
-        best = None  # (len, is_allow)
-        for ag, directive, pattern in host_rules:
-            if ag != group:
-                continue
-            if rx(pattern).match(path):
-                cand = (len(pattern), 1 if directive == "allow" else 0)
-                if best is None or cand > best:
-                    best = cand
-        out.append((url, True if best is None else best[1] == 1))
-    return sorted(out)
-
-
 def bloom_words_py(values: list[str], num_bits: int, k: int) -> list[int]:
     """Mirror of operators/sketch.bloom_build + bloom_words: k chained
     xxh64 bit positions per value, OR-folded into num_bits//64 signed
@@ -1378,311 +1334,6 @@ def cms_rows(
     ]
 
 
-def sitemap_entry_rows(pages: list[tuple[str, str]]) -> list[tuple]:
-    """Mirror of operators/crawl.parse_sitemaps over (url, xml) pages:
-    (sitemap_url, kind, entry_idx, loc, lastmod, changefreq, priority)
-    per <url>/<sitemap> block, same DOTALL regexes, same trim, same
-    entity order (&amp; last), priority float or None."""
-    import re as _re
-
-    out = []
-    for url, xml in pages:
-        xml = xml or ""
-        if _re.search(r"<sitemapindex[\s>]", xml, _re.S):
-            kind, pat = "sitemapindex", r"<sitemap>(.*?)</sitemap>"
-        elif _re.search(r"<urlset[\s>]", xml, _re.S):
-            kind, pat = "urlset", r"<url>(.*?)</url>"
-        else:
-            continue
-        for i, block in enumerate(_re.findall(pat, xml, _re.S)):
-
-            def _tag(t: str) -> str:
-                m = _re.search(rf"<{t}>\s*(.*?)\s*</{t}>", block, _re.S)
-                return m.group(1) if m else ""
-
-            loc = _tag("loc")
-            for ent, ch in (
-                ("&lt;", "<"),
-                ("&gt;", ">"),
-                ("&quot;", '"'),
-                ("&apos;", "'"),
-                ("&amp;", "&"),
-            ):
-                loc = loc.replace(ent, ch)
-            pr = _tag("priority")
-            try:
-                prv = float(pr) if pr else None
-            except ValueError:
-                prv = None
-            out.append(
-                (
-                    url,
-                    kind,
-                    i,
-                    loc or None,
-                    _tag("lastmod") or None,
-                    _tag("changefreq") or None,
-                    prv,
-                )
-            )
-    return out
-
-
-def page_metadata_rows(pages: list[tuple[str, str]]) -> list[tuple]:
-    """Mirror of operators/weblinks.page_metadata over (url, html) pages:
-    (url, title, meta_description, canonical, og_title, html_lang,
-    noindex, nofollow) — same regexes (case-insensitive, DOTALL, both
-    attribute orders), same whitespace collapse, same five-entity decode
-    (&amp; last), '' treated as absent."""
-    import re as _re
-
-    def dec(s: str) -> str:
-        for ent, ch in (
-            ("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),
-            ("&apos;", "'"), ("&amp;", "&"),
-        ):
-            s = s.replace(ent, ch)
-        return s
-
-    def meta(html: str, attr: str, value: str):
-        m = _re.search(
-            rf'<meta\s[^>]*{attr}="{value}"[^>]*content="([^"]*)"',
-            html, _re.I | _re.S,
-        )
-        v = m.group(1) if m else ""
-        if not v:
-            m = _re.search(
-                rf'<meta\s[^>]*content="([^"]*)"[^>]*{attr}="{value}"',
-                html, _re.I | _re.S,
-            )
-            v = m.group(1) if m else ""
-        return v or None
-
-    out = []
-    for url, html in pages:
-        html = html or ""
-        m = _re.search(r"<title[^>]*>(.*?)</title>", html, _re.I | _re.S)
-        title = _re.sub(r"\s+", " ", dec(m.group(1))).strip() if m else ""
-        m = _re.search(
-            r'<link\s[^>]*rel="canonical"[^>]*href="([^"]*)"',
-            html, _re.I | _re.S,
-        )
-        canon = m.group(1) if m else ""
-        if not canon:
-            m = _re.search(
-                r'<link\s[^>]*href="([^"]*)"[^>]*rel="canonical"',
-                html, _re.I | _re.S,
-            )
-            canon = m.group(1) if m else ""
-        desc = meta(html, "name", "description")
-        og = meta(html, "property", "og:title")
-        robots = (meta(html, "name", "robots") or "").lower()
-        m = _re.search(r'<html\s[^>]*lang="([^"]*)"', html, _re.I | _re.S)
-        lang = (m.group(1).lower() if m else "") or None
-        out.append(
-            (
-                url,
-                title or None,
-                dec(desc) if desc else None,
-                canon or None,
-                dec(og) if og else None,
-                lang,
-                bool(_re.search(r"\bnoindex\b", robots)),
-                bool(_re.search(r"\bnofollow\b", robots)),
-            )
-        )
-    return out
-
-
-def feed_entry_rows(pages: list[tuple[str, str]]) -> list[tuple]:
-    """Mirror of operators/crawl.parse_feeds over (url, xml) pages:
-    (feed_url, kind, entry_idx, title, link, published, entry_id) per
-    <item>/<entry> block — same DOTALL regexes, same five-entity decode
-    on title/link, Atom published→updated fallback, None for absent."""
-    import re as _re
-
-    def dec(s: str) -> str:
-        for ent, ch in (
-            ("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),
-            ("&apos;", "'"), ("&amp;", "&"),
-        ):
-            s = s.replace(ent, ch)
-        return s
-
-    out = []
-    for url, xml in pages:
-        xml = xml or ""
-        if _re.search(r"<feed[\s>]", xml, _re.S):
-            kind, pat = "atom", r"<entry[\s>](.*?)</entry>"
-        elif _re.search(r"<rss[\s>]", xml, _re.S):
-            kind, pat = "rss", r"<item[\s>](.*?)</item>"
-        else:
-            continue
-        for i, block in enumerate(_re.findall(pat, xml, _re.S)):
-
-            def _tag(t: str) -> str:
-                m = _re.search(rf"<{t}>\s*(.*?)\s*</{t}>", block, _re.S)
-                return m.group(1) if m else ""
-
-            if kind == "atom":
-                m = _re.search(r'<link[^>]*href="([^"]*)"', block, _re.S)
-                link = m.group(1) if m else ""
-                published = _tag("published") or _tag("updated")
-                eid = _tag("id")
-            else:
-                link = _tag("link")
-                published = _tag("pubDate")
-                eid = _tag("guid")
-            out.append(
-                (
-                    url,
-                    kind,
-                    i,
-                    dec(_tag("title")) or None,
-                    dec(link) or None,
-                    published or None,
-                    eid or None,
-                )
-            )
-    return out
-
-
-def host_boilerplate_strip_rows(
-    docs: list[tuple[str, int, str]],
-    min_docs: int = 2,
-    min_fraction: float = 0.5,
-    min_chars: int = 1,
-) -> list[tuple]:
-    """Mirror of operators/curate.strip_host_boilerplate over
-    (host, doc_id, text) docs: per-host lines present in >= min_fraction
-    of the host's docs and >= min_docs docs (exact match, no trim,
-    len >= min_chars) are removed from every doc of that host.
-    Returns (id, host, clean_text, n_lines_kept, n_lines_removed)."""
-    host_docs: dict[str, set] = {}
-    line_docs: dict[tuple[str, str], set] = {}
-    for host, did, text in docs:
-        host_docs.setdefault(host, set()).add(did)
-        for ln in (text or "").split("\n"):
-            if len(ln) >= min_chars:
-                line_docs.setdefault((host, ln), set()).add(did)
-    bp = {
-        (host, ln)
-        for (host, ln), ds in line_docs.items()
-        if len(ds) >= min_docs
-        and len(ds) / len(host_docs[host]) >= min_fraction
-    }
-    out = []
-    for host, did, text in docs:
-        kept, removed = [], 0
-        for ln in (text or "").split("\n"):
-            if (host, ln) in bp:
-                removed += 1
-            else:
-                kept.append(ln)
-        out.append((did, host, "\n".join(kept), len(kept), removed))
-    return out
-
-
-def robots_parse_rows(
-    pages: list[tuple[str, str]]
-) -> tuple[list[tuple], list[tuple]]:
-    """Mirror of operators/crawl.parse_robots + robots_sitemap_urls over
-    (host, robots_txt) pages.  Returns (rules, sitemaps):
-    rules = (host, agent, directive, pattern, line_no) — RFC 9309
-    grouping (consecutive User-agent lines form a header; following
-    allow/disallow lines bind to every header agent), headerless and
-    empty-pattern rules dropped; sitemaps = (host, sitemap_url)
-    distinct."""
-    rules, sitemaps = [], set()
-    for host, text in pages:
-        block = 0
-        prev_ua = False
-        agents_by_block: dict[int, list[str]] = {}
-        pending: list[tuple[int, str, str, int]] = []
-        for i, raw in enumerate((text or "").split("\n")):
-            clean = raw.split("#", 1)[0].strip()
-            if ":" not in clean:
-                continue
-            key, value = clean.split(":", 1)
-            key, value = key.strip().lower(), value.strip()
-            if key == "sitemap":
-                if value:
-                    sitemaps.add((host, value))
-                continue
-            if key == "user-agent":
-                if not prev_ua:
-                    block += 1
-                agents_by_block.setdefault(block, []).append(value.lower())
-                prev_ua = True
-            elif key in ("allow", "disallow"):
-                if value and block > 0:
-                    pending.append((block, key, value, i))
-                prev_ua = False
-        for b, directive, pattern, ln in pending:
-            for agent in agents_by_block.get(b, []):
-                rules.append((host, agent, directive, pattern, ln))
-    return rules, sorted(sitemaps)
-
-
-def main_content_rows(
-    pages: list[tuple[str, str]],
-    min_chars: int = 80,
-    max_link_density: float = 0.33,
-) -> list[tuple]:
-    """Mirror of operators/weblinks.extract_main_content over (url,
-    html) pages: same script/style/head/comment removal, same
-    block-boundary set, same length/link-density gate, same five-entity
-    decode.  Returns (url, main_text, n_blocks, n_blocks_kept)."""
-    import re as _re
-
-    boundary = _re.compile(
-        r"</?(?:p|div|h[1-6]|li|ul|ol|table|tbody|thead|tr|td|th|section"
-        r"|article|main|header|footer|nav|aside|blockquote|br|form|figure"
-        r"|figcaption)(?:\s[^>]*)?>",
-        _re.I,
-    )
-    link = _re.compile(r"<a(?:\s[^>]*)?>(.*?)</a>", _re.I | _re.S)
-
-    def dec(s: str) -> str:
-        for ent, ch in (
-            ("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),
-            ("&apos;", "'"), ("&amp;", "&"),
-        ):
-            s = s.replace(ent, ch)
-        return s
-
-    out = []
-    for url, html in pages:
-        cleaned = html or ""
-        cleaned = _re.sub(
-            r"<(?:script|style)(?:\s[^>]*)?>.*?</(?:script|style)>",
-            " ", cleaned, flags=_re.I | _re.S,
-        )
-        cleaned = _re.sub(
-            r"<head(?:\s[^>]*)?>.*?</head>", " ", cleaned,
-            flags=_re.I | _re.S,
-        )
-        cleaned = _re.sub(r"<!--.*?-->", " ", cleaned, flags=_re.S)
-        measured = []
-        for b in boundary.split(cleaned):
-            link_chars = sum(len(m) for m in link.findall(b))
-            # Java \s is ASCII-only ([ \t\n\x0B\f\r]); match it exactly
-            # so unicode whitespace inside document text can't diverge
-            text = _re.sub(
-                r"[ \t\n\x0b\f\r]+", " ",
-                _re.sub(r"<[^>]*>", " ", b, flags=_re.S),
-            ).strip(" ")
-            if text:
-                measured.append((text, len(text), link_chars))
-        kept = [
-            t
-            for t, n, lc in measured
-            if n >= min_chars and float(lc) <= max_link_density * float(n)
-        ]
-        out.append((url, dec("\n\n".join(kept)), len(measured), len(kept)))
-    return out
-
-
 def winnow_rows(docs, k: int = 5, window: int = 4):
     """Mirror of dedup.winnow_fingerprints: whitespace tokens, XXH64 of
     the space-joined k-gram (Spark single-string convention, seed 42),
@@ -1744,61 +1395,4 @@ def winnow_overlap_rows(docs, k: int = 5, window: int = 4,
                     (a, b, shared,
                      round_half_up(shared / min(sizes[a], sizes[b]), 6))
                 )
-    return out
-
-
-def jsonld_rows(pages):
-    """Mirror of weblinks.extract_jsonld over (url, html) pairs — strict
-    JSON objects with string fields (the synthesis contract; Spark's
-    from_json drops malformed/array blocks exactly as the except/
-    isinstance guards here do)."""
-    import json as _json
-    import re as _re
-
-    pat = _re.compile(
-        r'<script[^>]*type\s*=\s*["\']application/ld\+json["\'][^>]*>(.*?)</script>',
-        _re.I | _re.S,
-    )
-    out = []
-    for url, html in pages:
-        for idx, block in enumerate(pat.findall(html or "")):
-            try:
-                obj = _json.loads(block.strip())
-            except ValueError:
-                continue
-            if not isinstance(obj, dict):
-                continue
-            t = obj.get("@type")
-            if not isinstance(t, str):
-                continue
-
-            def s(k):
-                v = obj.get(k)
-                return v if isinstance(v, str) else None
-
-            out.append((url, idx, t, s("name"), s("url"), s("description")))
-    return out
-
-
-def html_table_rows(pages):
-    """Mirror of weblinks.extract_tables over (url, html) pairs — same
-    three nested non-greedy extractions, tag strip, Java-\\s collapse."""
-    import re as _re
-
-    tpat = _re.compile(r"<table[^>]*>(.*?)</table>", _re.I | _re.S)
-    rpat = _re.compile(r"<tr[^>]*>(.*?)</tr>", _re.I | _re.S)
-    cpat = _re.compile(r"<t([dh])[^>]*>(.*?)</t[dh]>", _re.I | _re.S)
-    out = []
-    for url, html in pages:
-        for ti, t in enumerate(tpat.findall(html or "")):
-            for ri, r in enumerate(rpat.findall(t)):
-                for ci, m in enumerate(cpat.finditer(r)):
-                    cell = _re.sub(
-                        r"[ \t\n\x0b\f\r]+",
-                        " ",
-                        _re.sub(r"<[^>]*>", " ", m.group(0), flags=_re.S),
-                    ).strip(" ")
-                    out.append(
-                        (url, ti, ri, ci, m.group(1).lower() == "h", cell)
-                    )
     return out

@@ -120,3 +120,21 @@ def concept_optional_terms(
             )
         ).alias("optional_terms")
     )
+
+
+def with_optional_terms(concepts: DataFrame, kg_answers: DataFrame) -> DataFrame:
+    """``concepts`` with optional_terms replaced by
+    ``concept_optional_terms(kg_answers)``: a left join on the broadcast
+    answer-side table, empty for a concept with no answers."""
+    return (
+        concepts.drop("optional_terms")
+        .join(F.broadcast(concept_optional_terms(kg_answers)), "concept_id", "left")
+        .withColumn(
+            "optional_terms",
+            F.coalesce("optional_terms", F.array().cast("array<string>")),
+        )
+        .select(
+            "concept_id", "name", "description", "type",
+            "search_terms", "optional_terms",
+        )
+    )

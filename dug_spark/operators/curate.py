@@ -104,212 +104,3 @@ def curation_report(curated: DataFrame) -> DataFrame:
         F.sum(F.col("is_canonical_copy").cast("long")).alias("n_canonical"),
         F.sum(F.col("keep").cast("long")).alias("n_kept"),
     )
-
-
-# ---------------------------------------------------------------------------
-# Leakage-safe corpus splitting.  Not in the reference (Dug has no
-# train/eval notion); this is the standard guard a training-data
-# pipeline needs before any model sees the corpus: near-duplicate pages
-# from the SAME site (shared boilerplate, templated articles) must never
-# straddle a split boundary, so the split unit is the leakage unit
-# (host/domain), not the document.
-
-
-def split_thresholds(weights) -> list[tuple[str, str]]:
-    """Cumulative split boundaries as 8-char lowercase-hex literals.
-
-    A document's unit hashes to ``substr(md5(unit), 1, 8)`` — uniform
-    over [0, 16^8) — and lexicographic comparison of fixed-width
-    lowercase hex IS numeric comparison, so ``h8 < hex(cum * 16^8)``
-    selects exactly the cumulative fraction.  Returned for all but the
-    last split (which takes the remainder); exposed so an external
-    system (or the DuckDB oracle) can reproduce the assignment from the
-    same literals."""
-    total = float(sum(w for _, w in weights))
-    out, cum = [], 0.0
-    for name, w in list(weights)[:-1]:
-        cum += w / total
-        out.append((name, format(min(int(cum * 16**8), 16**8 - 1), "08x")))
-    return out
-
-
-def leakage_safe_split(
-    df: DataFrame,
-    weights=(("train", 0.9), ("val", 0.05), ("test", 0.05)),
-    unit_col: str = "host",
-    split_col: str = "split",
-    salt: str = "",
-) -> DataFrame:
-    """Assign every row a deterministic split label such that all rows
-    sharing ``unit_col`` land in the SAME split (host-disjoint
-    train/val/test — the leakage guard).
-
-    ``weights`` is an ordered sequence of (name, weight); the assignment
-    is ``md5(salt || unit)`` bucketed by cumulative weight, so it is
-    stable across runs, machines, and engines, and changing ``salt``
-    re-deals the units.  NULL units hash as '' (one consistent split).
-
-    Scale shape: a narrow map — one md5 + substring + when-chain per
-    row, whole-stage codegen, zero shuffle, zero UDF; splitting 10^12
-    rows costs exactly one pass that can fuse with the scan.  No state,
-    so adding a new crawl increment later keeps every existing unit's
-    assignment unchanged — the property that makes the eval set stable
-    while the train set grows."""
-    names = [n for n, _ in weights]
-    ths = split_thresholds(weights)
-    h8 = F.substring(
-        F.md5(
-            F.concat(
-                F.lit(salt),
-                F.coalesce(F.col(unit_col).cast("string"), F.lit("")),
-            )
-        ),
-        1,
-        8,
-    )
-    expr = None
-    for name, hx in ths:
-        cond = h8 < F.lit(hx)
-        expr = F.when(cond, F.lit(name)) if expr is None else expr.when(
-            cond, F.lit(name)
-        )
-    label = F.lit(names[-1]) if expr is None else expr.otherwise(
-        F.lit(names[-1])
-    )
-    return df.withColumn(split_col, label)
-
-
-def split_report(
-    df: DataFrame, unit_col: str = "host", split_col: str = "split"
-) -> DataFrame:
-    """Per-split audit: row count, distinct leakage units, and the
-    realized row fraction — one aggregation action (the distinct-unit
-    count is exact; it shuffles on (split, unit) once)."""
-    total = df.count()
-    return (
-        df.groupBy(split_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.countDistinct(unit_col).alias("n_units"),
-        )
-        .withColumn("row_fraction", F.round(F.col("n_rows") / F.lit(total), 6))
-        .orderBy(split_col)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Host-scoped boilerplate removal.  cross_doc_line_dedup (C4's global
-# rule) keeps ONE copy of a repeated line corpus-wide; the
-# RefinedWeb/CCNet-style complement is host-local: navigation menus,
-# cookie banners, and footers repeat across most pages OF ONE SITE and
-# should be stripped from ALL of them — they are template, not content,
-# and the one kept copy the global rule leaves behind is still noise.
-
-
-def host_boilerplate_lines(
-    df: DataFrame,
-    host_col: str = "host",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_docs: int = 2,
-    min_fraction: float = 0.5,
-    min_chars: int = 1,
-) -> DataFrame:
-    """The per-host boilerplate line set: lines (exact match, split on
-    ``\\n``, no trimming) present in ≥ ``min_fraction`` of the host's
-    documents AND ≥ ``min_docs`` documents; lines shorter than
-    ``min_chars`` are exempt (default exempts only empty lines).
-    Returns ``(host, line, n_docs, host_docs, fraction)``.
-
-    Scale shape: one distinct + one aggregation, both shuffling on
-    (host, line) — hot boilerplate IS the signal here, and the
-    per-(host,line) key spreads it; the host-doc-count side is
-    host-cardinality (dimension-sized) and broadcast into the join."""
-    lines = df.select(
-        F.col(host_col).alias("host"),
-        F.col(id_col).alias("_id"),
-        F.explode(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
-        ).alias("line"),
-    ).where(F.length("line") >= min_chars)
-    per_line = (
-        lines.distinct()
-        .groupBy("host", "line")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-    host_docs = df.groupBy(F.col(host_col).alias("host")).agg(
-        F.countDistinct(id_col).alias("host_docs")
-    )
-    return (
-        per_line.join(F.broadcast(host_docs), "host")
-        .withColumn("fraction", F.col("n_docs") / F.col("host_docs"))
-        .where(
-            (F.col("n_docs") >= min_docs)
-            & (F.col("fraction") >= F.lit(min_fraction))
-        )
-        .select(
-            "host", "line", "n_docs", "host_docs",
-            F.round("fraction", 6).alias("fraction"),
-        )
-    )
-
-
-def strip_host_boilerplate(
-    df: DataFrame,
-    host_col: str = "host",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_docs: int = 2,
-    min_fraction: float = 0.5,
-    min_chars: int = 1,
-) -> DataFrame:
-    """Remove every occurrence of the host's boilerplate lines from
-    every document of that host.  One row per input document (NULL text
-    treated as '' — the curate_corpus contract):
-    ``(id, host, clean_text, n_lines_kept, n_lines_removed)`` with line
-    order preserved.
-
-    Scale shape: the boilerplate set from host_boilerplate_lines joins
-    the exploded lines on (host, line) — boilerplate-set cardinality is
-    sites × template-lines (dimension-scale next to the corpus; AQE
-    handles the residual skew of giant hosts); reassembly is the same
-    single groupBy-by-doc sort-struct fold cross_doc_line_dedup uses."""
-    src = df.withColumn(
-        text_col, F.coalesce(F.col(text_col), F.lit(""))
-    ).select(
-        F.col(host_col).alias("host"),
-        F.col(id_col).alias("id"),
-        F.col(text_col).alias("_text"),
-    )
-    bp = host_boilerplate_lines(
-        df, host_col, id_col, text_col, min_docs, min_fraction, min_chars
-    ).select("host", "line", F.lit(True).alias("_is_bp"))
-    pl = src.select(
-        "host",
-        "id",
-        F.posexplode(F.split("_text", "\n")).alias("pos", "line"),
-    )
-    flagged = pl.join(bp, ["host", "line"], "left").withColumn(
-        "_is_bp", F.coalesce(F.col("_is_bp"), F.lit(False))
-    )
-    kept_struct = F.when(
-        ~F.col("_is_bp"), F.struct(F.col("pos"), F.col("line"))
-    )
-    return (
-        flagged.groupBy("id", "host")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(kept_struct)),
-                    lambda s: s["line"],
-                ),
-                "\n",
-            ).alias("clean_text"),
-            F.sum(F.when(~F.col("_is_bp"), 1).otherwise(0)).alias(
-                "n_lines_kept"
-            ),
-            F.sum(F.when(F.col("_is_bp"), 1).otherwise(0)).alias(
-                "n_lines_removed"
-            ),
-        )
-    )

@@ -15,8 +15,8 @@ Spark-first shape: the dictionary is dimension-sized (same bound as
 the annotator's broadcast trie, operators/annotate.py), so the surface
 alternation compiles into ONE literal regex per predicate.  Extraction
 is two ``regexp_extract_all`` passes over the same pattern (groups 1
-and 2) zipped positionally — the extract_anchors idiom
-(operators/weblinks.py) — so the whole corpus pass is codegen: decode
+and 2) zipped positionally (same pattern, so the same match set and
+aligned arrays), so the whole corpus pass is codegen: decode
 → regexp → arrays_zip → explode, fused into the scan, no Python, no
 shuffle.  Surface→CURIE mapping is two broadcast joins; the only wide
 operation is the final distinct on the (id, subj, pred, obj) result,

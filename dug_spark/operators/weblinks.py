@@ -42,33 +42,8 @@ def _host_of(col):
     return F.regexp_replace(h, r"^www\.", "")
 
 
-_ANCHOR_PATTERN = r'<a\s[^>]*href="([^"]+)"[^>]*>([^<]*)</a>'
-
-
-def extract_anchors(
-    df: DataFrame, html_col: str = "html", url_col: str = "url"
-) -> DataFrame:
-    """(url, href, anchor) triples — the anchor TEXT is the web's free
-    labeling signal for the link target (what a KG-construction pipeline
-    mines for entity surface forms and relation evidence; anchor-text
-    aggregation is the classic web-IR target-description source).
-
-    Two ``regexp_extract_all`` passes over the same pattern (groups 1
-    and 2) zip positionally — same pattern ⇒ same match set ⇒ aligned
-    arrays.  Still pure codegen: decode → 2× regexp → arrays_zip →
-    explode, fused into the scan, no Python, no shuffle."""
-    decoded = F.decode(F.col(html_col), "UTF-8")
-    hrefs = F.regexp_extract_all(decoded, F.lit(_ANCHOR_PATTERN), 1)
-    texts = F.regexp_extract_all(decoded, F.lit(_ANCHOR_PATTERN), 2)
-    z = F.explode(F.arrays_zip(hrefs.alias("href"), texts.alias("anchor")))
-    return df.select(F.col(url_col).alias("url"), z.alias("z")).select(
-        "url", F.col("z.href").alias("href"), F.col("z.anchor").alias("anchor")
-    )
-
-
 def _resolve_dst(src, href):
-    """Destination host of an href relative to the source host — the
-    shared resolution used by host_edges and host_anchor_terms (RFC 3986
+    """Destination host of an href relative to the source host (RFC 3986
     §3.1 case-insensitive schemes; non-navigational schemes → NULL)."""
     lhref = F.lower(href)
     return (
@@ -79,44 +54,6 @@ def _resolve_dst(src, href):
             F.lit(None).cast("string"),
         )
         .otherwise(src)
-    )
-
-
-def host_anchor_terms(
-    df: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-    top_k: int = 3,
-) -> DataFrame:
-    """Top-``top_k`` anchor-text terms per DESTINATION host: how the rest
-    of the web (and the host itself — self-links kept, unlike the edge
-    list: a path-relative nav anchor describes the host's own pages)
-    labels each host.  Output (host, token, n, rk), rank by (n desc,
-    token asc).
-
-    Scale shape: extraction is narrow codegen; ONE (host, token)
-    aggregation with map-side combine (a hot anchor word on a hub host
-    collapses per-mapper); the top-k window runs over the aggregated
-    host×token table, host-keyed — already dimension-sized next to the
-    corpus."""
-    from pyspark.sql import Window
-
-    links = extract_anchors(df, html_col, url_col)
-    dst = _resolve_dst(_host_of(F.col("url")), F.col("href"))
-    toks = links.select(
-        dst.alias("host"),
-        F.explode(
-            F.filter(
-                F.split(F.lower("anchor"), r"[^a-z0-9]+"), lambda t: t != ""
-            )
-        ).alias("token"),
-    ).where(F.col("host").isNotNull() & (F.col("host") != ""))
-    counts = toks.groupBy("host", "token").agg(F.count(F.lit(1)).alias("n"))
-    w = Window.partitionBy("host").orderBy(F.desc("n"), F.asc("token"))
-    return (
-        counts.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= top_k)
-        .select("host", "token", "n", "rk")
     )
 
 
@@ -139,8 +76,7 @@ def host_edges(
     # through to the path-relative branch and become a src self-edge).
     # Non-navigational schemes (mailto:, javascript:, tel:, data:) are
     # not links between pages — NULL, not otherwise(src), so keep_self
-    # runs never fabricate self-edges from them.  (_resolve_dst is the
-    # shared implementation — host_anchor_terms uses the same rules.)
+    # runs never fabricate self-edges from them.
     dst = _resolve_dst(src, F.col(href_col))
     edges = (
         links.select(src.alias("src_host"), dst.alias("dst_host"))
@@ -151,482 +87,3 @@ def host_edges(
     if not keep_self:
         edges = edges.where(F.col("src_host") != F.col("dst_host"))
     return edges.distinct()
-
-
-def host_pagerank(
-    df: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-    damping: float = 0.85,
-    iterations: int = 10,
-    broadcast_ranks: bool = True,
-) -> DataFrame:
-    """HTML corpus → host link graph → PageRank: the composed host-
-    authority signal.  Host-sized node set (≤ ~10^8 at crawl scale —
-    choose broadcast_ranks accordingly, see graph.pagerank)."""
-    from . import graph
-
-    edges = host_edges(extract_links(df, html_col, url_col), keep_self=False)
-    return graph.pagerank(
-        edges,
-        damping=damping,
-        iterations=iterations,
-        src_col="src_host",
-        dst_col="dst_host",
-        broadcast_ranks=broadcast_ranks,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Page head metadata.  The reference never reads HTML heads (its inputs
-# are study metadata); for a Common-Crawl-shaped corpus the head block
-# carries the canonical-URL / robots-directive / title signals that
-# drive URL canonicalization, index eligibility, and KG node naming.
-
-
-def _entity_decode(col):
-    """The five predefined HTML/XML entities (named first, &amp; LAST —
-    the single-pass order that keeps a literal '&amp;lt;' from becoming
-    '<'); numeric character references are out of scope (documented,
-    mirrored by the oracle)."""
-    out = col
-    for ent, ch in (
-        ("&lt;", "<"),
-        ("&gt;", ">"),
-        ("&quot;", '"'),
-        ("&apos;", "'"),
-        ("&amp;", "&"),
-    ):
-        out = F.replace(out, F.lit(ent), F.lit(ch))
-    return out
-
-
-def _meta_content(decoded, attr: str, value: str):
-    """content="..." of a <meta|link> tag carrying attr="value" — both
-    attribute orders (name-first and content-first), first match wins,
-    '' treated as absent.  Case-insensitive on tag and attribute names
-    per the HTML spec; the VALUE comparison is exact (canonical rel
-    values and meta names are lowercase in the wild)."""
-    a = F.regexp_extract(
-        decoded, f'(?is)<meta\\s[^>]*{attr}="{value}"[^>]*content="([^"]*)"', 1
-    )
-    b = F.regexp_extract(
-        decoded, f'(?is)<meta\\s[^>]*content="([^"]*)"[^>]*{attr}="{value}"', 1
-    )
-    return F.nullif(F.coalesce(F.nullif(a, F.lit("")), b), F.lit(""))
-
-
-def page_metadata(
-    df: DataFrame, html_col: str = "html", url_col: str = "url"
-) -> DataFrame:
-    """Head-block metadata per page:
-
-    ``(url, title, meta_description, canonical, og_title, html_lang,
-    noindex, nofollow)`` — title whitespace-collapsed and
-    entity-decoded; description from ``<meta name="description">`` and
-    og_title from ``<meta property="og:title">`` (either attribute
-    order); canonical from ``<link rel="canonical">``; html_lang
-    lowercased from the ``<html lang=…>`` attribute; noindex/nofollow
-    booleans from the ``<meta name="robots">`` directive list (absent
-    robots meta ⇒ both false — the web default is indexable).  Absent
-    string fields are NULL.
-
-    Scale shape: strict-UTF-8 decode + a fixed set of regexp_extract
-    projections — one narrow codegen map fused into the scan, zero
-    shuffle, zero UDF; the head parse of 10^12 pages rides the same pass
-    that reads them."""
-    decoded = F.decode(F.col(html_col), "UTF-8")
-    title = F.regexp_extract(decoded, r"(?is)<title[^>]*>(.*?)</title>", 1)
-    title = F.nullif(
-        F.trim(F.regexp_replace(_entity_decode(title), r"\s+", " ")),
-        F.lit(""),
-    )
-    canon_a = F.regexp_extract(
-        decoded, r'(?is)<link\s[^>]*rel="canonical"[^>]*href="([^"]*)"', 1
-    )
-    canon_b = F.regexp_extract(
-        decoded, r'(?is)<link\s[^>]*href="([^"]*)"[^>]*rel="canonical"', 1
-    )
-    canonical = F.nullif(
-        F.coalesce(F.nullif(canon_a, F.lit("")), canon_b), F.lit("")
-    )
-    robots = F.lower(
-        F.coalesce(_meta_content(decoded, "name", "robots"), F.lit(""))
-    )
-    return df.select(
-        F.col(url_col).alias("url"),
-        title.alias("title"),
-        _entity_decode(_meta_content(decoded, "name", "description")).alias(
-            "meta_description"
-        ),
-        canonical.alias("canonical"),
-        _entity_decode(_meta_content(decoded, "property", "og:title")).alias(
-            "og_title"
-        ),
-        F.nullif(
-            F.lower(
-                F.regexp_extract(decoded, r'(?is)<html\s[^>]*lang="([^"]*)"', 1)
-            ),
-            F.lit(""),
-        ).alias("html_lang"),
-        robots.rlike(r"\bnoindex\b").alias("noindex"),
-        robots.rlike(r"\bnofollow\b").alias("nofollow"),
-    )
-
-
-def canonical_elect(
-    df: DataFrame, url_col: str = "url", canonical_col: str = "canonical"
-) -> DataFrame:
-    """Canonical-URL duplicate election over extracted page metadata
-    (the consumer of page_metadata's ``canonical`` column): pages
-    sharing a canonical key — ``coalesce(canonical, url)`` — are one
-    logical document; the keeper is the key's OWN page when it was
-    crawled (url == key), else the lexicographically smallest member
-    (deterministic).  One row per input page:
-    ``(url, canonical_key, keep)``.
-
-    This is the dedup signal sites declare EXPLICITLY (the
-    rel=canonical link element), catching mirrors and tracking-URL
-    variants that content hashing misses when boilerplate differs.
-
-    Scale shape: one shuffle on canonical_key + a row_number window;
-    canonical groups are small (a handful of URL variants), so the key
-    space is near-unique and skew-free."""
-    from pyspark.sql import Window
-
-    key = F.coalesce(F.col(canonical_col), F.col(url_col))
-    w = Window.partitionBy("canonical_key").orderBy(
-        F.col("_self").desc(), F.col(url_col).asc()
-    )
-    return (
-        df.select(
-            F.col(url_col).alias("url"),
-            key.alias("canonical_key"),
-        )
-        .withColumn("_self", F.col("url") == F.col("canonical_key"))
-        .withColumn("keep", F.row_number().over(w) == 1)
-        .select("url", "canonical_key", "keep")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Main-content extraction.  The corpus invariant extraction
-# (functions/text.extract_text_udf) is byte-exact and whole-page; the
-# CURATION view of a page wants only the article body — the
-# jusText/Arc90-family heuristic: segment the page into block-level
-# chunks, score each by length and link density, and keep the content
-# blocks (navigation, footers, and related-links boxes are short and
-# link-dense).
-
-_BLOCK_BOUNDARY = (
-    r"(?i)</?(?:p|div|h[1-6]|li|ul|ol|table|tbody|thead|tr|td|th|section"
-    r"|article|main|header|footer|nav|aside|blockquote|br|form|figure"
-    r"|figcaption)(?:\s[^>]*)?>"
-)
-_LINK_INNER = r"(?is)<a(?:\s[^>]*)?>(.*?)</a>"
-
-
-def extract_main_content(
-    df: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-    min_chars: int = 80,
-    max_link_density: float = 0.33,
-) -> DataFrame:
-    """Boilerplate-aware article-body extraction, simplified jusText
-    (Pomikálek 2011) / Arc90-readability heuristics:
-
-    1. drop <script>/<style>/<head>/comments;
-    2. segment on block-level tag boundaries (the _BLOCK_BOUNDARY set);
-    3. per block, measure the tag-stripped, whitespace-collapsed text
-       length and the LINK text length (chars inside <a>…</a>, measured
-       before tag-stripping);
-    4. keep blocks with ≥ ``min_chars`` text whose link density
-       (link_chars / text_chars) is ≤ ``max_link_density`` — navigation
-       and footer blocks are short and link-dense, article paragraphs
-       are long and link-sparse;
-    5. join kept blocks with blank lines, decode the five predefined
-       entities.
-
-    Returns ``(url, main_text, n_blocks, n_blocks_kept)``; pages with
-    no qualifying block get ``main_text = ''``.
-
-    Scale shape: ONE narrow map — the whole pipeline is nested
-    higher-order functions (split → transform(struct metrics) → filter
-    → array_join) over codegen expressions; zero shuffle, zero UDF, no
-    Python in the hot path (plan-asserted).  Numeric character
-    references are out of scope (same contract as page_metadata),
-    mirrored by pyoracle.main_content_rows."""
-    cleaned = F.decode(F.col(html_col), "UTF-8")
-    for pat in (
-        r"(?is)<(?:script|style)(?:\s[^>]*)?>.*?</(?:script|style)>",
-        r"(?is)<head(?:\s[^>]*)?>.*?</head>",
-        r"(?s)<!--.*?-->",
-    ):
-        cleaned = F.regexp_replace(cleaned, pat, " ")
-    blocks = F.split(cleaned, _BLOCK_BOUNDARY)
-
-    def measure(b):
-        link_chars = F.aggregate(
-            F.transform(
-                F.regexp_extract_all(b, F.lit(_LINK_INNER), 1),
-                lambda x: F.length(x),
-            ),
-            F.lit(0),
-            lambda acc, x: acc + x,
-        )
-        text = F.trim(
-            F.regexp_replace(
-                F.regexp_replace(b, r"(?s)<[^>]*>", " "), r"\s+", " "
-            )
-        )
-        return F.struct(
-            text.alias("text"),
-            F.length(text).alias("n"),
-            link_chars.alias("link_chars"),
-        )
-
-    measured = F.filter(
-        F.transform(blocks, measure), lambda s: s["n"] > 0
-    )
-    kept = F.filter(
-        measured,
-        lambda s: (s["n"] >= min_chars)
-        & (
-            s["link_chars"].cast("double")
-            <= F.lit(max_link_density) * s["n"].cast("double")
-        ),
-    )
-    main_text = _entity_decode(
-        F.array_join(F.transform(kept, lambda s: s["text"]), "\n\n")
-    )
-    return df.select(
-        F.col(url_col).alias("url"),
-        main_text.alias("main_text"),
-        F.size(measured).alias("n_blocks"),
-        F.size(kept).alias("n_blocks_kept"),
-    )
-
-
-JSONLD_SCHEMA = (
-    "struct<`@type` string, name string, url string, description string>"
-)
-
-
-def extract_jsonld(
-    df: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
-    """schema.org JSON-LD extraction — the web's declared knowledge
-    graph: pages embed ``<script type="application/ld+json">`` blocks
-    whose entities (Person, Product, Article, Organization …) are
-    exactly the typed nodes a KG build wants without NER.  The reference
-    mines concepts from free text only; at web scale the declared
-    markup is higher-precision seed data for the same element→concept
-    edges, so it is a first-class source here.
-
-    Plan shape: ``regexp_extract_all`` pulls every ld+json block (one
-    narrow map), ``posexplode`` yields one row per block, and
-    ``from_json`` (Spark's JVM Jackson parser) parses against a typed
-    projection of the common fields — malformed JSON or a missing
-    ``@type`` yields NULL and the row drops, so one broken block cannot
-    fail a 10^12-page job.  Zero UDF, zero shuffle; arrays-of-entities
-    and nested graphs (``@graph``) are intentionally out of this typed
-    fast path — route blocks starting with '[' or containing "@graph"
-    to a schema-on-read pass if needed.
-
-    Output: (url, block_idx, entity_type, name, entity_url,
-    description).
-    """
-    blocks = F.regexp_extract_all(
-        F.coalesce(F.col(html_col), F.lit("")),
-        F.lit(
-            r'(?is)<script[^>]*type\s*=\s*["\']application/ld\+json["\'][^>]*>(.*?)</script>'
-        ),
-        1,
-    )
-    exploded = df.select(
-        F.col(url_col).alias("url"), F.posexplode(blocks).alias("block_idx", "block")
-    )
-    parsed = exploded.withColumn(
-        "e", F.from_json(F.trim("block"), JSONLD_SCHEMA)
-    )
-    # from_json STRINGIFIES non-string JSON values into StringType
-    # fields ('"@type": ["Person","Patient"]' → '["Person","Patient"]',
-    # '"@type": 42' → '42') where the pyoracle mirror's isinstance
-    # guards drop them — and @type arrays are ubiquitous in real
-    # JSON-LD (round-5 advisor finding).  Gate entity_type on "does not
-    # look like a stringified JSON container/number/boolean" so both
-    # engines drop the same rows; residual documented deviation: a
-    # JSON *string* @type that itself spells a number or boolean
-    # ('"42"', '"true"') is dropped here but kept by the mirror.
-    et = F.col("e.`@type`")
-    plausible = ~et.rlike(r"^[\[{0-9+.-]") & ~et.isin("true", "false", "null")
-    return (
-        parsed.where(F.col("e").isNotNull() & et.isNotNull() & plausible)
-        .select(
-            "url",
-            "block_idx",
-            et.alias("entity_type"),
-            F.col("e.name").alias("name"),
-            F.col("e.url").alias("entity_url"),
-            F.col("e.description").alias("description"),
-        )
-    )
-
-
-def jsonld_to_triples(entities: DataFrame) -> DataFrame:
-    """Declared-markup triples from extract_jsonld output — the JSON-LD
-    analog of the NER path's HAS_CONCEPT emission: page →
-    ``declares_entity`` → ``schema:<Type>/<name>`` plus the entity's
-    own rdf:type edge.  Distinct on the triple key; feeds the same
-    write path (and provenance_rollup) as every other triple family.
-
-    The entity frame feeds BOTH union branches, so it is lazily
-    ``localCheckpoint``-ed: without it each branch replays the upstream
-    extraction regex + JSON parse over the full corpus (measured 108 s
-    vs 2.9 s at 1.6M pages — the same replay class the winnow_overlap
-    checkpoint removes)."""
-    entities = entities.localCheckpoint(eager=False)
-    ent = entities.where(F.col("name").isNotNull()).select(
-        "url",
-        F.concat(
-            F.lit("schema:"), F.col("entity_type"), F.lit("/"), F.col("name")
-        ).alias("eid"),
-        F.concat(F.lit("schema:"), F.col("entity_type")).alias("etype"),
-    )
-    declares = ent.select(
-        F.col("url").alias("subj"),
-        F.lit("declares_entity").alias("pred"),
-        F.col("eid").alias("obj"),
-    )
-    rdf_type = ent.select(
-        F.col("eid").alias("subj"),
-        F.lit("rdf:type").alias("pred"),
-        F.col("etype").alias("obj"),
-    )
-    return declares.unionByName(rdf_type).distinct()
-
-
-def extract_tables(
-    df: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
-    """HTML table extraction — the other declared-structure source next
-    to JSON-LD: relational facts web pages publish as ``<table>`` markup
-    (infoboxes, spec sheets, league tables) flattened to one row per
-    cell, ``(url, table_idx, row_idx, col_idx, is_header, cell)``, the
-    shape a downstream fact-extraction join consumes.
-
-    Three nested non-greedy extractions (tables → ``<tr>`` rows →
-    ``<td>/<th>`` cells) composed as higher-order functions over
-    ``regexp_extract_all``, then tag-strip + ASCII-whitespace collapse
-    per cell — ONE narrow map plus the explode, zero UDF, zero shuffle;
-    the structural regexes are the same simplified-HTML grammar the
-    main-content and metadata extractors use (cited there), shared with
-    the pure mirror ``pyoracle.html_table_rows``.  Nested tables are out
-    of the grammar (the inner table's cells surface, the outer cell
-    keeps its raw text) — documented, mirrored identically.
-    """
-    tables = F.regexp_extract_all(
-        F.coalesce(F.col(html_col), F.lit("")),
-        F.lit(r"(?is)<table[^>]*>(.*?)</table>"),
-        1,
-    )
-    rows_of = lambda t: F.regexp_extract_all(  # noqa: E731
-        t, F.lit(r"(?is)<tr[^>]*>(.*?)</tr>"), 1
-    )
-    cells_of = lambda r: F.regexp_extract_all(  # noqa: E731
-        r, F.lit(r"(?is)<t([dh])[^>]*>(.*?)</t[dh]>"), 0
-    )
-    clean = lambda c: F.trim(  # noqa: E731
-        F.regexp_replace(
-            F.regexp_replace(c, r"(?s)<[^>]*>", " "), r"[ \t\n\x0B\f\r]+", " "
-        )
-    )
-    nested = F.transform(
-        tables,
-        lambda t, ti: F.struct(
-            ti.alias("table_idx"),
-            F.transform(
-                rows_of(t),
-                lambda r, ri: F.struct(
-                    ri.alias("row_idx"),
-                    F.transform(
-                        cells_of(r),
-                        lambda c, ci: F.struct(
-                            ci.alias("col_idx"),
-                            F.lower(F.regexp_extract(c, r"(?is)^<t([dh])", 1))
-                            .eqNullSafe("h")
-                            .alias("is_header"),
-                            clean(c).alias("cell"),
-                        ),
-                    ).alias("cells"),
-                ),
-            ).alias("rows"),
-        ),
-    )
-    return (
-        df.select(F.col(url_col).alias("url"), F.explode(nested).alias("t"))
-        .select("url", F.col("t.table_idx").alias("table_idx"), F.explode("t.rows").alias("r"))
-        .select("url", "table_idx", F.col("r.row_idx").alias("row_idx"), F.explode("r.cells").alias("c"))
-        .select(
-            "url",
-            "table_idx",
-            "row_idx",
-            F.col("c.col_idx").alias("col_idx"),
-            F.col("c.is_header").alias("is_header"),
-            F.col("c.cell").alias("cell"),
-        )
-    )
-
-
-def tables_to_triples(cells: DataFrame) -> DataFrame:
-    """Infobox tables → attribute triples: a two-column table is the
-    web's key/value convention (Wikipedia infoboxes, product spec
-    sheets), so for every table whose data rows have exactly columns
-    {0, 1}, each non-header row emits (page, attr:<key-slug>, value) —
-    the declared-attribute analog of jsonld_to_triples, feeding the
-    same triple write path and provenance_rollup.
-
-    Key slugs are the snake-ish lowercase [a-z0-9]+ join of the key
-    cell; rows with empty key or value drop.  One aggregation to find
-    the 2-column tables (per-table max col index — table-cardinality,
-    dimension-sized next to the cell rows) + one semi-join back.
-    """
-    # shape over DATA rows only, as documented: a table with a spanning
-    # 3-column header but 2-column data rows (common infobox shape) is
-    # a key/value table and must not be skipped (round-5 advisor
-    # finding — the old aggregation included header rows)
-    shape = (
-        cells.where(~F.col("is_header"))
-        .groupBy("url", "table_idx")
-        .agg(F.max("col_idx").alias("max_col"))
-    )
-    two_col = shape.where(F.col("max_col") == 1).select("url", "table_idx")
-    data = (
-        cells.join(two_col, ["url", "table_idx"], "left_semi")
-        .where(~F.col("is_header"))
-    )
-    keys = data.where(F.col("col_idx") == 0).select(
-        "url",
-        "table_idx",
-        "row_idx",
-        F.concat_ws(
-            "_",
-            F.filter(
-                F.split(F.lower("cell"), r"[^a-z0-9]+"), lambda t: t != ""
-            ),
-        ).alias("key"),
-    )
-    vals = data.where(F.col("col_idx") == 1).select(
-        "url", "table_idx", "row_idx", F.col("cell").alias("value")
-    )
-    return (
-        keys.join(vals, ["url", "table_idx", "row_idx"])
-        .where((F.col("key") != "") & (F.col("value") != ""))
-        .select(
-            F.col("url").alias("subj"),
-            F.concat(F.lit("attr:"), F.col("key")).alias("pred"),
-            F.col("value").alias("obj"),
-        )
-        .distinct()
-    )

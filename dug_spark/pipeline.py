@@ -17,6 +17,12 @@ from pyspark.sql import functions as F
 from .functions.text import extract_text_col
 from .operators import annotate, canonicalize, concepts, link, normalize, triples
 
+# linking keeps candidates whose dictionary prior reaches SCORE_THRESHOLD
+# (F5), at most TOP_K per surface; a run annotates only LANGS pages
+SCORE_THRESHOLD = 0.8
+TOP_K = 10
+LANGS = ["en"]
+
 
 def _scan_partitions(df: DataFrame) -> int:
     """Partition count of ``df``'s widest input scan, read from the
@@ -73,11 +79,7 @@ class Pipeline:
     kg_nodes: DataFrame | None = None
     expand_queries: dict[str, tuple[str, str]] | None = None
     expand_prefixes: dict[str, list[str]] | None = None
-    score_threshold: float = 0.8
-    top_k: int = 10
-    langs: list[str] = field(default_factory=lambda: ["en"])
     use_extracted_html: bool = False
-    canonicalize: bool = True
     greenlist: list[str] | None = None  # None → reference default (F6)
     # collect {source_partition: (input_docs, mentions)} from the annotate
     # scan via a Spark accumulator (plans/lineage.py) — zero extra jobs
@@ -100,7 +102,7 @@ class Pipeline:
         run.  Without this the O(log n)-round loop — whose wall time is
         all driver round-trips on a dimension-sized graph — re-executes
         per corpus batch and caps scaling efficiency."""
-        if self.curie_norm is None or not self.canonicalize:
+        if self.curie_norm is None:
             return None
         if self._canon_mapping is None:
             self._canon_mapping = canonicalize.canonical_mapping(
@@ -126,15 +128,12 @@ class Pipeline:
                 "types",
                 "score",
             )
-            m = link.score_candidates(
-                fake, self.score_threshold, self.top_k, dictionary=d
-            )
+            m = link.score_candidates(fake, SCORE_THRESHOLD, TOP_K, dictionary=d)
             if self.curie_norm is not None:
                 m = normalize.normalize_mentions(m, self.curie_norm, self.greenlist)
-                if self.canonicalize:
-                    m = canonicalize.canonicalize_mentions(
-                        m, self.curie_norm, mapping=self.canonical_mapping()
-                    )
+                m = canonicalize.canonicalize_mentions(
+                    m, self.curie_norm, mapping=self.canonical_mapping()
+                )
                 eff = m.select(
                     F.col("search_text").alias("term"),
                     "curie",
@@ -165,9 +164,7 @@ class Pipeline:
         return self._effective_dict
 
     def run(self, corpus: DataFrame) -> PipelineResult:
-        df = corpus
-        if self.langs:
-            df = df.where(F.col("lang").isin(self.langs))
+        df = corpus.where(F.col("lang").isin(LANGS))
         # parallelism floor: a small-file scan can collapse to 1 input
         # partition (parquet splits only at row-group boundaries), which
         # would serialize every downstream pandas-UDF stage.  At real
@@ -199,14 +196,13 @@ class Pipeline:
         else:
             m = annotate.annotate_mentions(df, self.dictionary, lineage_acc=acc)
             m = link.score_candidates(
-                m, self.score_threshold, self.top_k, dictionary=self.dictionary
+                m, SCORE_THRESHOLD, TOP_K, dictionary=self.dictionary
             )
             if self.curie_norm is not None:
                 m = normalize.normalize_mentions(m, self.curie_norm, self.greenlist)
-                if self.canonicalize:
-                    m = canonicalize.canonicalize_mentions(
-                        m, self.curie_norm, mapping=self.canonical_mapping()
-                    )
+                m = canonicalize.canonicalize_mentions(
+                    m, self.curie_norm, mapping=self.canonical_mapping()
+                )
         if self.synonyms is not None:
             m = normalize.attach_synonyms(m, self.synonyms)
 
@@ -234,19 +230,7 @@ class Pipeline:
                 queries=self.expand_queries,
                 curie_prefixes=self.expand_prefixes,
             )
-            opt = concepts.concept_optional_terms(kg_answers)
-            conc = (
-                conc.drop("optional_terms")
-                .join(F.broadcast(opt), "concept_id", "left")
-                .withColumn(
-                    "optional_terms",
-                    F.coalesce("optional_terms", F.array().cast("array<string>")),
-                )
-                .select(
-                    "concept_id", "name", "description", "type",
-                    "search_terms", "optional_terms",
-                )
-            )
+            conc = concepts.with_optional_terms(conc, kg_answers)
             expanded_elements = expand.nodes_to_elements(kg_answers, self.kg_nodes)
 
         return PipelineResult(

@@ -92,7 +92,7 @@ def main(argv: list[str] | None = None) -> None:
         mentions = ckpt.write_stage("mentions", r.mentions, lineage_acc=r.lineage_acc)
 
     def _build_triples():
-        t = triples_op.build_triples(mentions, fixtures.vocab_kg_edges(spark))
+        t = triples_op.build_triples(mentions, pipe.kg_edges)
         # north_star: salted repartitioning on skewed high-frequency
         # concepts before the partitioned write — deterministic salt
         # (derived from subj) keeps partition placement stable across
@@ -110,7 +110,6 @@ def main(argv: list[str] | None = None) -> None:
     # to elements — each its own resumable commit.
     from pyspark.sql import functions as F
 
-    from dug_spark.operators import concepts as c_op
     from dug_spark.operators import expand
 
     def _build_answers():
@@ -118,23 +117,16 @@ def main(argv: list[str] | None = None) -> None:
             F.col("curie").alias("concept_id"), "curie"
         ).distinct()
         return expand.expand_concepts(
-            ids, fixtures.vocab_kg_edges(spark), fixtures.vocab_kg_nodes(spark),
-            queries=fixtures.VOCAB_EXPAND_QUERIES,
-            curie_prefixes=fixtures.VOCAB_EXPAND_PREFIXES,
+            ids, pipe.kg_edges, pipe.kg_nodes,
+            queries=pipe.expand_queries,
+            curie_prefixes=pipe.expand_prefixes,
         )
 
     kg_answers = ckpt.run_or_resume(spark, "kg_answers", _build_answers)
 
     def _build_concepts():
-        conc = concepts_op.build_concepts(mentions)
-        opt = c_op.concept_optional_terms(kg_answers)
-        return (
-            conc.drop("optional_terms")
-            .join(F.broadcast(opt), "concept_id", "left")
-            .withColumn(
-                "optional_terms",
-                F.coalesce("optional_terms", F.array().cast("array<string>")),
-            )
+        return concepts_op.with_optional_terms(
+            concepts_op.build_concepts(mentions), kg_answers
         )
 
     concepts = ckpt.run_or_resume(spark, "concepts", _build_concepts)

@@ -1,66 +1,8 @@
-"""Anchor-text extraction / per-host anchor terms (weblinks) and corpus
-profiling quantiles (textstats.corpus_profile)."""
+"""Corpus profiling quantiles (textstats.corpus_profile)."""
 
 import pytest
-from pyspark.sql import functions as F
 
-from dug_spark.operators import textstats as ts, weblinks
-
-
-def _html_docs(spark, rows):
-    return spark.createDataFrame(
-        [(u, h.encode("utf-8")) for u, h in rows], "url string, html binary"
-    )
-
-
-def test_extract_anchors_pairs_href_with_text(spark):
-    html = (
-        '<p>x</p><a href="https://b.org/1">first link</a>'
-        '<a class="nav" href="/local">second</a>'
-        '<a href="#frag">third</a>'
-    )
-    got = [
-        (r["href"], r["anchor"])
-        for r in weblinks.extract_anchors(
-            _html_docs(spark, [("https://a.org/p", html)])
-        ).collect()
-    ]
-    assert got == [
-        ("https://b.org/1", "first link"),
-        ("/local", "second"),
-        ("#frag", "third"),
-    ]
-
-
-def test_host_anchor_terms_aggregates_to_destination(spark):
-    rows = [
-        ("https://a.org/1", '<a href="https://b.org/x">good stuff</a>'),
-        ("https://a.org/2", '<a href="https://b.org/y">good times</a>'),
-        ("https://www.c.org/3", '<a href="/self">own page</a>'),
-        ("https://a.org/4", '<a href="mailto:x@y.z">mail me</a>'),
-    ]
-    got = {
-        (r["host"], r["token"]): (r["n"], r["rk"])
-        for r in weblinks.host_anchor_terms(_html_docs(spark, rows)).collect()
-    }
-    # b.org described by the linking pages' anchors; 'good' counted twice
-    assert got[("b.org", "good")] == (2, 1)
-    assert got[("b.org", "stuff")][0] == 1 and got[("b.org", "times")][0] == 1
-    # self-link anchors stay on the (www-stripped) own host
-    assert got[("c.org", "own")][0] == 1 and got[("c.org", "page")][0] == 1
-    # mailto drops out entirely
-    assert not any(h == "a.org" for h, _ in got)
-
-
-def test_host_anchor_terms_top_k_and_tiebreak(spark):
-    html = '<a href="https://d.org/">z z y x</a>'
-    got = [
-        (r["token"], r["n"], r["rk"])
-        for r in weblinks.host_anchor_terms(
-            _html_docs(spark, [("https://a.org/p", html)]), top_k=2
-        ).orderBy("rk").collect()
-    ]
-    assert got == [("z", 2, 1), ("x", 1, 2)]  # count desc, then token asc
+from dug_spark.operators import textstats as ts
 
 
 def test_corpus_profile_exact_quantiles(spark):

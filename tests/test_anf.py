@@ -1,9 +1,6 @@
 """Approximate neighborhood function (graph.neighborhood_function) vs
 the bit-exact FM mirror (pyoracle.anf_rows)."""
 
-import pytest
-from pyspark.sql import functions as F
-
 from dug_spark.functions import pyoracle as po
 from dug_spark.operators import graph
 

@@ -93,8 +93,6 @@ def test_blocked_with_full_candidates_equals_exact(spark):
 
 
 def test_blocked_restricted_candidates_only_score_candidates(spark):
-    from pyspark.sql import functions as F
-
     src = _emb(spark, [(i, _unit(0.3 * i)) for i in range(4)])
     tgt = _emb(spark, [(50 + i, _unit(0.3 * i + 0.07)) for i in range(4)])
     cands = spark.createDataFrame(

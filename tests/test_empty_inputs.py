@@ -111,24 +111,6 @@ def test_weighted_sample_empty_and_all_invalid(spark):
     assert weighted_sample_per_group(bad, "g", "id", 3, "w").count() == 0
 
 
-def test_robots_empty_rules_all_allowed(spark):
-    from dug_spark.operators.crawl import robots_filter
-
-    urls = spark.createDataFrame([("https://a.org/x",)], "url string")
-    rules = spark.createDataFrame(
-        [], "host string, agent string, directive string, pattern string"
-    )
-    rows = robots_filter(urls, rules, "bot").collect()
-    assert rows[0]["allowed"] is True
-
-
-def test_frontier_empty(spark):
-    from dug_spark.operators.crawl import frontier_schedule
-
-    urls = spark.createDataFrame([], "url string")
-    assert frontier_schedule(urls).count() == 0
-
-
 def test_bloom_empty_build_rejects_everything(spark):
     from dug_spark.operators.sketch import bloom_build, bloom_probe, bloom_words
 

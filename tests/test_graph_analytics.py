@@ -6,7 +6,6 @@ import math
 from itertools import combinations
 
 import pytest
-from pyspark.sql import functions as F
 
 from dug_spark.operators import graph
 from dug_spark.operators import triples as triples_op

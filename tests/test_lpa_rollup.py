@@ -3,7 +3,6 @@ golden values on hand-checkable graphs and parity against independent
 pure-Python recomputes of the same deterministic rules."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from dug_spark.operators import graph
 

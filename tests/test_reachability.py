@@ -13,6 +13,12 @@ with its tests instead of carrying it.
 awaiting its own deletion; the list must match the scan exactly, so a
 new test-only module fails the test and so does a listed one that goes
 or gains a caller.
+
+A second, name-level scan holds every top-level function, class and
+module constant under ``dug_spark/`` to at least one reference from a
+``.py`` file of the repo (a loaded name, an attribute or an import
+alias; the definition itself is not one).  A name nothing mentions is
+dead code, whatever imports its module.
 """
 
 import ast
@@ -29,12 +35,8 @@ EXTRA_ROOTS = (
 )
 
 # test-only modules still carried, each with the tests that reach it:
-# the crawl operators (tests/test_crawl*.py) and the bloom / count-min /
-# KMV / Misra-Gries sketches (tests/test_sketch.py)
-TEST_ONLY = (
-    "dug_spark.operators.crawl",
-    "dug_spark.operators.sketch",
-)
+# the bloom / count-min / KMV / Misra-Gries sketches (tests/test_sketch.py)
+TEST_ONLY = ("dug_spark.operators.sketch",)
 
 
 def _library_modules() -> dict[str, Path]:
@@ -94,3 +96,41 @@ def test_every_library_module_is_reached_from_a_non_test_root():
     assert not extra, "library modules only tests import: " + ", ".join(extra)
     stale = sorted(set(TEST_ONLY) - unreached)
     assert not stale, "TEST_ONLY names reached or missing modules: " + ", ".join(stale)
+
+
+def _top_level_names(tree: ast.Module):
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            yield node.name
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                yield from (n.id for n in ast.walk(t) if isinstance(n, ast.Name))
+
+
+def _referenced_names() -> set[str]:
+    refs = set()
+    for path in REPO.rglob("*.py"):
+        if any(p.startswith(".") for p in path.relative_to(REPO).parts):
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                refs.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                refs.add(node.attr)
+            elif isinstance(node, ast.alias):
+                refs.add(node.name.rpartition(".")[2])
+    return refs
+
+
+def test_every_library_name_is_referenced():
+    refs = _referenced_names()
+    unreferenced = [
+        f"{mod}.{name}"
+        for mod, path in sorted(_library_modules().items())
+        for name in _top_level_names(ast.parse(path.read_text()))
+        if name not in refs
+    ]
+    assert not unreferenced, "library names nothing references: " + ", ".join(
+        unreferenced
+    )

@@ -1,7 +1,5 @@
 """Link extraction and host-graph construction (operators/weblinks.py)."""
 
-from pyspark.sql import functions as F
-
 from dug_spark.operators import weblinks
 
 
@@ -96,439 +94,3 @@ def test_extract_links_is_codegen_narrow(spark):
         .toString()
     )
     assert "Exchange" not in plan and "Python" not in plan
-
-
-def test_host_pagerank_end_to_end(spark):
-    # b receives from a and c; a receives from b → b is the hub
-    df = _mk(
-        spark,
-        [
-            ("https://a.org/1", '<a href="https://b.org/x">l</a>'),
-            ("https://c.org/1", '<a href="https://b.org/y">l</a>'),
-            ("https://b.org/1", '<a href="https://a.org/z">l</a>'),
-        ],
-    )
-    # 51 iterations: the a↔b 2-cycle oscillates at small even iteration
-    # counts; near convergence the fixed point is b > a > c
-    pr = {
-        r["node"]: r["rank"]
-        for r in weblinks.host_pagerank(df, iterations=51).collect()
-    }
-    assert set(pr) == {"a.org", "b.org", "c.org"}
-    assert pr["b.org"] > pr["a.org"] > pr["c.org"]
-    assert abs(sum(pr.values()) - 1.0) < 1e-9
-
-
-# --- page_metadata -----------------------------------------------------------
-
-
-PAGE_FULL = b"""<!doctype html>
-<html lang="EN-us">
-<head>
-<title>
-  Tom &amp; Jerry &lt;S1&gt;
-</title>
-<meta content="A &quot;great&quot; show" name="description">
-<link href="https://a.org/canon" rel="canonical">
-<meta property="og:title" content="Tom &apos;n Jerry">
-<META NAME="robots" CONTENT="NOINDEX, nofollow">
-</head><body></body></html>"""
-
-PAGE_BARE = b"<html><head></head><body>no head fields</body></html>"
-
-
-def test_page_metadata_fields(spark):
-    from dug_spark.operators.weblinks import page_metadata
-
-    df = spark.createDataFrame(
-        [("https://a.org/p/1", PAGE_FULL), ("https://a.org/p/2", PAGE_BARE)],
-        "url string, html binary",
-    )
-    rows = {r["url"]: r for r in page_metadata(df).collect()}
-    full = rows["https://a.org/p/1"]
-    # whitespace-collapsed, entity-decoded title
-    assert full["title"] == 'Tom & Jerry <S1>'
-    # content-first attribute order + entity decode
-    assert full["meta_description"] == 'A "great" show'
-    assert full["canonical"] == "https://a.org/canon"
-    assert full["og_title"] == "Tom 'n Jerry"
-    assert full["html_lang"] == "en-us"
-    # robots directives are case-insensitive
-    assert full["noindex"] is True and full["nofollow"] is True
-    bare = rows["https://a.org/p/2"]
-    assert all(
-        bare[c] is None
-        for c in ("title", "meta_description", "canonical", "og_title", "html_lang")
-    )
-    # absent robots meta => indexable (the web default)
-    assert bare["noindex"] is False and bare["nofollow"] is False
-
-
-def test_page_metadata_matches_mirror(spark):
-    from dug_spark.functions import pyoracle as po
-    from dug_spark.operators.weblinks import page_metadata
-
-    pages = [
-        ("https://a.org/p/1", PAGE_FULL.decode()),
-        ("https://a.org/p/2", PAGE_BARE.decode()),
-        # name-first description, noindex only, no nofollow token
-        (
-            "https://a.org/p/3",
-            '<html lang="fr"><head><meta name="description" content="d3">'
-            '<meta name="robots" content="noindex"></head></html>',
-        ),
-    ]
-    df = spark.createDataFrame(
-        [(u, h.encode()) for u, h in pages], "url string, html binary"
-    )
-    got = sorted(tuple(r) for r in page_metadata(df).collect())
-    want = sorted(po.page_metadata_rows(pages))
-    assert got == want
-
-
-def test_page_metadata_plan_is_map_only(spark):
-    from dug_spark.operators.weblinks import page_metadata
-
-    df = spark.createDataFrame(
-        [("https://a.org/p/1", PAGE_FULL)], "url string, html binary"
-    )
-    plan = page_metadata(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-# --- canonical_elect ---------------------------------------------------------
-
-
-def test_canonical_elect_semantics(spark):
-    from dug_spark.operators.weblinks import canonical_elect
-
-    pages = spark.createDataFrame(
-        [
-            # canonical page itself crawled: it wins even though a
-            # lexicographically smaller variant exists
-            ("https://a.org/p?utm=1", "https://a.org/p"),
-            ("https://a.org/p", None),
-            ("https://a.org/p?utm=2", "https://a.org/p"),
-            # canonical target NOT crawled: smallest member wins
-            ("https://b.org/m2", "https://b.org/master"),
-            ("https://b.org/m1", "https://b.org/master"),
-            # no canonical, unique page: keeps itself
-            ("https://c.org/solo", None),
-        ],
-        "url string, canonical string",
-    )
-    rows = {r["url"]: r for r in canonical_elect(pages).collect()}
-    assert len(rows) == 6  # one verdict per page
-    assert rows["https://a.org/p"]["keep"] is True
-    assert rows["https://a.org/p?utm=1"]["keep"] is False
-    assert rows["https://a.org/p?utm=2"]["keep"] is False
-    assert rows["https://b.org/m1"]["keep"] is True
-    assert rows["https://b.org/m2"]["keep"] is False
-    assert rows["https://c.org/solo"]["keep"] is True
-    # exactly one keeper per canonical key
-    from pyspark.sql import functions as F2
-
-    multi = (
-        canonical_elect(pages)
-        .groupBy("canonical_key")
-        .agg(F2.sum(F2.col("keep").cast("int")).alias("k"))
-        .where(F2.col("k") != 1)
-        .count()
-    )
-    assert multi == 0
-
-
-def test_canonical_elect_composes_with_page_metadata(spark):
-    from dug_spark.operators.weblinks import canonical_elect, page_metadata
-
-    html_dup = (
-        b'<html><head><link rel="canonical" href="https://a.org/x"></head>'
-        b"<body>copy</body></html>"
-    )
-    html_self = b"<html><head></head><body>original</body></html>"
-    pages = spark.createDataFrame(
-        [
-            ("https://a.org/x?ref=rss", html_dup),
-            ("https://a.org/x", html_self),
-        ],
-        "url string, html binary",
-    )
-    meta = page_metadata(pages).select("url", "canonical")
-    rows = {r["url"]: r["keep"] for r in canonical_elect(meta).collect()}
-    assert rows == {"https://a.org/x": True, "https://a.org/x?ref=rss": False}
-
-
-# --- extract_main_content ----------------------------------------------------
-
-
-ARTICLE = b"""<html><head><title>Head title must vanish</title>
-<style>p { color: red }</style></head><body>
-<nav><a href="/">Home</a> | <a href="/news">News</a> | <a href="/faq">FAQ</a></nav>
-<article>
-<p>This is the actual article body, a long paragraph of honest prose that
-comfortably clears the eighty character minimum and contains <a href="/ref">
-one small reference link</a> inside otherwise ordinary running text &amp; more.</p>
-<p>tiny</p>
-<div>Another substantial content block that also clears the length bar with
-room to spare, no links at all, just sentences that a reader would want.</div>
-</article>
-<footer><a href="/terms">Terms</a> <a href="/privacy">Privacy</a>
-<a href="/contact">Contact</a></footer>
-<script>analytics.track()</script>
-</body></html>"""
-
-
-def test_extract_main_content_keeps_article_drops_chrome(spark):
-    from dug_spark.operators.weblinks import extract_main_content
-
-    df = spark.createDataFrame(
-        [("https://a.org/art", ARTICLE)], "url string, html binary"
-    )
-    row = extract_main_content(df).collect()[0]
-    # both long blocks kept, in order, blank-line separated
-    parts = row["main_text"].split("\n\n")
-    assert len(parts) == 2
-    assert parts[0].startswith("This is the actual article body")
-    assert parts[1].startswith("Another substantial content block")
-    # inline link text survives (it's content), tags don't, entity decoded
-    assert "one small reference link" in parts[0]
-    assert "<" not in row["main_text"]
-    assert "& more" in parts[0]
-    # chrome is gone: nav/footer/script/style/head
-    for noise in ("Home", "Terms", "analytics", "color: red", "Head title"):
-        assert noise not in row["main_text"]
-    assert row["n_blocks_kept"] == 2
-    assert row["n_blocks"] > row["n_blocks_kept"]
-
-
-def test_extract_main_content_link_density_gate(spark):
-    from dug_spark.operators.weblinks import extract_main_content
-
-    # long enough block, but >33% of its characters are link text
-    linky = (
-        "<html><body><p>"
-        + '<a href="/x">' + "l" * 60 + "</a> "
-        + "w" * 60
-        + "</p></body></html>"
-    ).encode()
-    df = spark.createDataFrame(
-        [("https://a.org/l", linky)], "url string, html binary"
-    )
-    row = extract_main_content(df).collect()[0]
-    assert row["main_text"] == "" and row["n_blocks_kept"] == 0
-    # same block under the threshold survives
-    ok = (
-        "<html><body><p>"
-        + '<a href="/x">' + "l" * 20 + "</a> "
-        + "w" * 100
-        + "</p></body></html>"
-    ).encode()
-    df2 = spark.createDataFrame(
-        [("https://a.org/ok", ok)], "url string, html binary"
-    )
-    assert extract_main_content(df2).collect()[0]["n_blocks_kept"] == 1
-
-
-def test_extract_main_content_matches_mirror_and_plan(spark):
-    from dug_spark.functions import pyoracle as po
-    from dug_spark.operators.weblinks import extract_main_content
-
-    pages = [
-        ("https://a.org/art", ARTICLE.decode()),
-        ("https://a.org/empty", "<html><body></body></html>"),
-    ]
-    df = spark.createDataFrame(
-        [(u, h.encode()) for u, h in pages], "url string, html binary"
-    )
-    got = sorted(tuple(r) for r in extract_main_content(df).collect())
-    want = sorted(po.main_content_rows(pages))
-    assert got == want
-    plan = extract_main_content(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_extract_jsonld_parses_and_drops(spark):
-    from dug_spark.operators import weblinks
-
-    html = (
-        "<html>"
-        '<script type="text/javascript">var x = 1;</script>'
-        '<script type="application/ld+json">'
-        '{"@type": "Article", "name": "hello", "url": "https://e.org/1"}'
-        "</script>"
-        "<SCRIPT TYPE='application/ld+json'>{\"@type\": \"Person\", \"name\": \"ada\"}</SCRIPT>"
-        '<script type="application/ld+json">{not json</script>'
-        '<script type="application/ld+json">[{"@type": "Thing"}]</script>'
-        '<script type="application/ld+json">{"name": "no type"}</script>'
-        "</html>"
-    )
-    pages = spark.createDataFrame(
-        [("u1", html), ("u2", None)], "url string, html string"
-    )
-    got = {
-        (r.url, r.block_idx, r.entity_type, r.name, r.entity_url)
-        for r in weblinks.extract_jsonld(pages).collect()
-    }
-    # valid blocks survive (case-insensitive tag/quote forms), malformed
-    # + array + missing-@type drop, NULL html yields nothing
-    assert got == {
-        ("u1", 0, "Article", "hello", "https://e.org/1"),
-        ("u1", 1, "Person", "ada", None),
-    }
-
-
-def test_jsonld_mirror_parity(spark):
-    from dug_spark.functions import pyoracle
-    from dug_spark.operators import weblinks
-
-    pages = [
-        (
-            f"u{i}",
-            '<script type="application/ld+json">'
-            f'{{"@type": "Product", "name": "item-{i}"}}</script>'
-            + ('<script type="application/ld+json">{bad</script>' if i % 2 else ""),
-        )
-        for i in range(6)
-    ]
-    df = spark.createDataFrame(pages, "url string, html string")
-    got = {
-        tuple(r) for r in weblinks.extract_jsonld(df).collect()
-    }
-    want = set(pyoracle.jsonld_rows(pages))
-    assert got == want
-
-
-def test_jsonld_to_triples(spark):
-    from pyspark.sql import functions as F
-
-    from dug_spark.operators import weblinks
-
-    ents = spark.createDataFrame(
-        [
-            ("u1", 0, "Article", "hello", None, None),
-            ("u1", 1, "Article", "hello", None, None),  # dup → distinct
-            ("u2", 0, "Person", None, None, None),      # no name → dropped
-        ],
-        "url string, block_idx int, entity_type string, name string, "
-        "entity_url string, description string",
-    )
-    got = {
-        (r.subj, r.pred, r.obj)
-        for r in weblinks.jsonld_to_triples(ents).collect()
-    }
-    assert got == {
-        ("u1", "declares_entity", "schema:Article/hello"),
-        ("schema:Article/hello", "rdf:type", "schema:Article"),
-    }
-
-
-def test_extract_tables_shapes_and_mirror(spark):
-    from dug_spark.functions import pyoracle
-    from dug_spark.operators import weblinks
-
-    pages = [
-        (
-            "u1",
-            '<table><tr><th>K</th><th>V</th></tr>'
-            "<tr><td>a</td><td> <b>b</b>\nc </td></tr></table>"
-            "<TABLE><TR><TD>second</TD></TR></TABLE>",
-        ),
-        ("u2", "<table><caption>rowless</caption></table>"),
-        ("u3", "no tables here"),
-        ("u4", None),
-    ]
-    df = spark.createDataFrame(pages, "url string, html string")
-    got = {tuple(r) for r in weblinks.extract_tables(df).collect()}
-    assert got == set(pyoracle.html_table_rows(pages))
-    by_url = {}
-    for u, ti, ri, ci, is_h, cell in got:
-        by_url.setdefault(u, []).append((ti, ri, ci, is_h, cell))
-    assert sorted(by_url["u1"]) == [
-        (0, 0, 0, True, "K"),
-        (0, 0, 1, True, "V"),
-        (0, 1, 0, False, "a"),
-        (0, 1, 1, False, "b c"),
-        (1, 0, 0, False, "second"),
-    ]
-    assert "u2" not in by_url and "u3" not in by_url and "u4" not in by_url
-
-
-def test_tables_to_triples(spark):
-    from dug_spark.operators import weblinks
-
-    html = (
-        '<table><tr><th>Key</th><th>Value</th></tr>'
-        "<tr><td>Release Date</td><td>2020</td></tr>"
-        "<tr><td>Weight (kg)</td><td>1.5</td></tr>"
-        "<tr><td></td><td>orphan</td></tr>"
-        "</table>"
-        "<table><tr><td>a</td><td>b</td><td>c</td></tr></table>"  # 3-col: skip
-    )
-    pages = spark.createDataFrame([("u1", html)], "url string, html string")
-    got = {
-        (r.subj, r.pred, r.obj)
-        for r in weblinks.tables_to_triples(
-            weblinks.extract_tables(pages)
-        ).collect()
-    }
-    assert got == {
-        ("u1", "attr:release_date", "2020"),
-        ("u1", "attr:weight_kg", "1.5"),
-    }
-
-
-def test_jsonld_array_type_dropped_like_mirror(spark):
-    """Round-5 advisor finding: from_json stringifies an array @type into
-    '["Person","Patient"]' — the mirror's isinstance guard drops it, so
-    the Spark side must too (and numbers/booleans likewise)."""
-    from dug_spark.functions import pyoracle
-    from dug_spark.operators import weblinks
-
-    def page(block):
-        return (
-            "<html><body><script type=\"application/ld+json\">"
-            + block
-            + "</script></body></html>"
-        )
-
-    rows = [
-        ("u1", page('{"@type": ["Person", "Patient"], "name": "x"}')),
-        ("u2", page('{"@type": 42, "name": "x"}')),
-        ("u3", page('{"@type": true}')),
-        ("u4", page('{"@type": "Person", "name": "x"}')),
-        ("u5", page('{"@type": "schema:Person"}')),
-    ]
-    df = spark.createDataFrame(rows, "url string, html string")
-    got = sorted(
-        (r["url"], r["entity_type"])
-        for r in weblinks.extract_jsonld(df).collect()
-    )
-    want = sorted(
-        (u, t) for (u, _i, t, _n, _eu, _d) in pyoracle.jsonld_rows(rows)
-    )
-    assert got == want == [("u4", "Person"), ("u5", "schema:Person")]
-
-
-def test_tables_to_triples_spanning_header(spark):
-    """Round-5 advisor finding: a 3-column header row over 2-column data
-    rows is still a key/value table — shape is judged on data rows."""
-    from dug_spark.operators import weblinks
-
-    cells = spark.createDataFrame(
-        [
-            ("u", 0, 0, 0, True, "spec"),
-            ("u", 0, 0, 1, True, "spanning"),
-            ("u", 0, 0, 2, True, "header"),
-            ("u", 0, 1, 0, False, "Color"),
-            ("u", 0, 1, 1, False, "blue"),
-        ],
-        "url string, table_idx int, row_idx int, col_idx int, "
-        "is_header boolean, cell string",
-    )
-    got = [
-        (r["subj"], r["pred"], r["obj"])
-        for r in weblinks.tables_to_triples(cells).collect()
-    ]
-    assert got == [("u", "attr:color", "blue")]
